@@ -1,17 +1,20 @@
 """Relational chunk table: posexplode + column-math classification.
 
 Produces the `chunks` intermediate table of SURVEY.md §1.2:
-  url, chunk_idx, chunk_text, n_units, field_type, is_list,
-  is_extraneous, score
+  url, chunk_idx, chunk_text, stopword_ratio, n_chunks, n_units,
+  field_type, is_list, is_extraneous [, field_terms with a search query]
 
-Spark-first split of work:
-  * the split cascade is inherently sequential per document -> one
-    Arrow-batched pandas UDF returning ARRAY<STRING>, then a native
-    posexplode (the UDTF-equivalent, SURVEY.md §2.11)
+Spark-first split of work, with no shuffle anywhere:
+  * the split cascade is inherently sequential per document, and the
+    stopword ratio needs the Porter2 stemmer -> ONE Arrow-batched pandas
+    UDF per document returning an array of per-chunk structs (text,
+    ratio, token count, the row's chunk count, and with a search query
+    the BM25 (field, term) bag), then a native posexplode (the
+    UDTF-equivalent, SURVEY.md §2.11)
   * positional threshold = pure column arithmetic (classify.go:139-166)
+    on the chunk count the UDF returned -- no url window
   * field-type detection = native regexp predicates
     (regex_patterns.go:28-36) -- whole-stage codegen, no Python
-  * stopword ratio needs the Porter2 stemmer -> pandas UDF
   * unit counting: native expressions for words/chars; UDF for tokens
 """
 
@@ -20,7 +23,6 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,53 +31,35 @@ from ..core.classify import stopword_ratio
 from ..core.counters import CHARS, TOKENS, WORDS, Counter
 from ..core.pipeline import SiftParams
 from ..core.selection import BASE_SIZES, LARGE_TEXT_MULTIPLIER, TEXT_THRESHOLDS
+from .search import FIELD_TERMS_COL, FIELD_TERMS_TYPE, field_term_pairs
 
 
-def make_split_udf(params: SiftParams):
-    """text -> array<string> chunk cascade with unit-aware sizing
-    (chunk_selection.go:107-143)."""
-    method = params.counting_method
-    base = BASE_SIZES.get(method, BASE_SIZES[CHARS])
-    threshold = TEXT_THRESHOLDS.get(method, TEXT_THRESHOLDS[CHARS])
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def split_batch(text: pd.Series) -> pd.Series:
-        out = []
-        for value in text:
-            if value is None:
-                out.append([])
-                continue
-            size = base
-            if len(value.encode("utf-8", "surrogatepass")) > threshold:
-                size = int(base * LARGE_TEXT_MULTIPLIER)
-            out.append(split_text(value, size))
-        return pd.Series(out)
-
-    return split_batch
-
-
-_CHUNK_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("chunk_text", T.StringType()),
-            T.StructField("ratio", T.DoubleType()),
-            T.StructField("n_tokens", T.IntegerType()),
-        ]
-    )
-)
+def _chunk_schema(with_field_terms):
+    fields = [
+        T.StructField("chunk_text", T.StringType()),
+        T.StructField("ratio", T.DoubleType()),
+        T.StructField("n_tokens", T.IntegerType()),
+        T.StructField("n_chunks", T.IntegerType()),
+    ]
+    if with_field_terms:
+        fields.append(T.StructField(FIELD_TERMS_COL, FIELD_TERMS_TYPE))
+    return T.ArrayType(T.StructType(fields))
 
 
 def make_split_classify_udf(params: SiftParams):
-    """Fused map-side pass: split cascade + stopword ratio per chunk in
-    ONE Python stage (the positional threshold still needs n_chunks and
-    is pure column math after the explode). Halves the Arrow round-trips
-    of the chunk stage and keeps the expensive stemming before the
-    shuffle."""
+    """Fused map-side pass: split cascade (chunk_selection.go:107-143)
+    + stopword ratio per chunk in ONE Python stage. Each chunk's struct
+    also carries its row's chunk count, so the positional threshold is
+    pure column math after the explode with no url window. With a search
+    query the same pass emits each chunk's BM25 (field, term) bag, which
+    :func:`search.with_bm25_score` consumes instead of re-parsing the
+    chunk in a second Python stage."""
     method = params.counting_method
     base = BASE_SIZES.get(method, BASE_SIZES[CHARS])
     threshold = TEXT_THRESHOLDS.get(method, TEXT_THRESHOLDS[CHARS])
+    with_field_terms = bool(params.search_query.strip())
 
-    @F.pandas_udf(_CHUNK_STRUCT)
+    @F.pandas_udf(_chunk_schema(with_field_terms))
     def split_classify_batch(text: pd.Series) -> pd.Series:
         out = []
         for value in text:
@@ -86,35 +70,19 @@ def make_split_classify_udf(params: SiftParams):
             if len(value.encode("utf-8", "surrogatepass")) > threshold:
                 size = int(base * LARGE_TEXT_MULTIPLIER)
             chunks = split_text(value, size)
+            n_chunks = len(chunks)
             rows = []
             for chunk in chunks:
                 ratio, n_tokens = stopword_ratio(chunk)
-                rows.append(
-                    {"chunk_text": chunk, "ratio": ratio,
-                     "n_tokens": n_tokens}
-                )
+                row = {"chunk_text": chunk, "ratio": ratio,
+                       "n_tokens": n_tokens, "n_chunks": n_chunks}
+                if with_field_terms:
+                    row[FIELD_TERMS_COL] = field_term_pairs(chunk)
+                rows.append(row)
             out.append(rows)
         return pd.Series(out)
 
     return split_classify_batch
-
-
-_RATIO_SCHEMA = T.StructType(
-    [
-        T.StructField("ratio", T.DoubleType()),
-        T.StructField("n_tokens", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(_RATIO_SCHEMA)
-def stopword_ratio_udf(text: pd.Series) -> pd.DataFrame:
-    ratios, counts = [], []
-    for value in text:
-        ratio, n = stopword_ratio(value or "")
-        ratios.append(ratio)
-        counts.append(n)
-    return pd.DataFrame({"ratio": ratios, "n_tokens": counts})
 
 
 def unit_count_col(col, method):
@@ -190,44 +158,38 @@ def threshold_col(chunk_idx, n_chunks):
 def chunk_pages(md_df, params: SiftParams | None = None, text_col="text_md"):
     """(url, text_md) -> chunks table with classification columns.
 
-    One UDF projection (narrow), one posexplode (narrow), one window over
-    url (the only shuffle -- and shuffle-free if the input is already
-    partitioned by url, see plans/partitioning.py)."""
+    One UDF projection, one posexplode and one projection, all narrow:
+    no shuffle. `n_chunks` is the chunk count of the row's own text, so
+    two input rows sharing a url are chunked and classified
+    independently (each keeps its own chunk_idx 0..n_chunks-1). With
+    `params.search_query` set the table gains a `field_terms` column,
+    the chunk's BM25 (field, term) bag, for :func:`with_bm25_score`;
+    without a query it has no such column."""
     params = params or SiftParams()
     split_udf = make_split_classify_udf(params)
 
     exploded = md_df.select(
         "url",
         F.posexplode(split_udf(F.col(text_col))).alias("chunk_idx", "c"),
-    ).select(
-        "url", "chunk_idx",
-        F.col("c.chunk_text").alias("chunk_text"),
+    )
+    text = F.col("c.chunk_text")
+    n_chunks = F.col("c.n_chunks")
+    field, is_list = field_type_cols(text)
+    thr = threshold_col(F.col("chunk_idx"), n_chunks)
+    cols = [
+        "url", "chunk_idx", text.alias("chunk_text"),
         F.col("c.ratio").alias("stopword_ratio"),
-        F.col("c.n_tokens").alias("_n_tokens"),
-    )
-
-    url_window = Window.partitionBy("url")
-    with_counts = exploded.withColumn(
-        "n_chunks", F.count("*").over(url_window).cast("int")
-    )
-
-    field, is_list = field_type_cols(F.col("chunk_text"))
-    thr = threshold_col(F.col("chunk_idx"), F.col("n_chunks"))
-
-    return (
-        with_counts.withColumn("n_units",
-                               unit_count_col(F.col("chunk_text"),
-                                              params.counting_method).cast("int"))
-        .withColumn("field_type", field)
-        .withColumn("is_list", is_list)
-        .withColumn(
-            "is_extraneous",
-            F.when(F.col("_n_tokens") == 0, F.lit(True)).otherwise(
-                F.col("stopword_ratio") > thr
-            ),
-        )
-        .drop("_n_tokens")
-    )
+        n_chunks.alias("n_chunks"),
+        unit_count_col(text, params.counting_method).cast("int")
+        .alias("n_units"),
+        field.alias("field_type"),
+        is_list.alias("is_list"),
+        F.when(F.col("c.n_tokens") == 0, F.lit(True))
+        .otherwise(F.col("c.ratio") > thr).alias("is_extraneous"),
+    ]
+    if params.search_query.strip():
+        cols.append(F.col(f"c.{FIELD_TERMS_COL}").alias(FIELD_TERMS_COL))
+    return exploded.select(*cols)
 
 
 def filter_extraneous(chunks_df):

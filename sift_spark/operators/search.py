@@ -12,7 +12,9 @@ tree (none if the chunk table is already hash-partitioned by url).
 
 Tokenization is NATIVE (split + filter on length >= 3, tfidf.go:151-172):
 no Python in the hot path. BM25 field parsing needs the markdown-field
-tokenizer -> one pandas UDF producing (field, term) pairs.
+tokenizer: the search-mode chunk table already carries each chunk's
+(field, term) bag from the chunking UDF's single pass; other chunk tables
+pay one pandas UDF producing the same pairs.
 """
 
 from __future__ import annotations
@@ -111,7 +113,9 @@ def tfidf_scores(chunks_df, query, text_col="chunk_text"):
     )
 
 
-_FIELD_TERM_SCHEMA = T.ArrayType(
+FIELD_TERMS_COL = "field_terms"
+
+FIELD_TERMS_TYPE = T.ArrayType(
     T.StructType(
         [
             T.StructField("field", T.StringType()),
@@ -121,17 +125,18 @@ _FIELD_TERM_SCHEMA = T.ArrayType(
 )
 
 
-@F.pandas_udf(_FIELD_TERM_SCHEMA)
-def field_terms_udf(text: pd.Series) -> pd.Series:
+def field_term_pairs(text):
     """markdown chunk -> [(field, term) per occurrence] (bm25md parser)."""
-    out = []
-    for value in text:
-        pairs = []
-        if value:
-            for fld, tokens in parse_markdown_fields(value).items():
-                pairs.extend({"field": fld, "term": tok} for tok in tokens)
-        out.append(pairs)
-    return pd.Series(out)
+    pairs = []
+    if text:
+        for fld, tokens in parse_markdown_fields(text).items():
+            pairs.extend({"field": fld, "term": tok} for tok in tokens)
+    return pairs
+
+
+@F.pandas_udf(FIELD_TERMS_TYPE)
+def field_terms_udf(text: pd.Series) -> pd.Series:
+    return pd.Series([field_term_pairs(value) for value in text])
 
 
 def with_bm25_score(chunks_df, query, text_col="chunk_text",
@@ -140,7 +145,7 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
     single-branch -- ZERO joins, ZERO groupBy:
 
       per chunk:  dl = total terms;  wtf_i = sum_f w_f * tf(term_i)
-                  computed as native array folds over the UDF's
+                  computed as native array folds over the chunk's
                   (field, term) array, so every chunk row survives
                   (dl = 0 chunks included -- tfidf.go:60-65 counts
                   EVERY chunk in avgdl/N) and the chunk table feeds
@@ -149,18 +154,24 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
       score    =  sum_i q_i * idf_i * wtf_i*(k1+1) /
                   (k1*(1-b+b*dl/avgdl) + wtf_i)
 
-    Plan: Arrow UDF emits the field-term array per row (narrow) ->
-    aggregate/filter higher-order functions reduce it to dl + one wtf
-    column per query term (narrow, whole-stage codegen) -> one
-    url-window shuffle for corpus stats -> column math. Callers need no
-    persist: the chunk UDF branch is referenced exactly once.
+    The (field, term) array is the `field_terms` column that
+    :func:`chunking.chunk_pages` emits in search mode; a chunk table
+    without it (or scored on another `text_col`) runs the same kernel in
+    :func:`field_terms_udf`, one Arrow stage. Plan: [UDF] -> one narrow
+    projection of higher-order functions reducing the array to dl and
+    one wtf column per query term (whole-stage codegen) -> the url
+    window for corpus stats (one hash Exchange on url, elided when the
+    input is already hash-partitioned by url) -> column math. Callers
+    need no persist: the chunk branch is referenced exactly once.
 
-    Keeps every input column and appends `score_col`, so selection
-    pipelines attach scores without joining back to the chunk table."""
+    Keeps every input column except the consumed `field_terms` bag and
+    appends `score_col`, so selection pipelines attach scores without
+    joining back to the chunk table."""
     weights = field_weights or FIELD_WEIGHTS
     query_terms = list(dict.fromkeys(tfidf_tokenize(query)))
     if not query_terms:
-        return chunks_df.withColumn(score_col, F.lit(0.0))
+        return chunks_df.drop(FIELD_TERMS_COL).withColumn(
+            score_col, F.lit(0.0))
 
     q_occurrences = {}
     for term in tfidf_tokenize(query):
@@ -170,42 +181,47 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
         *[F.lit(x) for pair in weights.items() for x in pair]
     )
 
-    # the aliased UDF array is referenced by len(query_terms)+1
-    # downstream expressions; CollapseProject keeps non-cheap aliases
-    # un-inlined, so the UDF runs once per row (same pattern as
-    # winnowing's normalized-text projection)
+    if FIELD_TERMS_COL in chunks_df.columns and text_col == "chunk_text":
+        per_chunk, bag = chunks_df, FIELD_TERMS_COL
+    else:
+        # the aliased UDF array is referenced by len(query_terms)+1
+        # downstream expressions; CollapseProject keeps non-cheap aliases
+        # un-inlined, so the UDF runs once per row (same pattern as
+        # winnowing's normalized-text projection)
+        per_chunk = chunks_df.withColumn(
+            "_ft", field_terms_udf(F.col(text_col)))
+        bag = "_ft"
+
     # NB: bind the loop variable through a closure factory -- a `t=term`
     # default arg would make pyspark treat the lambda as (element, index)
     def _is_term(term):
         return lambda x: x["term"] == F.lit(term)
 
-    per_chunk = chunks_df.withColumn("_ft", field_terms_udf(F.col(text_col)))
-    per_chunk = per_chunk.withColumn("_dl", F.size("_ft").cast("double"))
-    for i, term in enumerate(query_terms):
-        matches = F.filter(F.col("_ft"), _is_term(term))
-        per_chunk = per_chunk.withColumn(
-            f"_wtf_{i}",
-            F.aggregate(
-                matches,
-                F.lit(0.0),
-                lambda acc, x: acc + F.coalesce(
-                    F.element_at(weight_map, x["field"]), F.lit(1.0)
-                ),
+    def _weighted_tf(term):
+        return F.aggregate(
+            F.filter(F.col(bag), _is_term(term)),
+            F.lit(0.0),
+            lambda acc, x: acc + F.coalesce(
+                F.element_at(weight_map, x["field"]), F.lit(1.0)
             ),
         )
-    per_chunk = per_chunk.drop("_ft")
+
+    # one projection per stage: each withColumn call re-analyses the
+    # whole plan on the driver
+    per_chunk = per_chunk.withColumns({
+        "_dl": F.size(bag).cast("double"),
+        **{f"_wtf_{i}": _weighted_tf(term)
+           for i, term in enumerate(query_terms)},
+    }).drop(bag, FIELD_TERMS_COL)
 
     url_window = Window.partitionBy("url")
-    per_chunk = per_chunk.withColumn(
-        "_avgdl", F.avg("_dl").over(url_window)
-    ).withColumn("_n_docs", F.count("*").over(url_window))
-    for i in range(len(query_terms)):
-        per_chunk = per_chunk.withColumn(
-            f"_df_{i}",
-            F.sum(F.when(F.col(f"_wtf_{i}") > 0, 1).otherwise(0)).over(
-                url_window
-            ),
-        )
+    per_chunk = per_chunk.withColumns({
+        "_avgdl": F.avg("_dl").over(url_window),
+        "_n_docs": F.count("*").over(url_window),
+        **{f"_df_{i}": F.sum(F.when(F.col(f"_wtf_{i}") > 0, 1)
+                             .otherwise(0)).over(url_window)
+           for i in range(len(query_terms))},
+    })
 
     score = F.lit(0.0)
     for i, term in enumerate(query_terms):

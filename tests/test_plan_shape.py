@@ -58,15 +58,53 @@ def test_column_pruning_drops_unused_columns(spark, pages_parquet):
     assert "ReadSchema: struct<url:string,html:binary>" in plan
 
 
-def test_chunk_pipeline_single_shuffle(spark):
+def test_chunk_pipeline_is_shuffle_free(spark):
     from sift_spark.operators.chunking import chunk_pages
 
     md = spark.createDataFrame(
         [("u", "text " * 300)], ["url", "text_md"]
     )
     plan = plan_of(chunk_pages(md, SiftParams(counting_method=WORDS)))
-    # exactly one Exchange: the url window (classification is column math)
-    assert count_nodes(plan, "Exchange") == 1
+    # the UDF returns each row's chunk count, so the positional threshold
+    # needs no url window: no Exchange, one Python pass per document
+    assert count_nodes(plan, "Exchange") == 0
+    assert count_nodes(plan, "ArrowEvalPython") == 1
+
+
+def _search_chunks(spark):
+    from sift_spark.operators.chunking import chunk_pages
+
+    md = spark.createDataFrame(
+        [("u1", "# Spark\n\nspark streams data " * 40),
+         ("u2", "other words about data " * 60)], ["url", "text_md"]
+    )
+    params = SiftParams(counting_method=WORDS, max_units=40,
+                        search_query="spark data")
+    return chunk_pages(md, params), params
+
+
+def test_select_chain_one_shuffle_one_python_pass(spark):
+    """chunk -> BM25 -> exact select: the chunk UDF's field-term bag
+    feeds BM25 (no second Arrow stage), and the selection's url
+    repartition reuses the corpus-stats window's hash partitioning."""
+    from sift_spark.operators.search import with_bm25_score
+    from sift_spark.operators.selection_op import select_exact
+
+    chunks, params = _search_chunks(spark)
+    scored = with_bm25_score(chunks, params.search_query)
+    plan = plan_of(select_exact(scored, params, scored=True))
+    assert count_nodes(plan, "Exchange") == 1, plan
+    assert count_nodes(plan, "ArrowEvalPython") == 1, plan
+    assert count_nodes(plan, "MapInPandas") == 1, plan
+
+
+def test_rank_chain_one_shuffle_one_python_pass(spark):
+    from sift_spark.operators.search import bm25_scores, rank_by_score
+
+    chunks, params = _search_chunks(spark)
+    plan = plan_of(rank_by_score(bm25_scores(chunks, params.search_query)))
+    assert count_nodes(plan, "Exchange") == 1, plan
+    assert count_nodes(plan, "ArrowEvalPython") == 1, plan
 
 
 def test_bm25_no_joins(spark):

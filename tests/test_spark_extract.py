@@ -142,6 +142,30 @@ def test_chunk_table_schema_and_classification(spark, fixture_pages):
     assert kept.count() <= chunks.count()
 
 
+def test_chunk_table_duplicate_url_counts_own_chunks(spark):
+    """Two rows sharing a url are chunked independently: n_chunks (and
+    so the positional threshold) is the row's own chunk count, never the
+    total across every row of the url."""
+    from sift_spark.core.classify import is_extraneous as core_extraneous
+
+    short = "one two three four five six seven eight nine ten. " * 3
+    long = "\n\n".join(f"paragraph {i} " + "word " * 30 for i in range(8))
+    params = SiftParams(counting_method=WORDS, max_units=20)
+    md = spark.createDataFrame(
+        [("doc://dup", short), ("doc://dup", long)], ["url", "text_md"]
+    )
+    rows = chunk_pages(md, params).collect()
+    by_count = {}
+    for r in rows:
+        by_count.setdefault(r["n_chunks"], []).append(r)
+    assert len(by_count) == 2 and len(rows) == sum(by_count)
+    for n, group in by_count.items():
+        assert sorted(r["chunk_idx"] for r in group) == list(range(n))
+        for r in group:
+            assert r["is_extraneous"] == core_extraneous(
+                r["chunk_text"], r["chunk_idx"], n)
+
+
 def test_pages_from_documents(spark):
     pages = pages_from_documents(spark, SF_DIR)
     assert pages.columns == ["url", "warc_ts", "html", "text", "lang"]

@@ -122,3 +122,37 @@ def test_search_pipeline_end_to_end_parity(spark):
 
     expected = apply_content_transformations(text, params)
     assert got == expected
+
+
+def test_fused_field_terms_match_udf_fallback(spark):
+    """A search-mode chunk table carries the (field, term) bag from the
+    chunking pass; BM25 over it equals, bit for bit, BM25 over the same
+    chunks with the bag dropped (the field_terms_udf fallback). Without
+    a query the chunk table has no bag."""
+    from sift_spark.operators.chunking import chunk_pages
+    from sift_spark.operators.search import FIELD_TERMS_COL, with_bm25_score
+
+    text = "\n\n".join(MD_CHUNKS * 4)
+    md = spark.createDataFrame(
+        [("doc://a", text), ("doc://b", "\n\n".join(DOCS * 5))],
+        ["url", "text_md"],
+    )
+    query = "flour texture dog"
+    params = SiftParams(counting_method=WORDS, max_units=30,
+                        search_query=query)
+    chunks = chunk_pages(md, params).cache()
+    assert FIELD_TERMS_COL in chunks.columns
+    assert FIELD_TERMS_COL not in chunk_pages(
+        md, SiftParams(counting_method=WORDS)).columns
+
+    def scores(df):
+        out = with_bm25_score(df, query)
+        assert FIELD_TERMS_COL not in out.columns
+        return {(r["url"], r["chunk_idx"]): r["score"]
+                for r in out.collect()}
+
+    fused = scores(chunks)
+    fallback = scores(chunks.drop(FIELD_TERMS_COL))
+    assert fused == fallback
+    assert any(v > 0 for v in fused.values())
+    chunks.unpersist()

@@ -1,5 +1,7 @@
 """Structured Streaming wiring smoke: availableNow batch-over-stream."""
 
+import time
+
 from pyspark.sql import functions as F
 
 from sift_spark.core.counters import WORDS
@@ -118,7 +120,15 @@ def test_stream_sessionize_stateful(spark, tmp_path):
         spark, input_dir, output_dir, str(tmp_path / "ckpt"),
         gap="30 minutes",
     )
-    query.awaitTermination(180)
+    # the processing-time state timeout makes the engine schedule a
+    # no-data batch after every batch, so this availableNow query never
+    # terminates by itself and processAllAvailable() never returns: wait
+    # for the first batch (it carries every input row) to commit instead
+    deadline = time.monotonic() + 180
+    while not any(p.numInputRows for p in query.recentProgress):
+        assert query.exception() is None, query.exception()
+        assert time.monotonic() < deadline, "first micro-batch never committed"
+        time.sleep(0.2)
     query.stop()
 
     out = spark.read.parquet(output_dir).collect()
