@@ -873,7 +873,7 @@ def _q_dsir_select(spark, sf_dir):
     )
     model = train_text_classifier(
         labelled, n_buckets=_DSIR_BUCKETS, n_iter=_CLF_ITER,
-        link="rational", portable_hash=True,
+        link="rational",
     )
     clf = score_text_classifier(labelled, model).select(
         "doc_id", "clf_score"

@@ -254,16 +254,15 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     if lm_model is not None and max_ppl:
         # MODEL-BASED quality gate (CCNet-style, operators/lm.py):
         # keep documents whose stupid-backoff n-gram perplexity
-        # against the clean-slice LM is <= max_ppl. The udf method
-        # keeps the gate fully narrow (the pruned model ships to the
-        # workers); lm_model is an NgramLM or a saved-model path.
+        # against the clean-slice LM is <= max_ppl. The gate is fully
+        # narrow (the pruned model ships to the workers); lm_model is
+        # an NgramLM or a saved-model path.
         from .operators.lm import filter_by_perplexity, load_lm
 
         model = (load_lm(spark, lm_model)
                  if isinstance(lm_model, str) else lm_model)
         curated = observed(
-            filter_by_perplexity(curated, model, max_ppl,
-                                 method="udf"),
+            filter_by_perplexity(curated, model, max_ppl),
             "after_ppl_gate",
         )
     if clf_model is not None and not min_clf_score:
@@ -271,19 +270,13 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             "clf_model given but min_clf_score is 0/unset -- pass "
             "min_clf_score (the keep threshold) to enable the gate"
         )
-    clf_persisted = None
     if clf_model is not None and min_clf_score:
         # MODEL-BASED quality gate, classifier family (fastText-style,
         # operators/textclf.py -- the GPT-3/DCLM setup): keep documents
         # the trained hashed-ngram classifier scores >= min_clf_score.
-        # Portable (md5-bucketed) models gate through the NARROW udf
-        # scorer -- zero shuffle, composes into the scan-side pipeline
-        # like the perplexity gate. xxhash64 models use the join scorer,
-        # which references its input on BOTH sides of a self-join (the
-        # feature aggregate left-joins back onto the docs), so that
-        # path persists the frame or the whole upstream extraction+
-        # gates lineage evaluates twice per action (the span/DSIR
-        # pattern).
+        # The scorer is NARROW (the weights ship to the workers) -- zero
+        # shuffle, composes into the scan-side pipeline like the
+        # perplexity gate, and reads its input once, so no persist.
         from .operators.textclf import (
             filter_by_classifier,
             load_text_classifier,
@@ -291,11 +284,8 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
 
         model = (load_text_classifier(clf_model)
                  if isinstance(clf_model, str) else clf_model)
-        gated = curated
-        if not model.get("portable_hash", False):
-            clf_persisted = gated = curated.persist()
         curated = observed(
-            filter_by_classifier(gated, model, min_clf_score),
+            filter_by_classifier(curated, model, min_clf_score),
             "after_clf_gate",
         )
     if redact:
@@ -426,8 +416,6 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
         # the full curated pool outlives the call in a shared session
         if dsir_persisted is not None:
             dsir_persisted.unpersist()
-        if clf_persisted is not None:
-            clf_persisted.unpersist()
     out = spark.read.parquet(output_dir)
     if write_hashes:
         # snapshot sink for the NEXT incremental run's seen_df: the
@@ -853,13 +841,6 @@ def train_clf_main(argv=None):
                         help="hashed-ngram feature buckets")
     parser.add_argument("--iters", type=int, default=8,
                         help="gradient-descent steps")
-    parser.add_argument("--hash", default="md5",
-                        choices=["md5", "xxhash64"],
-                        help="feature-bucket hash: md5 (default) makes "
-                             "the model PORTABLE, so the curation gate "
-                             "scores it with the zero-shuffle udf path; "
-                             "xxhash64 is the cheaper native hash but "
-                             "forces the join scorer")
     parser.add_argument("--text-col", default="text")
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
@@ -876,7 +857,7 @@ def train_clf_main(argv=None):
     model = train_from_slices(
         spark.read.parquet(args.pos), spark.read.parquet(args.neg),
         text_col=args.text_col, n_buckets=args.buckets,
-        n_iter=args.iters, portable_hash=(args.hash == "md5"),
+        n_iter=args.iters,
     )
     save_text_classifier(model, args.output)
     print(f"trained buckets={args.buckets} "

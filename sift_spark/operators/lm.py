@@ -18,13 +18,13 @@ because it needs nothing but raw counts --
     S(w)         = count(w) / N                          (unigram)
                  = 1 / N                                 (OOV floor)
 
-which makes both training (pure aggregations) and scoring (broadcast
-count joins + a log sum) native DataFrame plans, and the whole scorer
-expressible in the DuckDB oracle. Kneser-Ney's continuation counts are
-also just aggregations but buy little at corpus-filtering granularity;
-stupid backoff is what Google ran at web scale and what this engine
-ships. Scores are log10 (KenLM's convention); perplexity is
-10^(-logprob/tokens).
+which makes training pure aggregations and scoring a per-token table
+lookup + a log sum, both expressible in the DuckDB oracle (count CTEs,
+a lag window for the context counts, one CASE cascade). Kneser-Ney's
+continuation counts are also just aggregations but buy little at
+corpus-filtering granularity; stupid backoff is what Google ran at web
+scale and what this engine ships. Scores are log10 (KenLM's
+convention); perplexity is 10^(-logprob/tokens).
 
 Document starts back off naturally: the token at position i is scored
 at effective order min(i+1, n) -- no BOS padding row, every token of
@@ -33,17 +33,13 @@ every document is scored, and short documents still get a perplexity.
 100 TB shape: TRAINING runs on the clean slice (Wikipedia-sized, not
 the crawl) -- per-order token-count aggregations, each one classic
 word-count shuffle over the small corpus. SCORING is the crawl-sized
-pass: token rows are generated narrowly from each document row, the
-count lookups are n BROADCAST joins (a pruned clean-slice model is
-tens of MB; `broadcast=False` flips them to shuffle joins for giant
-models), context counts come from a lag window on the SAME doc_id
-partitioning the final per-doc aggregation uses, so the whole scorer
-costs exactly ONE shuffle of (doc_id, pos)-grain rows with map-side
-partial aggregation collapsing them to per-doc rows. The `udf` method
-goes further for bounded models: the count table rides a Spark
-broadcast into one vectorized pandas UDF and the scorer becomes a
-fully NARROW pass (zero shuffles), the same ship-the-model-to-workers
-shape CCNet itself uses; a parity test pins udf == join.
+pass: the pruned count table (tens of MB) is collected once, rides a
+Spark broadcast to the workers, and one vectorized pandas UDF scores
+each document in place -- a fully NARROW projection with zero
+shuffles, the same ship-the-model-to-workers shape CCNet itself uses.
+The model must therefore fit in executor memory; prune it with
+`min_count` until it does. The DuckDB oracle row `lm_perplexity`
+re-derives training and scoring independently in SQL.
 
 No reference counterpart (chriscorrea/sift has no corpus tier); this
 implements the LLM-data-pipeline brief's model-based filter.
@@ -57,7 +53,6 @@ from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 # engine-portable token class (Python/Java/DuckDB regexp agree on it;
 # same class the quality-profile stopword ratio uses)
@@ -113,9 +108,8 @@ def train_ngram_lm(clean_df, n=5, text_col="text", min_count=1,
 
     The returned counts table is a LAZY plan: persist it (or
     save_lm/load_lm, which materializes through parquet) before
-    scoring -- the scorer references it once per order (join path) or
-    collects it (udf path), and an uncached lineage re-runs the
-    training aggregations each time."""
+    scoring -- the scorer collects it, and an uncached lineage re-runs
+    the training aggregations on every collect."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     toks = clean_df.select(
@@ -176,125 +170,12 @@ def load_lm(spark, path):
                    vocab_size=meta["vocab_size"])
 
 
-def _score_case(n, alpha, total_tokens):
-    """The stupid-backoff CASE cascade over per-token columns c1..cn
-    (gram counts, null when the gram is unseen or the position is too
-    early) and x2..xn (context counts via lag): pick the highest
-    available order <= the position's effective order, multiply
-    alpha^(backoff steps). OOV floor: 1/N."""
-    o_eff = F.least(F.col("pos") + 1, F.lit(n))
-    score = F.pow(F.lit(alpha), (o_eff - 1).cast("double")) * (
-        F.lit(1.0) / F.lit(float(total_tokens))
-    )  # OOV floor, fully backed off
-    # build from unigram up so higher orders take precedence
-    for o in range(1, n + 1):
-        ctx = (F.lit(float(total_tokens)) if o == 1
-               else F.col(f"x{o}").cast("double"))
-        cond = (F.col(f"c{o}").isNotNull() & (o_eff >= o)
-                if o == 1 else
-                F.col(f"c{o}").isNotNull() & F.col(f"x{o}").isNotNull()
-                & (o_eff >= o))
-        score = F.when(
-            cond,
-            F.pow(F.lit(alpha), (o_eff - o).cast("double"))
-            * F.col(f"c{o}").cast("double") / ctx,
-        ).otherwise(score)
-    return score
-
-
-def score_perplexity(docs_df, lm, text_col="text", id_col="doc_id",
-                     broadcast=True, method="join"):
-    """Per-document LM statistics: (id, lm_tokens, lm_oov,
-    lm_logprob10, lm_ppl). lm_logprob10 = sum of log10 stupid-backoff
-    scores; lm_ppl = 10^(-logprob/tokens); empty docs get null ppl.
-
-    method='join' (default; the oracle twin): token rows -> n count
-    joins (broadcast unless broadcast=False) -> lag window for context
-    counts -> per-doc aggregation; one shuffle total (window and agg
-    share the doc_id hash partitioning). method='udf': the count table
-    is collected and Spark-broadcast into one vectorized pandas UDF --
-    a fully narrow zero-shuffle pass for models that fit in executor
-    memory (the CCNet production shape); identical output, pinned by a
-    parity test."""
-    if method == "udf":
-        return _score_perplexity_udf(docs_df, lm, text_col, id_col)
-    if method != "join":
-        raise ValueError(f"method must be 'join' or 'udf', got {method!r}")
-    n, alpha, total = lm.n, lm.alpha, lm.total_tokens
-    toks = F.col("_lm_toks")
-    # one struct per token position carrying the o-gram ENDING there
-    # for every order (null when pos < o-1) -- built narrowly from the
-    # token array, then exploded
-    per_pos = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 1),
-        lambda j: F.struct(
-            j.alias("pos"),
-            *[
-                F.when(
-                    j >= o - 1, F.array_join(F.slice(toks, j - o + 2, o),
-                                             " ")
-                ).alias(f"g{o}")
-                for o in range(1, n + 1)
-            ],
-        ),
-    )
-    base = docs_df.select(
-        F.col(id_col),
-        # null text -> empty token array, NOT null (size(null) = -1
-        # would match neither the empty nor the scored branch and the
-        # row would vanish from the output)
-        F.coalesce(
-            lm_tokens_col(F.col(text_col)),
-            F.array().cast("array<string>"),
-        ).alias("_lm_toks"),
-    )
-    empties = base.filter(F.size(toks) == 0).select(
-        F.col(id_col),
-        F.lit(0).alias("lm_tokens"), F.lit(0).alias("lm_oov"),
-        F.lit(0.0).alias("lm_logprob10"),
-        F.lit(None).cast("double").alias("lm_ppl"),
-    )
-    rows = (
-        base.filter(F.size(toks) > 0)
-        .select(F.col(id_col), F.explode(per_pos).alias("s"))
-        .select(id_col, "s.*")
-    )
-    for o in range(1, n + 1):
-        cnts = lm.counts.filter(F.col("order") == o).select(
-            F.col("gram").alias(f"g{o}"), F.col("cnt").alias(f"c{o}")
-        )
-        if broadcast:
-            cnts = F.broadcast(cnts)
-        rows = rows.join(cnts, f"g{o}", "left")
-    # context count for order o at pos = count of the (o-1)-gram ending
-    # at pos-1 = lag(c_{o-1}); the window's doc_id partitioning is the
-    # SAME exchange the final groupBy needs -- one shuffle total
-    w = Window.partitionBy(id_col).orderBy("pos")
-    for o in range(2, n + 1):
-        rows = rows.withColumn(f"x{o}", F.lag(f"c{o - 1}").over(w))
-    scored = rows.withColumn(
-        "_score", _score_case(n, alpha, total)
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count("*").cast("int").alias("lm_tokens"),
-        F.sum(F.when(F.col("c1").isNull(), 1).otherwise(0))
-        .cast("int").alias("lm_oov"),
-        F.sum(F.log10("_score")).alias("lm_logprob10"),
-    ).withColumn(
-        "lm_ppl",
-        F.pow(F.lit(10.0),
-              -F.col("lm_logprob10") / F.col("lm_tokens")),
-    )
-    return agg.unionByName(empties)
-
-
 def _ppl_udf(spark, lm):
     """The narrow scoring kernel: counts collected to per-order
     {gram: cnt} dicts and Spark-broadcast; one Arrow-batched pandas UDF
-    re-implements the identical backoff cascade in pure Python (the
-    per-token dict lookups dominate; vectorizing the string joins buys
-    nothing). Returns a udf mapping text -> struct(lm_tokens, lm_oov,
-    lm_logprob10, lm_ppl).
+    runs the backoff cascade in pure Python (the per-token dict lookups
+    dominate; vectorizing the string joins buys nothing). Returns a udf
+    mapping text -> struct(lm_tokens, lm_oov, lm_logprob10, lm_ppl).
 
     The collected model + broadcast are MEMOIZED on the NgramLM
     instance: repeated gates in one session (score + filter + bucket,
@@ -394,9 +275,12 @@ def _ppl_udf(spark, lm):
     return _score.asNondeterministic()
 
 
-def _score_perplexity_udf(docs_df, lm, text_col, id_col):
-    """Zero-shuffle scorer: the kernel from :func:`_ppl_udf` applied
-    as one narrow projection."""
+def score_perplexity(docs_df, lm, text_col="text", id_col="doc_id"):
+    """Per-document LM statistics: (id, lm_tokens, lm_oov,
+    lm_logprob10, lm_ppl). lm_logprob10 = sum of log10 stupid-backoff
+    scores; lm_ppl = 10^(-logprob/tokens); empty and null docs get 0
+    tokens and a null ppl. One narrow projection through the
+    broadcast-model kernel of :func:`_ppl_udf` -- zero shuffles."""
     score = _ppl_udf(docs_df.sparkSession, lm)
     return docs_df.select(
         F.col(id_col), score(F.col(text_col)).alias("_s")
@@ -427,30 +311,21 @@ def perplexity_thresholds(scored_df, fractions=(1 / 3, 2 / 3),
     )
 
 
-def filter_by_perplexity(docs_df, lm, max_ppl, text_col="text",
-                         id_col="doc_id", method="udf"):
+def filter_by_perplexity(docs_df, lm, max_ppl, text_col="text"):
     """Keep documents whose LM perplexity is <= max_ppl (head+middle of
-    the CCNet split, with max_ppl = the tail threshold). method='udf'
-    (default) is a FULLY NARROW gate: the score struct is computed in
-    place by the broadcast-model kernel and filtered -- zero shuffles,
-    no join-back, the shape a crawl-scale quality gate needs.
-    method='join' computes the oracle-twin score table and left-semi
-    joins it back on doc_id (one extra id shuffle; use it when the
-    model is too big to collect).
+    the CCNet split, with max_ppl = the tail threshold). A FULLY NARROW
+    gate: the score struct is computed in place by the broadcast-model
+    kernel and filtered -- zero shuffles, no join-back, the shape a
+    crawl-scale quality gate needs.
 
-    Null/empty-text rows are DROPPED in both modes (their perplexity
-    is null, and an empty document is not clean text) -- deliberately
-    unlike the dedup family's null pass-through: this is a quality
-    gate, not an identity-preserving transform. Pre-filter
-    `text IS NULL` rows out if they must survive."""
-    if method == "udf":
-        score = _ppl_udf(docs_df.sparkSession, lm)
-        return (
-            docs_df.withColumn("_lm_s", score(F.col(text_col)))
-            .filter(F.col("_lm_s.lm_ppl") <= max_ppl)
-            .drop("_lm_s")
-        )
-    keep = score_perplexity(
-        docs_df, lm, text_col=text_col, id_col=id_col
-    ).filter(F.col("lm_ppl") <= max_ppl).select(id_col)
-    return docs_df.join(keep, id_col, "left_semi")
+    Null/empty-text rows are DROPPED (their perplexity is null, and an
+    empty document is not clean text) -- deliberately unlike the dedup
+    family's null pass-through: this is a quality gate, not an
+    identity-preserving transform. Pre-filter `text IS NULL` rows out
+    if they must survive."""
+    score = _ppl_udf(docs_df.sparkSession, lm)
+    return (
+        docs_df.withColumn("_lm_s", score(F.col(text_col)))
+        .filter(F.col("_lm_s.lm_ppl") <= max_ppl)
+        .drop("_lm_s")
+    )

@@ -16,8 +16,10 @@ the LLM-pipeline brief's model-based filtering family.
 
 Method:
  * features: unigrams + bigrams of lowercased letter-run tokens hashed
-   into `n_buckets` buckets (the SAME feature map as DSIR --
-   operators/dsir.hashed_ngram_buckets), length-normalised counts
+   into `n_buckets` buckets by their md5 prefix (the SAME feature map
+   as DSIR's portable hash -- operators/dsir.hashed_ngram_buckets;
+   md5 is computable engine-side AND in Python, so the trainer and the
+   Python scorer agree on every bucket), length-normalised counts
    x_db = floor(2^10 * c_db / n_d) / 2^10 on the fixed-point grid;
  * model: one weight per bucket + an intercept, sigmoid link;
  * training: full-batch gradient descent where each step is ONE
@@ -35,9 +37,12 @@ Spark shape at 100 TB: the feature frame is ONE explode + ONE shuffle
 (groupBy (doc, bucket) with the per-doc gram total carried through the
 explode -- no second pass for totals), cached across the fixed number
 of steps; the score join broadcasts the weight table; the gradient join
-shuffles gram rows against per-doc residuals on doc_id. Scoring a
-corpus with a trained model is one explode + one broadcast join +
-one groupBy.
+shuffles gram rows against per-doc residuals on doc_id. SCORING a
+corpus with a trained model is a fully narrow pass: the weight dict
+rides a Spark broadcast into one Arrow-batched pandas UDF
+(classifier_score_udf) that re-derives each document's features and
+score in place -- no shuffle, no join, so it composes into scan-side
+filtering and Structured Streaming.
 
 Bit-exactness (what makes the driver-gate oracle possible) reuses the
 operators/nodeclf.py fixed-point discipline wholesale: features on the
@@ -77,14 +82,13 @@ DEFAULT_BUCKETS = 1 << 16
 
 
 def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
-                      id_col="doc_id", text_col="text",
-                      portable_hash=False):
+                      id_col="doc_id", text_col="text"):
     """(id, bucket, x): length-normalised hashed-ngram features on the
     2^-FEATURE_BITS grid. ONE shuffle: the per-doc gram total is
     size(grams) computed BEFORE the explode and carried through it, so
     no second aggregation pass is needed. Docs with zero grams emit no
-    rows (their score is sigmoid(intercept) via the left join in
-    scoring/training)."""
+    rows (their training score is link(intercept) via `_with_z`'s left
+    join)."""
     scale = float(1 << FEATURE_BITS)
     # the gram total must be computed BELOW the explode's Generate node:
     # selecting size(grams) NEXT TO explode(grams) makes Catalyst
@@ -105,7 +109,9 @@ def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
         )
         .select(
             F.col(id_col),
-            _bucket_col(F.col("_gram"), n_buckets, portable_hash)
+            # md5-prefix buckets (the True flag): the one bucketing
+            # classifier_score_udf can re-derive in Python
+            _bucket_col(F.col("_gram"), n_buckets, True)
             .alias("bucket"),
             F.col("_n"),
         )
@@ -135,9 +141,10 @@ def _weights_df(spark, weights):
 def _with_z(feats, base_df, id_col, weights, intercept):
     """base_df + `_z` (the linear score): broadcast weight join +
     groupBy(id) sum, LEFT-joined back so zero-gram docs get
-    z = intercept instead of disappearing. The ONE definition of the
-    scoring contract -- trainer residuals and production scores must
-    never desynchronize."""
+    z = intercept instead of disappearing. The trainer's definition of
+    the scoring contract; the production scorer (classifier_score_udf)
+    is pinned against it bit for bit, so trainer residuals and
+    production scores never desynchronize."""
     spark = feats.sparkSession
     z = (
         feats.join(F.broadcast(_weights_df(spark, weights)), "bucket")
@@ -163,11 +170,11 @@ def _doc_scores(feats, labels_df, id_col, weights, intercept, link):
 def train_text_classifier(docs_df, label_col="label",
                           n_buckets=DEFAULT_BUCKETS, n_iter=8,
                           lr=None, link="logistic", id_col="doc_id",
-                          text_col="text", portable_hash=False):
+                          text_col="text"):
     """Fit the classifier on a labelled corpus (label in {0, 1}).
 
     Returns `{"intercept": b, "weights": {bucket: w}, "n_buckets": B,
-    "lr": lr, "n_rows": n, "link": link, "portable_hash": bool}`.
+    "lr": lr, "n_rows": n, "link": link}`.
     Deterministic: same labelled multiset -> same bits, regardless of
     partitioning or cluster size (see module docstring)."""
     if link not in _LINKS:
@@ -179,7 +186,7 @@ def train_text_classifier(docs_df, label_col="label",
     # gradient (sum of residuals) into the SAME per-bucket aggregation
     # as the weight gradients -- ONE job per step instead of two
     feats = doc_feature_table(
-        docs_df, n_buckets, id_col, text_col, portable_hash
+        docs_df, n_buckets, id_col, text_col
     ).unionByName(
         labels.select(
             F.col(id_col),
@@ -230,7 +237,6 @@ def train_text_classifier(docs_df, label_col="label",
         "lr": lr,
         "n_rows": n_rows,
         "link": link,
-        "portable_hash": portable_hash,
     }
 
 
@@ -265,30 +271,22 @@ def train_from_slices(pos_df, neg_df, text_col="text", **kw):
 
 
 def classifier_score_udf(spark, model):
-    """The ZERO-SHUFFLE scoring kernel (the operators/lm.py `udf`
-    precedent): the weight dict is Spark-broadcast and one Arrow-batched
-    pandas UDF re-derives the identical score per document -- a narrow
+    """The ZERO-SHUFFLE scoring kernel (the operators/lm.py precedent):
+    the weight dict is Spark-broadcast and one Arrow-batched pandas UDF
+    re-derives each document's features and score -- a narrow
     projection, so it composes into scan-side filtering and Structured
-    Streaming (no stateful aggregation). Requires a PORTABLE model
-    (portable_hash=True: md5 buckets, computable engine-side and in
-    Python alike); xxhash64 models must use the join path, since
-    Spark's xxhash64 is engine-internal.
+    Streaming (no stateful aggregation).
 
-    Bit parity with the join path: bucketing (int(md5hex[:8], 16) %% B
-    == pmod(conv(substr(md5, 1, 8), 16, 10), B)), the floor-quantised
-    x, and the w*x products are all exactly representable, so the sums
-    agree bit-for-bit regardless of addition order; with
-    link='rational' the final score is bit-identical, with 'logistic'
-    Python's exp() may differ from the JVM's in the last ulp."""
+    Bit parity with the trainer's scoring contract (`_with_z` + the
+    link): bucketing (int(md5hex[:8], 16) %% B == pmod(conv(substr(md5,
+    1, 8), 16, 10), B)), the floor-quantised x, and the w*x products
+    are all exactly representable, so the sums agree bit-for-bit
+    regardless of addition order; with link='rational' the final score
+    is bit-identical, with 'logistic' Python's exp() may differ from
+    the JVM's in the last ulp."""
     import hashlib
     import re
 
-    if not model.get("portable_hash", False):
-        raise ValueError(
-            "classifier_score_udf needs a portable (md5-bucketed) "
-            "model; this one was trained with xxhash64 buckets -- "
-            "use the join path or retrain with portable_hash=True"
-        )
     from .lm import _TOKEN_SPLIT
 
     weights = {int(b): float(w) for b, w in model["weights"].items()}
@@ -338,52 +336,26 @@ def classifier_score_udf(spark, model):
 
 
 def score_text_classifier(docs_df, model, score_col="clf_score",
-                          id_col="doc_id", text_col="text",
-                          method="join"):
-    """docs_df + a probability column (higher = more target-like).
-
-    method='join' (default): one explode + one BROADCAST join on
-    bucket + one groupBy, then a left join back onto the input
-    (zero-gram docs score sigmoid(intercept)). method='udf': fully
-    narrow -- no shuffle, no self-join -- via classifier_score_udf
-    (portable models only)."""
-    if method == "udf":
-        score = classifier_score_udf(docs_df.sparkSession, model)
-        return docs_df.withColumn(score_col, score(F.col(text_col)))
-    if method != "join":
-        raise ValueError(f"method must be 'join' or 'udf', got {method!r}")
-    feats = doc_feature_table(
-        docs_df, model["n_buckets"], id_col, text_col,
-        model.get("portable_hash", False),
-    )
-    link = _LINKS[model.get("link", "logistic")]
-    return (
-        _with_z(feats, docs_df, id_col, model["weights"],
-                model["intercept"])
-        .withColumn(score_col, link(F.col("_z")))
-        .drop("_z")
-    )
+                          text_col="text"):
+    """docs_df + a probability column (higher = more target-like),
+    computed in place by classifier_score_udf -- fully narrow, no
+    shuffle, no self-join; zero-gram docs score link(intercept)."""
+    score = classifier_score_udf(docs_df.sparkSession, model)
+    return docs_df.withColumn(score_col, score(F.col(text_col)))
 
 
-def filter_by_classifier(docs_df, model, min_score,
-                         id_col="doc_id", text_col="text",
-                         method="auto"):
+def filter_by_classifier(docs_df, model, min_score, text_col="text"):
     """Keep docs the model scores >= min_score (the --min-clf-score
-    funnel stage). method='auto' picks the narrow udf path when the
-    model is portable (no shuffle, no persist needed around the gate)
-    and the join path otherwise."""
-    if method == "auto":
-        method = "udf" if model.get("portable_hash", False) else "join"
+    funnel stage): a narrow gate, no shuffle and no persist needed."""
     return score_text_classifier(
-        docs_df, model, "_clf_score", id_col, text_col, method=method
+        docs_df, model, "_clf_score", text_col
     ).filter(F.col("_clf_score") >= F.lit(float(min_score))).drop(
         "_clf_score"
     )
 
 
 def evaluate_classifier(docs_df, model, label_col="label",
-                        id_col="doc_id", text_col="text",
-                        threshold=0.5, method="join"):
+                        text_col="text", threshold=0.5):
     """Held-out evaluation in TWO jobs: accuracy/precision/recall at
     `threshold` plus exact AUC via the rank-sum (Mann-Whitney U)
     identity AUC = (sum of positive ranks - n_pos*(n_pos+1)/2) /
@@ -409,7 +381,7 @@ def evaluate_classifier(docs_df, model, label_col="label",
     from pyspark.sql import Window
 
     scored = score_text_classifier(
-        docs_df, model, "_s", id_col, text_col, method=method
+        docs_df, model, "_s", text_col
     ).select(
         F.col("_s"), F.col(label_col).cast("int").alias("_y")
     )
@@ -528,7 +500,9 @@ _META_BUCKET = -1  # the intercept/meta row's bucket key
 
 def save_text_classifier(model, path):
     """Persist as ONE parquet: (bucket, w) weight rows plus a bucket=-1
-    meta row carrying the intercept and the scoring parameters."""
+    meta row carrying the intercept and the scoring parameters. The
+    meta's `portable_hash: true` marks md5-prefix buckets, the only
+    bucketing this module trains and scores."""
     import json
 
     spark = _active_spark()
@@ -536,7 +510,7 @@ def save_text_classifier(model, path):
         {
             "n_buckets": model["n_buckets"],
             "link": model.get("link", "logistic"),
-            "portable_hash": bool(model.get("portable_hash", False)),
+            "portable_hash": True,
             "lr": model["lr"],
             "n_rows": model["n_rows"],
         }
@@ -563,6 +537,14 @@ def load_text_classifier(path):
             "rows; expected exactly one bucket=-1 row"
         )
     meta = json.loads(meta_rows[0]["meta"])
+    if not meta.get("portable_hash"):
+        # xxhash64 buckets: scoring them with md5 buckets would give
+        # silently wrong scores
+        raise ValueError(
+            f"classifier model at {path} was trained with xxhash64 "
+            "feature buckets, which can no longer be scored; retrain "
+            "it with `python -m sift_spark.job train-clf`"
+        )
     return {
         "intercept": meta_rows[0]["w"],
         "weights": {
@@ -574,7 +556,6 @@ def load_text_classifier(path):
         "lr": meta["lr"],
         "n_rows": meta["n_rows"],
         "link": meta["link"],
-        "portable_hash": meta["portable_hash"],
     }
 
 

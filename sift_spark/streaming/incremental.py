@@ -97,12 +97,11 @@ def stream_curation(spark, input_path, output_path, checkpoint_path,
     Full near-dup banding (hamming > 0) needs cross-row joins and stays
     a periodic batch job (operators/dedup.py).
 
-    The batch pipeline's MODEL-BASED gates compose in because both have
-    narrow udf scorers (no stateful aggregation): lm_model/max_ppl
-    applies the CCNet perplexity gate (operators/lm.py, model shipped
-    to workers), clf_model/min_clf_score the fastText-style classifier
-    gate (operators/textclf.py, PORTABLE md5-bucketed models only --
-    the udf path's requirement)."""
+    The batch pipeline's MODEL-BASED gates compose in because both
+    scorers are narrow Arrow UDFs with the model shipped to the workers
+    (no stateful aggregation): lm_model/max_ppl applies the CCNet
+    perplexity gate (operators/lm.py), clf_model/min_clf_score the
+    fastText-style classifier gate (operators/textclf.py)."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import simhash64_udf
@@ -138,8 +137,7 @@ def stream_curation(spark, input_path, output_path, checkpoint_path,
 
         lm = (load_lm(spark, lm_model)
               if isinstance(lm_model, str) else lm_model)
-        curated = filter_by_perplexity(curated, lm, max_ppl,
-                                       method="udf")
+        curated = filter_by_perplexity(curated, lm, max_ppl)
     if clf_model is not None and min_clf_score:
         from ..operators.textclf import (
             filter_by_classifier,
@@ -148,8 +146,7 @@ def stream_curation(spark, input_path, output_path, checkpoint_path,
 
         clf = (load_text_classifier(clf_model)
                if isinstance(clf_model, str) else clf_model)
-        curated = filter_by_classifier(curated, clf, min_clf_score,
-                                       method="udf")
+        curated = filter_by_classifier(curated, clf, min_clf_score)
     curated = curated.withColumn("simhash", simhash64_udf(F.col("text")))
     deduped = (
         curated.withWatermark("ts", watermark)

@@ -116,15 +116,18 @@ def test_token_mode_warns_about_fallback(html_file):
 
 def test_dist_zip_matches_source():
     """The spark-submit artifact must never drift from source (the
-    round-4 third review caught a stale css.py in the zip): every
-    tracked sift_spark/*.py must be present byte-identical. Rebuild
-    with `sh scripts/package.sh` after any module change."""
+    round-4 third review caught a stale css.py in the zip): the zip is
+    not tracked, so build it with `sh scripts/package.sh` and check
+    that every sift_spark/*.py is present byte-identical."""
     import os
+    import subprocess
     import zipfile
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(["sh", os.path.join(repo, "scripts", "package.sh")],
+                   check=True, capture_output=True)
     zip_path = os.path.join(repo, "dist", "sift_spark.zip")
-    assert os.path.exists(zip_path), "run sh scripts/package.sh"
+    assert os.path.exists(zip_path), "scripts/package.sh wrote no zip"
     with zipfile.ZipFile(zip_path) as zf:
         zipped = set(zf.namelist())
         for root, _dirs, files in os.walk(os.path.join(repo, "sift_spark")):

@@ -1,5 +1,5 @@
 """n-gram LM perplexity filtering (operators/lm.py): hand-computed
-stupid-backoff scores, join==udf parity, save/load, buckets, and the
+stupid-backoff scores, the perplexity gate, save/load, buckets, and the
 curation-gate wiring."""
 
 import math
@@ -89,8 +89,9 @@ def test_trigram_backoff_chain(spark):
 
 
 def test_udf_join_parity_and_filter(spark):
-    """The narrow udf scorer and the join scorer agree per document;
-    filter_by_perplexity keeps the clean-looking docs in both modes."""
+    """The narrow scorer ranks clean-slice-like text far below
+    gibberish, and filter_by_perplexity keeps exactly the docs whose
+    score_perplexity ppl is under the cutoff (null text dropped)."""
     from sift_spark.operators.lm import (
         filter_by_perplexity,
         score_perplexity,
@@ -110,25 +111,17 @@ def test_udf_join_parity_and_filter(spark):
          (102, "the quick brown fox and the lazy dog"),
          (103, None)],
         "doc_id long, text string")
-    j = _scores(score_perplexity(docs, lm, method="join"))
-    u = _scores(score_perplexity(docs, lm, method="udf"))
-    assert set(j) == set(u) == {100, 101, 102, 103}
-    for d in j:
-        assert j[d]["lm_tokens"] == u[d]["lm_tokens"]
-        assert j[d]["lm_oov"] == u[d]["lm_oov"]
-        assert j[d]["lm_logprob10"] == pytest.approx(
-            u[d]["lm_logprob10"], rel=1e-9)
+    u = _scores(score_perplexity(docs, lm))
+    assert set(u) == {100, 101, 102, 103}
     # clean-slice-like docs score far below gibberish
-    assert j[102]["lm_ppl"] < j[101]["lm_ppl"]
+    assert u[102]["lm_ppl"] < u[101]["lm_ppl"]
 
-    cutoff = (j[102]["lm_ppl"] + j[101]["lm_ppl"]) / 2
-    for method in ("join", "udf"):
-        kept = {r["doc_id"] for r in filter_by_perplexity(
-            docs, lm, cutoff, method=method).collect()}
-        assert 102 in kept and 101 not in kept and 103 not in kept
-
-    with pytest.raises(ValueError):
-        score_perplexity(docs, lm, method="magic")
+    cutoff = (u[102]["lm_ppl"] + u[101]["lm_ppl"]) / 2
+    kept = {r["doc_id"] for r in filter_by_perplexity(
+        docs, lm, cutoff).collect()}
+    assert kept == {d for d, r in u.items()
+                    if r["lm_ppl"] is not None and r["lm_ppl"] <= cutoff}
+    assert 102 in kept and 101 not in kept and 103 not in kept
 
 
 def test_save_load_roundtrip(spark, tmp_path):
@@ -252,8 +245,8 @@ def test_train_lm_cli_and_curation_gate(spark, tmp_path):
 
 
 def test_filter_udf_path_is_narrow(spark):
-    """filter_by_perplexity(method='udf') must not shuffle or join --
-    the score struct is computed and filtered in place."""
+    """filter_by_perplexity must not shuffle or join -- the score
+    struct is computed and filtered in place."""
     import contextlib
     import io
 

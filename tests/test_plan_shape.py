@@ -396,35 +396,17 @@ def test_bucketed_seen_snapshot_skips_snapshot_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS _test_seen_bucketed")
 
 
-def test_lm_scorer_single_corpus_shuffle(spark):
-    """score_perplexity (join method, n=3): every count lookup is a
-    BROADCAST join; the corpus side pays exactly ONE hash exchange on
-    doc_id (the context-lag window and the per-doc aggregation share
-    it); the remaining exchanges are the clean-slice training
-    word-counts feeding the BroadcastExchanges, never the corpus."""
-    from sift_spark.operators.lm import score_perplexity, train_ngram_lm
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog") for i in
-         range(6)], ["doc_id", "text"])
-    lm = train_ngram_lm(docs.filter(F.col("doc_id") % 2 == 0), n=3)
-    plan = plan_of(score_perplexity(docs, lm))
-    assert count_nodes(plan, "BroadcastHashJoin") == 3
-    assert count_nodes(plan, "SortMergeJoin") == 0
-    # ONE corpus-side exchange on doc_id (window + agg fused); the
-    # plan string mentions it at most twice (detail + tree sections)
-    assert 1 <= plan.count("hashpartitioning(doc_id") <= 2
-
-
 def test_lm_udf_scorer_is_narrow(spark):
-    """The udf scoring path must stay shuffle-free: one ArrowEvalPython
-    node, zero Exchanges -- the ship-the-model-to-workers shape."""
+    """score_perplexity must stay shuffle-free: one ArrowEvalPython
+    node, zero Exchanges, no join -- the ship-the-model-to-workers
+    shape."""
     from sift_spark.operators.lm import score_perplexity, train_ngram_lm
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "beta gamma delta")],
         ["doc_id", "text"])
     lm = train_ngram_lm(docs, n=2)
-    plan = plan_of(score_perplexity(docs, lm, method="udf"))
+    plan = plan_of(score_perplexity(docs, lm))
     assert count_nodes(plan, "ArrowEvalPython") == 1
     assert count_nodes(plan, "Exchange") == 0
+    assert "Join" not in plan

@@ -323,9 +323,7 @@ def test_stream_curation_model_gates(spark, tmp_path):
         + [(100 + i, f"{spam} lot {i}", 0) for i in range(6)],
         "doc_id long, text string, label int",
     )
-    model = train_text_classifier(
-        train, n_buckets=512, n_iter=10, portable_hash=True
-    )
+    model = train_text_classifier(train, n_buckets=512, n_iter=10)
 
     t0 = datetime(2025, 6, 1, 8, 0, 0)
     input_dir = str(tmp_path / "in")

@@ -1,6 +1,7 @@
 """fastText-style hashed-ngram quality classifier (operators/textclf):
 separation on a planted fixture, partitioning-invariant bit-exactness,
-save/load round-trip, zero-gram docs, and the curation funnel stage."""
+the narrow scorer against the trainer's scoring contract, save/load
+round-trip, zero-gram docs, and the curation funnel stage."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,6 +135,23 @@ def test_save_load_round_trip(spark, tmp_path):
     assert [r[0] for r in s0] == [r[0] for r in s1]
 
 
+def test_load_rejects_xxhash64_model(spark, tmp_path):
+    """A model saved with xxhash64 feature buckets (meta
+    `portable_hash: false`) cannot be scored by the md5 scorer;
+    loading it must fail loudly instead of scoring it wrong."""
+    import json
+
+    path = str(tmp_path / "legacy_clf")
+    meta = json.dumps({"n_buckets": 512, "link": "logistic",
+                       "portable_hash": False, "lr": 0.5, "n_rows": 8})
+    spark.createDataFrame(
+        [(3, 0.25, None), (-1, 0.125, meta)],
+        "bucket long, w double, meta string",
+    ).coalesce(1).write.parquet(path)
+    with pytest.raises(ValueError, match="train-clf"):
+        load_text_classifier(path)
+
+
 def test_filter_by_classifier(spark):
     docs = _labelled(spark)
     model = train_text_classifier(docs, n_buckets=512, n_iter=10)
@@ -150,15 +168,6 @@ def test_feature_table_one_shuffle_and_grid(spark):
     for r in feats.collect():
         assert 0.0 <= r["x"] <= 1.0
         assert (r["x"] * 1024.0) == int(r["x"] * 1024.0)  # on the grid
-
-
-def test_scoring_plan_broadcasts_weights(spark):
-    docs = _labelled(spark, reps=1)
-    model = train_text_classifier(docs, n_buckets=512, n_iter=2)
-    scored = score_text_classifier(docs, model)
-    plan = scored._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_train_clf_cli_and_curation_gate(spark, tmp_path):
@@ -208,81 +217,81 @@ def test_clf_model_without_threshold_fails_loudly(spark, tmp_path):
                          clf_model="/nonexistent/model")
 
 
+def _contract_scores(docs, model):
+    """The trainer's own scoring contract: `_with_z` over the md5
+    feature table, then the model's link -- the join form the narrow
+    scorer must reproduce."""
+    from sift_spark.operators.nodeclf import _LINKS
+    from sift_spark.operators.textclf import _with_z
+
+    feats = doc_feature_table(docs, n_buckets=model["n_buckets"])
+    z = _with_z(feats, docs, "doc_id", model["weights"],
+                model["intercept"])
+    link = _LINKS[model["link"]]
+    return {r["doc_id"]: r["p"]
+            for r in z.select("doc_id", link(F.col("_z")).alias("p"))
+            .collect()}
+
+
 def test_udf_scorer_matches_join_bit_for_bit(spark):
-    """Portable model, rational link: the narrow udf path reproduces
-    the join path's scores EXACTLY (shared grids make the sums
-    order-independent; rational sigmoid is correctly-rounded IEEE ops
-    in both engines)."""
+    """Rational link: the narrow scorer reproduces the trainer's join
+    scoring contract (`_with_z` + link) EXACTLY -- shared grids make
+    the sums order-independent, and the rational sigmoid is
+    correctly-rounded IEEE ops in both engines."""
     docs = _labelled(spark)
     model = train_text_classifier(
         docs, n_buckets=512, n_iter=6, link="rational",
-        portable_hash=True,
     )
-    j = {r["doc_id"]: r["clf_score"]
-         for r in score_text_classifier(docs, model, method="join")
-         .select("doc_id", "clf_score").collect()}
+    j = _contract_scores(docs, model)
     u = {r["doc_id"]: r["clf_score"]
-         for r in score_text_classifier(docs, model, method="udf")
+         for r in score_text_classifier(docs, model)
          .select("doc_id", "clf_score").collect()}
     assert j == u  # identical bits
 
 
 def test_udf_scorer_logistic_close(spark):
+    """Logistic link: Python's exp() may differ from the JVM's in the
+    last ulp, nothing more."""
     docs = _labelled(spark)
     model = train_text_classifier(
         docs, n_buckets=512, n_iter=6, link="logistic",
-        portable_hash=True,
     )
-    j = {r["doc_id"]: r["clf_score"]
-         for r in score_text_classifier(docs, model, method="join")
-         .select("doc_id", "clf_score").collect()}
+    j = _contract_scores(docs, model)
     u = {r["doc_id"]: r["clf_score"]
-         for r in score_text_classifier(docs, model, method="udf")
+         for r in score_text_classifier(docs, model)
          .select("doc_id", "clf_score").collect()}
+    assert set(u) == set(j)
     for k in j:
         assert u[k] == pytest.approx(j[k], rel=1e-12)
-
-
-def test_udf_scorer_requires_portable_model(spark):
-    docs = _labelled(spark, reps=1)
-    model = train_text_classifier(docs, n_buckets=512, n_iter=2)
-    with pytest.raises(ValueError, match="portable"):
-        score_text_classifier(docs, model, method="udf").collect()
 
 
 def test_udf_path_is_narrow(spark):
     """The udf scorer must not shuffle or join -- it composes into the
     scan-side pipeline (and into Structured Streaming)."""
     docs = _labelled(spark, reps=1)
-    model = train_text_classifier(
-        docs, n_buckets=512, n_iter=2, portable_hash=True
-    )
-    scored = score_text_classifier(docs, model, method="udf")
+    model = train_text_classifier(docs, n_buckets=512, n_iter=2)
+    scored = score_text_classifier(docs, model)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Join" not in plan
 
 
 def test_filter_auto_picks_udf_for_portable(spark):
-    """method='auto' gates portable models through the narrow path and
-    keeps the same documents as the join path."""
+    """filter_by_classifier gates through the narrow scorer (no
+    shuffle, no join) and keeps exactly the documents the trainer's
+    scoring contract scores >= the threshold."""
     docs = _labelled(spark)
     model = train_text_classifier(
         docs, n_buckets=512, n_iter=10, link="rational",
-        portable_hash=True,
     )
-    auto = filter_by_classifier(docs, model, 0.5, method="auto")
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan  # narrow path chosen
-    kept_auto = {r["doc_id"] for r in auto.collect()}
-    kept_join = {
-        r["doc_id"]
-        for r in filter_by_classifier(
-            docs, model, 0.5, method="join"
-        ).collect()
-    }
-    assert kept_auto == kept_join
-    assert kept_auto  # non-vacuous
+    gated = filter_by_classifier(docs, model, 0.5)
+    plan = gated._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    kept = {r["doc_id"] for r in gated.collect()}
+    assert kept == {d for d, p in _contract_scores(docs, model).items()
+                    if p >= 0.5}
+    assert kept  # non-vacuous
 
 
 def test_udf_gate_on_a_stream(spark, tmp_path):
@@ -292,15 +301,13 @@ def test_udf_gate_on_a_stream(spark, tmp_path):
     from sift_spark.operators.textclf import filter_by_classifier
 
     docs = _labelled(spark, reps=1)
-    model = train_text_classifier(
-        docs, n_buckets=512, n_iter=10, portable_hash=True
-    )
+    model = train_text_classifier(docs, n_buckets=512, n_iter=10)
     src = str(tmp_path / "src")
     docs.write.parquet(src)
     stream = spark.readStream.schema(
         "doc_id long, text string, label int"
     ).parquet(src)
-    gated = filter_by_classifier(stream, model, 0.5, method="udf")
+    gated = filter_by_classifier(stream, model, 0.5)
     out = str(tmp_path / "out")
     q = (gated.writeStream.format("parquet")
          .option("path", out)
@@ -396,8 +403,7 @@ def test_evaluate_classifier_degenerate_cases(spark):
     docs = _labelled(spark, reps=1)
     # untrained model: all weights zero -> every doc scores the same
     zero = {"intercept": 0.0, "weights": {}, "n_buckets": 512,
-            "lr": 0.5, "n_rows": 8, "link": "rational",
-            "portable_hash": False}
+            "lr": 0.5, "n_rows": 8, "link": "rational"}
     m = evaluate_classifier(docs, zero)
     assert m["auc"] == pytest.approx(0.5)
     assert m["precision"] == pytest.approx(0.5)  # all predicted pos
