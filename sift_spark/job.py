@@ -145,7 +145,6 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
                      temperature_default_rate=0.0, span_k=0,
                      span_hash_mode="rolling",
                      seen_df=None, write_hashes=False,
-                     seen_bloom=False,
                      seen_sigs_df=None, write_sigs=False,
                      sig_jaccard=0.5,
                      seen_simhash_df=None, write_simhash=False,
@@ -183,7 +182,10 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     snapshot (written when write_hashes=True as the curated corpus's
     distinct 16-byte content hashes at `output_dir + "_hashes"`) or
     raw docs with a text column; union successive `_hashes` sinks to
-    accumulate the corpus-wide seen set week over week. When span_k
+    accumulate the corpus-wide seen set week over week. The loop is
+    one left_anti join on the 16-byte hash (dedup_against_seen); feed
+    a write_seen_bucketed snapshot to keep the seen side from
+    re-shuffling. When span_k
     is set, the snapshot includes the PRE-span-excision hashes too,
     so an exact re-crawl of a doc whose spans were cut still matches
     next run (ADVICE r6). span_hash_mode picks the span stage's
@@ -302,11 +304,6 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
 
         seen_kwargs = ({} if "content_hash" in seen_df.columns
                        else {"seen_text_col": "text"})
-        if seen_bloom:
-            # exactness-preserving pre-filter: one agg pass over the
-            # snapshot sizes+builds the broadcast bloom; only
-            # might-contain rows enter the anti-join shuffle
-            seen_kwargs["bloom_items"] = "auto"
         curated = observed(
             dedup_against_seen(curated, seen_df, **seen_kwargs),
             "after_seen_dedup",
@@ -587,12 +584,11 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     return out, metrics
 
 
-def curate_main(argv=None):
-    parser = argparse.ArgumentParser(
-        description="sift-spark corpus curation job"
-    )
-    parser.add_argument("--input", required=True, help="docs parquet path")
-    parser.add_argument("--output", required=True, help="output directory")
+def _add_curation_args(parser):
+    """Declare the curation flags `curate` and `crawl-curate` share
+    (everything but --input/--output and crawl-curate's own extraction
+    flags); `_curation_kwargs` maps all but --cores (the session size)
+    onto run_curation_job."""
     parser.add_argument("--lang", default="en")
     parser.add_argument("--min-quality", type=float, default=0.5)
     parser.add_argument("--lm-model", default=None,
@@ -630,11 +626,6 @@ def curate_main(argv=None):
                         help="write <output>_hashes (distinct 16-byte "
                              "content hashes of the curated corpus) "
                              "for the next run's --seen")
-    parser.add_argument("--seen-bloom", action="store_true",
-                        help="broadcast bloom pre-filter over --seen "
-                             "(exactness-preserving; cuts the "
-                             "anti-join shuffle to might-contain "
-                             "candidates)")
     parser.add_argument("--seen-sigs", default=None,
                         help="prior snapshot's minhash signature "
                              "parquet (a previous run's _sigs sink) "
@@ -693,30 +684,27 @@ def curate_main(argv=None):
                         help="tiktoken-format BPE vocab for the packed "
                              "token buffers (default: fallback ids)")
     parser.add_argument("--cores", type=int, default=None)
-    args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-curate-job", cores=args.cores)
-    out, metrics = run_curation_job(
-        spark,
-        spark.read.parquet(args.input),
-        args.output,
+def _curation_kwargs(spark, args):
+    """run_curation_job keywords from `_add_curation_args`' flags,
+    reading the --seen*, --benchmark and --dsir-target parquet inputs."""
+    def parquet(path):
+        return spark.read.parquet(path) if path else None
+
+    return dict(
         lang=args.lang,
         min_quality=args.min_quality,
         lm_model=args.lm_model,
         max_ppl=args.max_ppl,
         clf_model=args.clf_model,
         min_clf_score=args.min_clf_score,
-        dsir_target_df=(spark.read.parquet(args.dsir_target)
-                        if args.dsir_target else None),
+        dsir_target_df=parquet(args.dsir_target),
         dsir_k=args.dsir_k,
         dsir_seed=args.dsir_seed,
         redact=args.redact_pii,
         dedup=not args.no_dedup,
-        benchmark_df=(spark.read.parquet(args.benchmark)
-                      if args.benchmark else None),
+        benchmark_df=parquet(args.benchmark),
         ngram=args.ngram,
         pack_budget=args.pack_budget,
         n_shards=args.shards,
@@ -726,17 +714,33 @@ def curate_main(argv=None):
         temperature_default_rate=args.mix_default_rate,
         span_k=args.span_k,
         span_hash_mode=args.span_hash_mode,
-        seen_df=(spark.read.parquet(args.seen) if args.seen else None),
+        seen_df=parquet(args.seen),
         write_hashes=args.write_hashes,
-        seen_bloom=args.seen_bloom,
-        seen_sigs_df=(spark.read.parquet(args.seen_sigs)
-                      if args.seen_sigs else None),
+        seen_sigs_df=parquet(args.seen_sigs),
         write_sigs=args.write_sigs,
-        seen_simhash_df=(spark.read.parquet(args.seen_simhash)
-                         if args.seen_simhash else None),
+        seen_simhash_df=parquet(args.seen_simhash),
         write_simhash=args.write_simhash,
         simhash_max_hamming=args.simhash_hamming,
         sig_jaccard=args.sig_jaccard,
+    )
+
+
+def curate_main(argv=None):
+    parser = argparse.ArgumentParser(
+        description="sift-spark corpus curation job"
+    )
+    parser.add_argument("--input", required=True, help="docs parquet path")
+    parser.add_argument("--output", required=True, help="output directory")
+    _add_curation_args(parser)
+    args = parser.parse_args(argv)
+
+    from pyspark.sql import SparkSession
+
+    owns_session = SparkSession.getActiveSession() is None
+    spark = get_spark(app_name="sift-spark-curate-job", cores=args.cores)
+    out, metrics = run_curation_job(
+        spark, spark.read.parquet(args.input), args.output,
+        **_curation_kwargs(spark, args),
     )
     stages = " ".join(f"{k}={v}" for k, v in metrics.items())
     print(f"curated rows={out.count()} {stages}")
@@ -995,68 +999,7 @@ def crawl_curate_main(argv=None):
                         choices=["domain", "host"],
                         help="match blocklist entries by registered "
                              "domain (blocks subdomains) or exact host")
-    parser.add_argument("--lang", default="en")
-    parser.add_argument("--min-quality", type=float, default=0.5)
-    parser.add_argument("--lm-model", default=None,
-                        help="saved n-gram LM for the perplexity gate "
-                             "(see curate --lm-model)")
-    parser.add_argument("--max-ppl", type=float, default=0.0)
-    parser.add_argument("--clf-model", default=None,
-                        help="saved quality-classifier parquet for the "
-                             "model gate (see curate --clf-model)")
-    parser.add_argument("--min-clf-score", type=float, default=0.0)
-    parser.add_argument("--dsir-target", default=None,
-                        help="target-domain docs parquet for DSIR "
-                             "importance resampling (see curate)")
-    parser.add_argument("--dsir-k", type=int, default=0)
-    parser.add_argument("--dsir-seed", type=int, default=0)
-    parser.add_argument("--redact-pii", action="store_true")
-    parser.add_argument("--no-dedup", action="store_true")
-    parser.add_argument("--benchmark", default=None,
-                        help="eval-set parquet for decontamination")
-    parser.add_argument("--seen", default=None,
-                        help="prior snapshot parquet for incremental "
-                             "dedup (see curate --seen)")
-    parser.add_argument("--write-hashes", action="store_true")
-    parser.add_argument("--seen-bloom", action="store_true",
-                        help="bloom pre-filter over --seen "
-                             "(see curate --seen-bloom)")
-    parser.add_argument("--seen-sigs", default=None,
-                        help="prior minhash signature parquet for "
-                             "incremental NEAR-dup (see curate "
-                             "--seen-sigs)")
-    parser.add_argument("--write-sigs", action="store_true")
-    parser.add_argument("--sig-jaccard", type=float, default=0.5)
-    parser.add_argument("--seen-simhash", default=None,
-                        help="prior snapshot's simhash parquet (a "
-                             "previous run's _simhash sink, one int64 "
-                             "per historical doc): drop new docs within "
-                             "--simhash-hamming bits of shipped content")
-    parser.add_argument("--write-simhash", action="store_true",
-                        help="write <output>_simhash for the next "
-                             "run's --seen-simhash")
-    parser.add_argument("--simhash-hamming", type=int, default=3,
-                        help="max differing bits vs the snapshot "
-                             "(hard cap 3: the chunk blocking is "
-                             "lossless only there; use --seen-sigs "
-                             "for looser gates)")
-    parser.add_argument("--ngram", type=int, default=13)
-    parser.add_argument("--span-k", type=int, default=0,
-                        help="duplicated-span removal window in words "
-                             "(0 = off)")
-    parser.add_argument("--span-hash-mode", default="rolling",
-                        choices=["rolling", "md5"],
-                        help="span window keys (see curate "
-                             "--span-hash-mode)")
-    parser.add_argument("--mix-stratum", default=None)
-    parser.add_argument("--mix-alpha", type=float, default=0.5)
-    parser.add_argument("--mix-default-rate", type=float, default=0.0)
-    parser.add_argument("--pack-budget", type=int, default=0,
-                        help="token budget per training sequence "
-                             "(0 = skip packing)")
-    parser.add_argument("--shards", type=int, default=64)
-    parser.add_argument("--vocab", default=None)
-    parser.add_argument("--cores", type=int, default=None)
+    _add_curation_args(parser)
     args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -1073,40 +1016,7 @@ def crawl_curate_main(argv=None):
         block_hosts=(spark.read.text(args.block_hosts)
                      if args.block_hosts else None),
         block_by=args.block_by,
-        lang=args.lang,
-        min_quality=args.min_quality,
-        lm_model=args.lm_model,
-        max_ppl=args.max_ppl,
-        clf_model=args.clf_model,
-        min_clf_score=args.min_clf_score,
-        dsir_target_df=(spark.read.parquet(args.dsir_target)
-                        if args.dsir_target else None),
-        dsir_k=args.dsir_k,
-        dsir_seed=args.dsir_seed,
-        redact=args.redact_pii,
-        dedup=not args.no_dedup,
-        benchmark_df=(spark.read.parquet(args.benchmark)
-                      if args.benchmark else None),
-        ngram=args.ngram,
-        pack_budget=args.pack_budget,
-        n_shards=args.shards,
-        vocab_path=args.vocab,
-        temperature_stratum=args.mix_stratum,
-        temperature_alpha=args.mix_alpha,
-        temperature_default_rate=args.mix_default_rate,
-        span_k=args.span_k,
-        span_hash_mode=args.span_hash_mode,
-        seen_df=(spark.read.parquet(args.seen) if args.seen else None),
-        write_hashes=args.write_hashes,
-        seen_bloom=args.seen_bloom,
-        seen_sigs_df=(spark.read.parquet(args.seen_sigs)
-                      if args.seen_sigs else None),
-        write_sigs=args.write_sigs,
-        seen_simhash_df=(spark.read.parquet(args.seen_simhash)
-                         if args.seen_simhash else None),
-        write_simhash=args.write_simhash,
-        simhash_max_hamming=args.simhash_hamming,
-        sig_jaccard=args.sig_jaccard,
+        **_curation_kwargs(spark, args),
     )
     stages = " ".join(f"{k}={v}" for k, v in metrics.items())
     print(f"curated rows={out.count()} {stages}")

@@ -12,9 +12,7 @@ Scale notes (100 TB):
     shingle explode; banding turns O(n^2) similarity into equi-join on
     (band_idx, band_hash) -- the classic shuffle-friendly formulation;
     candidate verification re-joins only the candidate pairs
-  * shingle explode multiplies rows by ~doc_len; for 100 TB use k-char
-    shingles SAMPLED by hash (keep shingles with pmod(hash, s)=0) --
-    exposed via `sample_mod`
+  * shingle explode multiplies rows by ~doc_len
 """
 
 from __future__ import annotations
@@ -81,23 +79,9 @@ def content_hash_col(text_col):
     return F.unhex(F.md5(normalized_text_col(col)))
 
 
-_BLOOM_PROBES = 2
-_BLOOM_BITS_PER_ITEM = 16
-
-
-def _bloom_positions(hash_col, n_bits):
-    """k seeded probe positions in [0, n_bits) for a binary hash col
-    (seed folded in as an extra xxhash64 argument)."""
-    return [
-        F.pmod(F.xxhash64(F.lit(seed), F.col(hash_col)), F.lit(n_bits))
-        for seed in range(_BLOOM_PROBES)
-    ]
-
-
 def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
                        text_col="text", seen_text_col=None,
-                       seen_hash_col="content_hash",
-                       bloom_items=None):
+                       seen_hash_col="content_hash"):
     """INCREMENTAL exact dedup: drop documents whose normalized content
     already exists in a prior corpus snapshot -- the weekly-crawl
     pattern (each new crawl dedups against everything already curated
@@ -124,26 +108,14 @@ def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
     that would need the snapshot to persist the banded form itself (a
     format change, deliberately not made).
 
-    bloom_items (VERDICT r6 #4): enables the EXACTNESS-PRESERVING
-    bloom pre-filter. One aggregation pass over the snapshot hashes
-    builds a compact bloom bitmap (16 bits/item, 2 probes, ~1.4% fpp,
-    capped at 16 MB of bits) as a (word, mask) table -- Spark's
-    BloomFilterAggregate/might_contain are runtime-filter internals
-    absent from the public function registry, so the same structure is
-    built from public primitives (seeded xxhash64 probes, bit_or over
-    shifted bits) and probed via one broadcast equi-join per probe:
-    the new batch stays NARROW. Rows the filter rules out are kept
-    WITHOUT entering the anti-join shuffle -- only might-contain
-    candidates (actual duplicates plus the fpp sliver) shuffle against
-    the snapshot. The anti-join stays authoritative, so output is
-    identical bloom on/off (unit-pinned); an empty snapshot's empty
-    bitmap keeps everything. Pass an int (expected snapshot size) or
-    "auto" (a count() pass sizes it).
-    Weekly-crawl economics: the new batch is small next to the
-    accumulated snapshot and mostly fresh, so the pre-filter removes
-    nearly the whole new-batch side from the shuffle for the cost of
-    one broadcast read per row. Null-text rows pass through (same
-    contract as dedup_exact)."""
+    There is no per-run pre-filter over the snapshot: a broadcast bloom
+    bitmap must scan and aggregate the whole snapshot before the
+    anti-join can start, and measured slower than the plain anti-join
+    at every size tried on a 4-core local[4] session (1.5k new docs vs
+    600 hashes up to 300k vs 5M).
+    The bucketed snapshot is the long-lived join state instead.
+
+    Null-text rows pass through (same contract as dedup_exact)."""
     if seen_text_col is not None:
         seen_hashes = seen_df.select(
             content_hash_col(seen_text_col).alias("_seen_hash")
@@ -181,83 +153,10 @@ def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
     with_text = docs_df.filter(F.col(text_col).isNotNull())
     null_text = docs_df.filter(F.col(text_col).isNull())
     hashed = with_text.withColumn("_chash", content_hash_col(text_col))
-    if bloom_items is not None:
-        n_items = (
-            seen_hashes.count() if bloom_items == "auto"
-            else int(bloom_items)
-        )
-        n_items = max(n_items, 1)
-        # Spark's BloomFilterAggregate/might_contain are runtime-filter
-        # internals, NOT in the public function registry -- so build
-        # the same structure from public primitives: k seeded-xxhash64
-        # probe positions per hash, bit_or-aggregated into 64-bit
-        # bitmap words, broadcast as a (word, mask) table; probing is
-        # one broadcast equi-join per probe (NARROW -- the new batch
-        # never shuffles). 16 bits/item, k=2 -> ~1.4% fpp.
-        n_bits = min(max(n_items * _BLOOM_BITS_PER_ITEM, 1024),
-                     1 << 27)
-        positions = seen_hashes.select(
-            F.explode(
-                F.array(*_bloom_positions("_seen_hash", n_bits))
-            ).alias("pos")
-        )
-        bitmap = (
-            positions
-            .select(
-                F.shiftright(F.col("pos"), 6).alias("word"),
-                F.expr(
-                    "shiftleft(1L, CAST(pmod(pos, 64) AS INT))"
-                ).alias("bit"),
-            )
-            .groupBy("word")
-            .agg(F.expr("bit_or(bit)").alias("mask"))
-        )
-        probed = hashed
-        bit_tests = []
-        for i, pos in enumerate(_bloom_positions("_chash", n_bits)):
-            probed = probed.withColumn(f"_pos{i}", pos).join(
-                F.broadcast(
-                    bitmap.select(
-                        F.col("word").alias(f"_w{i}"),
-                        F.col("mask").alias(f"_m{i}"),
-                    )
-                ),
-                F.shiftright(F.col(f"_pos{i}"), 6) == F.col(f"_w{i}"),
-                "left",
-            )
-            # absent word (incl. the empty-snapshot bitmap) -> bit not
-            # set -> definitely unseen
-            bit_tests.append(
-                F.coalesce(
-                    F.expr(
-                        f"(shiftright(_m{i}, "
-                        f"CAST(pmod(_pos{i}, 64) AS INT)) & 1) = 1"
-                    ),
-                    F.lit(False),
-                )
-            )
-        maybe = bit_tests[0]
-        for t in bit_tests[1:]:
-            maybe = maybe & t
-        aux = [c for i in range(_BLOOM_PROBES)
-               for c in (f"_pos{i}", f"_w{i}", f"_m{i}")]
-        probed = probed.withColumn("_maybe", maybe).drop(*aux)
-        definite = probed.filter(~F.col("_maybe")).drop(
-            "_maybe", "_chash"
-        )
-        candidates = probed.filter(F.col("_maybe")).drop("_maybe")
-        kept = definite.unionByName(
-            candidates.join(
-                seen_hashes,
-                F.col("_chash") == F.col("_seen_hash"),
-                "left_anti",
-            ).drop("_chash")
-        )
-    else:
-        kept = hashed.join(
-            seen_hashes, F.col("_chash") == F.col("_seen_hash"),
-            "left_anti",
-        ).drop("_chash")
+    kept = hashed.join(
+        seen_hashes, F.col("_chash") == F.col("_seen_hash"),
+        "left_anti",
+    ).drop("_chash")
     return kept.unionByName(null_text)
 
 
@@ -296,10 +195,8 @@ def write_seen_bucketed(seen_df, table, key="content_hash",
 
 
 def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
-                  sample_mod=None, distinct=True):
+                  distinct=True):
     """(id, shingle) via native sequence+substring explode -- no UDF.
-    sample_mod=s keeps only shingles with pmod(xxhash64(shingle), s)=0
-    (hash-deterministic sampling for the 100 TB tier).
 
     Kept in lock-step with :func:`char_shingle_arrays` (the un-exploded
     twin) -- the two deliberately differ ONLY in the explode and in
@@ -331,18 +228,12 @@ def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
     arr = F.transform(positions, lambda i: t.substr(i, F.lit(k)))
     if distinct:
         arr = F.array_distinct(arr)
-    shingles = normalized.select(
+    return normalized.select(
         F.col(id_col), F.explode(arr).alias("shingle")
     )
-    if sample_mod:
-        shingles = shingles.filter(
-            F.pmod(F.xxhash64("shingle"), F.lit(sample_mod)) == 0
-        )
-    return shingles
 
 
-def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text",
-                        sample_mod=None):
+def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text"):
     """(id, shingle_arr): each document's DISTINCT k-char shingle SET as
     one array row -- the un-exploded twin of char_shingles(distinct=True),
     fully narrow. The exact-Jaccard verify consumes this form: candidate
@@ -368,10 +259,6 @@ def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text",
     # array guard is exactly a null-element filter without paying a
     # per-element pass on every real document
     arr = F.when(t.isNull(), F.array().cast("array<string>")).otherwise(arr)
-    if sample_mod:
-        arr = F.filter(
-            arr, lambda s: F.pmod(F.xxhash64(s), F.lit(sample_mod)) == 0
-        )
     return normalized.select(F.col(id_col), arr.alias("shingle_arr"))
 
 
@@ -733,8 +620,7 @@ def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
 
 def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
                             min_jaccard=0.7, id_col="doc_id",
-                            text_col="text", sample_mod=None,
-                            persist_shingles=False, max_bucket_size=1000,
+                            text_col="text", max_bucket_size=1000,
                             portable_hash=False, observation=None):
     """Full MinHash+LSH near-dup pipeline: shingle -> minhash -> band ->
     bucket-join -> exact-jaccard verify.
@@ -755,16 +641,12 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
     corpus-sized array table -- a driver collect of the biggest
     intermediate in the pipeline.
 
-    persist_shingles trades block-store IO for recompute; measured at
-    sf0.1/local[32]: recompute wins (the shingle stage is narrow and
-    cheap) -- knob stays off by default. max_bucket_size defaults ON
-    (1000): the guard that keeps hot boilerplate buckets from exploding
-    quadratically at crawl scale."""
-    raw = char_shingles(docs_df, k, id_col, text_col, sample_mod,
-                        distinct=False)
-    arrays = char_shingle_arrays(docs_df, k, id_col, text_col, sample_mod)
-    if persist_shingles:
-        arrays = arrays.persist()
+    The shingle arrays are recomputed rather than persisted: measured
+    at sf0.1/local[32], recompute wins (the shingle stage is narrow and
+    cheap). max_bucket_size defaults ON (1000): the guard that keeps hot
+    boilerplate buckets from exploding quadratically at crawl scale."""
+    raw = char_shingles(docs_df, k, id_col, text_col, distinct=False)
+    arrays = char_shingle_arrays(docs_df, k, id_col, text_col)
     sigs = minhash_signatures(raw, n_hashes, id_col, portable_hash)
     candidates = lsh_candidate_pairs(
         sigs, n_bands, id_col, max_bucket_size, n_hashes=n_hashes,
@@ -807,8 +689,7 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
 
 def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
                          min_est_jaccard=0.5, id_col="doc_id",
-                         max_bucket_size=None, observation=None,
-                         validate_seen=True):
+                         max_bucket_size=None, observation=None):
     """INCREMENTAL near-dup candidates: (new_id, seen_id, est_jaccard)
     pairs between a new batch's minhash signatures and a PRIOR corpus
     represented only by its persisted signature table (VERDICT r6
@@ -840,20 +721,17 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
     values -- mixing families simply matches nothing, so keep the
     snapshot's writer and reader on one setting."""
     n_hashes = _resolve_n_hashes(new_sigs, n_hashes)
-    if validate_seen:
-        # the probe is an eager one-row action: cheap on a materialized
-        # snapshot, but on a LAZY signature frame it executes part of
-        # the signature lineage at plan-build time once per call
-        # (ADVICE r7) -- callers in tight loops that already trust the
-        # snapshot config can pass validate_seen=False to skip it
-        seen_probe = seen_sigs.select("sig").first()  # empty seen: no-op
-        if seen_probe is not None and len(seen_probe["sig"]) != n_hashes:
-            raise ValueError(
-                f"seen snapshot signatures carry "
-                f"{len(seen_probe['sig'])} hashes but the new batch "
-                f"uses {n_hashes} -- snapshot writer and reader must "
-                "share n_hashes"
-            )
+    # the probe is an eager one-row action: cheap on a materialized
+    # snapshot, but on a LAZY signature frame it executes part of the
+    # signature lineage at plan-build time once per call (ADVICE r7)
+    seen_probe = seen_sigs.select("sig").first()  # empty seen: no-op
+    if seen_probe is not None and len(seen_probe["sig"]) != n_hashes:
+        raise ValueError(
+            f"seen snapshot signatures carry "
+            f"{len(seen_probe['sig'])} hashes but the new batch "
+            f"uses {n_hashes} -- snapshot writer and reader must "
+            "share n_hashes"
+        )
     new_bands = _band_table(new_sigs, n_bands, n_hashes, id_col) \
         .withColumnRenamed(id_col, "new_id")
     seen_bands = cap_seen_buckets(

@@ -196,11 +196,13 @@ def _ppl_udf(spark, lm):
         if memo[1] is lm.counts:
             bc = memo[0]
         else:
-            # counts were reassigned (pruning/reload): free the stale
-            # model's executor+driver copies deterministically instead
-            # of waiting on the weak-reference ContextCleaner
+            # counts were reassigned (pruning/reload): destroy the
+            # stale model's executor AND driver copies (unpersist keeps
+            # the driver copy, so every prune/rescore cycle leaked one);
+            # a DataFrame planned against the stale model can no longer
+            # run -- rescore it after the reassignment
             try:
-                memo[0].unpersist()
+                memo[0].destroy()
             except Exception:
                 pass  # a torn-down context must not block rescoring
     if bc is None:

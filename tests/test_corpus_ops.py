@@ -1709,6 +1709,74 @@ def test_curation_job_end_to_end(spark, tmp_path):
         (r["shard"], r["seq_no"]): r["n_tokens"] for r in tokens}
 
 
+def test_curate_and_crawl_curate_map_flags_identically(
+        spark, tmp_path, monkeypatch):
+    """`curate` and `crawl-curate` share one curation flag table: the
+    same curation argv yields the same run_curation_job keywords from
+    both commands, every keyword is covered, and crawl-curate adds only
+    its own extraction keywords."""
+    import inspect
+
+    from pyspark.sql import DataFrame
+
+    from sift_spark import job
+
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame([(1, "x")], ["doc_id", "text"]).write.parquet(
+        snap)
+    captured = {}
+
+    def fake_curation(spark_, docs_df, output_dir, **kwargs):
+        captured["curate"] = kwargs
+        return spark_.createDataFrame([(1,)], ["doc_id"]), {}
+
+    def fake_crawl(spark_, warc_input, output_root, **kwargs):
+        captured["crawl-curate"] = kwargs
+        return spark_.createDataFrame([(1,)], ["doc_id"]), {}
+
+    curation_keywords = set(
+        list(inspect.signature(job.run_curation_job).parameters)[3:])
+    monkeypatch.setattr(job, "run_curation_job", fake_curation)
+    monkeypatch.setattr(job, "run_crawl_curate_job", fake_crawl)
+    flags = [
+        "--lang", "de", "--min-quality", "0.25",
+        "--lm-model", "lm_dir", "--max-ppl", "900",
+        "--clf-model", "clf_dir", "--min-clf-score", "0.3",
+        "--dsir-target", snap, "--dsir-k", "7", "--dsir-seed", "3",
+        "--redact-pii", "--no-dedup", "--benchmark", snap,
+        "--seen", snap, "--write-hashes",
+        "--seen-sigs", snap, "--write-sigs", "--sig-jaccard", "0.6",
+        "--seen-simhash", snap, "--write-simhash",
+        "--simhash-hamming", "2", "--ngram", "8",
+        "--pack-budget", "64", "--shards", "4",
+        "--span-k", "5", "--span-hash-mode", "md5",
+        "--mix-stratum", "source", "--mix-alpha", "0.3",
+        "--mix-default-rate", "1.0", "--vocab", "vocab.tiktoken",
+    ]
+    job.curate_main(["--input", snap, "--output", "out", *flags])
+    job.crawl_curate_main(["--input", "seg.warc", "--output", "out",
+                           "--n-parts", "3", *flags])
+
+    def normalized(kwargs):
+        return {k: (tuple(sorted(v.inputFiles()))
+                    if isinstance(v, DataFrame) else v)
+                for k, v in kwargs.items()}
+
+    crawl = dict(captured["crawl-curate"])
+    own = {k: crawl.pop(k) for k in
+           ("params", "n_parts", "resume", "block_hosts", "block_by")}
+    assert own["n_parts"] == 3 and own["resume"] is True
+    assert normalized(crawl) == normalized(captured["curate"])
+    assert set(crawl) == curation_keywords
+    assert crawl["seen_df"] is not None and crawl["dedup"] is False
+
+    # the removed bloom pre-filter flag is an argparse error on both
+    for main in (job.curate_main, job.crawl_curate_main):
+        with pytest.raises(SystemExit):
+            main(["--input", snap, "--output", "out", "--seen", snap,
+                  "--seen-bloom"])
+
+
 def test_curation_incremental_seen_loop(spark, tmp_path):
     """The weekly-crawl incremental loop at the job level: week 1
     curates with --write-hashes, week 2 feeds that _hashes snapshot
@@ -2497,48 +2565,23 @@ def test_dedup_against_seen(spark):
             seen_docs.select(F.col("doc_id").alias("content_hash")))
 
 
-def test_dedup_against_seen_bloom_prefilter(spark):
-    """VERDICT r6 #4: the bloom pre-filter is a pure optimisation --
-    identical output bloom on/off (the anti-join stays authoritative),
-    the broadcast bitmap probe visible in the plan, and an EMPTY
-    snapshot's empty bitmap keeps the whole batch."""
+def test_dedup_against_seen_empty_snapshot_keeps_all(spark):
+    """An empty snapshot drops nothing: every new row, null text
+    included, survives the anti-join."""
     from sift_spark.operators.dedup import (
         content_hash_col,
         dedup_against_seen,
     )
 
-    seen_docs = spark.createDataFrame(
-        [(i, f"archived page number {i}") for i in range(50)],
-        "doc_id long, text string")
-    snapshot = seen_docs.select(
-        content_hash_col("text").alias("content_hash"))
     new_docs = spark.createDataFrame(
-        [(100 + i, f"archived page number {i}") for i in range(0, 10)]
-        + [(200 + i, f"fresh crawl document {i}") for i in range(40)]
+        [(100 + i, f"fresh crawl document {i}") for i in range(10)]
         + [(999, None)],
         "doc_id long, text string")
-
-    plain = {r["doc_id"] for r in
-             dedup_against_seen(new_docs, snapshot).collect()}
-    for items in ("auto", 50, 1):  # incl. a badly-undersized filter
-        bloomed = dedup_against_seen(
-            new_docs, snapshot, bloom_items=items)
-        assert {r["doc_id"] for r in bloomed.collect()} == plain
-
-    # plan guard: the pre-filter probes the bitmap via BROADCAST joins
-    # (the new batch must not shuffle to be pre-filtered)
-    plan = dedup_against_seen(
-        new_docs, snapshot, bloom_items=50
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "shiftright" in plan  # the bitmap word/bit probe
-
-    # empty snapshot: bloom_filter_agg yields NULL; everything must
-    # survive as a candidate, nothing silently dropped
-    empty = snapshot.limit(0)
-    kept_empty = {r["doc_id"] for r in dedup_against_seen(
-        new_docs, empty, bloom_items="auto").collect()}
-    assert kept_empty == {r["doc_id"] for r in new_docs.collect()}
+    empty = new_docs.select(
+        content_hash_col("text").alias("content_hash")).limit(0)
+    kept = {r["doc_id"] for r in dedup_against_seen(
+        new_docs, empty).collect()}
+    assert kept == {r["doc_id"] for r in new_docs.collect()}
 
 
 def test_crawl_curate_end_to_end(spark, tmp_path):

@@ -124,6 +124,40 @@ def test_udf_join_parity_and_filter(spark):
     assert 102 in kept and 101 not in kept and 103 not in kept
 
 
+def test_reassigned_counts_destroy_stale_broadcast(spark):
+    """Reassigning lm.counts (a prune) destroys the memoized broadcast
+    of the old model -- driver copy included -- and the rescore uses the
+    pruned model: its scores equal a fresh NgramLM's over the same
+    pruned counts."""
+    from pyspark.sql import functions as F
+
+    from sift_spark.operators.lm import (
+        NgramLM,
+        score_perplexity,
+        train_ngram_lm,
+    )
+
+    clean = spark.createDataFrame(
+        [(1, "a a a b c"), (2, "a b a c a")], ["doc_id", "text"])
+    lm = train_ngram_lm(clean, n=2)
+    docs = spark.createDataFrame(
+        [(10, "a b c"), (11, "c a b a")], ["doc_id", "text"])
+    full = _scores(score_perplexity(docs, lm))
+    first_bc = lm._udf_model_bc[0]
+    assert first_bc._jbroadcast.isValid()
+
+    lm.counts = lm.counts.filter(F.col("cnt") >= 2)
+    rescored = _scores(score_perplexity(docs, lm))
+    assert not first_bc._jbroadcast.isValid()
+    assert lm._udf_model_bc[0] is not first_bc
+    assert rescored != full  # 'b c' was pruned: doc 10 now backs off
+
+    fresh = NgramLM(counts=lm.counts, n=lm.n, alpha=lm.alpha,
+                    total_tokens=lm.total_tokens,
+                    vocab_size=lm.vocab_size)
+    assert rescored == _scores(score_perplexity(docs, fresh))
+
+
 def test_save_load_roundtrip(spark, tmp_path):
     from sift_spark.operators.lm import (
         load_lm,
