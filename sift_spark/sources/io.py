@@ -13,8 +13,8 @@ The production design (north_rule: "over Iceberg tables ... at
     the scan; column pruning keeps the fat html BINARY out of every stage
     except extraction (verify with df.explain: PushedFilters, ReadSchema).
 
-No Iceberg jars ship in this container, so `iceberg_available()` gates
-the catalog path; all operators are storage-agnostic DataFrames.
+`iceberg_available()` reports whether the Iceberg runtime is on the
+classpath; all operators are storage-agnostic DataFrames.
 """
 
 from __future__ import annotations
@@ -63,26 +63,3 @@ def iceberg_available(spark):
     except Exception:
         return False
 
-
-def read_pages(spark, source):
-    """source: an Iceberg table name (contains no '/') or a parquet path."""
-    if "/" not in source and iceberg_available(spark):
-        return spark.read.table(source)
-    return spark.read.parquet(source)
-
-
-def write_extracted(df, target, mode="append"):
-    """Iceberg table append (snapshot-committed) or parquet fallback."""
-    if "/" not in target and iceberg_available(df.sparkSession):
-        df.writeTo(target).append()
-        return
-    df.write.mode(mode).parquet(target)
-
-
-def create_tables_sql(catalog="spark_catalog", db="siftspark", n_buckets=1024):
-    """The DDL the production deployment runs (documented evidence for the
-    sandbox, executable where an Iceberg catalog exists)."""
-    return [
-        PAGES_DDL.format(catalog=catalog, db=db, n_buckets=n_buckets),
-        EXTRACTED_DDL.format(catalog=catalog, db=db),
-    ]

@@ -88,65 +88,32 @@ def stream_curation(spark, input_path, output_path, checkpoint_path,
                     lm_model=None, max_ppl=0.0,
                     clf_model=None, min_clf_score=0.0):
     """Streaming training-data curation over a continuous document feed:
-    the batch corpus_curation gates (language + quality score) applied
-    stateless per row, then a watermarked near-identical drop on the
-    64-bit SimHash value -- docs whose simhash collides inside the
-    horizon are overwhelmingly boilerplate twins (identical or
-    whitespace-trivial variants), so ONE survives per horizon. State is
+    the batch job's curation_gates (language + quality score, plus the
+    optional model gates) applied stateless per row, then a watermarked
+    near-identical drop on the 64-bit SimHash value -- docs whose
+    simhash collides inside the horizon are overwhelmingly boilerplate
+    twins (identical or whitespace-trivial variants), so ONE survives
+    per horizon. State is
     one 8-byte hash per surviving doc within the watermark, not history.
     Full near-dup banding (hamming > 0) needs cross-row joins and stays
-    a periodic batch job (operators/dedup.py).
-
-    The batch pipeline's MODEL-BASED gates compose in because both
-    scorers are narrow Arrow UDFs with the model shipped to the workers
-    (no stateful aggregation): lm_model/max_ppl applies the CCNet
-    perplexity gate (operators/lm.py), clf_model/min_clf_score the
-    fastText-style classifier gate (operators/textclf.py)."""
+    a periodic batch job (operators/dedup.py). lm_model/max_ppl and
+    clf_model/min_clf_score switch on the model gates; a model without
+    its threshold raises ValueError."""
     from pyspark.sql import functions as F
 
+    from ..job import check_gate_thresholds, curation_gates
     from ..operators.dedup import simhash64_udf
-    from ..operators.textstats import lang_id_col, quality_cols
 
-    # threshold guards FIRST (before any source is touched): a model
-    # with no threshold would silently skip the gate the operator
-    # asked for (the run_curation_job convention)
-    if lm_model is not None and not max_ppl:
-        raise ValueError(
-            "lm_model given but max_ppl is 0/unset -- pass max_ppl "
-            "(the tail perplexity threshold) to enable the gate"
-        )
-    if clf_model is not None and not min_clf_score:
-        raise ValueError(
-            "clf_model given but min_clf_score is 0/unset -- pass "
-            "min_clf_score (the keep threshold) to enable the gate"
-        )
+    # before the source is touched: a missing input path must not mask
+    # a threshold error
+    check_gate_thresholds(lm_model, max_ppl, clf_model, min_clf_score)
     docs = (
         spark.readStream.format(file_format)
         .schema("doc_id long, ts timestamp, text string")
         .load(input_path)
     )
-    quality = quality_cols(F.col("text"))["quality_score"]
-    curated = (
-        docs.withColumn("lang_guess", lang_id_col(F.col("text")))
-        .withColumn("quality_score", quality)
-        .filter((F.col("lang_guess") == lang)
-                & (F.col("quality_score") >= min_quality))
-    )
-    if lm_model is not None and max_ppl:
-        from ..operators.lm import filter_by_perplexity, load_lm
-
-        lm = (load_lm(spark, lm_model)
-              if isinstance(lm_model, str) else lm_model)
-        curated = filter_by_perplexity(curated, lm, max_ppl)
-    if clf_model is not None and min_clf_score:
-        from ..operators.textclf import (
-            filter_by_classifier,
-            load_text_classifier,
-        )
-
-        clf = (load_text_classifier(clf_model)
-               if isinstance(clf_model, str) else clf_model)
-        curated = filter_by_classifier(curated, clf, min_clf_score)
+    curated = curation_gates(docs, lang, min_quality, lm_model, max_ppl,
+                             clf_model, min_clf_score)
     curated = curated.withColumn("simhash", simhash64_udf(F.col("text")))
     deduped = (
         curated.withWatermark("ts", watermark)

@@ -2175,8 +2175,8 @@ def test_pack_sequences_null_text_packs_as_zero(spark):
 
 
 def test_curation_job_stage_metrics(spark, tmp_path):
-    """Stage counts ride the sink write via Observation -- no extra
-    jobs -- and report the funnel (input -> gates -> dedup)."""
+    """Stage counts ride the staging and sink writes via Observation --
+    no extra jobs -- and report the funnel (input -> gates -> dedup)."""
     from sift_spark.job import run_curation_job
 
     good = ("the quick brown fox jumps over the lazy dog and that is the "
@@ -2192,6 +2192,71 @@ def test_curation_job_stage_metrics(spark, tmp_path):
     assert metrics["input"] == 3
     assert metrics["after_gates"] == 2   # german doc gated
     assert metrics["after_dedup"] == 1   # twin collapsed
+
+
+def _record_parquet_writes(monkeypatch, fail_path=None):
+    """Record every DataFrameWriter.parquet target; a write to
+    `fail_path` raises instead."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        written.append(path)
+        if path == fail_path:
+            raise RuntimeError("sink write failed")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    return written
+
+
+def test_curation_staging_is_run_scoped_and_deleted(
+        spark, tmp_path, monkeypatch):
+    """The gated batch is staged beside the output under a per-run
+    uuid: two runs into one output_dir stage to distinct paths, and
+    neither leaves its staging directory behind. The second run names
+    the output with a trailing slash, which must not put the staging
+    directory inside the output the sink overwrites."""
+    import glob
+
+    from sift_spark.job import run_curation_job
+
+    good = ("the quick brown fox jumps over the lazy dog and that is the "
+            "story of the day with plenty of the usual words to pass the "
+            "quality gates, including commas and sentences.")
+    docs = spark.createDataFrame([(1, good), (2, good)],
+                                 ["doc_id", "text"])
+    output_dir = str(tmp_path / "curated")
+    written = _record_parquet_writes(monkeypatch)
+    for target in (output_dir, output_dir + "/"):
+        out, _ = run_curation_job(spark, docs, target)
+        assert out.count() == 1
+    staged = [p for p in written if p.startswith(output_dir + "_gated-")]
+    assert len(staged) == len(set(staged)) == 2
+    assert glob.glob(str(tmp_path / "*_gated-*")) == []
+
+
+def test_curation_staging_deleted_when_sink_write_raises(
+        spark, tmp_path, monkeypatch):
+    """A failing sink write still deletes the staged batch, and the
+    failure reaches the caller."""
+    import os
+
+    from sift_spark.job import run_curation_job
+
+    good = ("the quick brown fox jumps over the lazy dog and that is the "
+            "story of the day with plenty of the usual words to pass the "
+            "quality gates, including commas and sentences.")
+    docs = spark.createDataFrame([(1, good)], ["doc_id", "text"])
+    output_dir = str(tmp_path / "curated")
+    written = _record_parquet_writes(monkeypatch, fail_path=output_dir)
+    with pytest.raises(RuntimeError, match="sink write failed"):
+        run_curation_job(spark, docs, output_dir)
+    staged, sink = written
+    assert staged.startswith(output_dir + "_gated-") and sink == output_dir
+    assert not os.path.exists(os.path.dirname(staged))
 
 
 # ---- WARC ingestion ---------------------------------------------------------------

@@ -410,3 +410,57 @@ def test_lm_udf_scorer_is_narrow(spark):
     assert count_nodes(plan, "ArrowEvalPython") == 1
     assert count_nodes(plan, "Exchange") == 0
     assert "Join" not in plan
+
+
+def test_curation_sink_reads_the_staged_gate_batch(
+        spark, tmp_path, monkeypatch):
+    """run_curation_job stages its gated batch, so the LM scorer runs
+    once per document: the staging write's executed plan holds exactly
+    one scorer node and the curated sink's none, although the three
+    seen loops and dedup_exact each read their input on several
+    branches (recomputing the gates put dozens of scorer copies in the
+    sink plan)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from sift_spark.job import run_curation_job
+    from sift_spark.operators.lm import train_ngram_lm
+
+    base = ("the quick brown fox jumps over the lazy dog and the story "
+            "continues with plenty of good english words in sentences "
+            "that pass the quality gates easily today. ")
+    week1 = spark.createDataFrame(
+        [(i, base + f"week one document {i}.") for i in range(3)],
+        ["doc_id", "text"])
+    out1 = str(tmp_path / "w1")
+    run_curation_job(spark, week1, out1, write_hashes=True,
+                     write_sigs=True, write_simhash=True)
+    week2 = spark.createDataFrame(
+        [(10 + i, base + f"week two document {i}.") for i in range(3)],
+        ["doc_id", "text"])
+
+    plans = {}
+    real_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans[path] = (self._df._jdf.queryExecution().executedPlan()
+                       .toString())
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    out2 = str(tmp_path / "w2")
+    run_curation_job(
+        spark, week2, out2,
+        seen_df=spark.read.parquet(out1 + "_hashes"),
+        seen_sigs_df=spark.read.parquet(out1 + "_sigs"),
+        seen_simhash_df=spark.read.parquet(out1 + "_simhash"),
+        lm_model=train_ngram_lm(week1, n=2), max_ppl=1e12)
+
+    def scorer_nodes(plan):
+        # the LM and classifier scorers are both the pandas UDF `_score`
+        return sum(1 for line in plan.splitlines()
+                   if "ArrowEvalPython" in line and "_score(" in line)
+
+    staged = [p for p in plans if "_gated-" in p]
+    assert len(staged) == 1
+    assert scorer_nodes(plans[staged[0]]) == 1
+    assert scorer_nodes(plans[out2]) == 0
