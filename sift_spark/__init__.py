@@ -12,9 +12,9 @@ Layout:
   operators/  the Spark layer: vectorized extraction UDFs, relational
               chunk/classify/search decomposition, corpus analytics
   sources/    pages-table IO, synthetic fixture corpus generator
-  plans/      partitioning / skew-salting / lineage-checkpoint / resume
-  streaming/  incremental-processing helpers (batch resume; no streaming in
-              the reference -- see SURVEY.md §2.11)
+  plans/      partitioning / skew-salting / lineage-checkpoint / resume;
+              incremental re-runs are the lineage anti-join (batch-only
+              by design, as the reference -- see SURVEY.md §2.11)
 """
 
 __version__ = "0.1.0"

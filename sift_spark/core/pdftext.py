@@ -47,10 +47,6 @@ _ESCAPES = {
 }
 
 
-class PdfError(ValueError):
-    pass
-
-
 def is_pdf(data):
     return data[:5] == PDF_MAGIC
 

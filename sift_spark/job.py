@@ -138,9 +138,20 @@ def media_main(argv=None):
         spark.stop()
 
 
-def check_gate_thresholds(lm_model, max_ppl, clf_model, min_clf_score):
-    """A model with no threshold would silently skip the gate the
-    caller asked for: raise ValueError instead."""
+def curation_gates(docs, lang, min_quality, lm_model, max_ppl,
+                   clf_model, min_clf_score, observe):
+    """The narrow curation gates, in order: language + heuristic
+    quality score -> optional CCNet-style perplexity gate
+    (operators/lm.py; lm_model is an NgramLM or a saved-model path) ->
+    optional fastText-style classifier gate (operators/textclf.py;
+    clf_model is a model dict or path). Both scorers are narrow Arrow
+    UDFs with the model shipped to the workers. `observe(df, stage)`
+    wraps the frame after each gate (stages `after_gates`,
+    `after_ppl_gate`, `after_clf_gate`). A model with no threshold
+    would silently skip the gate the caller asked for, so it raises
+    ValueError before anything is composed."""
+    from .operators.textstats import lang_id_col, quality_cols
+
     if lm_model is not None and not max_ppl:
         raise ValueError(
             "lm_model given but max_ppl is 0/unset -- pass max_ppl "
@@ -151,24 +162,6 @@ def check_gate_thresholds(lm_model, max_ppl, clf_model, min_clf_score):
             "clf_model given but min_clf_score is 0/unset -- pass "
             "min_clf_score (the keep threshold) to enable the gate"
         )
-
-
-def curation_gates(docs, lang, min_quality, lm_model, max_ppl,
-                   clf_model, min_clf_score, observe=None):
-    """The narrow curation gates, in order: language + heuristic
-    quality score -> optional CCNet-style perplexity gate
-    (operators/lm.py; lm_model is an NgramLM or a saved-model path) ->
-    optional fastText-style classifier gate (operators/textclf.py;
-    clf_model is a model dict or path). Both scorers are narrow Arrow
-    UDFs with the model shipped to the workers, so the same composition
-    serves batch and streaming frames. `observe(df, stage)` wraps the
-    frame after each gate (stages `after_gates`, `after_ppl_gate`,
-    `after_clf_gate`). Thresholds are checked (check_gate_thresholds)
-    before anything is composed."""
-    from .operators.textstats import lang_id_col, quality_cols
-
-    check_gate_thresholds(lm_model, max_ppl, clf_model, min_clf_score)
-    observe = observe or (lambda df, stage: df)
     gated = observe(
         docs.withColumn("lang_guess", lang_id_col(F.col("text")))
         .withColumn("quality_score", quality_cols(F.col("text"))

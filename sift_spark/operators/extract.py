@@ -61,14 +61,6 @@ def _decode(raw):
     return str(raw)
 
 
-@F.pandas_udf(T.StringType())
-def decode_html_udf(html: pd.Series) -> pd.Series:
-    """Charset-sniffed decode as a column (BOM -> meta -> utf-8 ->
-    win-1252); keeps streaming/relational paths byte-consistent with the
-    batch extraction kernel's decoding."""
-    return html.map(lambda raw: None if raw is None else decode_html(raw))
-
-
 def _run_one(html_bytes, params, counter):
     """Per-document kernel shared by the batch UDFs."""
     if html_bytes is None:

@@ -20,7 +20,6 @@ from __future__ import annotations
 import hashlib
 import struct
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -390,23 +389,6 @@ def extract_media_features(media_df, deterministic_fake=True,
     return media_df.select(
         "media_id", "kind", "payload"
     ).mapInPandas(process, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(media_df, every_ms=1000):
-    """Video frame-sampling PLAN: one output row per planned frame
-    (native sequence explode over duration); the decode itself is the
-    stubbed step above. Demonstrates explode-shape correctness for the
-    scale tier."""
-    return media_df.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
 
 
 def make_wav_bytes(sample_rate=8000, n_channels=1, bits=16,

@@ -52,13 +52,6 @@ def strategy_rank_col(strategy, chunk_idx, n_chunks):
     raise ValueError(f"unknown strategy: {strategy}")
 
 
-def with_strategy_rank(chunks_df, strategy):
-    return chunks_df.withColumn(
-        "sel_rank",
-        strategy_rank_col(strategy, F.col("chunk_idx"), F.col("n_chunks")),
-    )
-
-
 def budget_filter(ranked_df, max_units):
     """Keep chunks while the running unit total (in selection order) stays
     within budget: cumulative-sum window, map-side friendly.

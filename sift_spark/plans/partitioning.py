@@ -85,15 +85,16 @@ def host_skew_stats(pages_df):
 
 def detect_skewed_hosts(pages_df, page_factor=10.0, byte_factor=10.0):
     """Hosts whose page count or byte volume exceeds factor x the mean.
-    Returns a small driver-side list (host cardinality << row count)."""
-    stats = host_skew_stats(pages_df).cache()
+    Returns a small driver-side list (host cardinality << row count).
+    One action: the means are cross-joined onto the per-host stats, and
+    both sides reuse the one host shuffle, so nothing is cached."""
+    stats = host_skew_stats(pages_df)
     means = stats.agg(
-        F.avg("n_pages").alias("avg_pages"), F.avg("total_bytes").alias("avg_bytes")
-    ).first()
-    if means["avg_pages"] is None:
-        return []
-    skewed = stats.filter(
-        (F.col("n_pages") > page_factor * means["avg_pages"])
-        | (F.col("total_bytes") > byte_factor * (means["avg_bytes"] or 0.0))
+        F.avg("n_pages").alias("avg_pages"),
+        F.coalesce(F.avg("total_bytes"), F.lit(0.0)).alias("avg_bytes"),
+    )
+    skewed = stats.crossJoin(means).filter(
+        (F.col("n_pages") > page_factor * F.col("avg_pages"))
+        | (F.col("total_bytes") > byte_factor * F.col("avg_bytes"))
     )
     return [r["host"] for r in skewed.select("host").collect()]

@@ -156,12 +156,6 @@ def iter_warc_pages(data, warc_file=""):
         }
 
 
-def parse_warc_member(data, warc_file=""):
-    """Eager form of :func:`iter_warc_pages` (whole file -> list); for
-    tests and small files -- read_warc streams instead."""
-    return list(iter_warc_pages(data, warc_file))
-
-
 _PAGE_COLUMNS = ["url", "warc_ts", "html", "warc_file", "error"]
 
 
@@ -191,12 +185,10 @@ def _page_batches(data, warc_file, batch_records, batch_bytes):
 def read_warc(spark, path_or_df, batch_records=1000,
               batch_bytes=64 * 1024 * 1024):
     """WARC files at a path (glob ok; .warc or .warc.gz) -- or an
-    already-loaded binaryFile DataFrame, batch OR streaming (the
-    streaming ingest in streaming/incremental.py passes a readStream
-    frame) -> DataFrame (url, warc_ts, html, warc_file, error): the
-    pages-table shape plus provenance. One task per file (see module
-    docstring); timestamps parse from WARC-Date ISO form natively after
-    the UDF.
+    already-loaded binaryFile DataFrame -> DataFrame (url, warc_ts,
+    html, warc_file, error): the pages-table shape plus provenance. One
+    task per file (see module docstring); timestamps parse from
+    WARC-Date ISO form natively after the UDF.
 
     Pages stream out of each file in Arrow batches of at most
     `batch_records` pages / `batch_bytes` of html (see _page_batches),

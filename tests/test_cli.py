@@ -144,3 +144,45 @@ def test_dist_zip_matches_source():
                         f"{rel} is stale in dist zip -- "
                         "run sh scripts/package.sh"
                     )
+
+
+def test_public_surface_has_callers_or_reasons():
+    """Every public top-level def/class in sift_spark/ is either used by
+    a non-test file or listed, with its reason, in STATUS.md's
+    "Test-only by design" table -- and that table lists nothing else, so
+    a name that gains a caller or is deleted leaves it too."""
+    import ast
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    package = sorted((repo / "sift_spark").rglob("*.py"))
+    defined = {
+        node.name
+        for path in package
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef))
+        and not node.name.startswith("_")
+    }
+    non_test = [*package, *(repo / name for name in (
+        "__spark_entry__.py", "bench.py", "submit_job.py"))]
+    for folder in ("scripts", "perfbench"):
+        non_test += sorted((repo / folder).rglob("*.py"))
+    used = set()
+    for path in non_test:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+
+    status = (repo / "STATUS.md").read_text()
+    table = status.split("\n## Test-only by design\n", 1)[1]
+    table = table.split("\n#", 1)[0]
+    listed = set(re.findall(r"^\| `(\w+)` \|", table, re.M))
+    assert defined - used == listed, (
+        f"uncalled and unlisted: {sorted(defined - used - listed)}; "
+        f"listed but called or gone: {sorted(listed - (defined - used))}")

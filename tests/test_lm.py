@@ -308,6 +308,10 @@ def test_lm_model_without_threshold_fails_loudly(spark, tmp_path):
 
     docs = spark.createDataFrame(
         [(1, "some text here")], ["doc_id", "text"])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     with pytest.raises(ValueError, match="max_ppl"):
         run_curation_job(spark, docs, str(tmp_path / "out"),
                          lm_model="/nonexistent/model")
+    # raised before any Spark action: no job ran
+    assert set(tracker.getJobIdsForGroup(None)) == before

@@ -34,6 +34,17 @@ def test_host_skew_detection(spark):
     assert skewed == ["fat.example"]
 
 
+def test_host_skew_detection_leaves_no_cache(spark):
+    """detect_skewed_hosts returns a plain list, so any block it caches
+    would stay pinned on the executors with no handle to release it."""
+    pages = build_pages_df(spark, n_big=5)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    partitioning.detect_skewed_hosts(pages)
+    assert partitioning.detect_skewed_hosts(pages.limit(0)) == []
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_salted_layout_spreads_fat_rows(spark):
     rows = (
         [("http://fat.example/%d" % i, None, b"x" * 2000, None, "en")

@@ -10,7 +10,7 @@ from sift_spark.core.selection import BEGINNING, END, MIDDLE, ChunkSelector
 from sift_spark.operators.selection_op import (
     budget_filter,
     format_selected,
-    with_strategy_rank,
+    strategy_rank_col,
 )
 
 CHUNKS = [
@@ -46,7 +46,10 @@ def test_budget_filter_matches_core_whole_chunks(spark, strategy, max_units):
     expected = selector.apply_size_constraints(CHUNKS)
 
     df = _chunk_df(spark)
-    ranked = with_strategy_rank(df, strategy)
+    ranked = df.withColumn(
+        "sel_rank",
+        strategy_rank_col(strategy, F.col("chunk_idx"), F.col("n_chunks")),
+    )
     selected = budget_filter(ranked, max_units)
     out = format_selected(selected).collect()
     if expected == "":

@@ -212,9 +212,13 @@ def test_clf_model_without_threshold_fails_loudly(spark, tmp_path):
 
     docs = spark.createDataFrame(
         [(1, "some text here")], ["doc_id", "text"])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     with pytest.raises(ValueError, match="min_clf_score"):
         run_curation_job(spark, docs, str(tmp_path / "out"),
                          clf_model="/nonexistent/model")
+    # raised before any Spark action: no job ran
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def _contract_scores(docs, model):
@@ -450,18 +454,3 @@ def test_classifier_threshold_empty_raises_loudly(spark):
     empty = spark.createDataFrame([], "clf_score double")
     with pytest.raises(ValueError, match="empty"):
         classifier_threshold(empty, 0.5)
-
-
-def test_stream_gate_without_threshold_fails_loudly(spark, tmp_path):
-    """stream_curation mirrors the batch loud-failure convention
-    (review r7 pass 2: the silent-skip class)."""
-    from sift_spark.streaming.incremental import stream_curation
-
-    with pytest.raises(ValueError, match="min_clf_score"):
-        stream_curation(spark, str(tmp_path / "in"),
-                        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-                        clf_model={"weights": {}})
-    with pytest.raises(ValueError, match="max_ppl"):
-        stream_curation(spark, str(tmp_path / "in"),
-                        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-                        lm_model="/nonexistent")
