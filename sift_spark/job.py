@@ -240,7 +240,15 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     scale): the gate-stage counts fire on the staging write, the later
     ones on the sink write. An observed count can be missing if AQE
     prunes an empty subtree (the documented Observation gotcha); it is
-    reported as None rather than crashing the job.
+    reported as None rather than crashing the job. The seen loops'
+    cap metrics (seen_neardup_capped_band_rows,
+    seen_simhash_capped_chunk_rows: seen-side rows the hot-bucket cap
+    dropped) are read through report_bucket_cap and go None the same
+    way. On perfbench's curate_incremental inputs (seed 11) the
+    simhash one reads None: after the exact and minhash loops the
+    simhash loop matches nothing (1340 -> 1340), AQE replaces the empty
+    anti-join side, and its CollectMetrics node leaves the final plan.
+    The simhash loop alone drops 1460 -> 1362 there and reads 0.
 
     seen_df switches on INCREMENTAL curation (dedup_against_seen
     before the in-batch exact dedup): pass a prior run's `_hashes`
@@ -276,7 +284,12 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     catches edited near-duplicates with a tunable jaccard gate."""
     from pyspark.sql import Observation
 
-    from .operators.dedup import dedup_exact, duplicated_span_dedup
+    from .operators.dedup import (
+        bucket_cap_observation,
+        dedup_exact,
+        duplicated_span_dedup,
+        report_bucket_cap,
+    )
     from .operators.decontam import remove_contaminated
     from .operators.packing import (
         materialize_packed_sequences,
@@ -300,6 +313,7 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             "(--seen-sigs) for looser similarity gates."
         )
     observations = {}
+    cap_observations = {}
 
     def observed(df, stage):
         obs = Observation(f"curate_{stage}")
@@ -350,34 +364,28 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             # minhash signature table (a previous run's `_sigs` sink) and
             # drops signature-estimated near-duplicates of content that
             # already shipped.
-            from .operators.dedup import (
-                bucket_cap_observation,
-                dedup_against_seen_minhash,
-            )
+            from .operators.dedup import dedup_against_seen_minhash
 
-            seen_cap_obs = bucket_cap_observation("curate_seen_neardup_cap")
+            cap_obs = bucket_cap_observation("curate_seen_neardup_cap")
+            cap_observations["seen_neardup_capped_band_rows"] = cap_obs
             curated = observed(
                 dedup_against_seen_minhash(curated, seen_sigs_df,
                                            min_est_jaccard=sig_jaccard,
-                                           observation=seen_cap_obs),
+                                           observation=cap_obs),
                 "after_seen_neardup",
             )
         if seen_simhash_df is not None:
             # cheapest seen family: one int64 per historical doc; catches
             # near-identical variants (whitespace/punctuation edits) the
             # exact loop misses at a fraction of the minhash snapshot cost
-            from .operators.dedup import (
-                bucket_cap_observation,
-                dedup_against_seen_simhash,
-            )
+            from .operators.dedup import dedup_against_seen_simhash
 
-            simhash_cap_obs = bucket_cap_observation(
-                "curate_seen_simhash_cap"
-            )
+            cap_obs = bucket_cap_observation("curate_seen_simhash_cap")
+            cap_observations["seen_simhash_capped_chunk_rows"] = cap_obs
             curated = observed(
                 dedup_against_seen_simhash(curated, seen_simhash_df,
                                            max_hamming=simhash_max_hamming,
-                                           observation=simhash_cap_obs),
+                                           observation=cap_obs),
                 "after_seen_simhash",
             )
         if dedup:
@@ -434,85 +442,52 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             )
         curated.write.mode("overwrite").parquet(output_dir)
         out = spark.read.parquet(output_dir)
+
+        def snapshot(suffix, rows_of, distinct=False):
+            # the NEXT incremental run's seen table at output_dir +
+            # suffix, computed from the written sink scan (never a
+            # pipeline re-run); union successive sinks to accumulate.
+            # With span_k the PRE-span rows are snapshotted too (ADVICE
+            # r6): a re-crawl arrives with its spans intact and is
+            # checked before the span stage, so a doc whose spans were
+            # cut would otherwise evade next week's seen loop. Only that
+            # union can duplicate rows (span-untouched docs emit
+            # identical pre/post rows, and doubled rows would halve the
+            # effective seen-side bucket cap), so only it pays the
+            # distinct shuffle -- the `_hashes` set always does.
+            rows = rows_of(out)
+            if pre_span is not None:
+                rows = rows.unionByName(rows_of(pre_span))
+            if distinct or pre_span is not None:
+                rows = rows.distinct()
+            rows.write.mode("overwrite").parquet(output_dir + suffix)
+
         if write_hashes:
-            # snapshot sink for the NEXT incremental run's seen_df: the
-            # curated corpus's distinct 16-byte content hashes (scanned
-            # from the written sink, column-pruned -- never a pipeline
-            # re-run). Feed `<output>_hashes` back via --seen next week.
+            # --seen: the distinct 16-byte content hashes
             from .operators.dedup import content_hash_col
 
-            hashes = (
-                out.select(content_hash_col("text").alias("content_hash"))
+            snapshot("_hashes", lambda frame: (
+                frame.select(content_hash_col("text").alias("content_hash"))
                 .filter(F.col("content_hash").isNotNull())
-            )
-            if pre_span is not None:
-                # ALSO snapshot the PRE-span-excision hashes (ADVICE r6):
-                # --seen checks an incoming re-crawl's text BEFORE the span
-                # stage, so a doc whose spans were cut last run would hash
-                # differently from its curated sink form, evade incremental
-                # dedup, and re-enter as a near-duplicate. The pre-span
-                # frame is already staged for the span self-join, so
-                # this is one more narrow pass over it, not a re-run.
-                hashes = hashes.unionByName(
-                    pre_span
-                    .select(content_hash_col("text").alias("content_hash"))
-                    .filter(F.col("content_hash").isNotNull())
-                )
-            (
-                hashes.distinct()
-                .write.mode("overwrite").parquet(output_dir + "_hashes")
-            )
+            ), distinct=True)
         if write_sigs:
-            # NEAR-dup snapshot sink: the curated corpus's minhash
-            # signature table (~256 B/doc at 32 hashes) for the next run's
-            # --seen-sigs; union successive `_sigs` sinks to accumulate.
-            # Computed from the written sink scan, never a pipeline re-run.
+            # --seen-sigs: the minhash signature table (~256 B/doc)
             from .operators.dedup import char_shingles, minhash_signatures
 
-            sigs = minhash_signatures(
-                char_shingles(out.filter(F.col("text").isNotNull()),
+            snapshot("_sigs", lambda frame: minhash_signatures(
+                char_shingles(frame.filter(F.col("text").isNotNull()),
                               distinct=False),
                 n_hashes=32,
-            )
-            if pre_span is not None:
-                # PRE-span signatures too (same gap the pre-span hash
-                # snapshot closes for exact dedup): a re-crawl arrives
-                # with its spans intact and is checked against the
-                # snapshot pre-excision, so a doc whose spans were cut
-                # would otherwise sit below the jaccard gate vs its own
-                # excised signature (review r7)
-                sigs = sigs.unionByName(minhash_signatures(
-                    char_shingles(
-                        pre_span.filter(F.col("text").isNotNull()),
-                        distinct=False),
-                    n_hashes=32,
-                )).distinct()
-                # distinct: span-untouched docs emit identical pre/post
-                # rows -- doubled band rows would halve the effective
-                # seen-side bucket cap next run (review r7 pass 6)
-            sigs.write.mode("overwrite").parquet(output_dir + "_sigs")
+            ))
         if write_simhash:
-            # simhash snapshot sink: one int64 per curated doc for the next
-            # run's --seen-simhash; union successive sinks to accumulate.
+            # --seen-simhash: one int64 per doc
             from .operators.dedup import simhash64_udf
 
-            sh = out.filter(F.col("text").isNotNull()).select(
-                "doc_id", simhash64_udf(F.col("text")).alias("simhash")
-            )
-            if pre_span is not None:
-                # PRE-span hashes too (the same re-crawl gap the hash and
-                # sig snapshots close): a re-crawl arrives span-intact.
-                # distinct: span-untouched docs have identical pre/post
-                # rows -- without it the snapshot doubles and the seen
-                # bucket cap fires at half the intended distinct-doc
-                # count. Only the union branch can duplicate, so only it
-                # pays the distinct shuffle.
-                sh = sh.unionByName(
-                    pre_span.filter(F.col("text").isNotNull())
-                    .select("doc_id",
-                            simhash64_udf(F.col("text")).alias("simhash"))
-                ).distinct()
-            sh.write.mode("overwrite").parquet(output_dir + "_simhash")
+            snapshot("_simhash", lambda frame: (
+                frame.filter(F.col("text").isNotNull()).select(
+                    "doc_id", simhash64_udf(F.col("text")).alias("simhash")
+                )
+            ))
     finally:
         # after the last consumer (the curated and snapshot sinks), and
         # also when one of them raises: staged data is temporary
@@ -584,21 +559,11 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             metrics[stage] = None  # AQE-pruned empty subtree
     if temperature_stratum:
         metrics["mix_null_stratum"] = mix_null_stratum
-    if seen_sigs_df is not None:
-        # 'no silent caps': surface how many seen band rows the
-        # hot-bucket cap excluded from near-dup matching (recall lost
-        # to boundedness -- review r7)
-        try:
-            metrics["seen_neardup_capped_band_rows"] = \
-                seen_cap_obs.get["n_dropped_rows"]
-        except Exception:
-            metrics["seen_neardup_capped_band_rows"] = None
-    if seen_simhash_df is not None:
-        try:
-            metrics["seen_simhash_capped_chunk_rows"] = \
-                simhash_cap_obs.get["n_dropped_rows"]
-        except Exception:
-            metrics["seen_simhash_capped_chunk_rows"] = None
+    # 'no silent caps': surface how many seen band / chunk rows the
+    # hot-bucket cap excluded from near-dup matching (recall lost to
+    # boundedness -- review r7); None when the observation was pruned
+    for key, obs in cap_observations.items():
+        metrics[key] = (report_bucket_cap(obs) or {}).get("n_dropped_rows")
     return out, metrics
 
 

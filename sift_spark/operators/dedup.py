@@ -17,7 +17,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 
 import numpy as np
 import pandas as pd
@@ -373,7 +375,7 @@ def bucket_cap_observation(name="bucket_cap"):
     return Observation(name)
 
 
-def report_bucket_cap(observation, log=None):
+def report_bucket_cap(observation):
     """Read the cap metrics AFTER an action has run on the pipeline
     (Observation.get blocks until the first action finishes) and warn
     when the cap dropped anything -- the runtime signal that recall was
@@ -381,104 +383,91 @@ def report_bucket_cap(observation, log=None):
     be routed to exact dedup (see oversized_buckets /
     simhash_oversized_blocks).
 
-    Returns the metrics dict, or None when the metrics are unavailable:
-    if the pipeline's FINAL result is empty, AQE's empty-relation
-    propagation replaces the whole subtree -- CollectMetrics included --
-    and the observation resolves to an empty row (measured on this
-    Spark version). In that case run the oversized_buckets /
-    simhash_oversized_blocks monitor for a guaranteed (extra-job)
-    answer."""
-    log = log or logging.getLogger(__name__)
-    if not hasattr(observation, "_jo"):
-        # private PySpark internals changed shape (upgrade): degrade to
-        # the guaranteed (extra-job) monitors instead of crashing
-        log.warning(
-            "Observation internals changed (no _jo on this PySpark); "
-            "bucket-cap metrics unavailable -- run the oversized-buckets "
-            "monitor for a guaranteed answer"
-        )
-        return None
+    Returns {n_dropped_rows, largest_bucket}, or None when there is
+    nothing to read:
+      * the cap was off (max_bucket_size falsy), so cap_buckets never
+        attached the observation;
+      * AQE pruned it: when the observed subtree's result is empty,
+        AQE's empty-relation propagation replaces the subtree --
+        CollectMetrics included -- and Observation.get raises (measured
+        on PySpark 4.1: a toPyRow assertion over a zero-field row). The
+        oversized_buckets / simhash_oversized_blocks monitors give a
+        guaranteed answer at the cost of an extra job."""
+    from py4j.protocol import Py4JJavaError
+
+    log = logging.getLogger(__name__)
     if observation._jo is None:
-        # never attached: the cap was off (max_bucket_size falsy), so the
-        # pipeline had nothing to observe
-        log.info(
-            "bucket-cap observation was never attached (cap disabled); "
-            "nothing to report"
-        )
         return None
     try:
         metrics = observation.get
-    except Exception:
-        try:
-            jrow = observation._jo.getRow()
-            values = [jrow.get(i) for i in range(jrow.size())]
-        except Exception:
-            log.warning(
-                "bucket-cap observation row unreadable through private "
-                "PySpark internals; metrics unavailable -- run the "
-                "oversized-buckets monitor for a guaranteed answer"
-            )
-            return None
-        if not values:
-            log.info(
-                "bucket-cap observation pruned (empty pipeline result "
-                "under AQE); run the oversized-buckets monitor for a "
-                "guaranteed answer"
-            )
-            return None
-        if len(values) != 2:
-            # positional read is only valid for _observe_cap's exact
-            # two-alias layout; anything else means the layout drifted
-            log.warning(
-                "bucket-cap observation row has %d fields (expected 2); "
-                "metrics unavailable", len(values)
-            )
-            return None
-        # schemaless but populated row: read positionally (alias order
-        # fixed in _observe_cap)
-        metrics = {
-            "n_dropped_rows": values[0],
-            "largest_bucket": values[1],
-        }
-    if metrics.get("n_dropped_rows"):
+    except Py4JJavaError:
+        log.info(
+            "bucket-cap observation pruned (empty pipeline result under "
+            "AQE); run the oversized-buckets monitor for a guaranteed "
+            "answer"
+        )
+        return None
+    if metrics["n_dropped_rows"]:
         log.warning(
-            "bucket cap dropped %d banded rows (largest bucket: %d "
-            "members); route oversized buckets to exact dedup",
+            "bucket cap dropped %d rows (largest bucket: %d members); "
+            "route oversized buckets to exact dedup",
             metrics["n_dropped_rows"], metrics["largest_bucket"],
         )
     return metrics
 
 
-def _observe_cap(df, observation, max_bucket_size):
-    """Attach n_dropped_rows / largest_bucket metrics to the banded table
-    (piggybacks on the downstream action; adds NO extra job)."""
-    if observation is None:
-        return df
-    return df.observe(
-        observation,
-        F.count_if(F.col("_bucket_n") > max_bucket_size).alias(
-            "n_dropped_rows"
-        ),
-        F.max("_bucket_n").alias("largest_bucket"),
-    )
+def cap_buckets(df, keys, max_bucket_size, observation=None):
+    """ONE copy of the hot-bucket cap behind every blocked join (minhash
+    bands, simhash chunks, embedding buckets; in-batch and seen side):
+    count rows per `keys` bucket with a window, keep the buckets of at
+    most max_bucket_size rows, drop the helper column. A falsy
+    max_bucket_size disables the cap and never attaches `observation`.
 
-
-def cap_seen_buckets(df, keys, max_bucket_size, observation=None):
-    """ONE copy of the seen-side hot-bucket cap used by every
-    *_seen_matches function (minhash bands, simhash chunks, embedding
-    buckets): count rows per `keys` bucket with a window, observe the
-    drop metrics on the single retained branch, filter, drop the
-    helper. A falsy max_bucket_size disables the cap (and with it the
-    observation -- same contract as the in-batch forms)."""
+    `observation` (bucket_cap_observation()) records n_dropped_rows /
+    largest_bucket on the downstream action (no extra job). Attach it
+    to ONE join branch only: a CollectMetrics node duplicated into both
+    sides of a self-join trips a plan assertion (duplicate metric
+    name), and one branch sees each row exactly once."""
     if not max_bucket_size:
         return df
-    sizes = Window.partitionBy(*keys)
-    sized = df.withColumn("_bucket_n", F.count("*").over(sizes))
+    sized = df.withColumn(
+        "_bucket_n", F.count("*").over(Window.partitionBy(*keys))
+    )
+    if observation is not None:
+        sized = sized.observe(
+            observation,
+            F.count_if(F.col("_bucket_n") > max_bucket_size).alias(
+                "n_dropped_rows"
+            ),
+            F.max("_bucket_n").alias("largest_bucket"),
+        )
     return (
-        _observe_cap(sized, observation, max_bucket_size)
-        .filter(F.col("_bucket_n") <= max_bucket_size)
+        sized.filter(F.col("_bucket_n") <= max_bucket_size)
         .drop("_bucket_n")
     )
+
+
+def block_self_join(blocks, keys, id_col, max_bucket_size=None,
+                    observation=None):
+    """The blocked self-join behind every in-batch near-dup path: rows of
+    `blocks` sharing every `keys` value, aliased `a` and `b`, with
+    a.id < b.id (so a pair surfaces once per shared block, never
+    mirrored). Callers derive the blocks and select / verify from the
+    `a.` and `b.` columns. max_bucket_size caps both sides through
+    cap_buckets; only the `a` side carries `observation`."""
+    a = cap_buckets(blocks, keys, max_bucket_size, observation).alias("a")
+    b = cap_buckets(blocks, keys, max_bucket_size).alias("b")
+    on = [F.col(f"a.{key}") == F.col(f"b.{key}") for key in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return a.join(b, functools.reduce(operator.and_, on))
+
+
+def _drop_seen_matches(docs_df, matches, id_col):
+    """docs_df without the new_ids a *_seen_matches table matched: one
+    distinct id projection, one left_anti join (the minhash, simhash and
+    embedding seen loops)."""
+    drop_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
+    return docs_df.join(drop_ids, id_col, "left_anti")
 
 
 def lsh_candidate_pairs(sig_df, n_bands=8, id_col="doc_id",
@@ -496,29 +485,9 @@ def lsh_candidate_pairs(sig_df, n_bands=8, id_col="doc_id",
     collapses identical content)."""
     n_hashes = _resolve_n_hashes(sig_df, n_hashes)
     bands = _band_table(sig_df, n_bands, n_hashes, id_col)
-    left = right = bands
-    if max_bucket_size:
-        sizes = Window.partitionBy("band_idx", "band_hash")
-        sized = bands.withColumn("_bucket_n", F.count("*").over(sizes))
-        capped = F.col("_bucket_n") <= max_bucket_size
-        # the pair stage self-joins the banded table; a CollectMetrics
-        # node duplicated into both join branches trips a plan assertion
-        # (duplicate metric name), so observe the LEFT branch only --
-        # each banded row passes it exactly once, counts stay exact
-        left = (
-            _observe_cap(sized, observation, max_bucket_size)
-            .filter(capped).drop("_bucket_n")
-        )
-        right = sized.filter(capped).drop("_bucket_n")
-    left = left.alias("a")
-    right = right.alias("b")
     return (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        block_self_join(bands, ("band_idx", "band_hash"), id_col,
+                        max_bucket_size, observation)
         .select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
@@ -582,14 +551,8 @@ def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
             .agg(F.count("*").alias("n_common"))
         )
     else:
-        a = shingles_df.alias("a")
-        b = shingles_df.alias("b")
         common = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
+            block_self_join(shingles_df, ("shingle",), id_col)
             .groupBy(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
@@ -734,7 +697,7 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
         )
     new_bands = _band_table(new_sigs, n_bands, n_hashes, id_col) \
         .withColumnRenamed(id_col, "new_id")
-    seen_bands = cap_seen_buckets(
+    seen_bands = cap_buckets(
         _band_table(seen_sigs, n_bands, n_hashes, id_col)
         .withColumnRenamed(id_col, "seen_id"),
         ("band_idx", "band_hash"), max_bucket_size, observation,
@@ -786,10 +749,7 @@ def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
         sigs, seen_sigs, n_bands, n_hashes, min_est_jaccard, id_col,
         max_bucket_size, observation,
     )
-    drop_ids = matches.select(
-        F.col("new_id").alias(id_col)
-    ).distinct()
-    return docs_df.join(drop_ids, id_col, "left_anti")
+    return _drop_seen_matches(docs_df, matches, id_col)
 
 
 def _delete_hadoop_path(spark, path):
@@ -1187,30 +1147,13 @@ def simhash_pairs_from_hashes(hashed, max_hamming=3, id_col="doc_id",
     max_bucket_size caps the per-(chunk_idx, chunk_val) bucket: there are
     only 65,536 values per chunk index, so at crawl scale hot chunk
     values (boilerplate-heavy hashes) would otherwise produce a quadratic
-    pair blowup -- the same hazard and the same remedy as
-    `lsh_candidate_pairs`. Dropped blocks are observable via
+    pair blowup -- the same hazard as `lsh_candidate_pairs`, under the
+    same cap (cap_buckets). Dropped blocks are observable via
     `simhash_oversized_blocks` and should be routed to exact dedup."""
-    chunks = _simhash_blocks(hashed, id_col)
-    left = right = chunks
-    if max_bucket_size:
-        sizes = Window.partitionBy("chunk_idx", "chunk_val")
-        sized = chunks.withColumn("_bucket_n", F.count("*").over(sizes))
-        capped = F.col("_bucket_n") <= max_bucket_size
-        # observe the LEFT join branch only (see lsh_candidate_pairs)
-        left = (
-            _observe_cap(sized, observation, max_bucket_size)
-            .filter(capped).drop("_bucket_n")
-        )
-        right = sized.filter(capped).drop("_bucket_n")
-    a = left.alias("a")
-    b = right.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        block_self_join(_simhash_blocks(hashed, id_col),
+                        ("chunk_idx", "chunk_val"), id_col,
+                        max_bucket_size, observation)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -1256,7 +1199,7 @@ def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
         .withColumnRenamed(id_col, "new_id")
         .withColumnRenamed("simhash", "_sh_new")
     )
-    seen_b = cap_seen_buckets(
+    seen_b = cap_buckets(
         _simhash_blocks(seen_hashed, id_col)
         .withColumnRenamed(id_col, "seen_id")
         .withColumnRenamed("simhash", "_sh_seen"),
@@ -1291,10 +1234,7 @@ def dedup_against_seen_simhash(docs_df, seen_hashed, max_hamming=3,
         hashed, seen_hashed, max_hamming, id_col, max_bucket_size,
         observation,
     )
-    drop_ids = matches.select(
-        F.col("new_id").alias(id_col)
-    ).distinct()
-    return docs_df.join(drop_ids, id_col, "left_anti")
+    return _drop_seen_matches(docs_df, matches, id_col)
 
 
 def simhash_near_duplicates(docs_df, max_hamming=3, id_col="doc_id",

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .dedup import _drop_seen_matches, block_self_join, cap_buckets
+
 
 def dot_col(a, b):
     return F.aggregate(
@@ -284,14 +286,8 @@ def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95, seed=42,
     sides = assigned.select(
         F.col(id_col), vec.alias("v"), F.col("cluster")
     )
-    a = sides.alias("a")
-    b = sides.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        block_self_join(sides, ("cluster",), id_col)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -338,14 +334,8 @@ def embedding_near_duplicates(emb_df, min_cosine=0.95, n_planes=10, seed=42,
         F.col(id_col), vec.alias("v"),
         hyperplane_bucket_col(vec, planes).alias("bucket"),
     )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        block_self_join(bucketed, ("bucket",), id_col)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -439,10 +429,8 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
             hyperplane_bucket_col(F.col(f"_v_{out_id}"), planes),
         )
 
-    from .dedup import cap_seen_buckets
-
     new_b = bucketed(new_emb, "new_id")
-    seen_b = cap_seen_buckets(
+    seen_b = cap_buckets(
         bucketed(seen_emb, "seen_id"), ("bucket",), max_bucket_size,
         observation,
     )
@@ -470,7 +458,4 @@ def dedup_against_seen_embedding(new_emb, seen_emb, min_cosine=0.95,
         new_emb, seen_emb, min_cosine, n_planes, seed, id_col, vec_col,
         dim, max_bucket_size, observation,
     )
-    drop_ids = matches.select(
-        F.col("new_id").alias(id_col)
-    ).distinct()
-    return new_emb.join(drop_ids, id_col, "left_anti")
+    return _drop_seen_matches(new_emb, matches, id_col)

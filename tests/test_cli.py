@@ -146,6 +146,35 @@ def test_dist_zip_matches_source():
                     )
 
 
+def test_bucket_cap_has_one_home():
+    """The hot-bucket cap's helper column "_bucket_n" is named in ONE
+    function, cap_buckets: every blocked join (in-batch and seen side;
+    minhash, simhash, embedding) caps through it, so a change of cap
+    policy is one edit."""
+    import ast
+    from pathlib import Path
+
+    package = Path(__file__).resolve().parent.parent / "sift_spark"
+
+    def owners(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from owners(child, f"{scope}:{child.name}")
+            elif (isinstance(child, ast.Constant)
+                  and child.value == "_bucket_n"):
+                yield scope
+            else:
+                yield from owners(child, scope)
+
+    found = {
+        owner
+        for path in sorted(package.rglob("*.py"))
+        for owner in owners(ast.parse(path.read_text()),
+                            path.relative_to(package).as_posix())
+    }
+    assert found == {"operators/dedup.py:cap_buckets"}, sorted(found)
+
+
 def test_public_surface_has_callers_or_reasons():
     """Every public top-level def/class in sift_spark/ is either used by
     a non-test file or listed, with its reason, in STATUS.md's

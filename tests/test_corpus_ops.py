@@ -584,6 +584,104 @@ def test_bucket_cap_observation_signals_drops(spark, caplog):
     assert any("pruned" in r.message for r in caplog.records)
 
 
+CAPPED_PATHS = ("lsh_candidate_pairs", "simhash_pairs_from_hashes",
+                "minhash_seen_matches", "simhash_seen_matches",
+                "embedding_seen_matches")
+
+
+def _planted_hot_bucket(spark, path):
+    """One capped path over a planted hot bucket of 20 rows sharing every
+    blocking key, plus one pair whose blocks hold 2 rows. Returns
+    (run(max_bucket_size, observation) -> {(id, id)}, the hot bucket's
+    pairs, the small pair, hand-counted n_dropped_rows)."""
+    from sift_spark.operators import dedup, similarity
+
+    hot = range(20)
+    # minhash: 8 hashes in 4 bands, so a hot row fills 4 band buckets;
+    # simhash: hash 0 puts a hot row in all 4 chunk blocks of value 0
+    hot_sig, pair_sig = [7] * 8, list(range(1, 9))
+    pair_hash = 0x0001000100010001  # no chunk of value 0
+    sig_schema = "doc_id long, sig array<long>"
+    hash_schema = "doc_id long, simhash long"
+
+    def pairs(df):
+        return {(r[0], r[1]) for r in df.collect()}
+
+    if path == "lsh_candidate_pairs":
+        sigs = spark.createDataFrame(
+            [(i, hot_sig) for i in hot]
+            + [(100, pair_sig), (101, pair_sig)], sig_schema)
+        return (lambda cap, obs: pairs(dedup.lsh_candidate_pairs(
+                    sigs, 4, max_bucket_size=cap, n_hashes=8,
+                    observation=obs)),
+                {(i, j) for i in hot for j in hot if i < j}, (100, 101),
+                4 * 20)
+    if path == "simhash_pairs_from_hashes":
+        hashed = spark.createDataFrame(
+            [(i, 0) for i in hot] + [(100, pair_hash), (101, pair_hash)],
+            hash_schema)
+        return (lambda cap, obs: pairs(dedup.simhash_pairs_from_hashes(
+                    hashed, 3, max_bucket_size=cap, observation=obs)),
+                {(i, j) for i in hot for j in hot if i < j}, (100, 101),
+                4 * 20)
+    # seen matchers: the hot bucket is on the SEEN side, which is capped;
+    # new doc 1000 matches it, new doc 1001 matches seen doc 200
+    hot_pairs, pair = {(1000, i) for i in hot}, (1001, 200)
+    if path == "minhash_seen_matches":
+        seen = spark.createDataFrame(
+            [(i, hot_sig) for i in hot] + [(200, pair_sig)], sig_schema)
+        new = spark.createDataFrame(
+            [(1000, hot_sig), (1001, pair_sig)], sig_schema)
+        return (lambda cap, obs: pairs(dedup.minhash_seen_matches(
+                    new, seen, 4, 8, max_bucket_size=cap,
+                    observation=obs)),
+                hot_pairs, pair, 4 * 20)
+    if path == "simhash_seen_matches":
+        seen = spark.createDataFrame(
+            [(i, 0) for i in hot] + [(200, pair_hash)], hash_schema)
+        new = spark.createDataFrame(
+            [(1000, 0), (1001, pair_hash)], hash_schema)
+        return (lambda cap, obs: pairs(dedup.simhash_seen_matches(
+                    new, seen, 3, max_bucket_size=cap, observation=obs)),
+                hot_pairs, pair, 4 * 20)
+    # embeddings: one bucket per row; opposite vectors differ in every
+    # hyperplane sign, so the small pair never shares the hot bucket
+    emb_schema = "vec_id long, embedding array<double>"
+    seen = spark.createDataFrame(
+        [(i, [1.0, 0.0, 0.0, 0.0]) for i in hot]
+        + [(200, [-1.0, 0.0, 0.0, 0.0])], emb_schema)
+    new = spark.createDataFrame(
+        [(1000, [1.0, 0.0, 0.0, 0.0]), (1001, [-1.0, 0.0, 0.0, 0.0])],
+        emb_schema)
+    return (lambda cap, obs: pairs(similarity.embedding_seen_matches(
+                new, seen, dim=4, max_bucket_size=cap, observation=obs)),
+            hot_pairs, pair, 20)
+
+
+@pytest.mark.parametrize("path", CAPPED_PATHS)
+def test_bucket_cap_contract(spark, path):
+    """Every capped blocking path shares one cap (cap_buckets): a bucket
+    over max_bucket_size loses all its pairs, the observation counts the
+    dropped rows and the largest bucket exactly, and a falsy
+    max_bucket_size drops nothing and never attaches the observation."""
+    from sift_spark.operators.dedup import (
+        bucket_cap_observation,
+        report_bucket_cap,
+    )
+
+    run, hot_pairs, pair, n_dropped = _planted_hot_bucket(spark, path)
+    obs = bucket_cap_observation(f"{path}_cap")
+    assert run(10, obs) == {pair}
+    assert report_bucket_cap(obs) == {
+        "n_dropped_rows": n_dropped, "largest_bucket": 20,
+    }
+    for off in (None, 0):
+        unused = bucket_cap_observation(f"{path}_off")
+        assert run(off, unused) == hot_pairs | {pair}
+        assert unused._jo is None
+        assert report_bucket_cap(unused) is None
+
+
 def test_embedding_neardup_lsh_recall_on_planted(spark):
     """LSH near-dup must recover every planted near-duplicate the exact
     all-pairs baseline finds at the same threshold (scaled clones share
