@@ -34,6 +34,19 @@ FALLBACK_CHUNKS = 2  # chunk_selection.go:626
 GAP_MARKER = "\n\n---\n\n"  # chunk_selection.go:186
 
 
+def chunk_size(text, counting_method):
+    """Unit-aware chunk size (chunk_selection.go:117-143): the method's
+    base size, raised by LARGE_TEXT_MULTIPLIER once the text's UTF-8
+    length passes the method's threshold. Unknown methods size as chars.
+    The one copy of the rule: ChunkSelector, the extraction kernel's
+    chunk count and the Spark split UDF all call it."""
+    base = BASE_SIZES.get(counting_method, BASE_SIZES[CHARS])
+    threshold = TEXT_THRESHOLDS.get(counting_method, TEXT_THRESHOLDS[CHARS])
+    if len(text.encode("utf-8", "surrogatepass")) > threshold:
+        return int(base * LARGE_TEXT_MULTIPLIER)
+    return base
+
+
 @dataclass
 class ChunkWithIndex:
     text: str
@@ -118,12 +131,7 @@ class ChunkSelector:
     # -- chunk preparation -----------------------------------------------------
 
     def chunk_size(self, text):
-        method = self.counter.method
-        base = BASE_SIZES.get(method, BASE_SIZES[CHARS])
-        threshold = TEXT_THRESHOLDS.get(method, TEXT_THRESHOLDS[CHARS])
-        if len(text.encode("utf-8", "surrogatepass")) > threshold:
-            return int(base * LARGE_TEXT_MULTIPLIER)
-        return base
+        return chunk_size(text, self.counter.method)
 
     def prepare_chunks(self, text):
         return split_text(text, self.chunk_size(text))

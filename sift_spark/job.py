@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -27,6 +28,23 @@ from .operators.extract import extract_pages
 from .plans import lineage, partitioning
 from .plans.fsio import delete_path
 from .session import get_spark
+
+
+@contextmanager
+def _job_session(app_name, cores):
+    """The session every entry point runs in: the caller's live session
+    when there is one (getOrCreate reuses it, and stopping it would kill
+    the caller's session), else a new one that is stopped on the way
+    out, also when the job raises."""
+    from pyspark.sql import SparkSession
+
+    owns_session = SparkSession.getActiveSession() is None
+    spark = get_spark(app_name=app_name, cores=cores)
+    try:
+        yield spark
+    finally:
+        if owns_session:
+            spark.stop()
 
 
 def run_extraction_job(
@@ -116,26 +134,19 @@ def media_main(argv=None):
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    # only stop a session THIS invocation created (getOrCreate reuses a
-    # live one -- stopping it would kill the caller's session)
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-media-job", cores=args.cores)
-    features = run_media_job(
-        spark,
-        spark.read.parquet(args.input),
-        args.output,
-        decoder=args.decoder,
-        deterministic_fake=not args.strict,
-    )
-    summary = features.agg(
-        F.count("*"), F.sum(F.when(F.col("error").isNotNull(), 1)
-                            .otherwise(0))
-    ).first()
-    print(f"media rows={summary[0]} errors={summary[1] or 0}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-media-job", args.cores) as spark:
+        features = run_media_job(
+            spark,
+            spark.read.parquet(args.input),
+            args.output,
+            decoder=args.decoder,
+            deterministic_fake=not args.strict,
+        )
+        summary = features.agg(
+            F.count("*"), F.sum(F.when(F.col("error").isNotNull(), 1)
+                                .otherwise(0))
+        ).first()
+        print(f"media rows={summary[0]} errors={summary[1] or 0}")
 
 
 def curation_gates(docs, lang, min_quality, lm_model, max_ppl,
@@ -717,18 +728,13 @@ def curate_main(argv=None):
     _add_curation_args(parser)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-curate-job", cores=args.cores)
-    out, metrics = run_curation_job(
-        spark, spark.read.parquet(args.input), args.output,
-        **_curation_kwargs(spark, args),
-    )
-    stages = " ".join(f"{k}={v}" for k, v in metrics.items())
-    print(f"curated rows={out.count()} {stages}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-curate-job", args.cores) as spark:
+        out, metrics = run_curation_job(
+            spark, spark.read.parquet(args.input), args.output,
+            **_curation_kwargs(spark, args),
+        )
+        stages = " ".join(f"{k}={v}" for k, v in metrics.items())
+        print(f"curated rows={out.count()} {stages}")
 
 
 def train_lm_main(argv=None):
@@ -755,23 +761,18 @@ def train_lm_main(argv=None):
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from .operators.lm import save_lm, train_ngram_lm
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-train-lm", cores=args.cores)
-    lm = train_ngram_lm(
-        spark.read.parquet(args.input), n=args.n,
-        text_col=args.text_col, min_count=args.min_count,
-        alpha=args.alpha,
-    )
-    save_lm(lm, args.output)
-    kept = spark.read.parquet(args.output).count()
-    print(f"trained n={lm.n} tokens={lm.total_tokens} "
-          f"vocab={lm.vocab_size} grams_kept={kept}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-train-lm", args.cores) as spark:
+        lm = train_ngram_lm(
+            spark.read.parquet(args.input), n=args.n,
+            text_col=args.text_col, min_count=args.min_count,
+            alpha=args.alpha,
+        )
+        save_lm(lm, args.output)
+        kept = spark.read.parquet(args.output).count()
+        print(f"trained n={lm.n} tokens={lm.total_tokens} "
+              f"vocab={lm.vocab_size} grams_kept={kept}")
 
 
 def train_bpe_main(argv=None):
@@ -793,20 +794,15 @@ def train_bpe_main(argv=None):
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from .operators.bpe import train_bpe_vocab
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-train-bpe", cores=args.cores)
-    merges = train_bpe_vocab(
-        spark, spark.read.parquet(args.input), args.vocab_size,
-        args.output, text_col=args.text_col, min_freq=args.min_freq,
-    )
-    print(f"trained vocab_size={256 + len(merges)} "
-          f"merges={len(merges)} -> {args.output}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-train-bpe", args.cores) as spark:
+        merges = train_bpe_vocab(
+            spark, spark.read.parquet(args.input), args.vocab_size,
+            args.output, text_col=args.text_col, min_freq=args.min_freq,
+        )
+        print(f"trained vocab_size={256 + len(merges)} "
+              f"merges={len(merges)} -> {args.output}")
 
 
 def train_clf_main(argv=None):
@@ -832,27 +828,22 @@ def train_clf_main(argv=None):
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from .operators.textclf import (
         save_text_classifier,
         train_from_slices,
     )
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-train-clf", cores=args.cores)
-    model = train_from_slices(
-        spark.read.parquet(args.pos), spark.read.parquet(args.neg),
-        text_col=args.text_col, n_buckets=args.buckets,
-        n_iter=args.iters,
-    )
-    save_text_classifier(model, args.output)
-    print(f"trained buckets={args.buckets} "
-          f"nonzero_weights={len(model['weights'])} "
-          f"intercept={model['intercept']:.6f} docs={model['n_rows']} "
-          f"-> {args.output}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-train-clf", args.cores) as spark:
+        model = train_from_slices(
+            spark.read.parquet(args.pos), spark.read.parquet(args.neg),
+            text_col=args.text_col, n_buckets=args.buckets,
+            n_iter=args.iters,
+        )
+        save_text_classifier(model, args.output)
+        print(f"trained buckets={args.buckets} "
+              f"nonzero_weights={len(model['weights'])} "
+              f"intercept={model['intercept']:.6f} docs={model['n_rows']} "
+              f"-> {args.output}")
 
 
 def run_crawl_curate_job(spark, warc_input, output_root,
@@ -985,26 +976,21 @@ def crawl_curate_main(argv=None):
     _add_curation_args(parser)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-crawl-curate", cores=args.cores)
-    out, metrics = run_crawl_curate_job(
-        spark,
-        args.input,
-        args.output,
-        params=SiftParams(selector=args.selector or ""),
-        n_parts=args.n_parts,
-        resume=not args.no_resume,
-        block_hosts=(spark.read.text(args.block_hosts)
-                     if args.block_hosts else None),
-        block_by=args.block_by,
-        **_curation_kwargs(spark, args),
-    )
-    stages = " ".join(f"{k}={v}" for k, v in metrics.items())
-    print(f"curated rows={out.count()} {stages}")
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-crawl-curate", args.cores) as spark:
+        out, metrics = run_crawl_curate_job(
+            spark,
+            args.input,
+            args.output,
+            params=SiftParams(selector=args.selector or ""),
+            n_parts=args.n_parts,
+            resume=not args.no_resume,
+            block_hosts=(spark.read.text(args.block_hosts)
+                         if args.block_hosts else None),
+            block_by=args.block_by,
+            **_curation_kwargs(spark, args),
+        )
+        stages = " ".join(f"{k}={v}" for k, v in metrics.items())
+        print(f"curated rows={out.count()} {stages}")
 
 
 def main(argv=None):
@@ -1042,28 +1028,23 @@ def main(argv=None):
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name="sift-spark-job", cores=args.cores)
-    pages = spark.read.parquet(args.input)
-    metrics = run_extraction_job(
-        spark,
-        pages,
-        args.output,
-        params=_build_params(args),
-        n_parts=args.n_parts,
-        resume=not args.no_resume,
-    )
-    summary = metrics.agg(
-        F.sum("n_docs"), F.sum("n_errors"), F.sum("bytes_in"), F.sum("bytes_out")
-    ).first()
-    print(
-        f"processed docs={summary[0] or 0} errors={summary[1] or 0} "
-        f"bytes_in={summary[2] or 0} bytes_out={summary[3] or 0}"
-    )
-    if owns_session:
-        spark.stop()
+    with _job_session("sift-spark-job", args.cores) as spark:
+        pages = spark.read.parquet(args.input)
+        metrics = run_extraction_job(
+            spark,
+            pages,
+            args.output,
+            params=_build_params(args),
+            n_parts=args.n_parts,
+            resume=not args.no_resume,
+        )
+        summary = metrics.agg(
+            F.sum("n_docs"), F.sum("n_errors"), F.sum("bytes_in"), F.sum("bytes_out")
+        ).first()
+        print(
+            f"processed docs={summary[0] or 0} errors={summary[1] or 0} "
+            f"bytes_in={summary[2] or 0} bytes_out={summary[3] or 0}"
+        )
 
 
 if __name__ == "__main__":

@@ -30,7 +30,7 @@ from ..core.chunker import split_text
 from ..core.classify import stopword_ratio
 from ..core.counters import CHARS, TOKENS, WORDS, Counter
 from ..core.pipeline import SiftParams
-from ..core.selection import BASE_SIZES, LARGE_TEXT_MULTIPLIER, TEXT_THRESHOLDS
+from ..core.selection import chunk_size
 from .search import FIELD_TERMS_COL, FIELD_TERMS_TYPE, field_term_pairs
 
 
@@ -55,8 +55,6 @@ def make_split_classify_udf(params: SiftParams):
     :func:`search.with_bm25_score` consumes instead of re-parsing the
     chunk in a second Python stage."""
     method = params.counting_method
-    base = BASE_SIZES.get(method, BASE_SIZES[CHARS])
-    threshold = TEXT_THRESHOLDS.get(method, TEXT_THRESHOLDS[CHARS])
     with_field_terms = bool(params.search_query.strip())
 
     @F.pandas_udf(_chunk_schema(with_field_terms))
@@ -66,10 +64,7 @@ def make_split_classify_udf(params: SiftParams):
             if value is None:
                 out.append([])
                 continue
-            size = base
-            if len(value.encode("utf-8", "surrogatepass")) > threshold:
-                size = int(base * LARGE_TEXT_MULTIPLIER)
-            chunks = split_text(value, size)
+            chunks = split_text(value, chunk_size(value, method))
             n_chunks = len(chunks)
             rows = []
             for chunk in chunks:

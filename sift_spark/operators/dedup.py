@@ -509,56 +509,26 @@ def oversized_buckets(sig_df, n_bands=8, id_col="doc_id",
 
 
 def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
-                  candidates=None, shingle_col="shingle"):
+                  shingle_col="shingle"):
     """Exact n-gram Jaccard between documents sharing at least one
-    shingle/ngram (optionally restricted to LSH candidates):
-    (id_a, id_b, n_common, jaccard).
+    shingle/ngram: (id_a, id_b, n_common, jaccard).
 
-    candidates=None is the small-data/diagnostic form: the shingle
-    self-join is quadratic in the hottest shingle's document frequency
-    (measured: minutes + gigabytes at a mere 5000 docs with 8-char
-    shingles). Production near-dup ALWAYS goes through
-    minhash_near_duplicates, which anchors this verify step on LSH
-    candidate pairs."""
+    This is the small-data/diagnostic form: the shingle self-join is
+    quadratic in the hottest shingle's document frequency (measured:
+    minutes + gigabytes at a mere 5000 docs with 8-char shingles).
+    Production near-dup ALWAYS goes through minhash_near_duplicates,
+    which verifies LSH candidate pairs on per-doc shingle arrays."""
     if shingle_col != "shingle":
         shingles_df = shingles_df.withColumnRenamed(shingle_col, "shingle")
     sizes = shingles_df.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    if candidates is not None:
-        # CRITICAL at scale: anchor the join on the candidate pairs, never
-        # build the full shingle self-join (a shingle shared by d docs
-        # costs O(d^2) pairs there vs O(|candidates| * shingles/doc) here)
-        sh_a = shingles_df.select(
-            F.col(id_col).alias("id_a"), F.col("shingle")
+    common = (
+        block_self_join(shingles_df, ("shingle",), id_col)
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
         )
-        sh_b = shingles_df.select(
-            F.col(id_col).alias("id_b"), F.col("shingle")
-        )
-        # pre-filter the b side to docs that actually appear in a
-        # candidate pair BEFORE the (id_b, shingle) equi-join shuffles
-        # it (guide-standard semi-join reduction): candidates are a
-        # small fraction of the corpus, so this cuts the verify stage's
-        # only corpus-sized exchange to the candidate docs' shingles
-        # (measured at sf1.0/local[32]: 138 MB -> ~7 MB). The a side
-        # needs no filter -- AQE broadcasts the candidate pairs and the
-        # join itself drops non-candidates before any exchange.
-        sh_b = sh_b.join(
-            candidates.select("id_b").distinct(), "id_b", "left_semi"
-        )
-        common = (
-            candidates.join(sh_a, "id_a")
-            .join(sh_b, ["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-    else:
-        common = (
-            block_self_join(shingles_df, ("shingle",), id_col)
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
+        .agg(F.count("*").alias("n_common"))
+    )
     # no broadcast hint: `sizes` is one row PER DOCUMENT -- forcing a
     # broadcast at crawl scale would collect the whole table to the
     # driver. AQE broadcasts it when it is actually small.
@@ -731,8 +701,7 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
 def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
                                n_bands=8, min_est_jaccard=0.5,
                                id_col="doc_id", text_col="text",
-                               portable_hash=False, max_bucket_size=1000,
-                               observation=None):
+                               max_bucket_size=1000, observation=None):
     """Drop new-batch documents that are NEAR-duplicates of a prior
     corpus snapshot (persisted signature table from
     :func:`minhash_signatures` -- write `minhash_signatures(
@@ -743,7 +712,7 @@ def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
     within a batch."""
     sigs = minhash_signatures(
         char_shingles(docs_df, k, id_col, text_col, distinct=False),
-        n_hashes, id_col, portable_hash,
+        n_hashes, id_col,
     )
     matches = minhash_seen_matches(
         sigs, seen_sigs, n_bands, n_hashes, min_est_jaccard, id_col,
@@ -1243,10 +1212,19 @@ def simhash_near_duplicates(docs_df, max_hamming=3, id_col="doc_id",
     """SimHash near-dup over raw text: 64-bit FNV simhash UDF, then the
     blocked pair stage (simhash_pairs_from_hashes). Pass an
     `observation` (bucket_cap_observation()) to get a runtime signal
-    when the cap drops hot blocks (report_bucket_cap after the action)."""
+    when the cap drops hot blocks (report_bucket_cap after the action).
+
+    The hash is evaluated once, with nothing cached: both join branches
+    read the one exchange on the hashed frame (the second as a
+    ReusedExchange). The UDF copy is marked nondeterministic (the
+    function IS pure) so the join's inferred isnotnull(simhash) filter
+    is not pushed below that exchange, where it would evaluate the UDF
+    a second time."""
+    fenced = F.pandas_udf(simhash64_udf.func, _SIMHASH_SCHEMA)
     hashed = docs_df.select(
-        F.col(id_col), simhash64_udf(F.col(text_col)).alias("simhash")
-    ).cache()
+        F.col(id_col),
+        fenced.asNondeterministic()(F.col(text_col)).alias("simhash"),
+    ).repartition(id_col)
     return simhash_pairs_from_hashes(
         hashed, max_hamming, id_col, max_bucket_size, observation
     )

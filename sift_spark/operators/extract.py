@@ -21,22 +21,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.chunker import split_text
-from ..core.counters import CHARS, Counter
+from ..core.counters import Counter
 from ..core.encoding import decode_html
 from ..core.pdftext import extract_pdf_text, is_pdf
 from ..core.pipeline import SiftParams, extract_document, transform_text
-from ..core.selection import BASE_SIZES, LARGE_TEXT_MULTIPLIER, TEXT_THRESHOLDS
-
-
-def chunk_size_for(text, params):
-    """Unit-aware chunk size (chunk_selection.go:117-143)."""
-    base = BASE_SIZES.get(params.counting_method, BASE_SIZES[CHARS])
-    threshold = TEXT_THRESHOLDS.get(
-        params.counting_method, TEXT_THRESHOLDS[CHARS]
-    )
-    if len(text.encode("utf-8", "surrogatepass")) > threshold:
-        return int(base * LARGE_TEXT_MULTIPLIER)
-    return base
+from ..core.selection import chunk_size
 
 # admission caps (fetch.go:20-21): files 50 MB, HTTP 100 MB
 MAX_HTML_BYTES = 100 * 1024 * 1024
@@ -50,48 +39,66 @@ EXTRACT_RESULT_SCHEMA = T.StructType(
     ]
 )
 
-
-def _decode(raw):
+def _admit(raw, params):
+    """The admission gate of every per-page kernel -> (html, pdf, error),
+    exactly one of them set. Null and over-cap pages are refused (cap:
+    `params.extra["max_html_bytes"]`, default MAX_HTML_BYTES), PDF bytes
+    go to the layout parse (core/pdftext.py), other bytes are charset-
+    sniffed (core/encoding.py: crawl pages are not all UTF-8) and any
+    other value is taken as HTML text."""
     if raw is None:
-        return None
-    if isinstance(raw, (bytes, bytearray)):
-        # charset sniffing (BOM -> meta -> utf-8 -> windows-1252):
-        # crawl pages are not all UTF-8 (core/encoding.py)
-        return decode_html(raw)
-    return str(raw)
-
-
-def _run_one(html_bytes, params, counter):
-    """Per-document kernel shared by the batch UDFs."""
-    if html_bytes is None:
-        return None, "no content", 0, 0
+        return None, None, "no content"
     cap = params.extra.get("max_html_bytes", MAX_HTML_BYTES)
-    if len(html_bytes) > cap:
-        return None, f"content too large: {len(html_bytes)} bytes", 0, 0
+    if len(raw) > cap:
+        return None, None, f"content too large: {len(raw)} bytes"
+    if not isinstance(raw, (bytes, bytearray)):
+        return str(raw), None, None
+    raw = bytes(raw)
+    if is_pdf(raw):
+        return None, raw, None
+    return decode_html(raw), None, None
+
+
+def _failure(exc):
+    """Error-column text for a page whose kernel raised: one bad page must
+    not kill a 100 TB job's task (fuzz-tested, but real crawls find what
+    fuzzers don't)."""
+    return f"extraction failed: {type(exc).__name__}: {exc}"
+
+
+def _markdown_one(raw, params):
+    """Per-page kernel of both extraction UDFs -> (markdown, error), with
+    markdown None exactly when error is set: the admission gate, then
+    the PDF layout parse or the DOM pipeline."""
     try:
-        if is_pdf(bytes(html_bytes[:5])):
-            # content-type routing: PDF layout parse instead of the DOM
-            # pipeline (core/pdftext.py); downstream transforms shared
-            markdown, error = extract_pdf_text(bytes(html_bytes))
-        else:
-            html = _decode(html_bytes)
-            markdown, error = extract_document(html, params)
-        if error is not None:
-            return None, error, 0, 0
-        if markdown.strip() == "":
-            return None, "no content extracted", 0, 0
+        html, pdf, error = _admit(raw, params)
+        if error is None:
+            markdown, error = (extract_pdf_text(pdf) if pdf is not None
+                               else extract_document(html, params))
+    except Exception as exc:  # noqa: BLE001 -- route, never raise
+        return None, _failure(exc)
+    return (markdown, None) if error is None else (None, error)
+
+
+def _run_one(raw, params, counter):
+    """Per-page kernel of extract_pages -> (text, error, n_chunks,
+    n_units): _markdown_one, then transform_text and the counts."""
+    markdown, error = _markdown_one(raw, params)
+    if error is not None:
+        return None, error, 0, 0
+    if markdown.strip() == "":
+        return None, "no content extracted", 0, 0
+    try:
         result = transform_text(markdown, params)
         # n_chunks is a lineage metric: raw split count (no classifier
         # pass -- stemming every token again would double per-doc cost)
         n_chunks = (
-            len(split_text(result, chunk_size_for(result, params)))
+            len(split_text(result, chunk_size(result, params.counting_method)))
             if result else 0
         )
         return result, None, n_chunks, counter.count(result)
-    except Exception as exc:  # noqa: BLE001 -- one bad doc must not kill
-        # a 100 TB job's task; route to the error column (fuzz-tested,
-        # but real crawls find what fuzzers don't)
-        return None, f"extraction failed: {type(exc).__name__}: {exc}", 0, 0
+    except Exception as exc:  # noqa: BLE001 -- route, never raise
+        return None, _failure(exc), 0, 0
 
 
 def make_extract_udf(params: SiftParams):
@@ -132,7 +139,8 @@ def make_extract_udf(params: SiftParams):
 
 def make_markdown_udf(params: SiftParams):
     """pandas UDF: html BINARY -> struct(text, error) -- extraction only,
-    no size limiting (the `text_md` intermediate of SURVEY.md §1.1)."""
+    no unit budget (the `text_md` intermediate of SURVEY.md §1.1): the
+    per-page kernel of make_extract_udf, stopped before the transforms."""
     schema = T.StructType(
         [T.StructField("text", T.StringType()), T.StructField("error", T.StringType())]
     )
@@ -141,18 +149,8 @@ def make_markdown_udf(params: SiftParams):
     def markdown_batch(html: pd.Series) -> pd.DataFrame:
         texts, errors = [], []
         for raw in html:
-            if raw is None:
-                texts.append(None)
-                errors.append("no content")
-                continue
-            try:
-                markdown, error = extract_document(_decode(raw), params)
-            except Exception as exc:  # warn-and-continue: one bad page
-                # must not kill the task (same policy as _run_one)
-                markdown, error = None, (
-                    f"extraction failed: {type(exc).__name__}: {exc}"
-                )
-            texts.append(markdown if error is None else None)
+            text, error = _markdown_one(raw, params)
+            texts.append(text)
             errors.append(error)
         return pd.DataFrame({"text": texts, "error": errors})
 
@@ -184,7 +182,14 @@ def extract_pages(pages_df, params: SiftParams | None = None):
 
 
 def extract_markdown(pages_df, params: SiftParams | None = None):
-    """pages -> (url, text_md, error): the extraction stage alone."""
+    """pages -> (url, text_md, error): the extraction stage alone.
+
+    Runs extract_pages' per-page kernel up to the Markdown, so a page is
+    admitted, routed and refused exactly as there: PDFs go through the
+    layout parse, and null or over-cap pages (`params.extra
+    ["max_html_bytes"]`, default MAX_HTML_BYTES) get a null text_md and
+    an error. Empty Markdown is "" with a null error (extract_pages
+    reports it as "no content extracted")."""
     params = params or SiftParams()
     udf = make_markdown_udf(params)
     return pages_df.select(
@@ -230,9 +235,10 @@ def html_node_table(pages_df, url_col="url", html_col="html"):
     Arrow-batched mapInPandas shape as the extractor; node ids are
     pre-order ordinals, stable per document.
 
-    Unparseable/oversized pages yield zero rows here (this is a
-    feature surface, not the accounting path -- the extraction job's
-    error column remains the audit trail)."""
+    Pages the extraction kernel's admission gate refuses (null, over
+    MAX_HTML_BYTES), PDFs and unparseable pages yield zero rows here
+    (this is a feature surface, not the accounting path -- the
+    extraction job's error column remains the audit trail)."""
     from ..core.htmlparser import parse as parse_html
     from ..core.readability import (
         _class_weight,
@@ -241,20 +247,19 @@ def html_node_table(pages_df, url_col="url", html_col="html"):
         extract_article,
     )
 
+    params = SiftParams()
+
     def node_rows(iterator):
         for pdf in iterator:
             out = {name: [] for name in NODE_TABLE_SCHEMA.names}
             for url, raw in zip(pdf[url_col], pdf[html_col]):
-                if raw is None or len(raw) > MAX_HTML_BYTES:
-                    continue
-                if is_pdf(bytes(raw) if isinstance(raw, bytearray)
-                          else raw):
-                    # PDFs route to extract_pdf_text on the extraction
-                    # path; parsing their byte soup as HTML would emit
-                    # nonsense feature rows, not zero rows
-                    continue
                 try:
-                    root = parse_html(_decode(raw))
+                    # a PDF has no DOM: parsing its byte soup as HTML
+                    # would emit nonsense feature rows, not zero rows
+                    html, _, _ = _admit(raw, params)
+                    if html is None:
+                        continue
+                    root = parse_html(html)
                 except Exception:
                     continue
                 ordinals = {}

@@ -102,7 +102,6 @@ def train_logreg(
     n_iter=12,
     lr=None,
     link="rational",
-    cache=True,
 ):
     """Fixed-iteration batch gradient descent for logistic regression.
 
@@ -121,9 +120,7 @@ def train_logreg(
     proj = df.select(
         *[F.col(c).cast("double").alias(c) for c in feature_cols],
         F.col(label_col).cast("double").alias("__y"),
-    )
-    if cache:
-        proj = proj.persist()
+    ).persist()
     try:
         n_rows = proj.count()
         if lr is None:
@@ -154,8 +151,7 @@ def train_logreg(
                 for i, w in enumerate(weights)
             ]
     finally:
-        if cache:
-            proj.unpersist()
+        proj.unpersist()
     return {
         "intercept": intercept,
         "weights": weights,

@@ -11,11 +11,11 @@ Design notes for the 100 TB plan:
     same part across runs and cluster sizes -- the property resume
     (plans/lineage.py) depends on. spark_partition_id() would not survive
     a re-run.
-  * LAYOUT: repartition(n, part_id) -> hash shuffle with uniform key
-    counts (xxhash64 is uniform on urls). Extraction is per-row, so key
-    skew is not the issue -- BYTE skew is: a host serving 50 MB pages
-    makes fat partitions AQE cannot split (a single UDF task is
-    unsplittable). Hence size salting below.
+  * LAYOUT: one hash shuffle on the salted layout key below, with
+    uniform key counts (xxhash64 is uniform on urls). Extraction is
+    per-row, so key skew does not matter -- BYTE skew does: a host
+    serving 50 MB pages makes fat partitions AQE cannot split (a single
+    UDF task is unsplittable). Hence size salting.
   * SIZE SALTING: pages above a byte threshold get a per-row salt that
     spreads them round-robin over all parts; small pages keep their
     url-hash part. Fat rows therefore never pile into one task. The
@@ -57,15 +57,14 @@ def salted_layout_key(n_parts, fat_row_bytes=DEFAULT_FAT_ROW_BYTES):
     ).otherwise(part_id_col(n_parts))
 
 
-def partition_pages(pages_df, n_parts, salt_fat_rows=True,
-                    fat_row_bytes=DEFAULT_FAT_ROW_BYTES):
-    """Attach the logical part_id and repartition physically (salted for
-    byte balance when requested)."""
-    with_id = with_part_id(pages_df, n_parts)
-    if salt_fat_rows:
-        key = salted_layout_key(n_parts, fat_row_bytes)
-        return with_id.repartition(n_parts, key)
-    return with_id.repartition(n_parts, F.col("part_id"))
+def partition_pages(pages_df, n_parts):
+    """Attach the logical part_id and repartition physically on
+    salted_layout_key: url-hash parts for normal pages, fat pages (over
+    DEFAULT_FAT_ROW_BYTES) sprayed over all parts for byte balance. The
+    one page layout; the rows keep their logical part_id either way."""
+    return with_part_id(pages_df, n_parts).repartition(
+        n_parts, salted_layout_key(n_parts)
+    )
 
 
 def host_skew_stats(pages_df):

@@ -146,11 +146,10 @@ def test_dist_zip_matches_source():
                     )
 
 
-def test_bucket_cap_has_one_home():
-    """The hot-bucket cap's helper column "_bucket_n" is named in ONE
-    function, cap_buckets: every blocked join (in-batch and seen side;
-    minhash, simhash, embedding) caps through it, so a change of cap
-    policy is one edit."""
+def _owners(matches):
+    """The functions in sift_spark/ ("module.py:outer:inner") whose
+    bodies hold an AST node for which `matches(node)` is true; a match
+    outside any function is owned by the bare module path."""
     import ast
     from pathlib import Path
 
@@ -160,19 +159,54 @@ def test_bucket_cap_has_one_home():
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 yield from owners(child, f"{scope}:{child.name}")
-            elif (isinstance(child, ast.Constant)
-                  and child.value == "_bucket_n"):
+            elif matches(child):
                 yield scope
             else:
                 yield from owners(child, scope)
 
-    found = {
+    return {
         owner
         for path in sorted(package.rglob("*.py"))
         for owner in owners(ast.parse(path.read_text()),
                             path.relative_to(package).as_posix())
     }
+
+
+def test_bucket_cap_has_one_home():
+    """The hot-bucket cap's helper column "_bucket_n" is named in ONE
+    function, cap_buckets: every blocked join (in-batch and seen side;
+    minhash, simhash, embedding) caps through it, so a change of cap
+    policy is one edit."""
+    import ast
+
+    found = _owners(lambda node: isinstance(node, ast.Constant)
+                    and node.value == "_bucket_n")
     assert found == {"operators/dedup.py:cap_buckets"}, sorted(found)
+
+
+def test_chunk_size_rule_has_one_home():
+    """The large-text chunk-size rule (chunk_selection.go:117-143) is
+    written once: LARGE_TEXT_MULTIPLIER is named in one function,
+    core/selection.chunk_size, which ChunkSelector, the extraction
+    kernel's chunk count and the Spark split UDF all call."""
+    import ast
+
+    found = _owners(lambda node: isinstance(node, ast.Name)
+                    and node.id == "LARGE_TEXT_MULTIPLIER")
+    functions = {owner for owner in found if ":" in owner}
+    assert functions == {"core/selection.py:chunk_size"}, sorted(found)
+
+
+def test_admission_cap_has_one_home():
+    """MAX_HTML_BYTES is read in one function, the admission gate that
+    extract_pages, extract_markdown and html_node_table all go
+    through, so no per-page kernel can skip or re-word the cap."""
+    import ast
+
+    found = _owners(lambda node: isinstance(node, ast.Name)
+                    and node.id == "MAX_HTML_BYTES"
+                    and isinstance(node.ctx, ast.Load))
+    assert found == {"operators/extract.py:_admit"}, sorted(found)
 
 
 def test_public_surface_has_callers_or_reasons():

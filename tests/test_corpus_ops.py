@@ -1870,6 +1870,39 @@ def test_curate_and_crawl_curate_map_flags_identically(
                   "--seen-bloom"])
 
 
+def test_entry_points_stop_only_a_session_they_created(monkeypatch):
+    """The job entry points share one session runner: a session the
+    entry point created is stopped also when the job raises, and a
+    session the caller already had is never stopped."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    from sift_spark import job
+
+    class FakeSession:
+        def __init__(self):
+            self.read = SimpleNamespace(parquet=lambda path: path)
+            self.stops = 0
+
+        def stop(self):
+            self.stops += 1
+
+    def failing_curation(spark_, docs_df, output_dir, **kwargs):
+        raise RuntimeError("curation failed")
+
+    monkeypatch.setattr(job, "run_curation_job", failing_curation)
+    for callers_session in (False, True):
+        session = FakeSession()
+        monkeypatch.setattr(job, "get_spark", lambda **kwargs: session)
+        monkeypatch.setattr(
+            SparkSession, "getActiveSession",
+            lambda: session if callers_session else None)
+        with pytest.raises(RuntimeError, match="curation failed"):
+            job.curate_main(["--input", "docs", "--output", "out"])
+        assert session.stops == (0 if callers_session else 1)
+
+
 def test_curation_incremental_seen_loop(spark, tmp_path):
     """The weekly-crawl incremental loop at the job level: week 1
     curates with --write-hashes, week 2 feeds that _hashes snapshot

@@ -42,12 +42,17 @@ def test_error_routing(data, expected_error):
     assert expected_error in error
 
 
-def test_spark_mixed_content_routing(spark):
+@pytest.mark.parametrize("operator, text_col", [
+    ("extract_pages", "text"),
+    ("extract_markdown", "text_md"),
+], ids=["extract_pages", "extract_markdown"])
+def test_spark_mixed_content_routing(spark, operator, text_col):
     """One pages table carrying HTML and PDF rows: per-row content-type
-    routing inside the same UDF stage."""
+    routing inside the same UDF stage, for both extraction operators
+    (they share one per-page kernel)."""
     from sift_spark.core.counters import WORDS
     from sift_spark.core.pipeline import SiftParams
-    from sift_spark.operators.extract import extract_pages
+    from sift_spark.operators import extract
     from tests.fixtures import SIMPLE_HTML
 
     rows = [
@@ -59,13 +64,14 @@ def test_spark_mixed_content_routing(spark):
         rows, "url string, warc_ts timestamp, html binary, text string, "
               "lang string"
     )
-    out = {r["url"]: r for r in extract_pages(
+    out = {r["url"]: r for r in getattr(extract, operator)(
         pages, SiftParams(counting_method=WORDS, max_units=0)
     ).collect()}
-    assert "Main Article Title" in out["u://html"]["text"]
-    assert "quick brown fox" in out["u://pdf"]["text"]
+    assert "Main Article Title" in out["u://html"][text_col]
+    assert "quick brown fox" in out["u://pdf"][text_col]
     assert out["u://pdf"]["error"] is None
     assert out["u://pdf-bad"]["error"] is not None
+    assert out["u://pdf-bad"][text_col] is None
 
 
 def test_word_budget_applies_to_pdf(spark):

@@ -464,3 +464,44 @@ def test_curation_sink_reads_the_staged_gate_batch(
     assert len(staged) == 1
     assert scorer_nodes(plans[staged[0]]) == 1
     assert scorer_nodes(plans[out2]) == 0
+
+
+def test_simhash_near_duplicates_hashes_once_and_caches_nothing(spark):
+    """simhash_near_duplicates evaluates simhash64_udf once per row and
+    caches nothing: after the action the executed plan holds one
+    ArrowEvalPython node (the other join branch reads it through a
+    ReusedExchange), no RDD stays persisted, and the pairs equal an
+    all-pairs Hamming filter over the same hashes, with the cap on and
+    off."""
+    from sift_spark.operators.dedup import (
+        simhash64_udf,
+        simhash_near_duplicates,
+    )
+
+    base = " ".join(f"token{i}" for i in range(60))
+    rows = ([(i, base) for i in range(4)]
+            + [(10, base.replace("token7 ", "token7x ")),
+               (11, " ".join(f"other{i}" for i in range(60)))]
+            + [(20 + i, f"short document {i} about topic {i % 3}")
+               for i in range(12)])
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    hashes = {r["doc_id"]: r["h"] for r in docs.select(
+        "doc_id", simhash64_udf("text").alias("h")).collect()}
+    expected = {
+        (a, b, bin((hashes[a] ^ hashes[b]) & (2**64 - 1)).count("1"))
+        for a in hashes for b in hashes
+        if a < b and bin((hashes[a] ^ hashes[b]) & (2**64 - 1)).count("1") <= 3
+    }
+    assert len(expected) >= 7  # the 4 copies, the near copy and more
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for cap in (None, 1000):
+        pairs = simhash_near_duplicates(docs, max_bucket_size=cap)
+        got = {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs.collect()}
+        assert got == expected
+        final = (pairs._jdf.queryExecution().executedPlan().toString()
+                 .split("== Initial Plan ==")[0])
+        assert final.count("ArrowEvalPython") == 1, final
+        assert "ReusedExchange" in final, final
+    assert jsc.getPersistentRDDs().size() == before

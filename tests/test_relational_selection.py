@@ -65,8 +65,14 @@ def test_format_selected_gap_marker(spark):
     assert out == "alpha one\n\n---\n\nepsilon five"
 
 
-def test_admission_cap_routes_to_error(spark):
-    from sift_spark.operators.extract import extract_pages
+@pytest.mark.parametrize("operator, text_col", [
+    ("extract_pages", "text"),
+    ("extract_markdown", "text_md"),
+], ids=["extract_pages", "extract_markdown"])
+def test_admission_cap_routes_to_error(spark, operator, text_col):
+    """Both extraction operators refuse an over-cap page through the
+    same admission gate."""
+    from sift_spark.operators import extract
 
     rows = [
         ("u://small", None, b"<p>tiny page body</p>", None, "en"),
@@ -78,7 +84,9 @@ def test_admission_cap_routes_to_error(spark):
     )
     params = SiftParams(counting_method=WORDS, max_units=0,
                         extra={"max_html_bytes": 100})
-    out = {r["url"]: r for r in extract_pages(pages, params).collect()}
+    out = {r["url"]: r
+           for r in getattr(extract, operator)(pages, params).collect()}
     assert out["u://small"]["error"] is None
-    assert "too large" in out["u://big"]["error"]
-    assert out["u://big"]["text"] is None
+    assert "tiny page body" in out["u://small"][text_col]
+    assert out["u://big"]["error"] == "content too large: 507 bytes"
+    assert out["u://big"][text_col] is None

@@ -364,11 +364,14 @@ def test_evaluate_classifier_metrics(spark):
     assert m["auc"] == 1.0  # the fixture separates perfectly
 
 
-def test_evaluate_classifier_auc_multi_partition_ties(spark):
-    """The shuffle-safe rank-sum (per-score histogram + range-partitioned
+def test_evaluate_classifier_auc_multi_partition_ties(spark, monkeypatch):
+    """The shuffle-safe rank-sum (per-score histogram + value-bucketed
     cumulative offsets) must reproduce the average-rank AUC exactly on a
-    frame large enough to span many range partitions, with heavy tie
-    groups (repeated texts -> identical scores) and imperfect labels."""
+    frame large enough to span many score buckets, with heavy tie
+    groups (repeated texts -> identical scores) and imperfect labels.
+    The buckets derive from the score values, so a recomputed stage (a
+    lost executor, a retried task) rebuilds the same ranks: the
+    evaluation reads no spark_partition_id() and persists nothing."""
     from sift_spark.operators.textclf import evaluate_classifier
 
     rows = []
@@ -389,7 +392,15 @@ def test_evaluate_classifier_auc_multi_partition_ties(spark):
         spark.createDataFrame(rows[:40], "doc_id long, text string, label int"),
         n_buckets=256, n_iter=4,
     )
-    m = evaluate_classifier(docs, model)
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("evaluate_classifier must not call this")
+
+    with monkeypatch.context() as patched:
+        patched.setattr(F, "spark_partition_id", forbidden)
+        patched.setattr(type(docs), "persist", forbidden)
+        patched.setattr(type(docs), "cache", forbidden)
+        m = evaluate_classifier(docs, model)
     pairs = [
         (r["clf_score"], r["label"])
         for r in score_text_classifier(docs, model).collect()
