@@ -54,12 +54,11 @@ def run_extraction_job(
     params: SiftParams | None = None,
     n_parts=64,
     resume=True,
-    run_id=None,
 ):
     """Returns the lineage metrics DataFrame for the parts processed this
     run (empty if everything was already complete)."""
     params = params or SiftParams()
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
 
     partitioned = partitioning.partition_pages(pages_df, n_parts)
     pending = (
@@ -299,6 +298,7 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
         bucket_cap_observation,
         dedup_exact,
         duplicated_span_dedup,
+        read_observation,
         report_bucket_cap,
     )
     from .operators.decontam import remove_contaminated
@@ -532,24 +532,24 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             "after_mix",
         )
         mixed.write.mode("overwrite").parquet(output_dir + "_mixed")
-        try:
-            mix_null_stratum = null_obs.get["n"] or 0
-        except Exception:
-            mix_null_stratum = None
+        mixed_in = read_observation(null_obs)
+        mix_null_stratum = None if mixed_in is None else mixed_in["n"] or 0
         out = spark.read.parquet(output_dir + "_mixed")
     if pack_budget:
         # ONE packing run describes both sinks: the assignment is
         # written, re-read, and fed to the buffer materialization, so
         # (shard, seq_no, offset) in _packed indexes exactly into the
         # token streams in _tokens (two independent packings would
-        # drift: word counts vs encoder counts + EOD)
+        # drift: word counts vs encoder counts + EOD). One separator id
+        # too: the manifest records the EOD the buffers carry.
+        eod_id = 0
         pack_assignment_with_eod(
             out, pack_budget, n_shards=n_shards, vocab_path=vocab_path
         ).write.mode("overwrite").parquet(output_dir + "_packed")
         assignment = spark.read.parquet(output_dir + "_packed")
         buffers = materialize_packed_sequences(
-            out, pack_budget, n_shards=n_shards, vocab_path=vocab_path,
-            assignment=assignment,
+            out, pack_budget, n_shards=n_shards, eod_id=eod_id,
+            vocab_path=vocab_path, assignment=assignment,
         )
         # size-bounded files + one-file _manifest.json: the loader's
         # planning facts without a directory scan
@@ -557,17 +557,14 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
 
         write_token_buffers(
             spark, buffers, output_dir + "_tokens", pack_budget,
-            n_shards=n_shards,
+            eod_id=eod_id, n_shards=n_shards,
             vocab_label=(vocab_path.rsplit("/", 1)[-1]
                          if vocab_path else None),
         )
 
-    metrics = {}
-    for stage, obs in observations.items():
-        try:
-            metrics[stage] = obs.get["n"]
-        except Exception:
-            metrics[stage] = None  # AQE-pruned empty subtree
+    # None: AQE pruned the stage's empty subtree (read_observation)
+    metrics = {stage: (read_observation(obs) or {}).get("n")
+               for stage, obs in observations.items()}
     if temperature_stratum:
         metrics["mix_null_stratum"] = mix_null_stratum
     # 'no silent caps': surface how many seen band / chunk rows the

@@ -62,12 +62,12 @@ def range_join_points(points_df, intervals_df, key_col, ts_col,
 
 
 def as_of_join(left_df, right_df, key_col, ts_col, payload_cols,
-               tie_col=None, prefix="asof_"):
-    """Left rows + `prefix`-named columns of the latest right row with
+               tie_col=None):
+    """Left rows + `asof_`-prefixed columns of the latest right row with
     right.ts <= left.ts for the same key (null when no prior right row).
 
     payload_cols: right-side columns to carry (ts is carried
-    automatically as `{prefix}{ts_col}`); tie_col orders right rows
+    automatically as `asof_{ts_col}`); tie_col orders right rows
     within one timestamp (largest wins)."""
     carry = [ts_col] + [c for c in payload_cols if c != ts_col]
     left_tagged = left_df.withColumn("_side", F.lit(1)).withColumn(
@@ -108,5 +108,5 @@ def as_of_join(left_df, right_df, key_col, ts_col, payload_cols,
     )
     out = carried.filter(F.col("_side") == 1).drop("_side", "_r", "_tie")
     for c in carry:
-        out = out.withColumn(f"{prefix}{c}", F.col(f"_carried.{c}"))
+        out = out.withColumn(f"asof_{c}", F.col(f"_carried.{c}"))
     return out.drop("_carried")

@@ -17,20 +17,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def site_boilerplate_chunks(chunks_df, site_col="site", doc_col="doc_id",
-                            chunk_col="chunk_text", min_ratio=0.5,
-                            min_docs=3):
+def site_boilerplate_chunks(chunks_df, min_ratio=0.5, min_docs=3):
     """(site, chunk_hash, n_docs, site_docs, ratio) for chunks present in
     >= min_ratio of a site's documents (sites with < min_docs pages are
     skipped: no statistical basis)."""
-    per_site = chunks_df.groupBy(site_col).agg(
-        F.count_distinct(F.col(doc_col)).alias("site_docs")
+    per_site = chunks_df.groupBy("site").agg(
+        F.count_distinct(F.col("doc_id")).alias("site_docs")
     )
     freq = chunks_df.groupBy(
-        site_col, F.md5(F.col(chunk_col)).alias("chunk_hash")
-    ).agg(F.count_distinct(F.col(doc_col)).alias("n_docs"))
+        "site", F.md5(F.col("chunk_text")).alias("chunk_hash")
+    ).agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
     return (
-        freq.join(per_site, site_col)
+        freq.join(per_site, "site")
         .withColumn(
             "ratio",
             F.round(F.col("n_docs") / F.col("site_docs"), 6),
@@ -42,14 +40,13 @@ def site_boilerplate_chunks(chunks_df, site_col="site", doc_col="doc_id",
     )
 
 
-def drop_site_boilerplate(chunks_df, boiler_df, site_col="site",
-                          chunk_col="chunk_text"):
+def drop_site_boilerplate(chunks_df, boiler_df):
     """Remove detected template chunks: anti-join on (site, chunk_hash)."""
     keyed = chunks_df.withColumn(
-        "chunk_hash", F.md5(F.col(chunk_col))
+        "chunk_hash", F.md5(F.col("chunk_text"))
     )
     return keyed.join(
-        boiler_df.select(site_col, "chunk_hash"),
-        [site_col, "chunk_hash"],
+        boiler_df.select("site", "chunk_hash"),
+        ["site", "chunk_hash"],
         "left_anti",
     ).drop("chunk_hash")

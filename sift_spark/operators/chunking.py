@@ -150,7 +150,7 @@ def threshold_col(chunk_idx, n_chunks):
     )
 
 
-def chunk_pages(md_df, params: SiftParams | None = None, text_col="text_md"):
+def chunk_pages(md_df, params: SiftParams | None = None):
     """(url, text_md) -> chunks table with classification columns.
 
     One UDF projection, one posexplode and one projection, all narrow:
@@ -165,7 +165,7 @@ def chunk_pages(md_df, params: SiftParams | None = None, text_col="text_md"):
 
     exploded = md_df.select(
         "url",
-        F.posexplode(split_udf(F.col(text_col))).alias("chunk_idx", "c"),
+        F.posexplode(split_udf(F.col("text_md"))).alias("chunk_idx", "c"),
     )
     text = F.col("c.chunk_text")
     n_chunks = F.col("c.n_chunks")

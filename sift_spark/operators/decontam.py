@@ -79,14 +79,12 @@ def ngram_decontaminate(corpus_df, benchmark_df, n=13,
     )
 
 
-def remove_contaminated(corpus_df, benchmark_df, n=13, min_matched=1,
-                        id_col="doc_id", text_col="text", **kwargs):
-    """The filter form: corpus minus documents with >= min_matched
-    benchmark gram collisions (left_anti join on the flagged ids)."""
+def remove_contaminated(corpus_df, benchmark_df, n=13, **kwargs):
+    """The filter form: corpus minus documents with >= 1 benchmark gram
+    collision (left_anti join on the flagged ids)."""
     flagged = ngram_decontaminate(
-        corpus_df, benchmark_df, n=n, id_col=id_col, text_col=text_col,
-        **kwargs,
-    ).filter(F.col("n_matched_grams") >= min_matched)
+        corpus_df, benchmark_df, n=n, **kwargs
+    ).filter(F.col("n_matched_grams") >= 1)
     return corpus_df.join(
-        flagged.select(id_col), id_col, "left_anti"
+        flagged.select("doc_id"), "doc_id", "left_anti"
     )

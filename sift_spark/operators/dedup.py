@@ -36,7 +36,7 @@ def normalized_text_col(col):
     return F.trim(F.regexp_replace(F.lower(col), r"[ \t\r\n\f]+", " "))
 
 
-def exact_duplicates(docs_df, id_col="doc_id", text_col="text"):
+def exact_duplicates(docs_df):
     """Hash-groupBy exact dedup -> (content_hash, n_dups, keep_id).
     Groups with n_dups > 1 are duplicate sets; keep_id = min id.
     Null-text rows (errored extractions) are NOT content and are
@@ -47,29 +47,29 @@ def exact_duplicates(docs_df, id_col="doc_id", text_col="text"):
     half the bytes of the 32-char hex form on the corpus-sized
     exchange); the OUTPUT column stays lowercase hex for oracle/tool
     compatibility, re-encoded after the agg."""
-    hashed = docs_df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        content_hash_col(text_col).alias("_chash"),
+    hashed = docs_df.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
+        content_hash_col("text").alias("_chash"),
     )
     return hashed.groupBy("_chash").agg(
-        F.count("*").alias("n_dups"), F.min(id_col).alias("keep_id")
+        F.count("*").alias("n_dups"), F.min("doc_id").alias("keep_id")
     ).select(
         F.lower(F.hex("_chash")).alias("content_hash"), "n_dups", "keep_id"
     )
 
 
-def dedup_exact(docs_df, id_col="doc_id", text_col="text"):
+def dedup_exact(docs_df):
     """Keep one representative per exact-duplicate group (the min id).
     Null-text rows pass through untouched: md5(null) is null and a
     null-unsafe equi-join would silently DROP every errored row."""
-    with_text = docs_df.filter(F.col(text_col).isNotNull())
-    null_text = docs_df.filter(F.col(text_col).isNull())
+    with_text = docs_df.filter(F.col("text").isNotNull())
+    null_text = docs_df.filter(F.col("text").isNull())
     # 16-byte binary key: the hash exists only to be shuffled on
     hashed = with_text.withColumn(
-        "content_hash", content_hash_col(text_col)
+        "content_hash", content_hash_col("text")
     )
-    keep = hashed.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
-    kept = hashed.join(keep, ["content_hash", id_col]).drop("content_hash")
+    keep = hashed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+    kept = hashed.join(keep, ["content_hash", "doc_id"]).drop("content_hash")
     return kept.unionByName(null_text)
 
 
@@ -162,8 +162,7 @@ def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
     return kept.unionByName(null_text)
 
 
-def write_seen_bucketed(seen_df, table, key="content_hash",
-                        n_buckets=None, mode="overwrite", path=None):
+def write_seen_bucketed(seen_df, table, n_buckets=None, path=None):
     """Persist a seen-loop snapshot as a BUCKETED catalog table so the
     weekly anti-join reads it pre-partitioned on the join key: Spark
     plans the join without an Exchange over the snapshot side (only the
@@ -176,8 +175,8 @@ def write_seen_bucketed(seen_df, table, key="content_hash",
     persistent catalog (Hive metastore / Iceberg-style); with the
     default in-memory catalog the bucketing survives the current
     session only -- fine for tests, not for the cross-session weekly
-    loop. The sortBy(key) lets sort-merge joins skip the snapshot-side
-    sort too when each bucket lands in one file.
+    loop. The sortBy(content_hash) lets sort-merge joins skip the
+    snapshot-side sort too when each bucket lands in one file.
 
     n_buckets defaults to spark.sql.shuffle.partitions; at production
     scale set it so buckets land in the 100 MB - 1 GB range. `path`
@@ -187,8 +186,8 @@ def write_seen_bucketed(seen_df, table, key="content_hash",
     spark = seen_df.sparkSession
     n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
     writer = (
-        seen_df.write.mode(mode).format("parquet")
-        .bucketBy(n, key).sortBy(key)
+        seen_df.write.mode("overwrite").format("parquet")
+        .bucketBy(n, "content_hash").sortBy("content_hash")
     )
     if path:
         writer = writer.option("path", path)
@@ -196,8 +195,7 @@ def write_seen_bucketed(seen_df, table, key="content_hash",
     return spark.table(table)
 
 
-def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
-                  distinct=True):
+def char_shingles(docs_df, k=8, distinct=True):
     """(id, shingle) via native sequence+substring explode -- no UDF.
 
     Kept in lock-step with :func:`char_shingle_arrays` (the un-exploded
@@ -211,7 +209,7 @@ def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
     distinct=False keeps the raw multiset. BOTH forms are now fully
     narrow -- no shuffle at all: set semantics come from a per-document
     array_distinct on the shingle array BEFORE the explode, which is
-    exactly the global distinct when `id_col` is unique per input row
+    exactly the global distinct when `doc_id` is unique per input row
     (the documents-table grain everywhere in this engine). The old
     global `.distinct()` was the single biggest shuffle in the dedup
     pipeline at crawl scale (measured at sf1.0/local[32]: a 138 MB
@@ -221,7 +219,7 @@ def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
     # expression inside the transform lambda would re-evaluate the
     # regexp_replace per array element (~doc_len regex calls per doc)
     normalized = docs_df.select(
-        F.col(id_col), normalized_text_col(F.col(text_col)).alias("_t")
+        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t")
     )
     t = F.col("_t")
     positions = F.sequence(
@@ -231,11 +229,11 @@ def char_shingles(docs_df, k=8, id_col="doc_id", text_col="text",
     if distinct:
         arr = F.array_distinct(arr)
     return normalized.select(
-        F.col(id_col), F.explode(arr).alias("shingle")
+        F.col("doc_id"), F.explode(arr).alias("shingle")
     )
 
 
-def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text"):
+def char_shingle_arrays(docs_df, k=8):
     """(id, shingle_arr): each document's DISTINCT k-char shingle SET as
     one array row -- the un-exploded twin of char_shingles(distinct=True),
     fully narrow. The exact-Jaccard verify consumes this form: candidate
@@ -243,7 +241,7 @@ def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text"):
     (array_intersect), so the verify never explodes, never re-aggregates
     n_common, and computes both set sizes in-row."""
     normalized = docs_df.select(
-        F.col(id_col), normalized_text_col(F.col(text_col)).alias("_t")
+        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t")
     )
     t = F.col("_t")
     positions = F.sequence(
@@ -261,7 +259,7 @@ def char_shingle_arrays(docs_df, k=8, id_col="doc_id", text_col="text"):
     # array guard is exactly a null-element filter without paying a
     # per-element pass on every real document
     arr = F.when(t.isNull(), F.array().cast("array<string>")).otherwise(arr)
-    return normalized.select(F.col(id_col), arr.alias("shingle_arr"))
+    return normalized.select(F.col("doc_id"), arr.alias("shingle_arr"))
 
 
 def word_ngram_array(text_col, n, skip_short=False):
@@ -290,16 +288,15 @@ def word_ngram_array(text_col, n, skip_short=False):
     )
 
 
-def word_ngrams(docs_df, n=3, id_col="doc_id", text_col="text",
-                skip_short=False):
+def word_ngrams(docs_df, n=3):
     """(id, ngram) DISTINCT word n-grams, native: split -> sliding
     window via sequence/transform -> per-doc array_distinct -> explode
     (see word_ngram_array for the short-document semantics switch).
     Set semantics without a global distinct shuffle -- exact when
-    `id_col` is unique per input row (the documents-table grain)."""
-    grams = word_ngram_array(text_col, n, skip_short=skip_short)
+    `doc_id` is unique per input row (the documents-table grain)."""
+    grams = word_ngram_array("text", n)
     return docs_df.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("ngram")
+        F.col("doc_id"), F.explode(F.array_distinct(grams)).alias("ngram")
     )
 
 
@@ -316,8 +313,7 @@ def _shingle_hash(i, portable):
     return F.xxhash64("shingle", F.lit(i))
 
 
-def minhash_signatures(shingles_df, n_hashes=32, id_col="doc_id",
-                       portable_hash=False):
+def minhash_signatures(shingles_df, n_hashes=32, portable_hash=False):
     """(id, sig ARRAY<BIGINT>): H independent min-hashes as H native
     min() aggregations over ONE explode -- map-side partial aggregation
     makes this a single cheap shuffle."""
@@ -325,9 +321,9 @@ def minhash_signatures(shingles_df, n_hashes=32, id_col="doc_id",
         F.min(_shingle_hash(i, portable_hash)).alias(f"h{i}")
         for i in range(n_hashes)
     ]
-    sigs = shingles_df.groupBy(id_col).agg(*aggs)
+    sigs = shingles_df.groupBy("doc_id").agg(*aggs)
     return sigs.select(
-        id_col, F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig")
+        "doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig")
     )
 
 
@@ -375,40 +371,47 @@ def bucket_cap_observation(name="bucket_cap"):
     return Observation(name)
 
 
-def report_bucket_cap(observation):
-    """Read the cap metrics AFTER an action has run on the pipeline
-    (Observation.get blocks until the first action finishes) and warn
-    when the cap dropped anything -- the runtime signal that recall was
-    traded for the quadratic-blowup guard and the dropped groups should
-    be routed to exact dedup (see oversized_buckets /
-    simhash_oversized_blocks).
-
-    Returns {n_dropped_rows, largest_bucket}, or None when there is
-    nothing to read:
-      * the cap was off (max_bucket_size falsy), so cap_buckets never
-        attached the observation;
+def read_observation(observation):
+    """An Observation's metrics dict AFTER an action has run on the
+    observed frame (Observation.get blocks until the first action
+    finishes), or None when there is nothing to read:
+      * it was never attached to a frame (e.g. cap_buckets with the cap
+        off);
       * AQE pruned it: when the observed subtree's result is empty,
         AQE's empty-relation propagation replaces the subtree --
-        CollectMetrics included -- and Observation.get raises (measured
-        on PySpark 4.1: a toPyRow assertion over a zero-field row). The
-        oversized_buckets / simhash_oversized_blocks monitors give a
-        guaranteed answer at the cost of an extra job."""
+        CollectMetrics included -- and Observation.get raises a
+        Py4JJavaError (measured on PySpark 4.1: a toPyRow assertion
+        over a zero-field row).
+    Any other error propagates: it is a fault, not a pruned stage."""
     from py4j.protocol import Py4JJavaError
 
-    log = logging.getLogger(__name__)
     if observation._jo is None:
         return None
     try:
-        metrics = observation.get
+        return observation.get
     except Py4JJavaError:
-        log.info(
-            "bucket-cap observation pruned (empty pipeline result under "
-            "AQE); run the oversized-buckets monitor for a guaranteed "
-            "answer"
+        logging.getLogger(__name__).info(
+            "observation %r pruned (empty result under AQE)",
+            observation._name,
         )
         return None
+
+
+def report_bucket_cap(observation):
+    """Read the cap metrics (see read_observation) and warn when the cap
+    dropped anything -- the runtime signal that recall was traded for
+    the quadratic-blowup guard and the dropped groups should be routed
+    to exact dedup (see oversized_buckets / simhash_oversized_blocks).
+
+    Returns {n_dropped_rows, largest_bucket}, or None when the cap was
+    off or AQE pruned the observation; the oversized_buckets /
+    simhash_oversized_blocks monitors give a guaranteed answer at the
+    cost of an extra job."""
+    metrics = read_observation(observation)
+    if metrics is None:
+        return None
     if metrics["n_dropped_rows"]:
-        log.warning(
+        logging.getLogger(__name__).warning(
             "bucket cap dropped %d rows (largest bucket: %d members); "
             "route oversized buckets to exact dedup",
             metrics["n_dropped_rows"], metrics["largest_bucket"],
@@ -470,9 +473,8 @@ def _drop_seen_matches(docs_df, matches, id_col):
     return docs_df.join(drop_ids, id_col, "left_anti")
 
 
-def lsh_candidate_pairs(sig_df, n_bands=8, id_col="doc_id",
-                        max_bucket_size=None, n_hashes=None,
-                        observation=None):
+def lsh_candidate_pairs(sig_df, n_bands=8, max_bucket_size=None,
+                        n_hashes=None, observation=None):
     """Band the signatures and equi-join on (band_idx, band_hash):
     returns candidate (id_a, id_b) pairs with id_a < id_b.
 
@@ -484,23 +486,22 @@ def lsh_candidate_pairs(sig_df, n_bands=8, id_col="doc_id",
     groups are handled by exact-hash dedup first, which already
     collapses identical content)."""
     n_hashes = _resolve_n_hashes(sig_df, n_hashes)
-    bands = _band_table(sig_df, n_bands, n_hashes, id_col)
+    bands = _band_table(sig_df, n_bands, n_hashes, "doc_id")
     return (
-        block_self_join(bands, ("band_idx", "band_hash"), id_col,
+        block_self_join(bands, ("band_idx", "band_hash"), "doc_id",
                         max_bucket_size, observation)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .distinct()
     )
 
 
-def oversized_buckets(sig_df, n_bands=8, id_col="doc_id",
-                      max_bucket_size=10000, n_hashes=None):
+def oversized_buckets(sig_df, n_bands=8, max_bucket_size=10000):
     """Monitoring view: (band_idx, band_hash, n_members) for buckets the
     cap would drop -- feed these groups to exact dedup."""
-    n_hashes = _resolve_n_hashes(sig_df, n_hashes)
-    bands = _band_table(sig_df, n_bands, n_hashes, id_col)
+    n_hashes = _resolve_n_hashes(sig_df, None)
+    bands = _band_table(sig_df, n_bands, n_hashes, "doc_id")
     return (
         bands.groupBy("band_idx", "band_hash")
         .agg(F.count("*").alias("n_members"))
@@ -508,7 +509,7 @@ def oversized_buckets(sig_df, n_bands=8, id_col="doc_id",
     )
 
 
-def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
+def jaccard_pairs(shingles_df, min_jaccard=0.0,
                   shingle_col="shingle"):
     """Exact n-gram Jaccard between documents sharing at least one
     shingle/ngram: (id_a, id_b, n_common, jaccard).
@@ -520,12 +521,12 @@ def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
     which verifies LSH candidate pairs on per-doc shingle arrays."""
     if shingle_col != "shingle":
         shingles_df = shingles_df.withColumnRenamed(shingle_col, "shingle")
-    sizes = shingles_df.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
+    sizes = shingles_df.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     common = (
-        block_self_join(shingles_df, ("shingle",), id_col)
+        block_self_join(shingles_df, ("shingle",), "doc_id")
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .agg(F.count("*").alias("n_common"))
     )
@@ -534,10 +535,10 @@ def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
     # driver. AQE broadcasts it when it is actually small.
     result = (
         common.join(
-            sizes.withColumnRenamed(id_col, "id_a")
+            sizes.withColumnRenamed("doc_id", "id_a")
             .withColumnRenamed("n_shingles", "size_a"), "id_a")
         .join(
-            sizes.withColumnRenamed(id_col, "id_b")
+            sizes.withColumnRenamed("doc_id", "id_b")
             .withColumnRenamed("n_shingles", "size_b"), "id_b")
         .withColumn(
             "jaccard",
@@ -552,8 +553,7 @@ def jaccard_pairs(shingles_df, id_col="doc_id", min_jaccard=0.0,
 
 
 def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
-                            min_jaccard=0.7, id_col="doc_id",
-                            text_col="text", max_bucket_size=1000,
+                            min_jaccard=0.7, max_bucket_size=1000,
                             portable_hash=False, observation=None):
     """Full MinHash+LSH near-dup pipeline: shingle -> minhash -> band ->
     bucket-join -> exact-jaccard verify.
@@ -578,18 +578,18 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
     at sf0.1/local[32], recompute wins (the shingle stage is narrow and
     cheap). max_bucket_size defaults ON (1000): the guard that keeps hot
     boilerplate buckets from exploding quadratically at crawl scale."""
-    raw = char_shingles(docs_df, k, id_col, text_col, distinct=False)
-    arrays = char_shingle_arrays(docs_df, k, id_col, text_col)
-    sigs = minhash_signatures(raw, n_hashes, id_col, portable_hash)
+    raw = char_shingles(docs_df, k, distinct=False)
+    arrays = char_shingle_arrays(docs_df, k)
+    sigs = minhash_signatures(raw, n_hashes, portable_hash=portable_hash)
     candidates = lsh_candidate_pairs(
-        sigs, n_bands, id_col, max_bucket_size, n_hashes=n_hashes,
+        sigs, n_bands, max_bucket_size=max_bucket_size, n_hashes=n_hashes,
         observation=observation,
     )
     arr_a = arrays.select(
-        F.col(id_col).alias("id_a"), F.col("shingle_arr").alias("_arr_a")
+        F.col("doc_id").alias("id_a"), F.col("shingle_arr").alias("_arr_a")
     ).join(candidates.select("id_a").distinct(), "id_a", "left_semi")
     arr_b = arrays.select(
-        F.col(id_col).alias("id_b"), F.col("shingle_arr").alias("_arr_b")
+        F.col("doc_id").alias("id_b"), F.col("shingle_arr").alias("_arr_b")
     ).join(candidates.select("id_b").distinct(), "id_b", "left_semi")
     n_common = F.col("n_common")
     result = (
@@ -621,8 +621,8 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
 
 
 def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
-                         min_est_jaccard=0.5, id_col="doc_id",
-                         max_bucket_size=None, observation=None):
+                         min_est_jaccard=0.5, max_bucket_size=None,
+                         observation=None):
     """INCREMENTAL near-dup candidates: (new_id, seen_id, est_jaccard)
     pairs between a new batch's minhash signatures and a PRIOR corpus
     represented only by its persisted signature table (VERDICT r6
@@ -665,11 +665,11 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
             f"uses {n_hashes} -- snapshot writer and reader must "
             "share n_hashes"
         )
-    new_bands = _band_table(new_sigs, n_bands, n_hashes, id_col) \
-        .withColumnRenamed(id_col, "new_id")
+    new_bands = _band_table(new_sigs, n_bands, n_hashes, "doc_id") \
+        .withColumnRenamed("doc_id", "new_id")
     seen_bands = cap_buckets(
-        _band_table(seen_sigs, n_bands, n_hashes, id_col)
-        .withColumnRenamed(id_col, "seen_id"),
+        _band_table(seen_sigs, n_bands, n_hashes, "doc_id")
+        .withColumnRenamed("doc_id", "seen_id"),
         ("band_idx", "band_hash"), max_bucket_size, observation,
     )
     candidates = (
@@ -677,9 +677,9 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
         .select("new_id", "seen_id")
         .distinct()
     )
-    a = new_sigs.select(F.col(id_col).alias("new_id"),
+    a = new_sigs.select(F.col("doc_id").alias("new_id"),
                         F.col("sig").alias("_sig_new"))
-    b = seen_sigs.select(F.col(id_col).alias("seen_id"),
+    b = seen_sigs.select(F.col("doc_id").alias("seen_id"),
                          F.col("sig").alias("_sig_seen"))
     agree = F.aggregate(
         F.zip_with("_sig_new", "_sig_seen",
@@ -700,7 +700,6 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
 
 def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
                                n_bands=8, min_est_jaccard=0.5,
-                               id_col="doc_id", text_col="text",
                                max_bucket_size=1000, observation=None):
     """Drop new-batch documents that are NEAR-duplicates of a prior
     corpus snapshot (persisted signature table from
@@ -711,14 +710,13 @@ def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
     :func:`minhash_near_duplicates` composes with :func:`dedup_exact`
     within a batch."""
     sigs = minhash_signatures(
-        char_shingles(docs_df, k, id_col, text_col, distinct=False),
-        n_hashes, id_col,
+        char_shingles(docs_df, k, distinct=False), n_hashes
     )
     matches = minhash_seen_matches(
-        sigs, seen_sigs, n_bands, n_hashes, min_est_jaccard, id_col,
-        max_bucket_size, observation,
+        sigs, seen_sigs, n_bands, n_hashes, min_est_jaccard,
+        max_bucket_size=max_bucket_size, observation=observation,
     )
-    return _drop_seen_matches(docs_df, matches, id_col)
+    return _drop_seen_matches(docs_df, matches, "doc_id")
 
 
 def _delete_hadoop_path(spark, path):
@@ -822,8 +820,7 @@ def clear_checkpoint_run(result_df=None, run_dir=None, spark=None):
     return _delete_hadoop_path(spark, run_dir)
 
 
-def connected_components(pairs_df, id_a="id_a", id_b="id_b",
-                         max_iterations=50, checkpoint_dir=None,
+def connected_components(pairs_df, max_iterations=50, checkpoint_dir=None,
                          return_run_dir=False):
     """Near-dup pairs -> duplicate CLUSTERS: (doc_id, component_id) where
     component_id is the min doc id in the weakly-connected component.
@@ -843,7 +840,7 @@ def connected_components(pairs_df, id_a="id_a", id_b="id_b",
     collect). Only docs appearing in >= 1 pair are emitted (singletons
     are their own component by definition)."""
     pairs = pairs_df.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     ckpt = _iteration_checkpointer(pairs_df, checkpoint_dir)
     edges = pairs.union(
@@ -886,8 +883,7 @@ def connected_components(pairs_df, id_a="id_a", id_b="id_b",
             if checkpoint_dir:
                 _delete_hadoop_path(pairs_df.sparkSession, ckpt.run_dir)
             return connected_components_star(
-                pairs_df, id_a=id_a, id_b=id_b,
-                checkpoint_dir=checkpoint_dir,
+                pairs_df, checkpoint_dir=checkpoint_dir,
                 return_run_dir=return_run_dir)
     finally:
         edges.unpersist()
@@ -905,9 +901,8 @@ def connected_components(pairs_df, id_a="id_a", id_b="id_b",
     return result
 
 
-def connected_components_star(pairs_df, id_a="id_a", id_b="id_b",
-                              max_iterations=50, checkpoint_dir=None,
-                              return_run_dir=False):
+def connected_components_star(pairs_df, max_iterations=50,
+                              checkpoint_dir=None, return_run_dir=False):
     """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14): converges in O(log^2 n) rounds regardless of graph
@@ -941,14 +936,14 @@ def connected_components_star(pairs_df, id_a="id_a", id_b="id_b",
     _iteration_checkpointer)."""
     ckpt = _iteration_checkpointer(pairs_df, checkpoint_dir)
     all_nodes = (
-        pairs_df.select(F.col(id_a).alias("node"))
-        .union(pairs_df.select(F.col(id_b).alias("node")))
+        pairs_df.select(F.col("id_a").alias("node"))
+        .union(pairs_df.select(F.col("id_b").alias("node")))
         .distinct()
     )
     edges = ckpt(
         pairs_df.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
-            F.least(F.col(id_a), F.col(id_b)).alias("dst"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("src"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -1034,10 +1029,7 @@ def connected_components_star(pairs_df, id_a="id_a", id_b="id_b",
 
 # ---- simhash -----------------------------------------------------------------------
 
-_SIMHASH_SCHEMA = T.LongType()
-
-
-@F.pandas_udf(_SIMHASH_SCHEMA)
+@F.pandas_udf(T.LongType())
 def simhash64_udf(text: pd.Series) -> pd.Series:
     """64-bit SimHash over word tokens (numpy-vectorized per document).
     Deterministic: FNV-1a per token, sign-sum per bit."""
@@ -1061,6 +1053,14 @@ def simhash64_udf(text: pd.Series) -> pd.Series:
                 sim |= np.uint64(1) << np.uint64(bit_idx)
         out[row_idx] = np.int64(sim)
     return pd.Series(out)
+
+
+# Marked nondeterministic although the function IS pure: a join on the
+# hash infers an isnotnull(simhash) filter, and Catalyst would push it
+# below the hashing projection and evaluate the UDF a second time. The
+# marker keeps every caller (seen loop, in-batch pairs, the snapshot
+# writer, the oracle) at one evaluation per row.
+simhash64_udf = simhash64_udf.asNondeterministic()
 
 
 def _fnv1a64(token):
@@ -1089,23 +1089,22 @@ def _simhash_blocks(hashed, id_col):
     )
 
 
-def simhash_oversized_blocks(docs_df, id_col="doc_id", text_col="text",
-                             max_bucket_size=1000):
+def simhash_oversized_blocks(docs_df, max_bucket_size=1000):
     """Monitoring view: (chunk_idx, chunk_val, n_members) for 16-bit
     blocks the cap would drop -- route these to exact dedup first."""
     hashed = docs_df.select(
-        F.col(id_col), simhash64_udf(F.col(text_col)).alias("simhash")
+        F.col("doc_id"), simhash64_udf(F.col("text")).alias("simhash")
     )
     return (
-        _simhash_blocks(hashed, id_col)
+        _simhash_blocks(hashed, "doc_id")
         .groupBy("chunk_idx", "chunk_val")
         .agg(F.count("*").alias("n_members"))
         .filter(F.col("n_members") > max_bucket_size)
     )
 
 
-def simhash_pairs_from_hashes(hashed, max_hamming=3, id_col="doc_id",
-                              max_bucket_size=1000, observation=None):
+def simhash_pairs_from_hashes(hashed, max_hamming=3, max_bucket_size=1000,
+                              observation=None):
     """Near-dup pairs from a (id, simhash) table: candidate blocking on
     16-bit chunks (pigeonhole: <= 3 differing bits of 64 guarantees one
     of the 4 chunks matches), then exact Hamming verify via bit_count
@@ -1120,12 +1119,12 @@ def simhash_pairs_from_hashes(hashed, max_hamming=3, id_col="doc_id",
     same cap (cap_buckets). Dropped blocks are observable via
     `simhash_oversized_blocks` and should be routed to exact dedup."""
     pairs = (
-        block_self_join(_simhash_blocks(hashed, id_col),
-                        ("chunk_idx", "chunk_val"), id_col,
+        block_self_join(_simhash_blocks(hashed, "doc_id"),
+                        ("chunk_idx", "chunk_val"), "doc_id",
                         max_bucket_size, observation)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.bit_count(
                 F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
             ).alias("hamming"),
@@ -1136,7 +1135,7 @@ def simhash_pairs_from_hashes(hashed, max_hamming=3, id_col="doc_id",
 
 
 def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
-                         id_col="doc_id", max_bucket_size=1000,
+                         max_bucket_size=1000,
                          observation=None):
     """INCREMENTAL simhash near-dup: (new_id, seen_id, hamming) pairs
     between a new batch's (id, simhash) table and a PRIOR corpus
@@ -1164,13 +1163,13 @@ def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
             "minhash seen loop for looser similarity gates"
         )
     new_b = (
-        _simhash_blocks(new_hashed, id_col)
-        .withColumnRenamed(id_col, "new_id")
+        _simhash_blocks(new_hashed, "doc_id")
+        .withColumnRenamed("doc_id", "new_id")
         .withColumnRenamed("simhash", "_sh_new")
     )
     seen_b = cap_buckets(
-        _simhash_blocks(seen_hashed, id_col)
-        .withColumnRenamed(id_col, "seen_id")
+        _simhash_blocks(seen_hashed, "doc_id")
+        .withColumnRenamed("doc_id", "seen_id")
         .withColumnRenamed("simhash", "_sh_seen"),
         ("chunk_idx", "chunk_val"), max_bucket_size, observation,
     )
@@ -1188,8 +1187,7 @@ def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
 
 
 def dedup_against_seen_simhash(docs_df, seen_hashed, max_hamming=3,
-                               id_col="doc_id", text_col="text",
-                               max_bucket_size=1000, observation=None):
+                               observation=None):
     """Drop new-batch documents whose simhash is within `max_hamming`
     bits of a prior corpus snapshot (a persisted (id, simhash) table --
     write `docs.select(id, simhash64_udf(text))` each run; union
@@ -1197,17 +1195,15 @@ def dedup_against_seen_simhash(docs_df, seen_hashed, max_hamming=3,
     to dedup_against_seen (exact), dedup_against_seen_minhash (text
     near-dup) and similarity.dedup_against_seen_embedding (vectors)."""
     hashed = docs_df.select(
-        F.col(id_col), simhash64_udf(F.col(text_col)).alias("simhash")
+        F.col("doc_id"), simhash64_udf(F.col("text")).alias("simhash")
     )
     matches = simhash_seen_matches(
-        hashed, seen_hashed, max_hamming, id_col, max_bucket_size,
-        observation,
+        hashed, seen_hashed, max_hamming, observation=observation
     )
-    return _drop_seen_matches(docs_df, matches, id_col)
+    return _drop_seen_matches(docs_df, matches, "doc_id")
 
 
-def simhash_near_duplicates(docs_df, max_hamming=3, id_col="doc_id",
-                            text_col="text", max_bucket_size=1000,
+def simhash_near_duplicates(docs_df, max_hamming=3, max_bucket_size=1000,
                             observation=None):
     """SimHash near-dup over raw text: 64-bit FNV simhash UDF, then the
     blocked pair stage (simhash_pairs_from_hashes). Pass an
@@ -1216,17 +1212,13 @@ def simhash_near_duplicates(docs_df, max_hamming=3, id_col="doc_id",
 
     The hash is evaluated once, with nothing cached: both join branches
     read the one exchange on the hashed frame (the second as a
-    ReusedExchange). The UDF copy is marked nondeterministic (the
-    function IS pure) so the join's inferred isnotnull(simhash) filter
-    is not pushed below that exchange, where it would evaluate the UDF
-    a second time."""
-    fenced = F.pandas_udf(simhash64_udf.func, _SIMHASH_SCHEMA)
+    ReusedExchange)."""
     hashed = docs_df.select(
-        F.col(id_col),
-        fenced.asNondeterministic()(F.col(text_col)).alias("simhash"),
-    ).repartition(id_col)
+        F.col("doc_id"), simhash64_udf(F.col("text")).alias("simhash")
+    ).repartition("doc_id")
     return simhash_pairs_from_hashes(
-        hashed, max_hamming, id_col, max_bucket_size, observation
+        hashed, max_hamming, max_bucket_size=max_bucket_size,
+        observation=observation,
     )
 
 
@@ -1399,8 +1391,7 @@ def _removed_window_positions(docs_df, k, min_count, id_col, text_col,
     return base, removed
 
 
-def duplicated_spans_table(docs_df, k=50, min_count=2, id_col="doc_id",
-                           text_col="text", hash_mode="rolling"):
+def duplicated_spans_table(docs_df, k=50, hash_mode="rolling"):
     """(id, span_start, span_end, span_words): the MAXIMAL duplicated
     spans as a first-class analysis table -- the arbitrary-length span
     REPORT of the ExactSubstr paper (Lee et al. ACL'22 report maximal
@@ -1417,13 +1408,13 @@ def duplicated_spans_table(docs_df, k=50, min_count=2, id_col="doc_id",
     span_start/span_end are word indices, end exclusive.
 
     Audit surface: span-length histograms, worst-offender docs, what a
-    given k/min_count WOULD cut -- without touching any text. Plan: the
-    shared one-shuffle window-hash stage + one lag window per doc for
-    the run merge (narrow per-doc partitions)."""
+    given k (at min_count 2) WOULD cut -- without touching any text.
+    Plan: the shared one-shuffle window-hash stage + one lag window per
+    doc for the run merge (narrow per-doc partitions)."""
     _, removed = _removed_window_positions(
-        docs_df, k, min_count, id_col, text_col, hash_mode
+        docs_df, k, 2, "doc_id", "text", hash_mode
     )
-    per_doc = Window.partitionBy(id_col).orderBy("pos")
+    per_doc = Window.partitionBy("doc_id").orderBy("pos")
     return (
         removed
         .withColumn(
@@ -1432,21 +1423,20 @@ def duplicated_spans_table(docs_df, k=50, min_count=2, id_col="doc_id",
             .otherwise(0),  # lag null (first window) -> 0: run starts
         )
         .withColumn("_run", F.sum("_new").over(per_doc))
-        .groupBy(id_col, "_run")
+        .groupBy("doc_id", "_run")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + k).alias("span_end"),
         )
         .select(
-            F.col(id_col), "span_start", "span_end",
+            F.col("doc_id"), "span_start", "span_end",
             (F.col("span_end") - F.col("span_start"))
             .alias("span_words"),
         )
     )
 
 
-def duplicated_span_dedup(docs_df, k=50, min_count=2, id_col="doc_id",
-                          text_col="text", hash_mode="rolling"):
+def duplicated_span_dedup(docs_df, k=50, min_count=2, hash_mode="rolling"):
     """Exact duplicated-substring removal at word granularity (Lee et
     al., "Deduplicating Training Data Makes Language Models Better",
     ACL'22, ExactSubstr): every word covered by a k-word window whose
@@ -1486,33 +1476,33 @@ def duplicated_span_dedup(docs_df, k=50, min_count=2, id_col="doc_id",
     words have no windows and pass through byte-identical.
 
     Returns (id, text_clean, n_words, n_dropped)."""
-    null_rows = docs_df.filter(F.col(text_col).isNull()).select(
-        F.col(id_col),
+    null_rows = docs_df.filter(F.col("text").isNull()).select(
+        F.col("doc_id"),
         F.lit(None).cast("string").alias("text_clean"),
         F.lit(0).cast("long").alias("n_words"),
         F.lit(0).cast("long").alias("n_dropped"),
     )
     base, removed = _removed_window_positions(
-        docs_df, k, min_count, id_col, text_col, hash_mode
+        docs_df, k, min_count, "doc_id", "text", hash_mode
     )
     n_words = F.size("words")
-    spans_by_doc = removed.groupBy(id_col).agg(
+    spans_by_doc = removed.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("pos")).alias("_rpos")
     )
     excised = (
         base.select(
-            F.col(id_col), F.col("_text"),
+            F.col("doc_id"), F.col("_text"),
             n_words.cast("long").alias("n_words"),
         )
-        .join(spans_by_doc, id_col, "left")
+        .join(spans_by_doc, "doc_id", "left")
         .select(
-            F.col(id_col), F.col("n_words"),
+            F.col("doc_id"), F.col("n_words"),
             _excise_spans_udf(k)(F.col("_text"), F.col("_rpos"))
             .alias("_ex"),
         )
     )
     out = excised.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_ex.text_clean").alias("text_clean"),
         "n_words",
         F.col("_ex.n_dropped").alias("n_dropped"),
@@ -1523,8 +1513,7 @@ def duplicated_span_dedup(docs_df, k=50, min_count=2, id_col="doc_id",
 # ---- corpus-level line dedup (CCNet-style) -----------------------------------------
 
 
-def line_frequency_dedup(docs_df, min_docs=2, id_col="doc_id",
-                         text_col="text", min_line_chars=1, sep="\n"):
+def line_frequency_dedup(docs_df, min_docs=2, sep="\n"):
     """CCNet-style corpus-level boilerplate removal (Wenzek et al.,
     LREC'20 §3.1): drop every LINE whose normalized hash occurs in >=
     `min_docs` distinct documents across the corpus (navigation bars,
@@ -1541,27 +1530,27 @@ def line_frequency_dedup(docs_df, min_docs=2, id_col="doc_id",
     Plan: posexplode lines (narrow) -> line-hash frequency agg + equi
     join (one shuffle family on the 16-byte hash) -> one groupBy(doc)
     with array_sort(collect_list(struct(pos, line))) for order-stable
-    reassembly. Lines shorter than `min_line_chars` after normalization
-    never count toward frequencies and are never dropped (empty lines
-    are structure, not boilerplate).
+    reassembly. Lines that normalize to empty never count toward
+    frequencies and are never dropped (empty lines are structure, not
+    boilerplate).
 
     Null-text documents pass through with text_clean=null and zero
     counts (sibling operators preserve row counts; dropping them
     silently was ADVICE r4).
 
     Returns (id, text_clean, n_lines, n_dropped)."""
-    null_rows = docs_df.filter(F.col(text_col).isNull()).select(
-        F.col(id_col),
+    null_rows = docs_df.filter(F.col("text").isNull()).select(
+        F.col("doc_id"),
         F.lit(None).cast("string").alias("text_clean"),
         F.lit(0).cast("long").alias("n_lines"),
         F.lit(0).cast("long").alias("n_dropped"),
     )
     import re as _re
 
-    lines = docs_df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
+    lines = docs_df.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
         F.posexplode(
-            F.split(F.col(text_col), _re.escape(sep))
+            F.split(F.col("text"), _re.escape(sep))
         ).alias("pos", "line"),
     )
     norm = normalized_text_col(F.col("line"))
@@ -1570,16 +1559,16 @@ def line_frequency_dedup(docs_df, min_docs=2, id_col="doc_id",
         "lhash", F.unhex(F.md5(norm))
     )
     freq = (
-        hashed.filter(F.col("_norm_len") >= min_line_chars)
+        hashed.filter(F.col("_norm_len") >= 1)
         .groupBy("lhash")
-        .agg(F.count_distinct(F.col(id_col)).alias("_n_docs_line"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("_n_docs_line"))
     )
     joined = hashed.join(freq, "lhash", "left")
     keep = F.col("_n_docs_line").isNull() | (
         F.col("_n_docs_line") < min_docs
     )
     deduped = (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.count("*").alias("n_lines"),
             F.sum(F.when(keep, 0).otherwise(1)).alias("n_dropped"),
@@ -1595,6 +1584,6 @@ def line_frequency_dedup(docs_df, min_docs=2, id_col="doc_id",
                 sep,
             ).alias("text_clean"),
         )
-        .select(id_col, "text_clean", "n_lines", "n_dropped")
+        .select("doc_id", "text_clean", "n_lines", "n_dropped")
     )
     return deduped.unionByName(null_rows)

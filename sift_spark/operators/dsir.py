@@ -101,34 +101,31 @@ def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
 
 
 def dsir_log_weights(docs_df, target_df, n_buckets=DEFAULT_BUCKETS,
-                     id_col="doc_id", text_col="text",
-                     portable_hash=False, raw_df=None):
+                     portable_hash=False):
     """(id, log_weight): per-doc log importance weight of `docs_df`
-    toward `target_df`'s distribution. `raw_df` defaults to docs_df
-    itself (the paper's setting: q is fit on the raw pool being
-    selected from). The target (and raw) corpora only need `text_col`
-    -- distribution fits never touch ids. Docs with zero grams get
-    weight 0 (no evidence)."""
-    raw_df = docs_df if raw_df is None else raw_df
+    toward `target_df`'s distribution. The raw distribution q is fit on
+    docs_df itself (the paper's setting: the raw pool being selected
+    from). The target corpus only needs `text` -- distribution fits
+    never touch ids. Docs with zero grams get weight 0 (no evidence)."""
     p = fit_bucket_log_probs(
-        target_df, n_buckets, text_col, portable_hash
+        target_df, n_buckets, "text", portable_hash
     ).select("bucket", F.col("logp").alias("_lp"))
     q = fit_bucket_log_probs(
-        raw_df, n_buckets, text_col, portable_hash
+        docs_df, n_buckets, "text", portable_hash
     ).select("bucket", F.col("logp").alias("_lq"))
     delta = p.join(q, "bucket").select(
         "bucket", (F.col("_lp") - F.col("_lq")).alias("_delta")
     )
     sums = (
         hashed_ngram_buckets(
-            docs_df, n_buckets, id_col, text_col, portable_hash
+            docs_df, n_buckets, "doc_id", "text", portable_hash
         )
         .join(F.broadcast(delta), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("_delta").alias("log_weight"))
     )
-    return docs_df.select(id_col).join(sums, id_col, "left").select(
-        id_col,
+    return docs_df.select("doc_id").join(sums, "doc_id", "left").select(
+        "doc_id",
         F.coalesce(F.col("log_weight"), F.lit(0.0)).alias("log_weight"),
     )
 
@@ -148,24 +145,19 @@ def gumbel_key_col(id_col, seed=0):
     return -F.log(-F.log(u))
 
 
-def dsir_resample(docs_df, target_df, k, n_buckets=DEFAULT_BUCKETS,
-                  id_col="doc_id", text_col="text", seed=0,
-                  portable_hash=False, raw_df=None):
+def dsir_resample(docs_df, target_df, k, seed=0):
     """Gumbel-top-k importance resampling: keep the k documents with
     the largest log_weight + Gumbel(id, seed) -- an exact sample
     without replacement proportional to the importance weights
     (Vieira 2014's Gumbel-max trick, as used by the DSIR paper).
     Returns docs_df rows (all columns) for the selected ids."""
-    weights = dsir_log_weights(
-        docs_df, target_df, n_buckets, id_col, text_col,
-        portable_hash, raw_df,
-    )
+    weights = dsir_log_weights(docs_df, target_df)
     keyed = weights.select(
-        id_col,
-        (F.col("log_weight") + gumbel_key_col(id_col, seed))
+        "doc_id",
+        (F.col("log_weight") + gumbel_key_col("doc_id", seed))
         .alias("_key"),
     )
     chosen = keyed.orderBy(
-        F.desc("_key"), F.col(id_col)
-    ).limit(k).select(id_col)
-    return docs_df.join(chosen, id_col, "left_semi")
+        F.desc("_key"), F.col("doc_id")
+    ).limit(k).select("doc_id")
+    return docs_df.join(chosen, "doc_id", "left_semi")

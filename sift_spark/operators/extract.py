@@ -218,7 +218,7 @@ NODE_TABLE_SCHEMA = T.StructType(
 )
 
 
-def html_node_table(pages_df, url_col="url", html_col="html"):
+def html_node_table(pages_df):
     """The north rule's DOM NODE TABLE as a first-class DataFrame: one
     row per element node with the readability features (subtree text /
     link lengths via the same O(n) bottom-up tables the extractor
@@ -252,7 +252,7 @@ def html_node_table(pages_df, url_col="url", html_col="html"):
     def node_rows(iterator):
         for pdf in iterator:
             out = {name: [] for name in NODE_TABLE_SCHEMA.names}
-            for url, raw in zip(pdf[url_col], pdf[html_col]):
+            for url, raw in zip(pdf["url"], pdf["html"]):
                 try:
                     # a PDF has no DOM: parsing its byte soup as HTML
                     # would emit nonsense feature rows, not zero rows
@@ -327,6 +327,6 @@ def html_node_table(pages_df, url_col="url", html_col="html"):
                     out["in_article"].append(nid in in_article)
             yield pd.DataFrame(out)
 
-    return pages_df.select(url_col, html_col).mapInPandas(
+    return pages_df.select("url", "html").mapInPandas(
         node_rows, NODE_TABLE_SCHEMA
     )

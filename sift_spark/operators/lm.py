@@ -277,7 +277,7 @@ def _ppl_udf(spark, lm):
     return _score.asNondeterministic()
 
 
-def score_perplexity(docs_df, lm, text_col="text", id_col="doc_id"):
+def score_perplexity(docs_df, lm):
     """Per-document LM statistics: (id, lm_tokens, lm_oov,
     lm_logprob10, lm_ppl). lm_logprob10 = sum of log10 stupid-backoff
     scores; lm_ppl = 10^(-logprob/tokens); empty and null docs get 0
@@ -285,8 +285,8 @@ def score_perplexity(docs_df, lm, text_col="text", id_col="doc_id"):
     broadcast-model kernel of :func:`_ppl_udf` -- zero shuffles."""
     score = _ppl_udf(docs_df.sparkSession, lm)
     return docs_df.select(
-        F.col(id_col), score(F.col(text_col)).alias("_s")
-    ).select(id_col, "_s.*")
+        F.col("doc_id"), score(F.col("text")).alias("_s")
+    ).select("doc_id", "_s.*")
 
 
 def perplexity_bucket_col(ppl_col, head=200.0, middle=1000.0):
@@ -302,18 +302,17 @@ def perplexity_bucket_col(ppl_col, head=200.0, middle=1000.0):
     )
 
 
-def perplexity_thresholds(scored_df, fractions=(1 / 3, 2 / 3),
-                          ppl_col="lm_ppl", relative_error=0.001):
+def perplexity_thresholds(scored_df, fractions=(1 / 3, 2 / 3)):
     """The head/middle cutoffs as the scored corpus's perplexity
     percentiles (CCNet buckets by thirds per language). approxQuantile
     is a driver action over a single-column scan -- run it on the
     scored table, not the raw corpus."""
-    return scored_df.filter(F.col(ppl_col).isNotNull()).approxQuantile(
-        ppl_col, list(fractions), relative_error
+    return scored_df.filter(F.col("lm_ppl").isNotNull()).approxQuantile(
+        "lm_ppl", list(fractions), 0.001
     )
 
 
-def filter_by_perplexity(docs_df, lm, max_ppl, text_col="text"):
+def filter_by_perplexity(docs_df, lm, max_ppl):
     """Keep documents whose LM perplexity is <= max_ppl (head+middle of
     the CCNet split, with max_ppl = the tail threshold). A FULLY NARROW
     gate: the score struct is computed in place by the broadcast-model
@@ -327,7 +326,7 @@ def filter_by_perplexity(docs_df, lm, max_ppl, text_col="text"):
     if they must survive."""
     score = _ppl_udf(docs_df.sparkSession, lm)
     return (
-        docs_df.withColumn("_lm_s", score(F.col(text_col)))
+        docs_df.withColumn("_lm_s", score(F.col("text")))
         .filter(F.col("_lm_s.lm_ppl") <= max_ppl)
         .drop("_lm_s")
     )

@@ -482,7 +482,7 @@ def make_jpeg_bytes(width=4, height=3, seed=0):
     return b"\xff\xd8" + app0 + dqt + sof0 + b"\xff\xd9"
 
 
-def build_fake_media_df(spark, n_rows=32, seed=42):
+def build_fake_media_df(spark, n_rows=32):
     """Deterministic synthetic media table for tests/bench: audio rows
     are REAL PCM WAVs and image rows rotate through REAL BMP/PNG/GIF/
     JPEG blobs (the stdlib header parsers produce content-derived
@@ -490,7 +490,7 @@ def build_fake_media_df(spark, n_rows=32, seed=42):
     bytes (decode honestly stubbed)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     kinds = ["image", "audio", "video"]
     image_makers = (make_bmp_bytes, make_png_bytes, make_gif_bytes,
                     make_jpeg_bytes)
@@ -500,10 +500,10 @@ def build_fake_media_df(spark, n_rows=32, seed=42):
         if kind == "image":
             maker = image_makers[(i // 3) % len(image_makers)]
             payload = maker(width=4 + i % 5, height=3 + i % 4,
-                            seed=seed + i)
+                            seed=42 + i)
         elif kind == "audio":
             payload = make_wav_bytes(duration_ms=100 + (i % 5) * 50,
-                                     seed=seed + i)
+                                     seed=42 + i)
         else:
             payload = bytes(rng.getrandbits(8)
                             for _ in range(64 + (i % 5) * 32))

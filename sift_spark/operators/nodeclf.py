@@ -80,12 +80,12 @@ _LINKS = {
 }
 
 
-def power_of_two_lr(n_rows, boost=4.0):
-    """Learning rate 'boost / 2^ceil(log2 n)': a power of two (exact
+def power_of_two_lr(n_rows):
+    """Learning rate '4 / 2^ceil(log2 n)': a power of two (exact
     scaling) that normalises the un-averaged gradient sum by ~n."""
     if n_rows <= 0:
         raise ValueError("empty training frame")
-    return boost / float(1 << (n_rows - 1).bit_length())
+    return 4.0 / float(1 << (n_rows - 1).bit_length())
 
 
 def _score_expr(feature_cols, weights, intercept, link):
@@ -100,7 +100,6 @@ def train_logreg(
     feature_cols,
     label_col,
     n_iter=12,
-    lr=None,
     link="rational",
 ):
     """Fixed-iteration batch gradient descent for logistic regression.
@@ -123,8 +122,7 @@ def train_logreg(
     ).persist()
     try:
         n_rows = proj.count()
-        if lr is None:
-            lr = power_of_two_lr(n_rows)
+        lr = power_of_two_lr(n_rows)
         wscale = float(1 << WEIGHT_BITS)
         intercept, weights = 0.0, [0.0] * len(feature_cols)
         for _ in range(n_iter):
@@ -210,9 +208,7 @@ def node_feature_cols(nodes_df):
     )
 
 
-def node_boilerplate_classifier(
-    nodes_df, n_iter=12, lr=None, link="logistic"
-):
+def node_boilerplate_classifier(nodes_df, n_iter=12):
     """Train on the readability weak label and score every node.
 
     Returns `(scored_df, model)`: the input plus a `node_score`
@@ -229,10 +225,9 @@ def node_boilerplate_classifier(
         list(NODE_FEATURES),
         "in_article_int",
         n_iter=n_iter,
-        lr=lr,
-        link=link,
+        link="logistic",
     )
     scored = feats.withColumn(
-        "node_score", logreg_score_col(list(NODE_FEATURES), model, link)
+        "node_score", logreg_score_col(list(NODE_FEATURES), model, "logistic")
     ).drop("in_article_int")
     return scored, model

@@ -56,8 +56,8 @@ def word_count_col(col):
     ).cast("long")
 
 
-def pack_sequences(docs_df, budget, n_shards=64, id_col="doc_id",
-                   text_col="text", tokens_col=None, portable_hash=False):
+def pack_sequences(docs_df, budget, n_shards=64, tokens_col=None,
+                   portable_hash=False):
     """(doc_id, n_tokens, shard, seq_no, offset, oversized): next-fit
     packing of documents into sequences of at most `budget` tokens,
     per deterministic hash shard.
@@ -70,17 +70,17 @@ def pack_sequences(docs_df, budget, n_shards=64, id_col="doc_id",
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     n_tokens = (F.col(tokens_col).cast("long") if tokens_col
-                else word_count_col(text_col))
+                else word_count_col("text"))
     if portable_hash:
         # the same md5-prefix bucket sampling.py uses (one portable-hash
         # implementation engine-wide; the oracle reproduces md5(id ':0'))
         from .sampling import sample_bucket_col
 
-        shard = F.pmod(sample_bucket_col(id_col, seed=0), F.lit(n_shards))
+        shard = F.pmod(sample_bucket_col("doc_id", seed=0), F.lit(n_shards))
     else:
-        shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
+        shard = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards))
     base = docs_df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         # null text / null counts pack as 0-token docs (sibling
         # operators pass null rows through; a NaN here would kill the
         # grouped kernel's int conversion)
@@ -168,8 +168,7 @@ def _encoder_for(vocab_path, portable_hash):
     return span_ids
 
 
-def pack_assignment_with_eod(docs_df, budget, n_shards=64, id_col="doc_id",
-                             text_col="text", vocab_path=None,
+def pack_assignment_with_eod(docs_df, budget, n_shards=64, vocab_path=None,
                              portable_hash=False):
     """The (doc -> shard, seq_no, offset) assignment that DESCRIBES the
     buffers :func:`materialize_packed_sequences` emits: token counts
@@ -184,16 +183,15 @@ def pack_assignment_with_eod(docs_df, budget, n_shards=64, id_col="doc_id",
         return text.map(lambda value: len(encode(value)) + 1)
 
     counted = docs_df.select(
-        F.col(id_col), F.col(text_col).alias("_text")
+        F.col("doc_id"), F.col("text").alias("_text")
     ).withColumn("_n_plus_eod", n_with_eod(F.col("_text")))
     return pack_sequences(
-        counted, budget, n_shards, id_col=id_col,
-        tokens_col="_n_plus_eod", portable_hash=portable_hash,
+        counted, budget, n_shards, tokens_col="_n_plus_eod",
+        portable_hash=portable_hash,
     )
 
 
 def materialize_packed_sequences(docs_df, budget, n_shards=64,
-                                 id_col="doc_id", text_col="text",
                                  eod_id=0, vocab_path=None,
                                  portable_hash=False, assignment=None):
     """Loader-ready packed sequences: (shard, seq_no,
@@ -233,12 +231,12 @@ def materialize_packed_sequences(docs_df, budget, n_shards=64,
     encode = _encoder_for(vocab_path, portable_hash)
     if assignment is None:
         assignment = pack_assignment_with_eod(
-            docs_df, budget, n_shards, id_col=id_col, text_col=text_col,
-            vocab_path=vocab_path, portable_hash=portable_hash,
+            docs_df, budget, n_shards, vocab_path=vocab_path,
+            portable_hash=portable_hash,
         )
     joined = docs_df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("_text"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("text").alias("_text"),
     ).join(assignment.select("doc_id", "shard", "seq_no"), "doc_id")
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -44,7 +44,7 @@ PII_PATTERNS = (
 )
 
 
-def pii_profile(docs_df, text_col="text"):
+def pii_profile(docs_df):
     """Append per-document PII match counts (n_email, n_ipv4, n_ssn,
     n_card, n_phone) to the frame -- `size(regexp_extract_all(...))`
     per pattern, one narrow pass, all input columns kept (composes with
@@ -56,20 +56,20 @@ def pii_profile(docs_df, text_col="text"):
         out = out.withColumn(
             f"n_{name}",
             F.size(
-                F.regexp_extract_all(F.col(text_col), F.lit(pattern), 0)
+                F.regexp_extract_all(F.col("text"), F.lit(pattern), 0)
             ),
         )
     return out
 
 
-def redact_pii(docs_df, text_col="text", out_col="text_redacted"):
+def redact_pii(docs_df):
     """Mask every PII match with its `[TYPE]` placeholder, applying the
     canonical pattern order (so e.g. the digits of an already-masked
-    email can't re-match as a phone). Appends `out_col`; all other
+    email can't re-match as a phone). Appends `text_redacted`; all other
     columns pass through."""
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     for name, pattern in PII_PATTERNS:
         redacted = F.regexp_replace(
             redacted, pattern, f"[{name.upper()}]"
         )
-    return docs_df.withColumn(out_col, redacted)
+    return docs_df.withColumn("text_redacted", redacted)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.ranking import FIELD_WEIGHTS, K1, B, parse_markdown_fields, tfidf_tokenize
+from ..core.selection import MAX_RELEVANT_CHUNKS, MIN_SCORE_THRESHOLD
 
 
 def tokenize_col(col):
@@ -34,11 +35,12 @@ def tokenize_col(col):
     return F.filter(tokens, lambda t: (F.length(t) >= 3))
 
 
-def explode_terms(chunks_df, text_col="chunk_text"):
+def explode_terms(chunks_df):
     """chunk table -> long-format (url, chunk_idx, term) with duplicates
     (one row per occurrence)."""
     return chunks_df.select(
-        "url", "chunk_idx", F.explode(tokenize_col(F.col(text_col))).alias("term")
+        "url", "chunk_idx",
+        F.explode(tokenize_col(F.col("chunk_text"))).alias("term"),
     )
 
 
@@ -68,7 +70,7 @@ def corpus_sizes(chunks_df):
     return chunks_df.groupBy("url").agg(F.count("*").alias("n_docs"))
 
 
-def tfidf_scores(chunks_df, query, text_col="chunk_text"):
+def tfidf_scores(chunks_df, query):
     """Score every chunk against `query` with exact tfidf.go semantics:
     score = sum over query terms of rel_tf * ln(N/df).
 
@@ -80,7 +82,7 @@ def tfidf_scores(chunks_df, query, text_col="chunk_text"):
         return chunks_df.select(
             "url", "chunk_idx", F.lit(0.0).alias("score")
         )
-    terms = explode_terms(chunks_df, text_col)
+    terms = explode_terms(chunks_df)
     tf = term_frequencies(terms).filter(F.col("term").isin(query_terms))
     df = document_frequencies(terms).filter(F.col("term").isin(query_terms))
     sizes = corpus_sizes(chunks_df)
@@ -139,8 +141,7 @@ def field_terms_udf(text: pd.Series) -> pd.Series:
     return pd.Series([field_term_pairs(value) for value in text])
 
 
-def with_bm25_score(chunks_df, query, text_col="chunk_text",
-                    k1=K1, b=B, field_weights=None, score_col="score"):
+def with_bm25_score(chunks_df, query):
     """Field-weighted BM25 (BM25F, SURVEY.md Appendix A.3), genuinely
     single-branch -- ZERO joins, ZERO groupBy:
 
@@ -156,7 +157,7 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
 
     The (field, term) array is the `field_terms` column that
     :func:`chunking.chunk_pages` emits in search mode; a chunk table
-    without it (or scored on another `text_col`) runs the same kernel in
+    without it runs the same kernel on `chunk_text` in
     :func:`field_terms_udf`, one Arrow stage. Plan: [UDF] -> one narrow
     projection of higher-order functions reducing the array to dl and
     one wtf column per query term (whole-stage codegen) -> the url
@@ -165,23 +166,22 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
     need no persist: the chunk branch is referenced exactly once.
 
     Keeps every input column except the consumed `field_terms` bag and
-    appends `score_col`, so selection pipelines attach scores without
+    appends `score`, so selection pipelines attach scores without
     joining back to the chunk table."""
-    weights = field_weights or FIELD_WEIGHTS
     query_terms = list(dict.fromkeys(tfidf_tokenize(query)))
     if not query_terms:
         return chunks_df.drop(FIELD_TERMS_COL).withColumn(
-            score_col, F.lit(0.0))
+            "score", F.lit(0.0))
 
     q_occurrences = {}
     for term in tfidf_tokenize(query):
         q_occurrences[term] = q_occurrences.get(term, 0) + 1
 
     weight_map = F.create_map(
-        *[F.lit(x) for pair in weights.items() for x in pair]
+        *[F.lit(x) for pair in FIELD_WEIGHTS.items() for x in pair]
     )
 
-    if FIELD_TERMS_COL in chunks_df.columns and text_col == "chunk_text":
+    if FIELD_TERMS_COL in chunks_df.columns:
         per_chunk, bag = chunks_df, FIELD_TERMS_COL
     else:
         # the aliased UDF array is referenced by len(query_terms)+1
@@ -189,7 +189,7 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
         # un-inlined, so the UDF runs once per row (same pattern as
         # winnowing's normalized-text projection)
         per_chunk = chunks_df.withColumn(
-            "_ft", field_terms_udf(F.col(text_col)))
+            "_ft", field_terms_udf(F.col("chunk_text")))
         bag = "_ft"
 
     # NB: bind the loop variable through a closure factory -- a `t=term`
@@ -232,10 +232,10 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
             + (F.col("_n_docs") - df + F.lit(0.5)) / (df + F.lit(0.5))
         )
         term_score = (
-            idf * wtf * F.lit(k1 + 1.0)
+            idf * wtf * F.lit(K1 + 1.0)
             / (
-                F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
+                F.lit(K1)
+                * (F.lit(1.0 - B) + F.lit(B) * F.col("_dl") / F.col("_avgdl"))
                 + wtf
             )
             * F.lit(float(q_occurrences[term]))
@@ -245,17 +245,14 @@ def with_bm25_score(chunks_df, query, text_col="chunk_text",
     temps = (["_dl", "_avgdl", "_n_docs"]
              + [f"_wtf_{i}" for i in range(len(query_terms))]
              + [f"_df_{i}" for i in range(len(query_terms))])
-    return per_chunk.withColumn(score_col, score).drop(*temps)
+    return per_chunk.withColumn("score", score).drop(*temps)
 
 
-def bm25_scores(chunks_df, query, text_col="chunk_text",
-                k1=K1, b=B, field_weights=None):
+def bm25_scores(chunks_df, query):
     """(url, chunk_idx, score) projection of :func:`with_bm25_score`;
     Catalyst column-prunes the unused chunk columns through the window."""
-    return with_bm25_score(
-        chunks_df, query, text_col=text_col, k1=k1, b=b,
-        field_weights=field_weights,
-    ).select("url", "chunk_idx", "score")
+    return with_bm25_score(chunks_df, query).select(
+        "url", "chunk_idx", "score")
 
 
 def rank_by_score(scored_df):
@@ -268,21 +265,21 @@ def rank_by_score(scored_df):
     return scored_df.withColumn("sel_rank", F.row_number().over(window))
 
 
-def top_k_relevant(ranked_df, max_relevant=5, min_score=0.01):
+def top_k_relevant(ranked_df):
     """No-limit search top-k (chunk_selection.go:598-632): score > 0.01,
-    keep top 50% capped at `max_relevant`, floor 1; fallback top-2 when
-    none pass."""
+    keep top 50% capped at 5, floor 1; fallback top-2 when none pass."""
     url_window = Window.partitionBy("url")
     passing = ranked_df.withColumn(
         "n_passing",
-        F.sum(F.when(F.col("score") > min_score, 1).otherwise(0)).over(url_window),
+        F.sum(F.when(F.col("score") > MIN_SCORE_THRESHOLD, 1)
+              .otherwise(0)).over(url_window),
     )
     limit = F.least(
-        F.lit(max_relevant),
+        F.lit(MAX_RELEVANT_CHUNKS),
         F.greatest(F.lit(1), (F.col("n_passing") / 2).cast("int")),
     )
     selected = passing.filter(
-        (F.col("score") > min_score) & (F.col("sel_rank") <= limit)
+        (F.col("score") > MIN_SCORE_THRESHOLD) & (F.col("sel_rank") <= limit)
     )
     fallback = passing.filter(
         (F.col("n_passing") == 0) & (F.col("sel_rank") <= 2)

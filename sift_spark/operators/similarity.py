@@ -38,7 +38,7 @@ def cosine_col(a, b):
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
-def cosine_topk(emb_df, query_vec, k=10, id_col="vec_id", vec_col="embedding"):
+def cosine_topk(emb_df, query_vec, k=10):
     """Brute-force cosine top-k against a constant query vector.
     Deterministic tiebreak on id.
 
@@ -55,14 +55,14 @@ def cosine_topk(emb_df, query_vec, k=10, id_col="vec_id", vec_col="embedding"):
     for v in query_vec:
         qnorm = qnorm + float(v) * float(v)
     qnorm = math.sqrt(qnorm)
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     scored = emb_df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(
             dot_col(vec, query) / (norm_col(vec) * F.lit(qnorm)), 6
         ).alias("cosine"),
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
 
 
 def hyperplane_bucket_col(vec_col, planes):
@@ -90,12 +90,11 @@ def make_hyperplanes(dim, n_planes=8, seed=42):
     ]
 
 
-def lsh_cosine_topk(emb_df, query_vec, k=10, n_planes=8, seed=42,
-                    id_col="vec_id", vec_col="embedding", probe_hamming=1):
+def lsh_cosine_topk(emb_df, query_vec, k=10, probe_hamming=1):
     """Bucket-pruned ANN: scan only vectors whose hyperplane signature is
     within `probe_hamming` bits of the query's (multi-probe)."""
     dim = len(query_vec)
-    planes = make_hyperplanes(dim, n_planes, seed)
+    planes = make_hyperplanes(dim)
 
     def signature(vec):
         bucket = 0
@@ -107,26 +106,25 @@ def lsh_cosine_topk(emb_df, query_vec, k=10, n_planes=8, seed=42,
     query_sig = signature([float(v) for v in query_vec])
     # all signatures within probe_hamming bits (previously only 1-bit
     # flips were generated regardless of the parameter, silently capping
-    # recall); probe count is sum_h C(n_planes, h) -- driver-side only
+    # recall); probe count is sum_h C(8, h) -- driver-side only
     import itertools
 
     probe_set = {query_sig}
     for h in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(n_planes), h):
+        for bits in itertools.combinations(range(len(planes)), h):
             flip = 0
             for b in bits:
                 flip |= 1 << b
             probe_set.add(query_sig ^ flip)
     probes = sorted(probe_set)
 
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     bucketed = emb_df.withColumn("bucket", hyperplane_bucket_col(vec, planes))
     pruned = bucketed.filter(F.col("bucket").isin(probes))
-    return cosine_topk(pruned, query_vec, k, id_col, vec_col)
+    return cosine_topk(pruned, query_vec, k)
 
 
-def ivf_build(emb_df, n_clusters=16, seed=42, id_col="vec_id",
-              vec_col="embedding"):
+def ivf_build(emb_df, n_clusters=16):
     """IVF index build: k-means coarse quantizer (pyspark.ml, seeded ->
     deterministic) assigns every vector to its nearest centroid.
     Returns (assigned_df with a `cluster` column, centers list).
@@ -139,9 +137,9 @@ def ivf_build(emb_df, n_clusters=16, seed=42, id_col="vec_id",
     from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
 
     with_vec = emb_df.withColumn(
-        "_fv", array_to_vector(F.col(vec_col).cast("array<double>"))
+        "_fv", array_to_vector(F.col("embedding").cast("array<double>"))
     )
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="_fv").fit(with_vec)
+    model = KMeans(k=n_clusters, seed=42, featuresCol="_fv").fit(with_vec)
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
     assigned = (
         model.transform(with_vec)
@@ -220,7 +218,6 @@ def ivf_load(spark, path):
 
 
 def ivf_cosine_topk(emb_df, query_vec, k=10, n_clusters=16, nprobe=4,
-                    seed=42, id_col="vec_id", vec_col="embedding",
                     index=None):
     """IVF-pruned ANN: rank centroids by cosine to the query (driver-side
     math over n_clusters small vectors), scan only the nprobe nearest
@@ -238,8 +235,7 @@ def ivf_cosine_topk(emb_df, query_vec, k=10, n_clusters=16, nprobe=4,
     if index is not None:
         assigned, centers = index
     else:
-        assigned, centers = ivf_build(emb_df, n_clusters, seed, id_col,
-                                      vec_col)
+        assigned, centers = ivf_build(emb_df, n_clusters)
     q = [float(v) for v in query_vec]
     qn = math.sqrt(sum(x * x for x in q)) or 1.0
 
@@ -250,11 +246,10 @@ def ivf_cosine_topk(emb_df, query_vec, k=10, n_clusters=16, nprobe=4,
     ranked = sorted(range(len(centers)), key=lambda i: -cos(centers[i]))
     probes = ranked[:nprobe]
     pruned = assigned.filter(F.col("cluster").isin(probes))
-    return cosine_topk(pruned, query_vec, k, id_col, vec_col)
+    return cosine_topk(pruned, query_vec, k)
 
 
-def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95, seed=42,
-                   id_col="vec_id", vec_col="embedding"):
+def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95):
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): near-duplicate
     pairs found WITHIN k-means clusters of the embedding space -- the
@@ -279,18 +274,16 @@ def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95, seed=42,
     if n_clusters == 1:
         assigned = emb_df.withColumn("cluster", F.lit(0))
     else:
-        assigned, _ = ivf_build(
-            emb_df, n_clusters, seed, id_col, vec_col
-        )
-    vec = F.col(vec_col).cast("array<double>")
+        assigned, _ = ivf_build(emb_df, n_clusters)
+    vec = F.col("embedding").cast("array<double>")
     sides = assigned.select(
-        F.col(id_col), vec.alias("v"), F.col("cluster")
+        F.col("vec_id"), vec.alias("v"), F.col("cluster")
     )
     return (
-        block_self_join(sides, ("cluster",), id_col)
+        block_self_join(sides, ("cluster",), "vec_id")
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             F.col("a.cluster").alias("cluster"),
             F.round(cosine_col(F.col("a.v"), F.col("b.v")), 6)
             .alias("cosine"),
@@ -299,55 +292,49 @@ def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95, seed=42,
     )
 
 
-def semdedup(emb_df, n_clusters=16, min_cosine=0.95, seed=42,
-             id_col="vec_id", vec_col="embedding"):
+def semdedup(emb_df, n_clusters=16, min_cosine=0.95):
     """Semantic dedup: drop every vector that has a SMALLER-id
     near-neighbor in its cluster (the min-id keeper convention shared
     with dedup_exact) -- one representative survives per
     near-duplicate chain. Returns the kept rows of emb_df."""
-    drops = semdedup_pairs(
-        emb_df, n_clusters, min_cosine, seed, id_col, vec_col
-    ).select(F.col("id_b").alias(id_col)).distinct()
-    return emb_df.join(drops, id_col, "left_anti")
+    drops = semdedup_pairs(emb_df, n_clusters, min_cosine).select(
+        F.col("id_b").alias("vec_id")).distinct()
+    return emb_df.join(drops, "vec_id", "left_anti")
 
 
-def embedding_near_duplicates(emb_df, min_cosine=0.95, n_planes=10, seed=42,
-                              id_col="vec_id", vec_col="embedding",
-                              dim=None):
+def embedding_near_duplicates(emb_df, min_cosine=0.95, dim=None):
     """Embedding-cosine near-dup pairs: bucket join (same signature) then
-    exact cosine verify. At 100 TB, bucket sizes are the knob: more
-    planes -> smaller buckets -> cheaper join, lower recall.
+    exact cosine verify over 10 seed-42 hyperplanes (1024 buckets; more
+    planes would mean smaller buckets, a cheaper join and lower recall).
 
     Pass `dim` explicitly (the caller knows the embedding width); the
     `.first()` fallback is a driver-side action that runs the upstream
     pipeline for one partition -- fine ad hoc, wrong in production."""
     if dim is None:
-        first = emb_df.select(vec_col).first()
+        first = emb_df.select("embedding").first()
         if first is None:
             return emb_df.sparkSession.createDataFrame(
                 [], "id_a long, id_b long, cosine double"
             )
-        dim = len(first[vec_col])
-    planes = make_hyperplanes(dim, n_planes, seed)
-    vec = F.col(vec_col).cast("array<double>")
+        dim = len(first["embedding"])
+    planes = make_hyperplanes(dim, 10)
+    vec = F.col("embedding").cast("array<double>")
     bucketed = emb_df.select(
-        F.col(id_col), vec.alias("v"),
+        F.col("vec_id"), vec.alias("v"),
         hyperplane_bucket_col(vec, planes).alias("bucket"),
     )
     return (
-        block_self_join(bucketed, ("bucket",), id_col)
+        block_self_join(bucketed, ("bucket",), "vec_id")
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             F.round(cosine_col(F.col("a.v"), F.col("b.v")), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= min_cosine)
     )
 
 
-def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
-                           n_planes=10, seed=42, id_col="vec_id",
-                           vec_col="embedding", dim=None,
+def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
                            max_bucket_size=None, observation=None):
     """INCREMENTAL embedding near-dup: (new_id, seen_id, cosine) pairs
     between a new batch and a PRIOR corpus represented by its persisted
@@ -381,15 +368,15 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
     neither side (they can never be dropped as duplicates)."""
     if dim is None:
         first = (
-            new_emb.filter(F.col(vec_col).isNotNull())
-            .select(vec_col).first()
+            new_emb.filter(F.col("embedding").isNotNull())
+            .select("embedding").first()
         )
         if first is None:  # no usable new vectors -> no matches
             from pyspark.sql import types as T
 
             idt = next(
                 f.dataType for f in new_emb.schema.fields
-                if f.name.lower() == id_col.lower()
+                if f.name.lower() == "vec_id"
             )
             return new_emb.sparkSession.createDataFrame(
                 [],
@@ -399,11 +386,11 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
                     T.StructField("cosine", T.DoubleType()),
                 ]),
             )
-        dim = len(first[vec_col])
-    planes = make_hyperplanes(dim, n_planes, seed)
+        dim = len(first["embedding"])
+    planes = make_hyperplanes(dim, 10)
 
     def bucketed(df, out_id):
-        vec = F.col(vec_col).cast("array<double>")
+        vec = F.col("embedding").cast("array<double>")
         # per-row width assertion INSIDE the plan: a wrong-width row
         # raises on the executor (null vecs fall through to the
         # otherwise branch as null -> null bucket -> unmatchable)
@@ -422,7 +409,7 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
             )).cast("array<double>"),
         ).otherwise(vec)
         return df.select(
-            F.col(id_col).alias(out_id),
+            F.col("vec_id").alias(out_id),
             checked.alias(f"_v_{out_id}"),
         ).withColumn(
             "bucket",
@@ -447,15 +434,13 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95,
 
 
 def dedup_against_seen_embedding(new_emb, seen_emb, min_cosine=0.95,
-                                 n_planes=10, seed=42, id_col="vec_id",
-                                 vec_col="embedding", dim=None,
-                                 max_bucket_size=1000, observation=None):
+                                 dim=None, observation=None):
     """Drop new-batch rows whose embedding is a near-duplicate of the
     prior corpus snapshot (see embedding_seen_matches). Composes with
     dedup.dedup_against_seen (exact) and dedup.dedup_against_seen_minhash
     (text near-dup) as the third seen-loop family."""
     matches = embedding_seen_matches(
-        new_emb, seen_emb, min_cosine, n_planes, seed, id_col, vec_col,
-        dim, max_bucket_size, observation,
+        new_emb, seen_emb, min_cosine, dim=dim, max_bucket_size=1000,
+        observation=observation,
     )
-    return _drop_seen_matches(new_emb, matches, id_col)
+    return _drop_seen_matches(new_emb, matches, "vec_id")

@@ -335,29 +335,25 @@ def classifier_score_udf(spark, model):
     return _score.asNondeterministic()
 
 
-def score_text_classifier(docs_df, model, score_col="clf_score",
-                          text_col="text"):
+def score_text_classifier(docs_df, model, score_col="clf_score"):
     """docs_df + a probability column (higher = more target-like),
     computed in place by classifier_score_udf -- fully narrow, no
     shuffle, no self-join; zero-gram docs score link(intercept)."""
     score = classifier_score_udf(docs_df.sparkSession, model)
-    return docs_df.withColumn(score_col, score(F.col(text_col)))
+    return docs_df.withColumn(score_col, score(F.col("text")))
 
 
-def filter_by_classifier(docs_df, model, min_score, text_col="text"):
+def filter_by_classifier(docs_df, model, min_score):
     """Keep docs the model scores >= min_score (the --min-clf-score
     funnel stage): a narrow gate, no shuffle and no persist needed."""
-    return score_text_classifier(
-        docs_df, model, "_clf_score", text_col
-    ).filter(F.col("_clf_score") >= F.lit(float(min_score))).drop(
-        "_clf_score"
-    )
+    return score_text_classifier(docs_df, model, "_clf_score").filter(
+        F.col("_clf_score") >= F.lit(float(min_score))
+    ).drop("_clf_score")
 
 
-def evaluate_classifier(docs_df, model, label_col="label",
-                        text_col="text", threshold=0.5):
-    """Held-out evaluation in TWO jobs: accuracy/precision/recall at
-    `threshold` plus exact AUC via the rank-sum (Mann-Whitney U)
+def evaluate_classifier(docs_df, model):
+    """Held-out evaluation in TWO jobs: accuracy/precision/recall at a
+    0.5 score threshold plus exact AUC via the rank-sum (Mann-Whitney U)
     identity AUC = (sum of positive ranks - n_pos*(n_pos+1)/2) /
     (n_pos*n_neg), with ties handled by average rank (the textbook
     estimator). Ranking is one global sort over (score) -- the eval
@@ -382,10 +378,8 @@ def evaluate_classifier(docs_df, model, label_col="label",
     size + 1)/2."""
     from pyspark.sql import Window
 
-    scored = score_text_classifier(
-        docs_df, model, "_s", text_col
-    ).select(
-        F.col("_s"), F.col(label_col).cast("int").alias("_y")
+    scored = score_text_classifier(docs_df, model, "_s").select(
+        F.col("_s"), F.col("label").cast("int").alias("_y")
     )
     # parity with the pinned per-row form, quirks included: _gpos (raw
     # sum of labels) feeds n_pos exactly as the old F.sum("_y") did,
@@ -445,11 +439,11 @@ def evaluate_classifier(docs_df, model, label_col="label",
         F.sum("_cnt").alias("n"),
         F.sum("_gpos").alias("n_pos"),
         F.sum(F.col("_g1") * F.col("_avg_rank")).alias("pos_ranks"),
-        F.sum(F.when(F.col("_s") >= threshold, F.col("_g1"))
+        F.sum(F.when(F.col("_s") >= 0.5, F.col("_g1"))
               .otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_s") >= threshold, F.col("_g0"))
+        F.sum(F.when(F.col("_s") >= 0.5, F.col("_g0"))
               .otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_s") < threshold, F.col("_g0"))
+        F.sum(F.when(F.col("_s") < 0.5, F.col("_g0"))
               .otherwise(0)).alias("tn"),
     ).first()
     if agg["n"] is None:
@@ -475,8 +469,7 @@ def evaluate_classifier(docs_df, model, label_col="label",
     }
 
 
-def classifier_threshold(scored_df, keep_frac, score_col="clf_score",
-                         relative_error=0.001):
+def classifier_threshold(scored_df, keep_frac):
     """The min_clf_score that keeps ~keep_frac of a scored corpus
     (the CCNet-style data-driven cutoff -- the perplexity_thresholds
     convention from operators/lm.py): one approxQuantile driver action
@@ -484,11 +477,11 @@ def classifier_threshold(scored_df, keep_frac, score_col="clf_score",
     if not 0.0 < keep_frac <= 1.0:
         raise ValueError(f"keep_frac must be in (0, 1], got {keep_frac}")
     q = scored_df.approxQuantile(
-        score_col, [1.0 - keep_frac], relative_error
+        "clf_score", [1.0 - keep_frac], 0.001
     )
     if not q:  # approxQuantile returns [] when no non-null values exist
         raise ValueError(
-            f"no non-null {score_col!r} values to take a quantile of "
+            "no non-null 'clf_score' values to take a quantile of "
             "-- the scored frame is empty (did an upstream gate drop "
             "everything?)"
         )

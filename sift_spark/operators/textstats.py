@@ -102,6 +102,14 @@ def quality_cols(col):
 
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+# Gopher quality-rule thresholds (Rae et al. 2021, §A1.1)
+GOPHER_MIN_WORDS, GOPHER_MAX_WORDS = 50, 100_000
+GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN = 3.0, 10.0
+GOPHER_MAX_BULLET_RATIO = 0.9
+GOPHER_MAX_ELLIPSIS_RATIO = 0.3
+GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
+GOPHER_MIN_STOPWORD_HITS = 2
+C4_MIN_SENTENCES = 3  # C4 page rule (Raffel et al. 2020, §2.2)
 
 
 def _all_rules_pass(rules):
@@ -113,10 +121,7 @@ def _all_rules_pass(rules):
     return passes
 
 
-def gopher_rules_cols(col, min_words=50, max_words=100_000,
-                      min_mean_word_len=3.0, max_mean_word_len=10.0,
-                      max_bullet_ratio=0.9, max_ellipsis_ratio=0.3,
-                      min_alpha_word_ratio=0.8, min_stopword_hits=2):
+def gopher_rules_cols(col):
     """Gopher document-quality rules (Rae et al. 2021, "Scaling Language
     Models: ... Gopher", §A1.1 -- the de-facto public web-corpus filter
     set) as NATIVE boolean columns:
@@ -159,19 +164,20 @@ def gopher_rules_cols(col, min_words=50, max_words=100_000,
     ))
 
     rules = {
-        "rule_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "rule_mean_word_len": (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len),
-        "rule_bullet_lines": bullet_ratio <= max_bullet_ratio,
-        "rule_ellipsis_lines": ellipsis_ratio <= max_ellipsis_ratio,
-        "rule_alpha_words": alpha_ratio >= min_alpha_word_ratio,
-        "rule_stopwords": stop_hits >= min_stopword_hits,
+        "rule_word_count": (n_words >= GOPHER_MIN_WORDS)
+        & (n_words <= GOPHER_MAX_WORDS),
+        "rule_mean_word_len": (mean_wl >= GOPHER_MIN_MEAN_WORD_LEN)
+        & (mean_wl <= GOPHER_MAX_MEAN_WORD_LEN),
+        "rule_bullet_lines": bullet_ratio <= GOPHER_MAX_BULLET_RATIO,
+        "rule_ellipsis_lines": ellipsis_ratio <= GOPHER_MAX_ELLIPSIS_RATIO,
+        "rule_alpha_words": alpha_ratio >= GOPHER_MIN_ALPHA_WORD_RATIO,
+        "rule_stopwords": stop_hits >= GOPHER_MIN_STOPWORD_HITS,
     }
     rules["passes_gopher"] = _all_rules_pass(rules)
     return rules
 
 
-def c4_rules_cols(col, min_sentences=3):
+def c4_rules_cols(col):
     """C4 document-level heuristics (Raffel et al. 2020, "Exploring the
     Limits of Transfer Learning with a Unified Text-to-Text
     Transformer", §2.2 -- the other canonical public web-corpus filter
@@ -191,7 +197,7 @@ def c4_rules_cols(col, min_sentences=3):
         F.regexp_replace(col, r"[.!?]", "")
     )
     rules = {
-        "rule_min_sentences": n_terminal >= min_sentences,
+        "rule_min_sentences": n_terminal >= C4_MIN_SENTENCES,
         "rule_no_lorem": ~F.lower(col).contains("lorem ipsum"),
         "rule_no_brace": ~col.contains("{"),
     }
@@ -234,7 +240,7 @@ def c4_line_clean_col(col, min_words_per_line=5):
     )
 
 
-def repetition_profile(docs_df, id_col="doc_id", text_col="text"):
+def repetition_profile(docs_df):
     """Within-document repetition metrics (the other half of the Gopher
     filter set): duplicate-word fraction, most-frequent-word share, and
     most-frequent-bigram share per document.
@@ -244,10 +250,10 @@ def repetition_profile(docs_df, id_col="doc_id", text_col="text"):
     shuffled on (doc, gram) then doc -- both keys are fine-grained, so
     the shape holds at crawl scale."""
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[ \t\r\n\f]+"), lambda w: w != ""
+        F.split(F.lower(F.col("text")), r"[ \t\r\n\f]+"), lambda w: w != ""
     )
     base = docs_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words).alias("n_words"),
         F.round(
             F.when(
@@ -259,7 +265,7 @@ def repetition_profile(docs_df, id_col="doc_id", text_col="text"):
         words.alias("_w"),
     )
     grams = base.select(
-        id_col, "n_words",
+        "doc_id", "n_words",
         F.explode(
             F.flatten(F.array(
                 F.col("_w"),
@@ -275,22 +281,22 @@ def repetition_profile(docs_df, id_col="doc_id", text_col="text"):
         # zip_with pads the trailing bigram with null -- drop it
         F.col("gram").isNotNull()
     ).withColumn("is_bigram", F.col("gram").contains(" "))
-    counts = grams.groupBy(id_col, "n_words", "is_bigram", "gram").agg(
+    counts = grams.groupBy("doc_id", "n_words", "is_bigram", "gram").agg(
         F.count("*").alias("n")
     )
-    tops = counts.groupBy(id_col, "n_words", "is_bigram").agg(
+    tops = counts.groupBy("doc_id", "n_words", "is_bigram").agg(
         F.max("n").alias("top_n")
     )
-    shares = tops.groupBy(id_col, "n_words").pivot(
+    shares = tops.groupBy("doc_id", "n_words").pivot(
         "is_bigram", [False, True]
     ).agg(F.first("top_n"))
     return (
-        base.select(id_col, "dup_word_frac",
+        base.select("doc_id", "dup_word_frac",
                     F.col("n_words").alias("_nw"))
-        .join(shares, id_col, "left")
+        .join(shares, "doc_id", "left")
         .withColumn("n_words", F.coalesce(F.col("n_words"), F.col("_nw")))
         .select(
-            id_col,
+            "doc_id",
             "dup_word_frac",
             F.round(
                 F.coalesce(F.col("false"), F.lit(0))
@@ -320,8 +326,7 @@ def fingerprint_col(col):
     return F.md5(F.trim(F.regexp_replace(F.lower(col), r"[ \t\r\n\f]+", " ")))
 
 
-def winnowing_fingerprints(docs_df, k=8, window=4, id_col="doc_id",
-                           text_col="text", portable_hash=False):
+def winnowing_fingerprints(docs_df, k=8, window=4, portable_hash=False):
     """Winnowing (Schleimer et al., SIGMOD'03): k-gram hashes, keep the
     min of each SLIDING window of `window` consecutive grams, dedupe ->
     (id, fingerprint) set. Sliding (not tumbling) windows are what give
@@ -341,9 +346,9 @@ def winnowing_fingerprints(docs_df, k=8, window=4, id_col="doc_id",
     # lambda re-evaluates it for every gram position (O(doc_len^2) regex
     # work per doc) -- same hazard fixed in dedup.char_shingles
     normalized = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[ \t\r\n\f]+", " ")
+        F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n\f]+", " ")
     )
-    norm_docs = docs_df.select(F.col(id_col), normalized.alias("_t"))
+    norm_docs = docs_df.select(F.col("doc_id"), normalized.alias("_t"))
     positions = F.sequence(
         F.lit(1), F.greatest(F.length("_t") - (k - 1), F.lit(1))
     )
@@ -354,16 +359,16 @@ def winnowing_fingerprints(docs_df, k=8, window=4, id_col="doc_id",
         def gram_hash(i):
             return F.xxhash64(F.col("_t").substr(i, F.lit(k)))
     grams = norm_docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(positions, gram_hash)
         ).alias("pos", "gram_hash"),
     )
     slide = (
-        Window.partitionBy(id_col).orderBy("pos")
+        Window.partitionBy("doc_id").orderBy("pos")
         .rowsBetween(0, window - 1)
     )
-    per_doc = Window.partitionBy(id_col)
+    per_doc = Window.partitionBy("doc_id")
     return (
         grams.withColumn("win_min", F.min("gram_hash").over(slide))
         .withColumn("n_grams", F.count("*").over(per_doc))
@@ -371,20 +376,20 @@ def winnowing_fingerprints(docs_df, k=8, window=4, id_col="doc_id",
             F.col("pos")
             <= F.greatest(F.col("n_grams") - window, F.lit(0))
         )
-        .select(id_col, F.col("win_min").alias("fingerprint"))
+        .select("doc_id", F.col("win_min").alias("fingerprint"))
         .distinct()
     )
 
 
-def text_profile(docs_df, id_col="doc_id", text_col="text"):
+def text_profile(docs_df):
     """One-stop analysis table: language, quality features, token counts,
     fingerprint. Single narrow projection."""
-    quality = quality_cols(F.col(text_col))
+    quality = quality_cols(F.col("text"))
     return docs_df.select(
-        F.col(id_col),
-        lang_id_col(F.col(text_col)).alias("lang_guess"),
+        F.col("doc_id"),
+        lang_id_col(F.col("text")).alias("lang_guess"),
         *[expr.alias(name) for name, expr in quality.items()],
-        token_count_col(F.col(text_col)).alias("n_tokens"),
-        whitespace_token_count_col(F.col(text_col)).alias("n_ws_tokens"),
-        fingerprint_col(F.col(text_col)).alias("fingerprint"),
+        token_count_col(F.col("text")).alias("n_tokens"),
+        whitespace_token_count_col(F.col("text")).alias("n_ws_tokens"),
+        fingerprint_col(F.col("text")).alias("fingerprint"),
     )

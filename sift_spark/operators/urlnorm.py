@@ -109,7 +109,7 @@ def registered_domain_col(host_col):
     )
 
 
-def filter_blocked_hosts(docs_df, blocked, url_col="url", by="domain"):
+def filter_blocked_hosts(docs_df, blocked, by="domain"):
     """Drop documents whose url host (by='host') or registered domain
     (by='domain', default -- blocks every subdomain of a listed site)
     appears in a blocklist -- the standard crawl hygiene gate (UT1-class
@@ -144,7 +144,7 @@ def filter_blocked_hosts(docs_df, blocked, url_col="url", by="domain"):
     # re-evaluate the host regexp ~8x per corpus row inside the join
     # key (same CollapseProject behavior the char_shingles two-step
     # guards against)
-    with_key = docs_df.withColumn("_bl_host", url_host_col(F.col(url_col)))
+    with_key = docs_df.withColumn("_bl_host", url_host_col(F.col("url")))
     key = (registered_domain_col(F.col("_bl_host")) if by == "domain"
            else F.col("_bl_host"))
     return with_key.withColumn("_bl_key", key).join(

@@ -32,14 +32,14 @@ from pyspark.sql import functions as F
 DEFAULT_FAT_ROW_BYTES = 4 * 1024 * 1024  # pages above 4 MB are "fat"
 
 
-def part_id_col(n_parts, url_col="url"):
+def part_id_col(n_parts):
     """Stable logical work-unit id: pmod(xxhash64(url), n_parts)."""
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_parts)).cast("int")
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_parts)).cast("int")
 
 
-def host_col(url_col="url"):
+def host_col():
     """scheme://host/... -> host (cheap regexp, no UDF)."""
-    return F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://([^/]+)", 1)
+    return F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://([^/]+)", 1)
 
 
 def with_part_id(pages_df, n_parts):

@@ -21,7 +21,6 @@ def get_spark(
     app_name="sift-spark",
     cores=None,
     shuffle_partitions=None,
-    arrow_batch_rows=256,
     extra_conf=None,
 ):
     master = f"local[{cores}]" if cores else "local[*]"
@@ -56,9 +55,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.default.parallelism", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

@@ -132,9 +132,9 @@ def big_page_html(k, n_sections=None, scale=1):
 </html>"""
 
 
-def big_rows(n_pages, start=0):
+def big_rows(n_pages):
     rows = []
-    for k in range(start, start + n_pages):
+    for k in range(n_pages):
         html = big_page_html(k)
         rows.append(
             (f"synthetic://big-{k}",
@@ -171,31 +171,25 @@ def build_big_pages_df(spark, n_pages, n_partitions=None, section_scale=1):
     )
 
 
-def build_pages_df(spark, n_big=0, include_fixtures=True, n_partitions=None):
+def build_pages_df(spark, n_big=0, include_fixtures=True):
     rows = fixture_rows() if include_fixtures else []
     rows += big_rows(n_big)
-    df = spark.createDataFrame(rows, PAGES_SCHEMA)
-    if n_partitions:
-        df = df.repartition(n_partitions)
-    return df
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
 
 
-def pages_from_documents(spark, sf_dir, n_partitions=None):
+def pages_from_documents(spark, sf_dir):
     """Wrap the driver testdata `documents` table into a deterministic
     `pages` table: each document's text becomes paragraphs inside the
     standard blog chrome. Pure column transforms (no UDF): HTML assembly
     is a concat expression, so the scan stays JVM-side."""
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if n_partitions is None:
-        # the sf* documents parquet is a single small file -> ONE scan
-        # partition. Spread BEFORE the html-assembly projection, or the
-        # concat/regexp runs serially on that one partition (measured:
-        # 3 s serial vs 0.3 s distributed at sf0.1/local[32]).
-        n_partitions = spark.sparkContext.defaultParallelism
-    if n_partitions:
-        docs = docs.repartition(n_partitions, "doc_id")
+    # the sf* documents parquet is a single small file -> ONE scan
+    # partition. Spread BEFORE the html-assembly projection, or the
+    # concat/regexp runs serially on that one partition (measured:
+    # 3 s serial vs 0.3 s distributed at sf0.1/local[32]).
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id")
     html = F.concat(
         F.lit("<html><head><title>Doc "), F.col("doc_id").cast("string"),
         F.lit("</title></head><body>"

@@ -157,6 +157,7 @@ def iter_warc_pages(data, warc_file=""):
 
 
 _PAGE_COLUMNS = ["url", "warc_ts", "html", "warc_file", "error"]
+BATCH_BYTES = 64 * 1024 * 1024  # html bytes per Arrow batch, at most
 
 
 def _page_batches(data, warc_file, batch_records, batch_bytes):
@@ -182,8 +183,7 @@ def _page_batches(data, warc_file, batch_records, batch_bytes):
         yield pd.DataFrame(rows, columns=_PAGE_COLUMNS)
 
 
-def read_warc(spark, path_or_df, batch_records=1000,
-              batch_bytes=64 * 1024 * 1024):
+def read_warc(spark, path_or_df, batch_records=1000):
     """WARC files at a path (glob ok; .warc or .warc.gz) -- or an
     already-loaded binaryFile DataFrame -> DataFrame (url, warc_ts,
     html, warc_file, error): the pages-table shape plus provenance. One
@@ -191,7 +191,7 @@ def read_warc(spark, path_or_df, batch_records=1000,
     WARC-Date ISO form natively after the UDF.
 
     Pages stream out of each file in Arrow batches of at most
-    `batch_records` pages / `batch_bytes` of html (see _page_batches),
+    `batch_records` pages / BATCH_BYTES of html (see _page_batches),
     so peak per-task memory is the COMPRESSED file plus one batch --
     not the whole decompressed segment."""
     if isinstance(path_or_df, str):
@@ -203,7 +203,7 @@ def read_warc(spark, path_or_df, batch_records=1000,
         for pdf in iterator:
             for warc_file, content in zip(pdf["path"], pdf["content"]):
                 yield from _page_batches(
-                    bytes(content), warc_file, batch_records, batch_bytes
+                    bytes(content), warc_file, batch_records, BATCH_BYTES
                 )
 
     parsed_schema = T.StructType(

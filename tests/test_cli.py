@@ -209,6 +209,23 @@ def test_admission_cap_has_one_home():
     assert found == {"operators/extract.py:_admit"}, sorted(found)
 
 
+def _call_site_trees(tests=False):
+    """(repo-relative path, parsed AST) of every file that calls into
+    sift_spark/: the package itself, the three root scripts, scripts/
+    and perfbench/, plus tests/ when `tests` is true."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    paths = sorted((repo / "sift_spark").rglob("*.py"))
+    paths += [repo / name for name in (
+        "__spark_entry__.py", "bench.py", "submit_job.py")]
+    for folder in ("scripts", "perfbench", *(("tests",) if tests else ())):
+        paths += sorted((repo / folder).rglob("*.py"))
+    return [(path.relative_to(repo).as_posix(), ast.parse(path.read_text()))
+            for path in paths]
+
+
 def test_public_surface_has_callers_or_reasons():
     """Every public top-level def/class in sift_spark/ is either used by
     a non-test file or listed, with its reason, in STATUS.md's
@@ -218,23 +235,18 @@ def test_public_surface_has_callers_or_reasons():
     import re
     from pathlib import Path
 
-    repo = Path(__file__).resolve().parent.parent
-    package = sorted((repo / "sift_spark").rglob("*.py"))
+    trees = _call_site_trees()
     defined = {
         node.name
-        for path in package
-        for node in ast.parse(path.read_text()).body
+        for path, tree in trees if path.startswith("sift_spark/")
+        for node in tree.body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                              ast.ClassDef))
         and not node.name.startswith("_")
     }
-    non_test = [*package, *(repo / name for name in (
-        "__spark_entry__.py", "bench.py", "submit_job.py"))]
-    for folder in ("scripts", "perfbench"):
-        non_test += sorted((repo / folder).rglob("*.py"))
     used = set()
-    for path in non_test:
-        for node in ast.walk(ast.parse(path.read_text())):
+    for _, tree in trees:
+        for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):
@@ -242,10 +254,80 @@ def test_public_surface_has_callers_or_reasons():
             elif isinstance(node, ast.alias):
                 used.add(node.name.rsplit(".", 1)[-1])
 
-    status = (repo / "STATUS.md").read_text()
+    status = (Path(__file__).resolve().parent.parent / "STATUS.md").read_text()
     table = status.split("\n## Test-only by design\n", 1)[1]
     table = table.split("\n#", 1)[0]
     listed = set(re.findall(r"^\| `(\w+)` \|", table, re.M))
     assert defined - used == listed, (
         f"uncalled and unlisted: {sorted(defined - used - listed)}; "
         f"listed but called or gone: {sorted(listed - (defined - used))}")
+
+
+def test_every_option_has_a_caller():
+    """Every optional parameter of a top-level def in sift_spark/ is set,
+    positionally or by keyword, by at least one call site in the package,
+    the root scripts, scripts/, perfbench/ or tests/ (a `**kwargs` call
+    sets them all). A call through a local name counts for every package
+    function its enclosing def lists in a tuple, list or dict literal:
+    that is a dispatch table (`for fn in (f, g): fn(x, k=1)`). An option
+    nobody sets is a constant: its default belongs in the code, not in
+    the signature."""
+    import ast
+
+    options = {}
+    for module, tree in _call_site_trees():
+        if not module.startswith("sift_spark/"):
+            continue
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = node.args
+            positional = [a.arg for a in (*args.posonlyargs, *args.args)]
+            optional = positional[len(positional) - len(args.defaults):]
+            optional += [a.arg for a, default in zip(args.kwonlyargs,
+                                                     args.kw_defaults)
+                         if default is not None]
+            for name in optional:
+                options[(module, node.name, name)] = positional
+
+    by_function = {}
+    for key in options:
+        by_function.setdefault(key[1], []).append(key)
+
+    def name_of(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    set_ = set()
+
+    def mark(call, functions):
+        keywords = {k.arg for k in call.keywords}
+        n_positional = (float("inf") if any(
+            isinstance(a, ast.Starred) for a in call.args)
+            else len(call.args))
+        for key in (k for f in functions for k in by_function.get(f, ())):
+            positional = options[key]
+            if (None in keywords or key[2] in keywords
+                    or (key[2] in positional
+                        and positional.index(key[2]) < n_positional)):
+                set_.add(key)
+
+    for _, tree in _call_site_trees(tests=True):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                mark(node, [name_of(node.func)])
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                table = {
+                    name_of(e) for lit in ast.walk(node)
+                    if isinstance(lit, (ast.Tuple, ast.List, ast.Dict))
+                    for e in (lit.values if isinstance(lit, ast.Dict)
+                              else lit.elts)
+                } & set(by_function)
+                for call in ast.walk(node):
+                    if (table and isinstance(call, ast.Call)
+                            and isinstance(call.func, ast.Name)
+                            and call.func.id not in by_function):
+                        mark(call, table)
+    unset = sorted(set(options) - set_)
+    assert not unset, (
+        f"{len(unset)} of {len(options)} options no call site sets:\n"
+        + "\n".join(f"{m}:{f}({o}=)" for m, f, o in unset))

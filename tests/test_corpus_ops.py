@@ -3151,9 +3151,13 @@ def test_embedding_against_seen_width_asserted_in_plan(spark):
 
 
 def test_embedding_against_seen_lazy_with_dim_and_typed_empty(spark):
-    """Passing dim keeps the call fully lazy (no driver probe jobs);
-    the empty-new early return carries the id column's REAL type."""
-    from sift_spark.operators.similarity import embedding_seen_matches
+    """Passing dim keeps the call fully lazy (no driver probe jobs), for
+    the matcher and the drop alike; the empty-new early return carries
+    the id column's REAL type."""
+    from sift_spark.operators.similarity import (
+        dedup_against_seen_embedding,
+        embedding_seen_matches,
+    )
 
     week1 = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
@@ -3161,6 +3165,7 @@ def test_embedding_against_seen_lazy_with_dim_and_typed_empty(spark):
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
     embedding_seen_matches(week1, week1, dim=4)
+    dedup_against_seen_embedding(week1, week1, dim=4)
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert before == after  # plan-building ran zero Spark jobs
     s_new = spark.createDataFrame([], "vec_id string, embedding array<float>")
@@ -3170,6 +3175,36 @@ def test_embedding_against_seen_lazy_with_dim_and_typed_empty(spark):
     out = embedding_seen_matches(s_new, s_seen)
     assert out.schema["new_id"].dataType.simpleString() == "string"
     assert out.count() == 0
+
+
+def test_embedding_against_seen_reports_its_bucket_cap(spark):
+    """dedup_against_seen_embedding caps the snapshot's buckets at 1000
+    rows and reports what the cap dropped through `observation`: a
+    re-shipped vector whose only match sits in a 1001-row bucket
+    survives, and the observation says why. The opposite vector's
+    small bucket still drops its re-ship (and keeps the match side
+    non-empty, so AQE cannot prune the observation)."""
+    from sift_spark.operators.dedup import (
+        bucket_cap_observation,
+        report_bucket_cap,
+    )
+    from sift_spark.operators.similarity import dedup_against_seen_embedding
+
+    schema = "vec_id long, embedding array<double>"
+    hot = F.array(*[F.lit(x) for x in (1.0, 0.0, 0.0, 0.0)])
+    seen = spark.range(1001).select(
+        F.col("id").alias("vec_id"), hot.alias("embedding")
+    ).unionByName(spark.createDataFrame([(9999, [-1.0, 0.0, 0.0, 0.0])],
+                                        schema))
+    new = spark.createDataFrame(
+        [(5000, [1.0, 0.0, 0.0, 0.0]), (5001, [-1.0, 0.0, 0.0, 0.0])],
+        schema)
+    obs = bucket_cap_observation("embedding_seen_cap")
+    kept = dedup_against_seen_embedding(new, seen, dim=4, observation=obs)
+    assert [r["vec_id"] for r in kept.collect()] == [5000]
+    assert report_bucket_cap(obs) == {
+        "n_dropped_rows": 1001, "largest_bucket": 1001,
+    }
 
 
 def test_embedding_against_seen_plan_is_bucket_equijoin(spark):

@@ -466,14 +466,19 @@ def test_curation_sink_reads_the_staged_gate_batch(
     assert scorer_nodes(plans[out2]) == 0
 
 
-def test_simhash_near_duplicates_hashes_once_and_caches_nothing(spark):
-    """simhash_near_duplicates evaluates simhash64_udf once per row and
-    caches nothing: after the action the executed plan holds one
-    ArrowEvalPython node (the other join branch reads it through a
-    ReusedExchange), no RDD stays persisted, and the pairs equal an
-    all-pairs Hamming filter over the same hashes, with the cap on and
-    off."""
+@pytest.mark.parametrize(
+    "operator", ["simhash_near_duplicates", "dedup_against_seen_simhash"])
+def test_simhash_near_duplicates_hashes_once_and_caches_nothing(
+        spark, operator):
+    """Both simhash near-dup operators evaluate simhash64_udf once per
+    row and cache nothing: after the action the executed plan holds one
+    ArrowEvalPython node and no RDD stays persisted. The in-batch pairs
+    (cap on and off; the other join branch reads the hashes through a
+    ReusedExchange) equal an all-pairs Hamming filter over the same
+    hashes; the seen loop keeps exactly the docs more than 3 bits from
+    every snapshot hash."""
     from sift_spark.operators.dedup import (
+        dedup_against_seen_simhash,
         simhash64_udf,
         simhash_near_duplicates,
     )
@@ -494,14 +499,32 @@ def test_simhash_near_duplicates_hashes_once_and_caches_nothing(spark):
     }
     assert len(expected) >= 7  # the 4 copies, the near copy and more
 
+    def final_plan(df):
+        return (df._jdf.queryExecution().executedPlan().toString()
+                .split("== Initial Plan ==")[0])
+
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    for cap in (None, 1000):
-        pairs = simhash_near_duplicates(docs, max_bucket_size=cap)
-        got = {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs.collect()}
-        assert got == expected
-        final = (pairs._jdf.queryExecution().executedPlan().toString()
-                 .split("== Initial Plan ==")[0])
+    if operator == "simhash_near_duplicates":
+        for cap in (None, 1000):
+            pairs = simhash_near_duplicates(docs, max_bucket_size=cap)
+            got = {(r["id_a"], r["id_b"], r["hamming"])
+                   for r in pairs.collect()}
+            assert got == expected
+            final = final_plan(pairs)
+            assert final.count("ArrowEvalPython") == 1, final
+            assert "ReusedExchange" in final, final
+    else:
+        snapshot = [hashes[0], hashes[11], hashes[20]]
+        seen = spark.createDataFrame(
+            [(100 + i, h) for i, h in enumerate(snapshot)],
+            "doc_id long, simhash long")
+        kept = dedup_against_seen_simhash(docs, seen)
+        assert {r["doc_id"] for r in kept.collect()} == {
+            d for d, h in hashes.items()
+            if all(bin((h ^ s) & (2**64 - 1)).count("1") > 3
+                   for s in snapshot)
+        }
+        final = final_plan(kept)
         assert final.count("ArrowEvalPython") == 1, final
-        assert "ReusedExchange" in final, final
     assert jsc.getPersistentRDDs().size() == before
