@@ -80,6 +80,13 @@ def run_extraction_job(
     return lineage.commit(spark, extracted, bytes_in, output_dir, run_id)
 
 
+# `extract` and `crawl-curate` settings no flag sets: whole pages, in
+# words (the reference CLI's 2500 tokens size one page for a terminal)
+_EXTRACT_DEFAULTS = dict(selector="", include_all=False, max_units=0,
+                         method="words", strategy="beginning", search="",
+                         context_before=1, context_after=2, context_units=0)
+
+
 def _build_params(args):
     method = {"tokens": TOKENS, "words": WORDS, "chars": CHARS}[args.method]
     return SiftParams(
@@ -238,8 +245,8 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     The gated batch (gates + optional redaction) is STAGED: written as
     parquet under the run-scoped directory `output_dir +
     "_gated-<uuid12>"` and read back, so the Python scorers run once
-    per document however many branches the seen loops and dedup_exact
-    read. The span and DSIR inputs are staged in the same directory.
+    per document however many branches the near-dup seen loops read.
+    The span and DSIR inputs are staged in the same directory.
     It is deleted once the curated and snapshot sinks are written, and
     also when one of those writes raises. Reading staged data back
     makes every column nullable, so sink schemas may differ from the
@@ -338,8 +345,8 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
         gated = redact_pii(gated).drop("text").withColumnRenamed(
             "text_redacted", "text"
         )
-    # GATE ONCE, THEN DEDUPLICATE: the seen loops, dedup_exact, span
-    # and DSIR each read their input on several branches, and every
+    # GATE ONCE, THEN DEDUPLICATE: the near-dup seen loops, span and
+    # DSIR each read their input on several branches, and every
     # branch would re-run the lineage above it (the LM scorer once per
     # branch). Staged parquet runs it once; persist() measured slower
     # and localCheckpoint() blocks die with their executor. rstrip: a
@@ -362,10 +369,9 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             # bytes per historical doc) or raw docs carrying `text`.
             from .operators.dedup import dedup_against_seen
 
-            seen_kwargs = ({} if "content_hash" in seen_df.columns
-                           else {"seen_text_col": "text"})
             curated = observed(
-                dedup_against_seen(curated, seen_df, **seen_kwargs),
+                dedup_against_seen(curated, seen_df, seen_text_col=(
+                    None if "content_hash" in seen_df.columns else "text")),
                 "after_seen_dedup",
             )
         if seen_sigs_df is not None:
@@ -400,9 +406,9 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
                 "after_seen_simhash",
             )
         if dedup:
-            # dedup_exact keeps min-id per content hash via a content-hash
-            # equi-join -- NO keeper broadcast (the keeper set is
-            # corpus-sized at crawl scale)
+            # dedup_exact keeps min-id per content hash with one window
+            # over its input -- one read, NO keeper broadcast or join
+            # (the keeper set is corpus-sized at crawl scale)
             curated = observed(dedup_exact(curated), "after_dedup")
         pre_span = None
         if span_k:
@@ -858,8 +864,9 @@ def run_crawl_curate_job(spark, warc_input, output_root,
       so blocked bytes never reach the UDF; re-applied over the
       extracted table too, so a blocklist added or grown between runs
       still takes effect on segments resume skips) ->
-      run_extraction_job (salted url-hash partitioning,
-      per-part lineage + RESUME into `{output_root}_extracted`) ->
+      run_extraction_job (`extract`'s settings unless `params` is
+      given; salted url-hash partitioning, per-part lineage + RESUME
+      into `{output_root}_extracted`) ->
       run_curation_job (gates -> PII -> dedup -> decontam -> span ->
       mix -> pack, each optional via `curation_kwargs`) writing the
       curated corpus to `output_root` plus `_packed`/`_tokens` when a
@@ -897,6 +904,7 @@ def run_crawl_curate_job(spark, warc_input, output_root,
         # the extraction UDF (broadcast anti-join on the registered
         # domain by default -- blocks every subdomain)
         pages = filter_blocked_hosts(pages, block_hosts, by=block_by)
+    params = params or _build_params(argparse.Namespace(**_EXTRACT_DEFAULTS))
     lineage_metrics = run_extraction_job(
         spark, pages, extracted_dir, params=params, n_parts=n_parts,
         resume=resume,
@@ -917,10 +925,10 @@ def run_crawl_curate_job(spark, warc_input, output_root,
                                          by=block_by)
     # ONE representative per url before minting ids: a re-crawled or
     # revisited url appears in multiple WARC records, and two docs
-    # sharing doc_id = xxhash64(url) would defeat dedup_exact's
-    # (content_hash, id) keeper join and fan out every downstream
-    # doc_id equi-join (span stage, packing). Keeper = min md5(text)
-    # -- content-deterministic across runs and partitionings; a
+    # sharing doc_id = xxhash64(url) would both survive dedup_exact
+    # (it keeps every row at its group's min id) and fan out every
+    # downstream doc_id equi-join (span stage, packing). Keeper = min
+    # md5(text) -- content-deterministic across runs and partitionings; a
     # freshness policy (latest warc_ts wins) would need the timestamp
     # threaded through the extraction schema, which the driver
     # contract pins. One url-keyed shuffle of the extracted TEXT table
@@ -970,6 +978,7 @@ def crawl_curate_main(argv=None):
                         choices=["domain", "host"],
                         help="match blocklist entries by registered "
                              "domain (blocks subdomains) or exact host")
+    parser.set_defaults(**_EXTRACT_DEFAULTS)
     _add_curation_args(parser)
     args = parser.parse_args(argv)
 
@@ -978,7 +987,7 @@ def crawl_curate_main(argv=None):
             spark,
             args.input,
             args.output,
-            params=SiftParams(selector=args.selector or ""),
+            params=_build_params(args),
             n_parts=args.n_parts,
             resume=not args.no_resume,
             block_hosts=(spark.read.text(args.block_hosts)
@@ -1007,21 +1016,20 @@ def main(argv=None):
     if argv and argv[0] == "train-clf":
         return train_clf_main(argv[1:])
     parser = argparse.ArgumentParser(description="sift-spark extraction job")
+    parser.set_defaults(**_EXTRACT_DEFAULTS)
     parser.add_argument("--input", required=True, help="pages parquet path")
     parser.add_argument("--output", required=True, help="output directory")
     parser.add_argument("--n-parts", type=int, default=64)
     parser.add_argument("--no-resume", action="store_true")
-    parser.add_argument("--selector", default="")
+    parser.add_argument("--selector")
     parser.add_argument("--include-all", action="store_true")
-    parser.add_argument("--max-units", type=int, default=0)
-    parser.add_argument("--method", default="words",
-                        choices=["tokens", "words", "chars"])
-    parser.add_argument("--strategy", default="beginning",
-                        choices=["beginning", "middle", "end"])
-    parser.add_argument("--search", default="")
-    parser.add_argument("--context-before", type=int, default=1)
-    parser.add_argument("--context-after", type=int, default=2)
-    parser.add_argument("--context-units", type=int, default=0)
+    parser.add_argument("--max-units", type=int)
+    parser.add_argument("--method", choices=["tokens", "words", "chars"])
+    parser.add_argument("--strategy", choices=["beginning", "middle", "end"])
+    parser.add_argument("--search")
+    parser.add_argument("--context-before", type=int)
+    parser.add_argument("--context-after", type=int)
+    parser.add_argument("--context-units", type=int)
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
 

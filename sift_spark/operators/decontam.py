@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def ngram_decontaminate(corpus_df, benchmark_df, n=13,
-                        id_col="doc_id", text_col="text",
-                        bench_text_col=None):
+def ngram_decontaminate(corpus_df, benchmark_df, n=13):
     """(doc_id, n_matched_grams, n_grams, contamination) for every
     corpus document sharing at least one word n-gram with the benchmark
     set; contamination = matched/total grams rounded to 6 places. Docs
@@ -42,21 +40,20 @@ def ngram_decontaminate(corpus_df, benchmark_df, n=13,
     from .dedup import word_ngram_array
 
     bench_grams = (
-        benchmark_df.filter(F.col(bench_text_col or text_col).isNotNull())
+        benchmark_df.filter(F.col("text").isNotNull())
         .select(
             F.explode(
                 F.array_distinct(
-                    word_ngram_array(bench_text_col or text_col, n,
-                                     skip_short=True)
+                    word_ngram_array("text", n, skip_short=True)
                 )
             ).alias("gram")
         )
         .distinct()
     )
-    per_doc = corpus_df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
+    per_doc = corpus_df.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("_id"),
         F.array_distinct(
-            word_ngram_array(text_col, n, skip_short=True)
+            word_ngram_array("text", n, skip_short=True)
         ).alias("_grams"),
     )
     exploded = per_doc.select(
@@ -69,7 +66,7 @@ def ngram_decontaminate(corpus_df, benchmark_df, n=13,
         .groupBy("_id", "n_grams")  # grams already distinct per doc
         .agg(F.count("*").alias("n_matched_grams"))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_matched_grams",
             "n_grams",
             F.round(
@@ -79,12 +76,11 @@ def ngram_decontaminate(corpus_df, benchmark_df, n=13,
     )
 
 
-def remove_contaminated(corpus_df, benchmark_df, n=13, **kwargs):
+def remove_contaminated(corpus_df, benchmark_df, n=13):
     """The filter form: corpus minus documents with >= 1 benchmark gram
     collision (left_anti join on the flagged ids)."""
-    flagged = ngram_decontaminate(
-        corpus_df, benchmark_df, n=n, **kwargs
-    ).filter(F.col("n_matched_grams") >= 1)
+    flagged = ngram_decontaminate(corpus_df, benchmark_df, n=n).filter(
+        F.col("n_matched_grams") >= 1)
     return corpus_df.join(
         flagged.select("doc_id"), "doc_id", "left_anti"
     )

@@ -59,18 +59,20 @@ def exact_duplicates(docs_df):
 
 
 def dedup_exact(docs_df):
-    """Keep one representative per exact-duplicate group (the min id).
-    Null-text rows pass through untouched: md5(null) is null and a
-    null-unsafe equi-join would silently DROP every errored row."""
-    with_text = docs_df.filter(F.col("text").isNotNull())
-    null_text = docs_df.filter(F.col("text").isNull())
-    # 16-byte binary key: the hash exists only to be shuffled on
-    hashed = with_text.withColumn(
-        "content_hash", content_hash_col("text")
-    )
-    keep = hashed.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    kept = hashed.join(keep, ["content_hash", "doc_id"]).drop("content_hash")
-    return kept.unionByName(null_text)
+    """Keep one representative per exact-duplicate group (the min id) in
+    one read of the input: keep `text IS NULL OR doc_id = min(doc_id)
+    over (partition by content hash)`. Null-text rows pass through
+    (md5(null) is null; they are not content), a null id never matches,
+    and rows repeating the minimum id are all kept.
+
+    Trade-off: the window puts each exact-duplicate group in one task,
+    which AQE's skew-join split (on in session.py) cannot divide as it
+    could a keeper join. perfbench's hot cluster (1200 identical docs)
+    is one such group."""
+    keeper = F.min("doc_id").over(
+        Window.partitionBy(content_hash_col("text")))
+    keep = F.col("text").isNull() | (F.col("doc_id") == F.col("_keeper"))
+    return docs_df.withColumn("_keeper", keeper).filter(keep).drop("_keeper")
 
 
 def content_hash_col(text_col):
@@ -81,16 +83,14 @@ def content_hash_col(text_col):
     return F.unhex(F.md5(normalized_text_col(col)))
 
 
-def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
-                       text_col="text", seen_text_col=None,
-                       seen_hash_col="content_hash"):
+def dedup_against_seen(docs_df, seen_df, seen_text_col=None):
     """INCREMENTAL exact dedup: drop documents whose normalized content
     already exists in a prior corpus snapshot -- the weekly-crawl
     pattern (each new crawl dedups against everything already curated
     without reprocessing it). Compose with :func:`dedup_exact` for
     within-batch duplicates: `dedup_exact(dedup_against_seen(new, seen))`.
 
-    seen_df: either a compact hash table carrying `seen_hash_col`
+    seen_df: either a compact hash table carrying `content_hash`
     (binary, from :func:`content_hash_col` -- persist THAT, 16 bytes
     per historical doc, not the text), or raw documents (pass
     seen_text_col and the hash is computed on the fly).
@@ -117,7 +117,8 @@ def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
     600 hashes up to 300k vs 5M).
     The bucketed snapshot is the long-lived join state instead.
 
-    Null-text rows pass through (same contract as dedup_exact)."""
+    Null-text rows pass through (same contract as dedup_exact): the
+    left_anti join keeps a row whose null hash matches nothing."""
     if seen_text_col is not None:
         seen_hashes = seen_df.select(
             content_hash_col(seen_text_col).alias("_seen_hash")
@@ -135,31 +136,26 @@ def dedup_against_seen(docs_df, seen_df, id_col="doc_id",
         # and turn a miss into the contract's loud ValueError
         seen_field = next(
             (f for f in seen_df.schema.fields
-             if f.name.lower() == seen_hash_col.lower()), None,
+             if f.name.lower() == "content_hash"), None,
         )
         if seen_field is None:
             raise ValueError(
-                f"seen hash column {seen_hash_col!r} not found in "
+                "seen hash column 'content_hash' not found in "
                 f"seen_df (columns: {seen_df.columns})"
             )
         if isinstance(seen_field.dataType, T.BinaryType):
-            seen_key = F.col(seen_hash_col)
+            seen_key = F.col("content_hash")
         elif isinstance(seen_field.dataType, T.StringType):
-            seen_key = F.unhex(F.col(seen_hash_col))
+            seen_key = F.unhex(F.col("content_hash"))
         else:
             raise ValueError(
-                f"seen hash column {seen_hash_col!r} must be binary "
+                "seen hash column 'content_hash' must be binary "
                 f"or hex string, got {seen_field.dataType}"
             )
         seen_hashes = seen_df.select(seen_key.alias("_seen_hash"))
-    with_text = docs_df.filter(F.col(text_col).isNotNull())
-    null_text = docs_df.filter(F.col(text_col).isNull())
-    hashed = with_text.withColumn("_chash", content_hash_col(text_col))
-    kept = hashed.join(
-        seen_hashes, F.col("_chash") == F.col("_seen_hash"),
-        "left_anti",
+    return docs_df.withColumn("_chash", content_hash_col("text")).join(
+        seen_hashes, F.col("_chash") == F.col("_seen_hash"), "left_anti",
     ).drop("_chash")
-    return kept.unionByName(null_text)
 
 
 def write_seen_bucketed(seen_df, table, n_buckets=None, path=None):

@@ -169,8 +169,7 @@ def _doc_scores(feats, labels_df, id_col, weights, intercept, link):
 
 def train_text_classifier(docs_df, label_col="label",
                           n_buckets=DEFAULT_BUCKETS, n_iter=8,
-                          lr=None, link="logistic", id_col="doc_id",
-                          text_col="text"):
+                          lr=None, link="logistic", text_col="text"):
     """Fit the classifier on a labelled corpus (label in {0, 1}).
 
     Returns `{"intercept": b, "weights": {bucket: w}, "n_buckets": B,
@@ -180,16 +179,16 @@ def train_text_classifier(docs_df, label_col="label",
     if link not in _LINKS:
         raise ValueError(f"unknown link {link!r}")
     labels = docs_df.select(
-        F.col(id_col), F.col(label_col).cast("double").alias("__y")
+        F.col("doc_id"), F.col(label_col).cast("double").alias("__y")
     ).persist()
     # one synthetic bucket=-1 row per doc with x=1 folds the intercept
     # gradient (sum of residuals) into the SAME per-bucket aggregation
     # as the weight gradients -- ONE job per step instead of two
     feats = doc_feature_table(
-        docs_df, n_buckets, id_col, text_col
+        docs_df, n_buckets, "doc_id", text_col
     ).unionByName(
         labels.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(_INTERCEPT_BUCKET).cast("long").alias("bucket"),
             F.lit(1.0).alias("x"),
         )
@@ -202,12 +201,12 @@ def train_text_classifier(docs_df, label_col="label",
         intercept, weights = 0.0, {}
         for _ in range(n_iter):
             scored = _doc_scores(
-                feats, labels, id_col, weights, intercept, link
+                feats, labels, "doc_id", weights, intercept, link
             ).select(
-                F.col(id_col), (F.col("p") - F.col("__y")).alias("_d")
+                F.col("doc_id"), (F.col("p") - F.col("__y")).alias("_d")
             )
             grad = (
-                feats.join(scored, id_col)
+                feats.join(scored, "doc_id")
                 .groupBy("bucket")
                 .agg(F.sum(F.col("_d") * F.col("x")).alias("g"))
                 .collect()

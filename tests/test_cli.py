@@ -266,9 +266,12 @@ def test_public_surface_has_callers_or_reasons():
 def test_every_option_has_a_caller():
     """Every optional parameter of a top-level def in sift_spark/ is set,
     positionally or by keyword, by at least one call site in the package,
-    the root scripts, scripts/, perfbench/ or tests/ (a `**kwargs` call
-    sets them all). A call through a local name counts for every package
-    function its enclosing def lists in a tuple, list or dict literal:
+    the root scripts, scripts/, perfbench/ or tests/. A `**kwargs` call
+    sets only the names some file spells as a string key of a dict
+    literal or as a keyword of a `dict(...)` call, so a splat that only
+    forwards its caller's `**kw` sets nothing. A call through a local
+    name counts for every package function its enclosing def lists in a
+    tuple, list or dict literal:
     that is a dispatch table (`for fn in (f, g): fn(x, k=1)`). An option
     nobody sets is a constant: its default belongs in the code, not in
     the signature."""
@@ -297,21 +300,34 @@ def test_every_option_has_a_caller():
     def name_of(node):
         return getattr(node, "id", None) or getattr(node, "attr", None)
 
+    trees = _call_site_trees(tests=True)
+    splat_keys = set()
+    for _, tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Dict):
+                splat_keys.update(k.value for k in node.keys
+                                  if isinstance(k, ast.Constant)
+                                  and isinstance(k.value, str))
+            elif isinstance(node, ast.Call) and name_of(node.func) == "dict":
+                splat_keys.update(k.arg for k in node.keywords if k.arg)
+
     set_ = set()
 
     def mark(call, functions):
         keywords = {k.arg for k in call.keywords}
+        if None in keywords:
+            keywords |= splat_keys
         n_positional = (float("inf") if any(
             isinstance(a, ast.Starred) for a in call.args)
             else len(call.args))
         for key in (k for f in functions for k in by_function.get(f, ())):
             positional = options[key]
-            if (None in keywords or key[2] in keywords
+            if (key[2] in keywords
                     or (key[2] in positional
                         and positional.index(key[2]) < n_positional)):
                 set_.add(key)
 
-    for _, tree in _call_site_trees(tests=True):
+    for _, tree in trees:
         for node in ast.walk(tree):
             if isinstance(node, ast.Call):
                 mark(node, [name_of(node.func)])

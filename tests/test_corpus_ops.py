@@ -1369,8 +1369,12 @@ def test_canonical_url_is_idempotent(spark):
 
 def test_dedup_exact_passes_null_text_through(spark):
     """md5(null) is null: null-text rows (errored extractions) must pass
-    through dedup untouched instead of vanishing in the null-unsafe
-    equi-join, and must not form a fake duplicate group."""
+    through dedup untouched, and must not form a fake duplicate group.
+    A row that repeats its group's minimum id is kept with it, and a
+    non-null-text row with a null id is dropped, even as the only row
+    of its group."""
+    from collections import Counter
+
     from sift_spark.operators.dedup import dedup_exact, exact_duplicates
 
     rows = [(1, "same text"), (2, "same text"), (3, None), (4, None),
@@ -1381,6 +1385,12 @@ def test_dedup_exact_passes_null_text_through(spark):
     groups = exact_duplicates(df).collect()
     assert all(g["content_hash"] is not None for g in groups)
     assert sum(g["n_dups"] for g in groups) == 3  # nulls excluded
+
+    edge = spark.createDataFrame(
+        rows + [(1, "same text"), (None, "other"), (None, "orphan")],
+        "doc_id long, text string")
+    kept = Counter(r["doc_id"] for r in dedup_exact(edge).collect())
+    assert kept == Counter({1: 2, 3: 1, 4: 1, 5: 1})
 
 
 def test_band_table_validates_band_count(spark):
@@ -1859,6 +1869,9 @@ def test_curate_and_crawl_curate_map_flags_identically(
     own = {k: crawl.pop(k) for k in
            ("params", "n_parts", "resume", "block_hosts", "block_by")}
     assert own["n_parts"] == 3 and own["resume"] is True
+    # the `extract` job's size defaults: whole pages, counted in words
+    assert (own["params"].max_units, own["params"].counting_method) == (
+        0, "words")
     assert normalized(crawl) == normalized(captured["curate"])
     assert set(crawl) == curation_keywords
     assert crawl["seen_df"] is not None and crawl["dedup"] is False
@@ -2733,10 +2746,16 @@ def test_dedup_against_seen(spark):
             dedup_against_seen(new_docs, snapshot).collect()}
     assert kept == {11, 12}
 
-    # raw-document seen input computes the hashes on the fly
+    # raw-document seen input computes the hashes on the fly; a
+    # null-text seen row hashes to null and matches nothing
     kept2 = {r["doc_id"] for r in dedup_against_seen(
         new_docs, seen_docs, seen_text_col="text").collect()}
     assert kept2 == kept
+    seen_with_null = seen_docs.unionByName(spark.createDataFrame(
+        [(3, None)], "doc_id long, text string"))
+    kept_null = [r["doc_id"] for r in dedup_against_seen(
+        new_docs, seen_with_null, seen_text_col="text").collect()]
+    assert sorted(kept_null) == [11, 12]
 
     # a snapshot persisted from exact_duplicates carries lowercase-HEX
     # string hashes under the same column name; they must unhex-match,
@@ -2890,6 +2909,34 @@ def test_crawl_curate_end_to_end(spark, tmp_path):
     urls3 = {r["url"] for r in out3.collect()}
     assert "http://c.example/other" not in urls3
     assert len(urls3) == 1
+
+
+def test_crawl_curate_keeps_long_pages_whole(spark, tmp_path):
+    """crawl-curate extracts with the `extract` job's defaults (no size
+    limit, counted in words): a page far over the reference CLI's
+    2500-token non-search limit reaches the curated corpus whole."""
+    from sift_spark.job import run_crawl_curate_job
+    from sift_spark.sources.warc import build_warc_bytes
+
+    paras = [f"The farmer from village {i} walked to the market early "
+             f"and sold apples to the people of the town before noon."
+             for i in range(300)]
+    paras.append("This closing sentence ends the long page.")
+    html = ("<html><head><title>t</title></head><body><article>"
+            + "".join(f"<p>{p}</p>" for p in paras)
+            + "</article></body></html>").encode()
+    record = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+              + html)
+    warc = tmp_path / "seg.warc"
+    warc.write_bytes(build_warc_bytes(
+        [("response", "http://long.example/page", "2024-05-01T00:00:00Z",
+          record)]))
+    out, _ = run_crawl_curate_job(spark, str(warc),
+                                  str(tmp_path / "corpus"), n_parts=2,
+                                  min_quality=0.0)
+    (text,) = [r["text"] for r in out.collect()]
+    assert len(text.split()) == sum(len(p.split()) for p in paras)
+    assert text.rstrip().endswith(paras[-1])
 
 
 def test_span_dedup_preserves_whitespace(spark):

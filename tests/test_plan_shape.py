@@ -416,10 +416,12 @@ def test_curation_sink_reads_the_staged_gate_batch(
         spark, tmp_path, monkeypatch):
     """run_curation_job stages its gated batch, so the LM scorer runs
     once per document: the staging write's executed plan holds exactly
-    one scorer node and the curated sink's none, although the three
-    seen loops and dedup_exact each read their input on several
-    branches (recomputing the gates put dozens of scorer copies in the
-    sink plan)."""
+    one scorer node and the curated sink's none, although the minhash
+    and simhash seen loops each read their input twice (recomputing the
+    gates put dozens of scorer copies in the sink plan). dedup_exact
+    and the exact seen loop read their input once, with no null-text
+    split or union, so the curated sink evaluates simhash64_udf once
+    and holds no Union."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from sift_spark.job import run_curation_job
@@ -464,6 +466,11 @@ def test_curation_sink_reads_the_staged_gate_batch(
     assert len(staged) == 1
     assert scorer_nodes(plans[staged[0]]) == 1
     assert scorer_nodes(plans[out2]) == 0
+    sink = plans[out2].splitlines()
+    assert sum(1 for line in sink if "ArrowEvalPython" in line
+               and "simhash64_udf" in line) == 1, plans[out2]
+    assert not any(re.search(r"\bUnion\b", line) for line in sink), \
+        plans[out2]
 
 
 @pytest.mark.parametrize(
