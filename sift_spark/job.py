@@ -17,6 +17,7 @@ and their files untouched.
 from __future__ import annotations
 
 import argparse
+import inspect
 import uuid
 from contextlib import contextmanager
 
@@ -164,21 +165,9 @@ def curation_gates(docs, lang, min_quality, lm_model, max_ppl,
     clf_model is a model dict or path). Both scorers are narrow Arrow
     UDFs with the model shipped to the workers. `observe(df, stage)`
     wraps the frame after each gate (stages `after_gates`,
-    `after_ppl_gate`, `after_clf_gate`). A model with no threshold
-    would silently skip the gate the caller asked for, so it raises
-    ValueError before anything is composed."""
+    `after_ppl_gate`, `after_clf_gate`)."""
     from .operators.textstats import lang_id_col, quality_cols
 
-    if lm_model is not None and not max_ppl:
-        raise ValueError(
-            "lm_model given but max_ppl is 0/unset -- pass max_ppl "
-            "(the tail perplexity threshold) to enable the gate"
-        )
-    if clf_model is not None and not min_clf_score:
-        raise ValueError(
-            "clf_model given but min_clf_score is 0/unset -- pass "
-            "min_clf_score (the keep threshold) to enable the gate"
-        )
     gated = observe(
         docs.withColumn("lang_guess", lang_id_col(F.col("text")))
         .withColumn("quality_score", quality_cols(F.col("text"))
@@ -207,13 +196,52 @@ def curation_gates(docs, lang, min_quality, lm_model, max_ppl,
     return gated
 
 
+def _check_curation_args(**curation_kwargs):
+    """Raise ValueError on run_curation_job arguments that would fail
+    mid-job or silently skip a stage the caller asked for. Pure
+    argument checks, no Spark work: run_curation_job runs them first,
+    and run_crawl_curate_job runs them before extraction. Arguments
+    not given take run_curation_job's defaults; an unknown one raises
+    TypeError."""
+    bound = inspect.signature(run_curation_job).bind_partial(
+        **curation_kwargs)
+    bound.apply_defaults()
+    args = bound.arguments
+    if args["lm_model"] is not None and not args["max_ppl"]:
+        raise ValueError(
+            "lm_model given but max_ppl is 0/unset -- pass max_ppl "
+            "(the tail perplexity threshold) to enable the gate"
+        )
+    if args["clf_model"] is not None and not args["min_clf_score"]:
+        raise ValueError(
+            "clf_model given but min_clf_score is 0/unset -- pass "
+            "min_clf_score (the keep threshold) to enable the gate"
+        )
+    if args["dsir_target_df"] is not None and not args["dsir_k"]:
+        raise ValueError(
+            "dsir_target given but dsir_k is 0/unset -- pass dsir_k "
+            "(the resample size) to enable the selection"
+        )
+    if (args["seen_simhash_df"] is not None
+            and args["simhash_max_hamming"] > 3):
+        raise ValueError(
+            "simhash_max_hamming > 3 silently loses matches: the "
+            "4x16-bit chunk blocking guarantees recall only for "
+            "hamming <= 3 (pigeonhole). Use the minhash loop "
+            "(--seen-sigs) for looser similarity gates."
+        )
+    if args["span_k"] and args["span_k"] < 2:
+        raise ValueError(
+            f"span_k must be 0 (off) or >= 2 words, got {args['span_k']}"
+        )
+
+
 def run_curation_job(spark, docs_df, output_dir, lang="en",
                      min_quality=0.5, redact=False, dedup=True,
                      benchmark_df=None, ngram=13, pack_budget=0,
                      n_shards=64, vocab_path=None,
                      temperature_stratum=None, temperature_alpha=0.5,
                      temperature_default_rate=0.0, span_k=0,
-                     span_hash_mode="rolling",
                      seen_df=None, write_hashes=False,
                      seen_sigs_df=None, write_sigs=False,
                      sig_jaccard=0.5,
@@ -278,9 +306,8 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     re-shuffling. When span_k
     is set, the snapshot includes the PRE-span-excision hashes too,
     so an exact re-crawl of a doc whose spans were cut still matches
-    next run (ADVICE r6). span_hash_mode picks the span stage's
-    window keys: 'rolling' (default, O(n) 64-bit) or 'md5' (exact
-    128-bit).
+    next run (ADVICE r6). The span stage keys its windows by O(n)
+    64-bit rolling hashes (duplicated_span_dedup).
 
     seen_sigs_df / write_sigs close the same loop for NEAR-duplicates:
     write_sigs persists the curated corpus's minhash signature table
@@ -298,7 +325,12 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     chunk blocking is lossless only for hamming <= 3). All three loops compose --
     exact catches re-crawls byte-for-byte, simhash catches
     whitespace/near-identical variants for 8 bytes/doc, minhash
-    catches edited near-duplicates with a tunable jaccard gate."""
+    catches edited near-duplicates with a tunable jaccard gate.
+
+    _check_curation_args runs first, so a bad argument combination
+    raises ValueError before any Spark work."""
+    # first statement: locals() holds exactly the arguments
+    _check_curation_args(**locals())
     from pyspark.sql import Observation
 
     from .operators.dedup import (
@@ -315,21 +347,6 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
     )
     from .operators.pii import redact_pii
 
-    if dsir_target_df is not None and not dsir_k:
-        raise ValueError(
-            "dsir_target given but dsir_k is 0/unset -- pass dsir_k "
-            "(the resample size) to enable the selection"
-        )
-    if seen_simhash_df is not None and simhash_max_hamming > 3:
-        # pure-argument validation BEFORE any composition or action:
-        # in the crawl path this fires before hours of extraction, not
-        # after (review r7 pass 6). The operator raises too.
-        raise ValueError(
-            "simhash_max_hamming > 3 silently loses matches: the "
-            "4x16-bit chunk blocking guarantees recall only for "
-            "hamming <= 3 (pigeonhole). Use the minhash loop "
-            "(--seen-sigs) for looser similarity gates."
-        )
     observations = {}
     cap_observations = {}
 
@@ -419,15 +436,8 @@ def run_curation_job(spark, docs_df, output_dir, lang="en",
             # the spans keep their original bytes (newlines, spacing).
             # The span operator references `curated` on both sides of a
             # self-join, so it reads the staged pre-span frame.
-            # span_hash_mode='rolling' (default) uses O(n) 64-bit rolling
-            # window hashes -- a documented ~1e-6-of-words collision bound
-            # at 10^12 windows; 'md5' restores the exact 128-bit window
-            # keys for operators who need collision-free semantics without
-            # a code change (ADVICE r6).
             pre_span = staged(curated, "pre_span")
-            spans = duplicated_span_dedup(
-                pre_span, k=span_k, hash_mode=span_hash_mode
-            ).select(
+            spans = duplicated_span_dedup(pre_span, k=span_k).select(
                 "doc_id", F.col("text_clean").alias("_span_text")
             )
             curated = observed(
@@ -659,13 +669,6 @@ def _add_curation_args(parser):
                              "cuts only the duplicated characters -- "
                              "text outside the spans is preserved "
                              "byte-for-byte)")
-    parser.add_argument("--span-hash-mode", default="rolling",
-                        choices=["rolling", "md5"],
-                        help="span window keys: 'rolling' = O(n) 64-bit "
-                             "rolling hashes (~1e-6-of-words collision "
-                             "bound at 1e12 windows), 'md5' = exact "
-                             "128-bit window keys (collision-free, "
-                             "slower)")
     parser.add_argument("--mix-stratum", default=None,
                         help="column to temperature-rebalance on after "
                              "curation (e.g. source); off by default")
@@ -710,7 +713,6 @@ def _curation_kwargs(spark, args):
         temperature_alpha=args.mix_alpha,
         temperature_default_rate=args.mix_default_rate,
         span_k=args.span_k,
-        span_hash_mode=args.span_hash_mode,
         seen_df=parquet(args.seen),
         write_hashes=args.write_hashes,
         seen_sigs_df=parquet(args.seen_sigs),
@@ -782,8 +784,14 @@ def train_bpe_main(argv=None):
     """Train a BPE vocabulary on a (curated) corpus and write the
     tiktoken-format rank file that `--vocab` / packing consume --
     crawl -> curate -> train-bpe -> pack closes the loop."""
+    from .operators.bpe import _MAX_PIECES, train_bpe_vocab
+
     parser = argparse.ArgumentParser(
-        description="sift-spark BPE vocab training job"
+        description="sift-spark BPE vocab training job. The merge loop "
+                    "runs on the driver over the corpus's distinct "
+                    "pre-token pieces; a corpus with more than "
+                    f"{_MAX_PIECES:,} of them is refused -- train on a "
+                    "sample of it instead."
     )
     parser.add_argument("--input", required=True,
                         help="docs parquet (curated corpus)")
@@ -796,8 +804,6 @@ def train_bpe_main(argv=None):
     parser.add_argument("--text-col", default="text")
     parser.add_argument("--cores", type=int, default=None)
     args = parser.parse_args(argv)
-
-    from .operators.bpe import train_bpe_vocab
 
     with _job_session("sift-spark-train-bpe", args.cores) as spark:
         merges = train_bpe_vocab(
@@ -893,9 +899,12 @@ def run_crawl_curate_job(spark, warc_input, output_root,
     anti-joined out); curation re-runs over the full extracted sink --
     it is a corpus-global computation (dedup keepers, span owners
     depend on every row), so partial curation cannot be resumed
-    per-part by construction."""
+    per-part by construction. The curation arguments are checked
+    (_check_curation_args) before extraction starts."""
     from .operators.urlnorm import filter_blocked_hosts
     from .sources.warc import read_warc
+
+    _check_curation_args(**curation_kwargs)
 
     extracted_dir = output_root + "_extracted"
     pages = read_warc(spark, warc_input)

@@ -191,11 +191,31 @@ def write_seen_bucketed(seen_df, table, n_buckets=None, path=None):
     return spark.table(table)
 
 
+def _shingle_array(docs_df, k):
+    """(frame, column): the (doc_id, normalized text `_t`) frame and the
+    k-char shingle array over `_t` -- the one shingle expression
+    char_shingles and char_shingle_arrays share. A null text gives
+    [null] (substr of null); each caller handles that its own way.
+
+    The normalized text is materialized ONCE per row: referencing the
+    expression inside the transform lambda would re-evaluate the
+    regexp_replace per array element (~doc_len regex calls per doc)."""
+    normalized = docs_df.select(
+        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t")
+    )
+    t = F.col("_t")
+    positions = F.sequence(
+        F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))
+    )
+    shingles = F.transform(positions, lambda i: t.substr(i, F.lit(k)))
+    return normalized, shingles
+
+
 def char_shingles(docs_df, k=8, distinct=True):
     """(id, shingle) via native sequence+substring explode -- no UDF.
 
-    Kept in lock-step with :func:`char_shingle_arrays` (the un-exploded
-    twin) -- the two deliberately differ ONLY in the explode and in
+    Shares its shingle expression with :func:`char_shingle_arrays` (the
+    un-exploded twin) -- the two differ ONLY in the explode and in
     null-element handling: this exploded form keeps the null "shingle"
     row a null-text document produces (its signature presence is pinned
     by persisted sig snapshots), while the array twin drops nulls so
@@ -211,17 +231,7 @@ def char_shingles(docs_df, k=8, distinct=True):
     pipeline at crawl scale (measured at sf1.0/local[32]: a 138 MB
     exchange of the exploded shingle table, paid once per consuming
     branch because column-renamed subtrees defeat exchange reuse)."""
-    # materialize the normalized text ONCE per row: referencing the
-    # expression inside the transform lambda would re-evaluate the
-    # regexp_replace per array element (~doc_len regex calls per doc)
-    normalized = docs_df.select(
-        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t")
-    )
-    t = F.col("_t")
-    positions = F.sequence(
-        F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))
-    )
-    arr = F.transform(positions, lambda i: t.substr(i, F.lit(k)))
+    normalized, arr = _shingle_array(docs_df, k)
     if distinct:
         arr = F.array_distinct(arr)
     return normalized.select(
@@ -236,16 +246,8 @@ def char_shingle_arrays(docs_df, k=8):
     pairs join two array rows and intersect them natively
     (array_intersect), so the verify never explodes, never re-aggregates
     n_common, and computes both set sizes in-row."""
-    normalized = docs_df.select(
-        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t")
-    )
-    t = F.col("_t")
-    positions = F.sequence(
-        F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))
-    )
-    arr = F.array_distinct(
-        F.transform(positions, lambda i: t.substr(i, F.lit(k)))
-    )
+    normalized, arr = _shingle_array(docs_df, k)
+    arr = F.array_distinct(arr)
     # null text yields substr(null) = [null]: map it to an EMPTY set so
     # a pair of errored-extraction rows cannot intersect on the null
     # "shingle" (array_intersect MATCHES nulls; the exploded form's
@@ -254,7 +256,8 @@ def char_shingle_arrays(docs_df, k=8):
     # non-null string at positions >= 1 is never null -- so this whole-
     # array guard is exactly a null-element filter without paying a
     # per-element pass on every real document
-    arr = F.when(t.isNull(), F.array().cast("array<string>")).otherwise(arr)
+    arr = F.when(F.col("_t").isNull(),
+                 F.array().cast("array<string>")).otherwise(arr)
     return normalized.select(F.col("doc_id"), arr.alias("shingle_arr"))
 
 
@@ -1251,7 +1254,7 @@ def _rolling_window_hash_udf(k):
     xxhash64 (computed JVM-side), so inputs are effectively random and
     the collision rate is the generic 64-bit birthday bound -- at 10^12
     windows ~3e4 expected collisions corpus-wide, i.e. ~1e-6 of words
-    wrongly cut; hash_mode='md5' (128-bit) is the exact fallback."""
+    wrongly cut."""
     import pandas as pd
 
     b_u64 = np.uint64(_SPAN_B)
@@ -1336,58 +1339,43 @@ def _excise_spans_udf(k):
     return _excise
 
 
-def _removed_window_positions(docs_df, k, min_count, id_col, text_col,
-                              hash_mode):
+def _removed_window_positions(docs_df, k, min_count):
     """The shared window-hash stage of the ExactSubstr family:
-    (base, removed) where base = non-null docs with `_text`/`words`
-    columns and removed = (id, pos) word-start positions of every
+    (base, removed) where base = every doc with `_text`/`words`
+    columns (a null text has no words, hence no windows) and
+    removed = (doc_id, pos) word-start positions of every
     NON-CANONICAL duplicated k-word window (count >= min_count, the
     minimum (doc_id, pos) occurrence kept as owner). One shuffle on
     the compact window-hash key. Owns the parameter validation for
     every public entry point of the family."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    if hash_mode not in ("rolling", "md5"):
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
     words_col = F.filter(
-        F.split(F.col(text_col), r"[ \t\r\n\f]+"), lambda w: w != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"[ \t\r\n\f]+"),
+        lambda w: w != "",
     )
-    base = docs_df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.col(text_col).alias("_text"),
+    base = docs_df.select(
+        F.col("doc_id"), F.col("text").alias("_text"),
         words_col.alias("words")
     )
-    n_words = F.size("words")
-    if hash_mode == "md5":
-        # exact 128-bit windows; unhex halves the old hex shuffle
-        # bytes (VERDICT r5 #2: 16-byte binary, not 32-char hex)
-        window_hashes = F.when(
-            n_words >= k,
-            F.transform(
-                F.sequence(F.lit(0), n_words - k),
-                lambda p: F.unhex(F.md5(
-                    F.array_join(F.slice("words", p + 1, k), " ")
-                )),
-            ),
-        ).otherwise(F.array().cast("array<binary>"))
-    else:
-        word_hashes = F.transform("words", lambda w: F.xxhash64(w))
-        window_hashes = _rolling_window_hash_udf(k)(word_hashes)
+    word_hashes = F.transform("words", lambda w: F.xxhash64(w))
     wins = base.select(
-        F.col(id_col),
-        F.posexplode(window_hashes).alias("pos", "whash"),
+        F.col("doc_id"),
+        F.posexplode(_rolling_window_hash_udf(k)(word_hashes))
+        .alias("pos", "whash"),
     )
     per_hash = Window.partitionBy("whash")
-    per_hash_order = per_hash.orderBy(F.col(id_col), F.col("pos"))
+    per_hash_order = per_hash.orderBy(F.col("doc_id"), F.col("pos"))
     removed = (
         wins.withColumn("_n_occ", F.count("*").over(per_hash))
         .withColumn("_rank", F.row_number().over(per_hash_order))
         .filter((F.col("_n_occ") >= min_count) & (F.col("_rank") > 1))
-        .select(F.col(id_col), F.col("pos"))
+        .select(F.col("doc_id"), F.col("pos"))
     )
     return base, removed
 
 
-def duplicated_spans_table(docs_df, k=50, hash_mode="rolling"):
+def duplicated_spans_table(docs_df, k=50):
     """(id, span_start, span_end, span_words): the MAXIMAL duplicated
     spans as a first-class analysis table -- the arbitrary-length span
     REPORT of the ExactSubstr paper (Lee et al. ACL'22 report maximal
@@ -1407,9 +1395,7 @@ def duplicated_spans_table(docs_df, k=50, hash_mode="rolling"):
     given k (at min_count 2) WOULD cut -- without touching any text.
     Plan: the shared one-shuffle window-hash stage + one lag window per
     doc for the run merge (narrow per-doc partitions)."""
-    _, removed = _removed_window_positions(
-        docs_df, k, 2, "doc_id", "text", hash_mode
-    )
+    _, removed = _removed_window_positions(docs_df, k, 2)
     per_doc = Window.partitionBy("doc_id").orderBy("pos")
     return (
         removed
@@ -1432,7 +1418,7 @@ def duplicated_spans_table(docs_df, k=50, hash_mode="rolling"):
     )
 
 
-def duplicated_span_dedup(docs_df, k=50, min_count=2, hash_mode="rolling"):
+def duplicated_span_dedup(docs_df, k=50, min_count=2):
     """Exact duplicated-substring removal at word granularity (Lee et
     al., "Deduplicating Training Data Makes Language Models Better",
     ACL'22, ExactSubstr): every word covered by a k-word window whose
@@ -1452,12 +1438,12 @@ def duplicated_span_dedup(docs_df, k=50, min_count=2, hash_mode="rolling"):
     adaptation: every stage is a narrow transform or an equi-join on a
     compact window-hash key.
 
-    hash_mode='rolling' (default): native per-word xxhash64 feeds an
-    O(n) uint64 polynomial rolling hash (Arrow-vectorized numpy; see
+    Window keys: native per-word xxhash64 feeds an O(n) uint64
+    polynomial rolling hash (Arrow-vectorized numpy; see
     _rolling_window_hash_udf for the math and the 64-bit collision
-    bound), and the shuffle key is an 8-byte long. 'md5' is the exact
-    128-bit form (native expression, O(n*k) bytes, 16-byte binary
-    key); a parity unit pins both modes to identical outputs.
+    bound), and the shuffle key is an 8-byte long. A unit pins the
+    output to a pure-Python reference that keys windows by their word
+    tuples, and the span_dedup oracle row pins it against DuckDB.
 
     Plan: narrow window-hash stage -> posexplode -> ONE shuffle on the
     window hash where count() and row_number() over (whash order by
@@ -1467,20 +1453,14 @@ def duplicated_span_dedup(docs_df, k=50, min_count=2, hash_mode="rolling"):
     groupBy(doc) into one sorted position array (one row per REMOVED
     WINDOW -- no k-times coverage explode) -> join back to the text ->
     excision UDF cuts the covered character ranges (run merging is
-    O(m) numpy; clean docs pass through without re-tokenizing).
-    Null texts pass through with text_clean=null; docs shorter than k
-    words have no windows and pass through byte-identical.
+    O(m) numpy; clean docs pass through without re-tokenizing). The
+    input is read once: a null text has no words, so it has no windows
+    and passes through with text_clean=null, n_words=0, n_dropped=0;
+    docs shorter than k words have no windows either and pass through
+    byte-identical.
 
     Returns (id, text_clean, n_words, n_dropped)."""
-    null_rows = docs_df.filter(F.col("text").isNull()).select(
-        F.col("doc_id"),
-        F.lit(None).cast("string").alias("text_clean"),
-        F.lit(0).cast("long").alias("n_words"),
-        F.lit(0).cast("long").alias("n_dropped"),
-    )
-    base, removed = _removed_window_positions(
-        docs_df, k, min_count, "doc_id", "text", hash_mode
-    )
+    base, removed = _removed_window_positions(docs_df, k, min_count)
     n_words = F.size("words")
     spans_by_doc = removed.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("pos")).alias("_rpos")
@@ -1497,13 +1477,12 @@ def duplicated_span_dedup(docs_df, k=50, min_count=2, hash_mode="rolling"):
             .alias("_ex"),
         )
     )
-    out = excised.select(
+    return excised.select(
         F.col("doc_id"),
         F.col("_ex.text_clean").alias("text_clean"),
         "n_words",
         F.col("_ex.n_dropped").alias("n_dropped"),
     )
-    return out.unionByName(null_rows)
 
 
 # ---- corpus-level line dedup (CCNet-style) -----------------------------------------

@@ -1,6 +1,6 @@
-"""Distributed BPE vocabulary training (operators/bpe.py): exact parity
-with the serial reference trainer, tiktoken round-trip, and the
-train -> pack e2e loop."""
+"""BPE vocabulary training (operators/bpe.py): exact parity with the
+serial reference trainer, the piece-count limit, tiktoken round-trip,
+and the train -> pack e2e loop."""
 
 import importlib.util
 import os
@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sift_spark.operators import bpe
 from sift_spark.operators.bpe import (
     piece_count_table,
     save_vocab,
@@ -30,32 +31,44 @@ def _serial_trainer():
 
 
 def test_matches_serial_reference_exactly(spark):
-    """The distributed merge loop reproduces the serial trainer's merge
-    list EXACTLY (same pairs, same order) on the reference sample --
-    the strongest possible unit for a distributed trainer."""
+    """The driver merge loop reproduces the serial trainer's merge list
+    EXACTLY (same pairs, same order) on the reference sample."""
     mod = _serial_trainer()
     serial = mod.train(mod.SAMPLE, 40)
     docs = spark.createDataFrame([(1, mod.SAMPLE)], "doc_id long, text string")
-    distributed = train_bpe(docs, 40)
-    merged_serial = serial
-    merged_dist = [left + right for left, right in distributed]
-    assert merged_dist == merged_serial
+    trained = train_bpe(docs, 40)
+    assert [left + right for left, right in trained] == serial
 
 
-def test_driver_loop_equals_distributed_loop(spark):
-    """The driver-side incremental merge loop (default under the
-    collect guard) and the distributed job-per-merge loop (forced via
-    driver_collect_limit=0) must produce the IDENTICAL merge list --
-    same pairs, same order, same early-stop."""
+def test_weighted_pieces_match_serial_trainer(spark):
+    """Two documents give pieces weights above 1, which the driver
+    loop's incremental pair counts multiply in; the serial trainer
+    over the concatenated text must agree merge for merge."""
     mod = _serial_trainer()
+    half = mod.SAMPLE[: len(mod.SAMPLE) // 2]
     docs = spark.createDataFrame(
-        [(1, mod.SAMPLE), (2, mod.SAMPLE[: len(mod.SAMPLE) // 2])],
-        "doc_id long, text string",
+        [(1, mod.SAMPLE), (2, half)], "doc_id long, text string",
     )
-    driver = train_bpe(docs, 35)
-    distributed = train_bpe(docs, 35, driver_collect_limit=0)
-    assert driver == distributed
-    assert len(driver) == 35
+    trained = train_bpe(docs, 35)
+    # the pre-tokenizer splits at the doc boundary either way: SAMPLE
+    # ends in a space piece and `half` starts with a letter run
+    serial = mod.train(mod.SAMPLE + half, 35)
+    assert [left + right for left, right in trained] == serial
+    assert len(trained) == 35
+
+
+def test_refuses_piece_table_over_limit(spark, monkeypatch):
+    """A piece table over the driver loop's limit raises instead of
+    collecting; the message names the limit and the way out."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta")], "doc_id long, text string"
+    )
+    monkeypatch.setattr(bpe, "_MAX_PIECES", 4)
+    with pytest.raises(ValueError, match="more than 4 distinct pieces"
+                                         ".*sample of the corpus"):
+        train_bpe(docs, 5)
+    monkeypatch.setattr(bpe, "_MAX_PIECES", 5)  # 4 words and " "
+    assert train_bpe(docs, 5, min_freq=1)
 
 
 def test_multidoc_equals_concatenation_weights(spark):

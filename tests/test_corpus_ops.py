@@ -1852,7 +1852,7 @@ def test_curate_and_crawl_curate_map_flags_identically(
         "--seen-simhash", snap, "--write-simhash",
         "--simhash-hamming", "2", "--ngram", "8",
         "--pack-budget", "64", "--shards", "4",
-        "--span-k", "5", "--span-hash-mode", "md5",
+        "--span-k", "5",
         "--mix-stratum", "source", "--mix-alpha", "0.3",
         "--mix-default-rate", "1.0", "--vocab", "vocab.tiktoken",
     ]
@@ -2177,8 +2177,7 @@ def test_curation_span_snapshot_catches_recrawl(spark, tmp_path):
     """ADVICE r6: with --span-k + --write-hashes, the _hashes snapshot
     must include PRE-span-excision hashes -- an exact re-crawl of a doc
     whose spans were cut last run arrives with the pre-span text, and
-    --seen checks that form. Also exercises span_hash_mode='md5'
-    end-to-end through the job wiring."""
+    --seen checks that form."""
     from sift_spark.job import run_curation_job
 
     passage = " ".join(
@@ -2198,9 +2197,9 @@ def test_curation_span_snapshot_catches_recrawl(spark, tmp_path):
     spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(w1_in)
     out1, _ = run_curation_job(
         spark, spark.read.parquet(w1_in), w1_out,
-        span_k=10, span_hash_mode="md5", write_hashes=True)
+        span_k=10, write_hashes=True)
     got1 = {r["doc_id"]: r["text"] for r in out1.collect()}
-    assert shared not in got1[2]  # span actually cut (md5 mode works)
+    assert shared not in got1[2]  # span actually cut
     # snapshot: 2 post-span hashes + doc2's distinct pre-span hash
     # (doc1's pre == post: its canonical occurrence was kept)
     hashes = spark.read.parquet(w1_out + "_hashes")
@@ -2939,6 +2938,47 @@ def test_crawl_curate_keeps_long_pages_whole(spark, tmp_path):
     assert text.rstrip().endswith(paras[-1])
 
 
+def test_crawl_curate_checks_curation_args_before_extraction(spark,
+                                                            tmp_path):
+    """A bad curation argument raises before any Spark work: no
+    `<output>_extracted` directory appears and no job runs. span_k=1
+    is refused too (it used to fail only after the staging write), and
+    a removed option is a TypeError."""
+    import os
+
+    from sift_spark.job import run_crawl_curate_job, run_curation_job
+    from sift_spark.sources.warc import build_warc_bytes
+
+    html = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+            b"<html><body><article><p>Some page text.</p></article>"
+            b"</body></html>")
+    warc = tmp_path / "seg.warc"
+    warc.write_bytes(build_warc_bytes(
+        [("response", "http://a.example/", "2024-05-01T00:00:00Z", html)]))
+    snap = spark.createDataFrame([(1, 0)], "doc_id long, simhash long")
+    docs = spark.createDataFrame([(1, "some text")],
+                                 "doc_id long, text string")
+    bad = [
+        (ValueError, dict(span_k=1)),
+        (ValueError, dict(lm_model="/nonexistent/lm")),
+        (ValueError, dict(clf_model="/nonexistent/clf")),
+        (ValueError, dict(dsir_target_df=docs)),
+        (ValueError, dict(seen_simhash_df=snap, simhash_max_hamming=4)),
+        (TypeError, dict(span_hash_mode="md5")),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out_root = str(tmp_path / "corpus")
+    for error, kwargs in bad:
+        with pytest.raises(error):
+            run_crawl_curate_job(spark, str(warc), out_root, n_parts=2,
+                                 **kwargs)
+        assert not os.path.exists(out_root + "_extracted"), kwargs
+    with pytest.raises(ValueError, match="span_k"):
+        run_curation_job(spark, docs, out_root, span_k=1)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_span_dedup_preserves_whitespace(spark):
     """Only the duplicated characters are excised (ADVICE r5 medium):
     text outside the spans -- newlines, tabs, runs of spaces -- comes
@@ -2976,11 +3016,54 @@ def test_span_dedup_preserves_whitespace(spark):
     assert tout[2]["text_clean"] == "gamma delta"
 
 
-def test_span_dedup_hash_mode_parity(spark):
-    """hash_mode='rolling' (O(n) uint64 polynomial over xxhash64 word
-    hashes, 8-byte keys) and hash_mode='md5' (exact 128-bit windows)
-    produce identical full outputs -- the VERDICT r5 parity unit for
-    the two window-hash forms."""
+def _span_dedup_reference(rows, k):
+    """Pure-Python duplicated_span_dedup at min_count 2: windows keyed
+    by their exact word tuples (no hashing), the minimum (doc_id, pos)
+    occurrence kept, and each run of covered words cut together with
+    its trailing separator (the preceding one at the doc end)."""
+    import re
+
+    texts = {d: t for d, t in rows if t is not None}
+    spans = {d: [m.span() for m in re.finditer(r"[^ \t\r\n\f]+", t)]
+             for d, t in texts.items()}
+    owned, removed = set(), {d: set() for d in texts}
+    for d in sorted(texts):
+        words = [texts[d][a:b] for a, b in spans[d]]
+        for p in range(len(words) - k + 1):
+            key = tuple(words[p:p + k])
+            if key in owned:
+                removed[d].update(range(p, p + k))
+            else:
+                owned.add(key)
+    out = []
+    for d, t in rows:
+        if t is None:
+            out.append((d, None, 0, 0))
+            continue
+        cut, n = sorted(removed[d]), len(spans[d])
+        clean, prev, i = [], 0, 0
+        while i < len(cut):
+            j = i
+            while j + 1 < len(cut) and cut[j + 1] == cut[j] + 1:
+                j += 1
+            a, b = cut[i], cut[j]
+            if b + 1 < n:
+                cs, ce = spans[d][a][0], spans[d][b + 1][0]
+            else:
+                cs, ce = (spans[d][a - 1][1] if a else 0), len(t)
+            clean.append(t[prev:cs])
+            prev, i = ce, j + 1
+        clean.append(t[prev:])
+        out.append((d, "".join(clean), n, len(cut)))
+    return sorted(out)
+
+
+def test_span_dedup_matches_word_tuple_reference(spark):
+    """The rolling 64-bit window keys (an O(n) uint64 polynomial over
+    xxhash64 word hashes) give the same full output as a pure-Python
+    reference keyed by exact word tuples, with ANSI mode on and off:
+    a null text passes through as (id, null, 0, 0) either way, though
+    size(null) differs between the modes."""
     from sift_spark.operators.dedup import duplicated_span_dedup
 
     shared = " ".join(f"w{i}" for i in range(30))
@@ -2993,12 +3076,16 @@ def test_span_dedup_hash_mode_parity(spark):
         (6, "x " * 7 + shared),                  # span at doc end
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for k in (6, 10, 20):
-        rolling = sorted(
-            duplicated_span_dedup(docs, k=k).collect())
-        md5 = sorted(
-            duplicated_span_dedup(docs, k=k, hash_mode="md5").collect())
-        assert rolling == md5, f"mode divergence at k={k}"
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for k in (6, 10, 20):
+                got = sorted(tuple(r) for r in
+                             duplicated_span_dedup(docs, k=k).collect())
+                assert got == _span_dedup_reference(rows, k), (mode, k)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_paragraph_frequency_dedup(spark):
@@ -3071,8 +3158,7 @@ def test_duplicated_spans_table_planted(spark):
 def test_duplicated_spans_table_within_doc_and_parity(spark):
     """Within-doc repetition surfaces on the second occurrence, and
     sum(span_words) per doc equals duplicated_span_dedup's n_dropped
-    (the table reports EXACTLY what the dedup would excise) in both
-    hash modes."""
+    (the table reports EXACTLY what the dedup would excise)."""
     from sift_spark.operators.dedup import (
         duplicated_span_dedup,
         duplicated_spans_table,
@@ -3088,33 +3174,21 @@ def test_duplicated_spans_table_within_doc_and_parity(spark):
         ],
         "doc_id long, text string",
     )
-    for mode in ("rolling", "md5"):
-        rows = duplicated_spans_table(
-            docs, k=4, hash_mode=mode
-        ).collect()  # collect ONCE; derive both views locally
-        got = {
-            (r["doc_id"], r["span_start"], r["span_end"])
-            for r in rows
-        }
-        # doc 1: second in-doc occurrence at words 11..19; doc 2: its
-        # copy of the phrase at words 7..15 (doc 1's first occurrence
-        # at pos 1 is canonical)
-        assert (1, 11, 19) in got
-        assert (2, 7, 15) in got
-        assert all(d != 3 for d, _, _ in got)
-        per_doc = {}
-        for r in rows:
-            per_doc[r["doc_id"]] = (
-                per_doc.get(r["doc_id"], 0) + r["span_words"]
-            )
-        dropped = {
-            r["doc_id"]: r["n_dropped"]
-            for r in duplicated_span_dedup(
-                docs, k=4, hash_mode=mode
-            ).collect()
-        }
-        for d in (1, 2, 3):
-            assert per_doc.get(d, 0) == dropped[d], (mode, d)
+    rows = duplicated_spans_table(docs, k=4).collect()
+    got = {(r["doc_id"], r["span_start"], r["span_end"]) for r in rows}
+    # doc 1: second in-doc occurrence at words 11..19; doc 2: its copy
+    # of the phrase at words 7..15 (doc 1's first occurrence at pos 1
+    # is canonical)
+    assert (1, 11, 19) in got
+    assert (2, 7, 15) in got
+    assert all(d != 3 for d, _, _ in got)
+    per_doc = {}
+    for r in rows:
+        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + r["span_words"]
+    dropped = {r["doc_id"]: r["n_dropped"]
+               for r in duplicated_span_dedup(docs, k=4).collect()}
+    for d in (1, 2, 3):
+        assert per_doc.get(d, 0) == dropped[d], d
 
 
 def test_embedding_against_seen_two_week_loop(spark):
