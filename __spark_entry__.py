@@ -70,9 +70,9 @@ ROWS_ONLY_VERIFICATION = {
         "honest stub behind decode_available()"
     ),
     "production_hash_paths": (
-        "value-sensitive bit_xor checksums over the xxhash64 paths; "
-        "each path has a hash-green md5-portable oracle twin "
-        "(minhash_neardup_md5, simhash_md5, winnowing_md5)"
+        "value-sensitive bit_xor checksums over the xxhash64 MinHash "
+        "and FNV simhash paths; each has a hash-green md5-portable "
+        "oracle twin (minhash_neardup_md5, simhash_md5)"
     ),
 }
 
@@ -483,18 +483,17 @@ def _q_ngram_jaccard(spark, sf_dir):
 
 
 def _q_production_hash_paths(spark, sf_dir):
-    """The three production-xxhash64 twins (MinHash LSH pairs, simhash,
-    winnowing) folded into ONE rows-only gate row -- each has a
-    hash-green md5-portable oracle twin; this query exercises the
-    default xxhash64 code paths end-to-end and returns value-sensitive
-    checksums (bit_xor over the produced hashes/pair ids), so a changed
-    hash kernel changes the output even though no SQL oracle can
-    reproduce xxhash64."""
+    """The two production hash paths no SQL engine reproduces (xxhash64
+    MinHash LSH pairs, the FNV simhash UDF) folded into ONE rows-only
+    gate row -- each has a hash-green md5-portable oracle twin; this query
+    exercises the production code paths end-to-end and returns
+    value-sensitive checksums (bit_xor over the produced hashes/pair
+    ids), so a changed hash kernel changes the output even though no
+    SQL oracle can reproduce it."""
     from sift_spark.operators.dedup import (
         minhash_near_duplicates,
         simhash64_udf,
     )
-    from sift_spark.operators.textstats import winnowing_fingerprints
 
     def checksum_row(df, path, checksum_expr):
         return df.agg(
@@ -514,11 +513,7 @@ def _q_production_hash_paths(spark, sf_dir):
         docs.select(simhash64_udf(F.col("text")).alias("simhash"), "doc_id"),
         "simhash_xxhash", "simhash ^ doc_id",
     )
-    wf = checksum_row(
-        winnowing_fingerprints(docs, k=8, window=4),
-        "winnowing_xxhash", "fingerprint ^ doc_id",
-    )
-    return mh.unionByName(sh).unionByName(wf)
+    return mh.unionByName(sh)
 
 
 def _q_minhash_neardup_md5(spark, sf_dir):
@@ -856,9 +851,7 @@ def _q_dsir_select(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     target = docs.filter(F.col("doc_id") % 3 == 0)
-    weights = dsir_log_weights(
-        docs, target, n_buckets=_DSIR_BUCKETS, portable_hash=True
-    )
+    weights = dsir_log_weights(docs, target, n_buckets=_DSIR_BUCKETS)
     keyed = weights.select(
         "doc_id",
         F.col("log_weight"),
@@ -1488,15 +1481,12 @@ def _q_token_counts(spark, sf_dir):
 
 def _q_pack_sequences(spark, sf_dir):
     """Sequence packing (operators/packing.py): documents next-fit
-    packed into 96-word training sequences within md5-portable hash
-    shards; the DuckDB oracle re-derives the exact assignment with a
-    recursive CTE (fill-state threading), proving the per-shard kernel
-    bit-for-bit."""
+    packed into 96-word training sequences within md5 hash shards; the
+    DuckDB oracle re-derives the exact assignment with a recursive CTE
+    (fill-state threading), proving the per-shard kernel bit-for-bit."""
     from sift_spark.operators.packing import pack_sequences
 
-    return pack_sequences(
-        _docs(spark, sf_dir), budget=96, n_shards=8, portable_hash=True
-    )
+    return pack_sequences(_docs(spark, sf_dir), budget=96, n_shards=8)
 
 
 def _q_line_dedup(spark, sf_dir):
@@ -1592,13 +1582,10 @@ def _q_pdf_extract(spark, sf_dir):
 
 def _q_winnowing_md5(spark, sf_dir):
     """Winnowing fingerprints with the md5-derived gram hash (engine-
-    portable; the production variant uses xxhash64 -- rows-only).
-    Same operator, same sliding-window semantics."""
+    portable, and the operator's only hash), sliding-window semantics."""
     from sift_spark.operators.textstats import winnowing_fingerprints
 
-    return winnowing_fingerprints(
-        _docs(spark, sf_dir), k=8, window=4, portable_hash=True
-    )
+    return winnowing_fingerprints(_docs(spark, sf_dir), k=8, window=4)
 
 
 def _q_media_features(spark, sf_dir):
@@ -1788,8 +1775,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": _q_pack_sequences,
         "line_dedup": _q_line_dedup,
         "winnowing_md5": _q_winnowing_md5,
-        # production xxhash64 twins folded into one rows-only row
-        # (each has a hash-green md5 oracle twin above)
+        # production MinHash/simhash hash paths folded into one
+        # rows-only row (each has a hash-green md5 oracle twin above)
         "production_hash_paths": _q_production_hash_paths,
         # multimodal plumbing
         "media_features": _q_media_features,

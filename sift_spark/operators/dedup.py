@@ -299,11 +299,19 @@ def word_ngrams(docs_df, n=3):
     )
 
 
+def md5_prefix_col(col, n_hex):
+    """Engine-portable hash: the first `n_hex` (<= 15) hex chars of
+    md5(col) as a non-negative BIGINT, which any SQL engine reproduces
+    as ('0x' || substr(md5(x), 1, n_hex))::BIGINT. The one md5-prefix
+    construction: 60-bit shingle/gram hashes (md5_hash60) and 32-bit
+    sample and feature buckets (sampling, dsir, textclf) all call it."""
+    return F.conv(F.substring(F.md5(col), 1, n_hex), 16, 10).cast("long")
+
+
 def md5_hash60(col):
-    """Engine-portable 60-bit hash: first 15 hex chars of md5 -> BIGINT.
-    Reproducible in any SQL engine (used by the DuckDB oracle-parity
-    variants); xxhash64 stays the production default (faster, 64-bit)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+    """60-bit md5-prefix hash (15 hex chars) of the minhash, winnowing,
+    KMV and simhash oracle twins."""
+    return md5_prefix_col(col, 15)
 
 
 def _shingle_hash(i, portable):

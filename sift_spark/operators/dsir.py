@@ -11,7 +11,10 @@ domain in hashed n-gram feature space.
 
 Method (paper's hashed n-gram variant, their recommended instantiation):
  * features: unigrams + bigrams of lowercased letter-run tokens,
-   hashed into `n_buckets` buckets (their 10k-bucket bag-of-ngrams);
+   hashed into `n_buckets` buckets (their 10k-bucket bag-of-ngrams):
+   bucket = (first 8 hex chars of md5(gram)) mod n_buckets, the one
+   feature map, shared literally with operators/textclf.py and
+   reproduced by the DuckDB oracle (driver-gate row `dsir_select`);
  * two multinomial bucket distributions are fit by counting -- p from
    the target corpus, q from the raw corpus -- with add-1 smoothing;
  * a document's log importance weight is
@@ -28,26 +31,21 @@ ONE BROADCAST JOIN against the (bucket, log p - log q) delta table +
 groupBy(doc) log-sum; selection is a TakeOrdered top-k. Nothing here
 shuffles more than gram rows once -- the same plan family as the
 oracle-green lm_perplexity scorer.
-
-portable_hash=True swaps xxhash64 bucketing for the md5-prefix twin so
-a SQL oracle reproduces every value (driver-gate row `dsir_select`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .dedup import md5_prefix_col
 from .lm import _order_grams, lm_tokens_col
+from .sampling import sample_bucket_col
 
 DEFAULT_BUCKETS = 1024
 
 
-def _bucket_col(gram, n_buckets, portable_hash):
-    if portable_hash:
-        h = F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(gram)
-    return F.pmod(h, F.lit(n_buckets))
+def _bucket_col(gram, n_buckets):
+    return F.pmod(md5_prefix_col(gram, 8), F.lit(n_buckets))
 
 
 def _gram_col(text_col):
@@ -56,8 +54,7 @@ def _gram_col(text_col):
 
 
 def hashed_ngram_buckets(docs_df, n_buckets=DEFAULT_BUCKETS,
-                         id_col="doc_id", text_col="text",
-                         portable_hash=False):
+                         id_col="doc_id", text_col="text"):
     """(id, bucket) -- ONE ROW PER GRAM OCCURRENCE (multiset), unigrams
     + bigrams hashed into buckets. Narrow: explode only. Pass
     id_col=None for an id-less (bucket-only) frame -- distribution
@@ -67,13 +64,12 @@ def hashed_ngram_buckets(docs_df, n_buckets=DEFAULT_BUCKETS,
         *keys, F.explode(_gram_col(text_col)).alias("_gram")
     ).select(
         *keys,
-        _bucket_col(F.col("_gram"), n_buckets, portable_hash)
-        .alias("bucket"),
+        _bucket_col(F.col("_gram"), n_buckets).alias("bucket"),
     )
 
 
 def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
-                         text_col="text", portable_hash=False):
+                         text_col="text"):
     """(bucket, logp) over ALL buckets: add-1-smoothed multinomial
     ln((cnt_b + 1) / (total + n_buckets)). ONE corpus pass (explode +
     map-side-combined groupBy); the <= n_buckets count rows come back
@@ -82,9 +78,7 @@ def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
     spark = docs_df.sparkSession
     counts = {
         r["bucket"]: r["cnt"]
-        for r in hashed_ngram_buckets(
-            docs_df, n_buckets, None, text_col, portable_hash
-        )
+        for r in hashed_ngram_buckets(docs_df, n_buckets, None, text_col)
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
         .collect()
@@ -100,26 +94,21 @@ def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
     )
 
 
-def dsir_log_weights(docs_df, target_df, n_buckets=DEFAULT_BUCKETS,
-                     portable_hash=False):
+def dsir_log_weights(docs_df, target_df, n_buckets=DEFAULT_BUCKETS):
     """(id, log_weight): per-doc log importance weight of `docs_df`
     toward `target_df`'s distribution. The raw distribution q is fit on
     docs_df itself (the paper's setting: the raw pool being selected
     from). The target corpus only needs `text` -- distribution fits
     never touch ids. Docs with zero grams get weight 0 (no evidence)."""
-    p = fit_bucket_log_probs(
-        target_df, n_buckets, "text", portable_hash
-    ).select("bucket", F.col("logp").alias("_lp"))
-    q = fit_bucket_log_probs(
-        docs_df, n_buckets, "text", portable_hash
-    ).select("bucket", F.col("logp").alias("_lq"))
+    p = fit_bucket_log_probs(target_df, n_buckets, "text").select(
+        "bucket", F.col("logp").alias("_lp"))
+    q = fit_bucket_log_probs(docs_df, n_buckets, "text").select(
+        "bucket", F.col("logp").alias("_lq"))
     delta = p.join(q, "bucket").select(
         "bucket", (F.col("_lp") - F.col("_lq")).alias("_delta")
     )
     sums = (
-        hashed_ngram_buckets(
-            docs_df, n_buckets, "doc_id", "text", portable_hash
-        )
+        hashed_ngram_buckets(docs_df, n_buckets, "doc_id", "text")
         .join(F.broadcast(delta), "bucket")
         .groupBy("doc_id")
         .agg(F.sum("_delta").alias("log_weight"))
@@ -139,8 +128,6 @@ def gumbel_key_col(id_col, seed=0):
     engines (sampling.sample_bucket_col IS the shared md5-prefix
     construction; the 'g' prefix namespaces DSIR draws away from
     hash_sample draws on the same ids)."""
-    from .sampling import sample_bucket_col
-
     u = (sample_bucket_col(id_col, f"g{seed}") + F.lit(1.0)) / F.lit(_U32)
     return -F.log(-F.log(u))
 

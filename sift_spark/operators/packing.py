@@ -4,9 +4,11 @@ sequences -- the step between a curated corpus and an LLM data loader.
 Exact global bin-packing is NP-hard and inherently sequential; the
 standard practice at corpus scale (e.g. T5 / GPT-NeoX data pipelines)
 is GREEDY PACKING WITHIN SHARDS: documents are hash-sharded
-deterministically, then packed next-fit in a canonical order inside
-each shard. Waste is bounded (a sequence is only abandoned when the
-next document cannot fit) and every shard packs independently -- the
+deterministically (shard = md5 prefix of the doc id mod n_shards,
+sampling.sample_bucket_col, the form the DuckDB oracle re-derives),
+then packed next-fit in a canonical order inside each shard. Waste is
+bounded (a sequence is only abandoned when the next document cannot
+fit) and every shard packs independently -- the
 operator is an applyInPandas over shards, embarrassingly parallel, and
 the assignment is a pure function of (doc_id, token counts, budget,
 n_shards): stable across partition layouts, cluster sizes and re-runs,
@@ -33,6 +35,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sampling import sample_bucket_col
+from .textstats import whitespace_token_count_col
+
 PACKED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -49,36 +54,24 @@ def word_count_col(col):
     """Native whitespace word count, the default packing unit when no
     token column is supplied -- delegates to textstats so the
     engine-portable whitespace class lives in ONE place."""
-    from .textstats import whitespace_token_count_col
-
     return whitespace_token_count_col(
         F.col(col) if isinstance(col, str) else col
     ).cast("long")
 
 
-def pack_sequences(docs_df, budget, n_shards=64, tokens_col=None,
-                   portable_hash=False):
+def pack_sequences(docs_df, budget, n_shards=64, tokens_col=None):
     """(doc_id, n_tokens, shard, seq_no, offset, oversized): next-fit
     packing of documents into sequences of at most `budget` tokens,
-    per deterministic hash shard.
+    per deterministic hash shard: pmod(sample_bucket_col(doc_id, 0),
+    n_shards), the md5 prefix of (id ':0') a SQL oracle reproduces.
 
     tokens_col: use a precomputed token-count column instead of the
-    native word count (e.g. the BPE counts from token_counts).
-    portable_hash: md5-derived shard assignment a SQL oracle can
-    reproduce (same twin pattern as minhash/sampling); the default
-    xxhash64 is the production form."""
+    native word count (e.g. the BPE counts from token_counts)."""
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     n_tokens = (F.col(tokens_col).cast("long") if tokens_col
                 else word_count_col("text"))
-    if portable_hash:
-        # the same md5-prefix bucket sampling.py uses (one portable-hash
-        # implementation engine-wide; the oracle reproduces md5(id ':0'))
-        from .sampling import sample_bucket_col
-
-        shard = F.pmod(sample_bucket_col("doc_id", seed=0), F.lit(n_shards))
-    else:
-        shard = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards))
+    shard = F.pmod(sample_bucket_col("doc_id", seed=0), F.lit(n_shards))
     base = docs_df.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         # null text / null counts pack as 0-token docs (sibling
@@ -123,28 +116,30 @@ PACKED_TOKENS_SCHEMA = T.StructType(
 _WS_SPLIT = None  # compiled lazily inside the kernels (worker-side)
 
 
-def _portable_word_ids(text):
-    """Whitespace words -> deterministic 60-bit ids from the md5 prefix
-    -- the engine-portable twin a SQL oracle reproduces verbatim as
-    ('0x' || substr(md5(w), 1, 15))::BIGINT. Production runs use the
-    BPE encoder instead (see _encoder_for)."""
+def _md5_id(piece):
+    """Deterministic 60-bit id of a string: the md5 prefix a SQL oracle
+    reproduces verbatim as ('0x' || substr(md5(piece), 1, 15))::BIGINT."""
     import hashlib
+
+    return int(hashlib.md5(piece.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _portable_word_ids(text):
+    """Whitespace words -> md5-prefix ids (:func:`_md5_id`)."""
     import re
 
     global _WS_SPLIT
     if _WS_SPLIT is None:
         _WS_SPLIT = re.compile(r"[ \t\r\n\f]+")
-    return [
-        int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-        for w in _WS_SPLIT.split(text or "")
-        if w
-    ]
+    return [_md5_id(w) for w in _WS_SPLIT.split(text or "") if w]
 
 
 def _encoder_for(vocab_path, portable_hash):
-    """text -> list[int] token ids. Portable mode: md5-prefix word ids
-    (SQL-reproducible). Production: the from-scratch BPE encoder when a
-    tiktoken-format vocab resolves (real cl100k ids); otherwise the
+    """text -> list[int] token ids. `portable_hash` picks the encoder,
+    not the shard hash (shards are always md5): true gives md5-prefix
+    whitespace-word ids (SQL-reproducible; the `pack_materialize`
+    oracle checks them). Otherwise the from-scratch BPE encoder when a
+    tiktoken-format vocab resolves (real cl100k ids), else the
     deterministic fallback tokenizer's spans, each mapped to the same
     md5-prefix id space -- deterministic and collision-safe (60 bits)
     but NOT a trained vocabulary; pass vocab_path for loader-ready
@@ -156,16 +151,7 @@ def _encoder_for(vocab_path, portable_hash):
     tok = get_tokenizer(vocab_path)
     if isinstance(tok, BPETokenizer):
         return lambda text: tok.encode(text or "")
-
-    import hashlib
-
-    def span_ids(text):
-        return [
-            int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-            for s in tok.encode_spans(text or "")
-        ]
-
-    return span_ids
+    return lambda text: [_md5_id(s) for s in tok.encode_spans(text or "")]
 
 
 def pack_assignment_with_eod(docs_df, budget, n_shards=64, vocab_path=None,
@@ -185,10 +171,7 @@ def pack_assignment_with_eod(docs_df, budget, n_shards=64, vocab_path=None,
     counted = docs_df.select(
         F.col("doc_id"), F.col("text").alias("_text")
     ).withColumn("_n_plus_eod", n_with_eod(F.col("_text")))
-    return pack_sequences(
-        counted, budget, n_shards, tokens_col="_n_plus_eod",
-        portable_hash=portable_hash,
-    )
+    return pack_sequences(counted, budget, n_shards, tokens_col="_n_plus_eod")
 
 
 def materialize_packed_sequences(docs_df, budget, n_shards=64,
@@ -215,11 +198,11 @@ def materialize_packed_sequences(docs_df, budget, n_shards=64,
     of (doc ids, counts, budget, n_shards): stable across partition
     layouts and resumable.
 
-    portable_hash: md5-derived shard assignment AND md5-prefix word
-    ids, both reproducible by a SQL oracle (driver-gate twin);
-    production keeps xxhash64 shards and BPE ids (vocab_path ->
+    portable_hash: md5-prefix whitespace-word ids a SQL oracle
+    reproduces (driver-gate twin); otherwise BPE ids (vocab_path ->
     tiktoken-format ranks; see _encoder_for for the no-vocab
-    fallback).
+    fallback). It picks only the encoder: the shard assignment is the
+    md5 one of :func:`pack_sequences` either way.
 
     assignment: a precomputed :func:`pack_assignment_with_eod` frame
     (possibly re-read from a sink) -- pass it when the assignment is

@@ -17,16 +17,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .dedup import md5_prefix_col
+
 _BUCKETS = 1 << 32
 
 
 def sample_bucket_col(key_col, seed=0):
     """Uniform [0, 2^32) bucket from md5(key ':' seed): the first 8 hex
     chars parsed as an integer (native conv -- no UDF)."""
-    digest = F.md5(
-        F.concat(F.col(key_col).cast("string"), F.lit(f":{seed}"))
+    return md5_prefix_col(
+        F.concat(F.col(key_col).cast("string"), F.lit(f":{seed}")), 8
     )
-    return F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
 
 
 def hash_sample(df, rate, key_col, seed=0):
@@ -41,15 +42,38 @@ def stratified_hash_sample(df, rates, stratum_col, key_col,
                            default_rate=0.0, seed=0):
     """Per-stratum deterministic rates -- the standard corpus-mixing
     primitive (e.g. keep 100% of high-quality English, 10% of the rest).
-    rates: {stratum_value: rate}; strata not listed get default_rate."""
-    threshold = F.lit(int(default_rate * _BUCKETS))
+    rates: {stratum_value: rate}; strata not listed, and null strata,
+    get default_rate.
+
+    Thresholds int(rate * 2^32) are applied through a BROADCAST LEFT
+    JOIN of a per-stratum rates table, so the plan stays flat however
+    many strata there are: a url_host column has ~100k values on a
+    crawl, and a when/otherwise chain over 2,000 strata already
+    overflows the analyzer's stack."""
+    if not 0.0 <= default_rate <= 1.0:
+        raise ValueError(
+            f"default_rate must be in [0, 1], got {default_rate}")
     for value, rate in rates.items():
         if not 0.0 <= rate <= 1.0:
             raise ValueError(f"rate for {value!r} must be in [0, 1]")
-        threshold = F.when(
-            F.col(stratum_col) == value, F.lit(int(rate * _BUCKETS))
-        ).otherwise(threshold)
-    return df.filter(sample_bucket_col(key_col, seed) < threshold)
+    default_threshold = F.lit(int(default_rate * _BUCKETS))
+    if not rates:
+        return df.filter(sample_bucket_col(key_col, seed) < default_threshold)
+    rates_df = df.sparkSession.createDataFrame(
+        [(value, int(rate * _BUCKETS)) for value, rate in rates.items()],
+        ["_stratum", "_threshold"],
+    )
+    # qualified references + select(df["*"]) keep the caller's schema
+    # exact even when df itself has a _stratum/_threshold column -- no
+    # reserved names, no blind drop
+    joined = df.join(
+        F.broadcast(rates_df),
+        df[stratum_col] == rates_df["_stratum"], "left",
+    )
+    return joined.filter(
+        sample_bucket_col(key_col, seed)
+        < F.coalesce(rates_df["_threshold"], default_threshold)
+    ).select(df["*"])
 
 
 def temperature_sampling_rates(df, stratum_col, alpha=0.5):
@@ -89,48 +113,17 @@ def temperature_sampling_rates(df, stratum_col, alpha=0.5):
 
 def temperature_resample(df, stratum_col, key_col, alpha=0.5, seed=0,
                          default_rate=0.0):
-    """Temperature-rebalanced corpus: hash-threshold sampling with the
-    rates from :func:`temperature_sampling_rates`. Deterministic,
-    partition-layout invariant, append-stable -- the mixing step between
-    per-source curation and packing.
-
-    Thresholds are applied through a BROADCAST JOIN of a per-stratum
-    rates table, not stratified_hash_sample's nested CASE WHEN chain:
-    the stratum here can be high-cardinality (a url_host column has
-    ~100k values on a crawl), and a 100k-deep when/otherwise tree blows
-    up Catalyst analysis, while a broadcast of 100k tiny rows is flat.
-    Thresholds use the same int(rate * 2^32) truncation as
-    stratified_hash_sample, so membership matches it exactly.
+    """Temperature-rebalanced corpus: :func:`stratified_hash_sample`
+    with the rates from :func:`temperature_sampling_rates`.
+    Deterministic, partition-layout invariant, append-stable -- the
+    mixing step between per-source curation and packing.
 
     `default_rate` governs rows whose stratum has NO derived rate -- a
     null stratum, or a value unseen when rates were derived (appended
-    rows): 0.0 (default) drops them, matching stratified_hash_sample's
-    default_rate; 1.0 keeps them all; in between hash-samples them at
-    that rate (ADVICE r5: the drop must be a documented choice, not a
-    silent side effect of an inner join)."""
-    if not 0.0 <= default_rate <= 1.0:
-        raise ValueError(
-            f"default_rate must be in [0, 1], got {default_rate}")
-    rates = temperature_sampling_rates(df, stratum_col, alpha)
-    spark = df.sparkSession
-    default_threshold = int(default_rate * _BUCKETS)
-    if not rates:
-        return df.filter(
-            sample_bucket_col(key_col, seed) < F.lit(default_threshold)
-        )
-    rates_df = spark.createDataFrame(
-        [(value, int(rate * _BUCKETS)) for value, rate in rates.items()],
-        ["_stratum", "_threshold"],
+    rows): 0.0 (default) drops them; 1.0 keeps them all; in between
+    hash-samples them at that rate (ADVICE r5: the drop must be a
+    documented choice, not a silent side effect of an inner join)."""
+    return stratified_hash_sample(
+        df, temperature_sampling_rates(df, stratum_col, alpha),
+        stratum_col, key_col, default_rate, seed,
     )
-    # qualified references + select(df["*"]) keep the caller's schema
-    # exact even when df itself has a _stratum/_threshold column -- no
-    # reserved names, no blind drop; LEFT join so no-rate rows reach
-    # the default threshold instead of vanishing
-    joined = df.join(
-        F.broadcast(rates_df),
-        df[stratum_col] == rates_df["_stratum"], "left",
-    )
-    return joined.filter(
-        sample_bucket_col(key_col, seed)
-        < F.coalesce(rates_df["_threshold"], F.lit(default_threshold))
-    ).select(df["*"])

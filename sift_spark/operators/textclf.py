@@ -16,10 +16,10 @@ the LLM-pipeline brief's model-based filtering family.
 
 Method:
  * features: unigrams + bigrams of lowercased letter-run tokens hashed
-   into `n_buckets` buckets by their md5 prefix (the SAME feature map
-   as DSIR's portable hash -- operators/dsir.hashed_ngram_buckets;
-   md5 is computable engine-side AND in Python, so the trainer and the
-   Python scorer agree on every bucket), length-normalised counts
+   into `n_buckets` buckets by their md5 prefix (DSIR's feature map,
+   operators/dsir._bucket_col, called here as is; md5 is computable
+   engine-side AND in Python, so the trainer and the Python scorer
+   agree on every bucket), length-normalised counts
    x_db = floor(2^10 * c_db / n_d) / 2^10 on the fixed-point grid;
  * model: one weight per bucket + an intercept, sigmoid link;
  * training: full-batch gradient descent where each step is ONE
@@ -109,10 +109,9 @@ def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
         )
         .select(
             F.col(id_col),
-            # md5-prefix buckets (the True flag): the one bucketing
-            # classifier_score_udf can re-derive in Python
-            _bucket_col(F.col("_gram"), n_buckets, True)
-            .alias("bucket"),
+            # md5-prefix buckets: classifier_score_udf re-derives them
+            # in Python
+            _bucket_col(F.col("_gram"), n_buckets).alias("bucket"),
             F.col("_n"),
         )
         .groupBy(id_col, "bucket")

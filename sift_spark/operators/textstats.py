@@ -9,7 +9,10 @@ whole stage compiles to JVM codegen -- these run over every document of a
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from .dedup import md5_hash60, normalized_text_col
 
 # marker words per language for the n-gram/stopword heuristic -- small,
 # deterministic, SQL-expressible (the same lists appear in oracle_sql)
@@ -323,46 +326,33 @@ def whitespace_token_count_col(col):
 def fingerprint_col(col):
     """Whole-document fingerprint: md5 of normalized text (exactly
     reproducible in any SQL engine for the oracle gate)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(col), r"[ \t\r\n\f]+", " ")))
+    return F.md5(normalized_text_col(col))
 
 
-def winnowing_fingerprints(docs_df, k=8, window=4, portable_hash=False):
+def winnowing_fingerprints(docs_df, k=8, window=4):
     """Winnowing (Schleimer et al., SIGMOD'03): k-gram hashes, keep the
     min of each SLIDING window of `window` consecutive grams, dedupe ->
     (id, fingerprint) set. Sliding (not tumbling) windows are what give
     winnowing its guarantee: any shared substring of length >= window +
     k - 1 yields at least one shared fingerprint regardless of
     alignment. Documents with fewer than `window` grams degrade to their
-    single overall min (still fingerprinted).
-
-    portable_hash=True uses the md5-derived 60-bit hash (DuckDB-oracle
-    reproducible); the default xxhash64 is the production form."""
-    from pyspark.sql import Window
-
-    from .dedup import md5_hash60
-
+    single overall min (still fingerprinted). Gram hashes are the
+    md5-derived 60-bit md5_hash60, so the DuckDB oracle reproduces
+    every fingerprint (driver-gate row `winnowing_md5`)."""
     # materialize the normalized text ONCE per row before the per-position
     # transform: referencing the regexp_replace expression inside the
     # lambda re-evaluates it for every gram position (O(doc_len^2) regex
     # work per doc) -- same hazard fixed in dedup.char_shingles
-    normalized = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), r"[ \t\r\n\f]+", " ")
-    )
-    norm_docs = docs_df.select(F.col("doc_id"), normalized.alias("_t"))
+    norm_docs = docs_df.select(
+        F.col("doc_id"), normalized_text_col(F.col("text")).alias("_t"))
     positions = F.sequence(
         F.lit(1), F.greatest(F.length("_t") - (k - 1), F.lit(1))
     )
-    if portable_hash:
-        def gram_hash(i):
-            return md5_hash60(F.col("_t").substr(i, F.lit(k)))
-    else:
-        def gram_hash(i):
-            return F.xxhash64(F.col("_t").substr(i, F.lit(k)))
     grams = norm_docs.select(
         F.col("doc_id"),
-        F.posexplode(
-            F.transform(positions, gram_hash)
-        ).alias("pos", "gram_hash"),
+        F.posexplode(F.transform(
+            positions, lambda i: md5_hash60(F.col("_t").substr(i, F.lit(k)))
+        )).alias("pos", "gram_hash"),
     )
     slide = (
         Window.partitionBy("doc_id").orderBy("pos")

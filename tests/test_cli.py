@@ -209,6 +209,17 @@ def test_admission_cap_has_one_home():
     assert found == {"operators/extract.py:_admit"}, sorted(found)
 
 
+def test_md5_prefix_hash_has_one_home():
+    """The engine-side md5-prefix hash (conv of an md5 hex prefix) is
+    written once, in dedup.md5_prefix_col, which md5_hash60, the sample
+    and shard buckets and the DSIR/textclf feature buckets all call."""
+    import ast
+
+    found = _owners(lambda node: isinstance(node, ast.Attribute)
+                    and node.attr == "conv")
+    assert found == {"operators/dedup.py:md5_prefix_col"}, sorted(found)
+
+
 def _call_site_trees(tests=False):
     """(repo-relative path, parsed AST) of every file that calls into
     sift_spark/: the package itself, the three root scripts, scripts/

@@ -1000,6 +1000,31 @@ def test_stratified_hash_sample_rates(spark):
     assert 50 < counts.get("de", 0) < 160
 
 
+def test_stratified_hash_sample_many_strata(spark):
+    """2,000 listed strata (plus unlisted and null ones) sample exactly
+    by the per-row formula: keep iff the first 8 hex chars of
+    md5(key ':' seed) < int(rate * 2^32), with default_rate for rows
+    whose stratum has no rate."""
+    import hashlib
+
+    from sift_spark.operators.sampling import stratified_hash_sample
+
+    rows = [(i, None if i % 97 == 0 else f"s{i % 2500}")
+            for i in range(6000)]
+    df = spark.createDataFrame(rows, "doc_id long, stratum string")
+    rates = {f"s{j}": (j % 11) / 10 for j in range(2000)}
+    out = stratified_hash_sample(
+        df, rates, "stratum", "doc_id", default_rate=0.3, seed=5)
+    got = sorted(r["doc_id"] for r in out.collect())
+
+    def keep(i, stratum):
+        bucket = int(hashlib.md5(f"{i}:5".encode()).hexdigest()[:8], 16)
+        return bucket < int(rates.get(stratum, 0.3) * (1 << 32))
+
+    assert got == [i for i, stratum in rows if keep(i, stratum)]
+    assert 0 < len(got) < len(rows)
+
+
 def test_temperature_resample(spark):
     """XLM-style temperature rebalancing: alpha=1 keeps everything,
     alpha=0.5 downsamples head strata toward sqrt-flattened shares
@@ -1625,6 +1650,28 @@ def test_pack_sequences_partition_invariant(spark):
         pack_sequences(docs, budget=0)
 
 
+def test_pack_sequences_shard_is_md5_bucket(spark):
+    """The one shard hash: every doc lands in
+    pmod(sample_bucket_col(doc_id, 0), n_shards), the md5-prefix form
+    the pack_sequences oracle re-derives."""
+    from sift_spark.operators.packing import pack_sequences
+    from sift_spark.operators.sampling import sample_bucket_col
+
+    docs = spark.createDataFrame(
+        [(i, "word " * (1 + i % 9)) for i in range(60)],
+        ["doc_id", "text"])
+    expect = {
+        r["doc_id"]: r["shard"] for r in docs.select(
+            "doc_id",
+            F.pmod(sample_bucket_col("doc_id", 0), F.lit(7)).alias("shard"),
+        ).collect()
+    }
+    got = {r["doc_id"]: r["shard"] for r in
+           pack_sequences(docs, budget=20, n_shards=7).collect()}
+    assert got == expect
+    assert len(set(got.values())) > 1
+
+
 def test_materialize_packed_sequences_portable(spark):
     """Loader-ready buffers: every sequence is <= budget tokens (unless
     flagged oversized), token ids reproduce the md5-prefix word-id
@@ -1666,8 +1713,7 @@ def test_materialize_packed_sequences_portable(spark):
     from sift_spark.operators.packing import pack_sequences, word_count_col
 
     counted = docs.withColumn("_n", word_count_col("text") + 1)
-    assign = pack_sequences(counted, 64, 4, tokens_col="_n",
-                            portable_hash=True).collect()
+    assign = pack_sequences(counted, 64, 4, tokens_col="_n").collect()
     expect = {}
     for a in sorted(assign, key=lambda a: a["doc_id"]):
         expect.setdefault((a["shard"], a["seq_no"]), []).extend(

@@ -73,16 +73,6 @@ def test_bucket_distributions_are_smoothed_and_total(spark):
     assert abs(total - 1.0) < 1e-9  # smoothing keeps it a distribution
 
 
-def test_portable_and_production_hash_agree_on_ranking(spark):
-    pool, target = _pool(spark), _target(spark)
-    for portable in (False, True):
-        w = {r["doc_id"]: r["log_weight"] for r in dsir_log_weights(
-            pool, target, portable_hash=portable).collect()}
-        med = [w[i] for i in range(10)]
-        cook = [w[100 + i] for i in range(10)]
-        assert min(med) > max(cook), portable
-
-
 def test_dsir_in_curation_funnel(spark, tmp_path):
     """run_curation_job(dsir_target_df=..., dsir_k=...): DSIR as the
     final selection stage -- the funnel reports after_dsir == k and the
@@ -118,3 +108,31 @@ def test_gram_multiset_counts(spark):
     rows = hashed_ngram_buckets(docs, n_buckets=8).collect()
     # 3 unigrams + 2 bigrams, multiset (repeated 'a' kept twice)
     assert len(rows) == 5
+
+
+def test_dsir_and_classifier_share_one_feature_map(spark):
+    """hashed_ngram_buckets and textclf.doc_feature_table bucket every
+    gram the same way: per doc, the bucket multiset DSIR emits is the
+    one the classifier's (bucket, x = floor(2^F * cnt / n) / 2^F)
+    features derive, with n the doc's gram total."""
+    from collections import Counter
+
+    from sift_spark.operators.nodeclf import FEATURE_BITS
+    from sift_spark.operators.textclf import doc_feature_table
+
+    docs = _pool(spark).union(_target(spark).select(
+        (F.col("doc_id") + 500).alias("doc_id"), "text"))
+    n_buckets = 64
+    dsir = {}
+    for r in hashed_ngram_buckets(docs, n_buckets).collect():
+        dsir.setdefault(r["doc_id"], Counter())[r["bucket"]] += 1
+    clf = {}
+    for r in doc_feature_table(docs, n_buckets).collect():
+        clf.setdefault(r["doc_id"], {})[r["bucket"]] = r["x"]
+    assert set(clf) == set(dsir) and len(dsir) == 25  # the empty doc: none
+    scale = 1 << FEATURE_BITS
+    for doc_id, counts in dsir.items():
+        total = sum(counts.values())
+        assert clf[doc_id] == {
+            b: (scale * c // total) / scale for b, c in counts.items()
+        }, doc_id
