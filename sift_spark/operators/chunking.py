@@ -8,19 +8,19 @@ Spark-first split of work, with no shuffle anywhere:
   * the split cascade is inherently sequential per document, and the
     stopword ratio needs the Porter2 stemmer -> ONE Arrow-batched pandas
     UDF per document returning an array of per-chunk structs (text,
-    ratio, token count, the row's chunk count, and with a search query
-    the BM25 (field, term) bag), then a native posexplode (the
-    UDTF-equivalent, SURVEY.md §2.11)
+    ratio, token count, unit count, the row's chunk count, and with a
+    search query the BM25 (field, term) bag), then a native posexplode
+    (the UDTF-equivalent, SURVEY.md §2.11)
   * positional threshold = pure column arithmetic (classify.go:139-166)
     on the chunk count the UDF returned -- no url window
   * field-type detection = native regexp predicates
     (regex_patterns.go:28-36) -- whole-stage codegen, no Python
-  * unit counting: native expressions for words/chars; UDF for tokens
+  * unit counting = core.counters.Counter inside the same UDF, so the
+    chunk table counts exactly as the driver-side kernel does (a native
+    regex split on Java's whitespace class misses U+00A0, U+2009, U+3000)
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..core.chunker import split_text
 from ..core.classify import stopword_ratio
-from ..core.counters import CHARS, TOKENS, WORDS, Counter
+from ..core.counters import Counter
 from ..core.pipeline import SiftParams
 from ..core.selection import chunk_size
 from .search import FIELD_TERMS_COL, FIELD_TERMS_TYPE, field_term_pairs
@@ -39,6 +39,7 @@ def _chunk_schema(with_field_terms):
         T.StructField("chunk_text", T.StringType()),
         T.StructField("ratio", T.DoubleType()),
         T.StructField("n_tokens", T.IntegerType()),
+        T.StructField("n_units", T.IntegerType()),
         T.StructField("n_chunks", T.IntegerType()),
     ]
     if with_field_terms:
@@ -48,10 +49,11 @@ def _chunk_schema(with_field_terms):
 
 def make_split_classify_udf(params: SiftParams):
     """Fused map-side pass: split cascade (chunk_selection.go:107-143)
-    + stopword ratio per chunk in ONE Python stage. Each chunk's struct
-    also carries its row's chunk count, so the positional threshold is
-    pure column math after the explode with no url window. With a search
-    query the same pass emits each chunk's BM25 (field, term) bag, which
+    + stopword ratio + unit count (`params.counting_method`) per chunk
+    in ONE Python stage. Each chunk's struct also carries its row's
+    chunk count, so the positional threshold is pure column math after
+    the explode with no url window. With a search query the same pass
+    emits each chunk's BM25 (field, term) bag, which
     :func:`search.with_bm25_score` consumes instead of re-parsing the
     chunk in a second Python stage."""
     method = params.counting_method
@@ -59,6 +61,7 @@ def make_split_classify_udf(params: SiftParams):
 
     @F.pandas_udf(_chunk_schema(with_field_terms))
     def split_classify_batch(text: pd.Series) -> pd.Series:
+        counter = Counter(method, params.cl100k_path)
         out = []
         for value in text:
             if value is None:
@@ -70,7 +73,9 @@ def make_split_classify_udf(params: SiftParams):
             for chunk in chunks:
                 ratio, n_tokens = stopword_ratio(chunk)
                 row = {"chunk_text": chunk, "ratio": ratio,
-                       "n_tokens": n_tokens, "n_chunks": n_chunks}
+                       "n_tokens": n_tokens,
+                       "n_units": counter.count(chunk),
+                       "n_chunks": n_chunks}
                 if with_field_terms:
                     row[FIELD_TERMS_COL] = field_term_pairs(chunk)
                 rows.append(row)
@@ -78,27 +83,6 @@ def make_split_classify_udf(params: SiftParams):
         return pd.Series(out)
 
     return split_classify_batch
-
-
-def unit_count_col(col, method):
-    """n_units as a NATIVE expression where possible (stays in codegen)."""
-    if method == WORDS:
-        # strings.Fields semantics: split on any whitespace, drop empties
-        # (Spark's trim strips only spaces, so filter instead)
-        return F.size(F.filter(F.split(col, r"\s+"), lambda t: t != ""))
-    if method == CHARS:
-        return F.length(col)
-
-    # capture the vocab path DRIVER-side at plan build: worker daemons
-    # never see env set after session start (counters.get_tokenizer)
-    vocab_path = os.environ.get("SIFT_SPARK_CL100K_PATH")
-
-    @F.pandas_udf(T.IntegerType())
-    def token_count(text: pd.Series) -> pd.Series:
-        counter = Counter(TOKENS, vocab_path)
-        return text.map(lambda v: counter.count(v) if v else 0)
-
-    return token_count(col)
 
 
 def field_type_cols(col):
@@ -175,8 +159,7 @@ def chunk_pages(md_df, params: SiftParams | None = None):
         "url", "chunk_idx", text.alias("chunk_text"),
         F.col("c.ratio").alias("stopword_ratio"),
         n_chunks.alias("n_chunks"),
-        unit_count_col(text, params.counting_method).cast("int")
-        .alias("n_units"),
+        F.col("c.n_units").alias("n_units"),
         field.alias("field_type"),
         is_list.alias("is_list"),
         F.when(F.col("c.n_tokens") == 0, F.lit(True))

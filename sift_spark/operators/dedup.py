@@ -472,6 +472,42 @@ def block_self_join(blocks, keys, id_col, max_bucket_size=None,
     return a.join(b, functools.reduce(operator.and_, on))
 
 
+def block_seen_join(new_blocks, seen_blocks, keys, max_bucket_size,
+                    observation):
+    """The blocked join behind every seen loop (the seen-side twin of
+    block_self_join): rows of `new_blocks` and `seen_blocks` sharing
+    every `keys` value, aliased `new` and `seen`. Callers derive the
+    blocks and select / verify from the `new.` and `seen.` columns.
+    max_bucket_size caps only the seen side (the corpus-sized one,
+    where boilerplate buckets are the quadratic blowup) through
+    cap_buckets, which carries `observation`."""
+    new = new_blocks.alias("new")
+    seen = cap_buckets(seen_blocks, keys, max_bucket_size,
+                       observation).alias("seen")
+    on = [F.col(f"new.{key}") == F.col(f"seen.{key}") for key in keys]
+    return new.join(seen, functools.reduce(operator.and_, on))
+
+
+def width_checked(col, name, width_name, width):
+    """`col` (an array), asserted row by row inside the plan to hold
+    `width` elements: a non-null row of another width raises on the
+    executor, naming `width_name`, so a snapshot unioned across two
+    configurations fails the job instead of null-padding the verify.
+    NULL passes through (unmatchable). The null guard is explicit
+    because with spark.sql.ansi.enabled=false size(NULL) is -1, not
+    NULL, and a bare size(col) != width would raise on every null
+    row."""
+    return F.when(
+        col.isNotNull() & (F.size(col) != width),
+        F.raise_error(F.concat(
+            F.lit(f"{name} width != {width_name}={width} (got "),
+            F.size(col).cast("string"),
+            F.lit(f") -- snapshot writer and reader must share "
+                  f"{width_name}"),
+        )),
+    ).otherwise(col)
+
+
 def _drop_seen_matches(docs_df, matches, id_col):
     """docs_df without the new_ids a *_seen_matches table matched: one
     distinct id projection, one left_anti join (the minhash, simhash and
@@ -627,7 +663,7 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
     return result
 
 
-def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
+def minhash_seen_matches(new_sigs, seen_sigs, n_bands, n_hashes,
                          min_est_jaccard=0.5, max_bucket_size=None,
                          observation=None):
     """INCREMENTAL near-dup candidates: (new_id, seen_id, est_jaccard)
@@ -643,45 +679,40 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands=8, n_hashes=None,
     agreeing signature components (unbiased, sd = sqrt(J(1-J)/H) --
     H=32 gives +-0.09 at J=0.5; raise n_hashes for tighter gates).
 
-    Plan: band both sides (narrow transforms over the sig arrays),
-    equi-join on (band_idx, band_hash) -- the exact shape of in-batch
-    LSH, so the same hot-bucket hazard applies: max_bucket_size caps
-    the SEEN side (the corpus-sized one; boilerplate-heavy bands there
-    are the quadratic blowup), with the drop observable via
-    `observation`. Candidates then join their signatures back
-    (id-keyed equi-joins) for the component-agreement estimate. The
-    snapshot costs 8*n_hashes bytes per historical doc (~256 B at
-    H=32).
+    Plan: band both sides (narrow transforms over the sig arrays) and
+    join them through block_seen_join on (band_idx, band_hash), which
+    caps the SEEN side's hot buckets (max_bucket_size, observable via
+    `observation`). Candidates then join their signatures back by id
+    for the component-agreement estimate. The bands do not carry the
+    signature: each doc has n_bands band rows, so carrying its
+    8*n_hashes bytes (~256 B at H=32) through the band join would
+    multiply the seen side's band shuffle by that much at crawl
+    scale, where the id-keyed re-joins shuffle each signature once.
 
-    Both sides MUST come from the same minhash configuration: the
-    signature LENGTHS are checked (one row probed per side -- cheap on
-    a materialized snapshot; a mismatched snapshot would null-pad the
-    zip_with, deflate every estimate, and slice degenerate bands), but
-    the hash FAMILY (portable_hash) cannot be told apart from the
-    values -- mixing families simply matches nothing, so keep the
-    snapshot's writer and reader on one setting."""
-    n_hashes = _resolve_n_hashes(new_sigs, n_hashes)
-    # the probe is an eager one-row action: cheap on a materialized
-    # snapshot, but on a LAZY signature frame it executes part of the
-    # signature lineage at plan-build time once per call (ADVICE r7)
-    seen_probe = seen_sigs.select("sig").first()  # empty seen: no-op
-    if seen_probe is not None and len(seen_probe["sig"]) != n_hashes:
-        raise ValueError(
-            f"seen snapshot signatures carry "
-            f"{len(seen_probe['sig'])} hashes but the new batch "
-            f"uses {n_hashes} -- snapshot writer and reader must "
-            "share n_hashes"
+    n_bands and n_hashes are required (the caller built the
+    signatures, so nothing is probed and building the plan runs no
+    Spark job). Both sides MUST come from the same minhash
+    configuration: every signature of BOTH sides is width-checked
+    against n_hashes inside the plan (width_checked), so a snapshot
+    unioned from sinks signed with different n_hashes raises when
+    the plan runs instead of null-padding the zip_with and deflating
+    every estimate. The hash FAMILY (portable_hash) cannot be told
+    apart from the values -- mixing families simply matches nothing,
+    so keep the snapshot's writer and reader on one setting."""
+    def bands(sigs):
+        checked = sigs.select(
+            "doc_id",
+            width_checked(F.col("sig"), "minhash signature", "n_hashes",
+                          n_hashes).alias("sig"),
         )
-    new_bands = _band_table(new_sigs, n_bands, n_hashes, "doc_id") \
-        .withColumnRenamed("doc_id", "new_id")
-    seen_bands = cap_buckets(
-        _band_table(seen_sigs, n_bands, n_hashes, "doc_id")
-        .withColumnRenamed("doc_id", "seen_id"),
-        ("band_idx", "band_hash"), max_bucket_size, observation,
-    )
+        return _band_table(checked, n_bands, n_hashes, "doc_id")
+
     candidates = (
-        new_bands.join(seen_bands, ["band_idx", "band_hash"])
-        .select("new_id", "seen_id")
+        block_seen_join(bands(new_sigs), bands(seen_sigs),
+                        ("band_idx", "band_hash"), max_bucket_size,
+                        observation)
+        .select(F.col("new.doc_id").alias("new_id"),
+                F.col("seen.doc_id").alias("seen_id"))
         .distinct()
     )
     a = new_sigs.select(F.col("doc_id").alias("new_id"),
@@ -768,8 +799,8 @@ def _iteration_checkpointer(df, checkpoint_dir):
     checkpoint()'s per-context subdir gave): without it, a second run
     would overwrite the files still backing the first run's lazy
     result. The LAST two generations back the returned result and
-    intentionally survive; connected_components/_star surface the
-    directory on the returned DataFrame as `.checkpoint_run_dir`, and
+    intentionally survive; connected_components/_star return the
+    directory with `return_run_dir=True`, and
     :func:`clear_checkpoint_run` deletes it once results are consumed
     or persisted -- crashed runs likewise leave their directory for
     the caller's retention policy."""
@@ -794,36 +825,17 @@ def _iteration_checkpointer(df, checkpoint_dir):
     return reliable_cut
 
 
-def clear_checkpoint_run(result_df=None, run_dir=None, spark=None):
+def clear_checkpoint_run(spark, run_dir):
     """Delete the checkpoint run directory backing a reliable-checkpoint
     connected-components result, AFTER the caller has collected or
     persisted it (the final two parquet generations back the lazy
-    DataFrame until then).
-
-    Accepts either the result DataFrame (whose `.checkpoint_run_dir`
-    attribute carries the directory) or an EXPLICIT `run_dir` string --
-    the attribute lives on one specific DataFrame object and any
-    transformation/persist/re-read produces a new object without it
-    (ADVICE r5), so callers that pass results around should capture the
-    directory at creation (`return_run_dir=True` on
-    connected_components/_star) and pass it here explicitly.
+    DataFrame until then). `run_dir` is the handle
+    connected_components/_star return with `return_run_dir=True`.
 
     Returns True iff the directory was actually deleted; False means
-    either the handle was lost (no run_dir and no attribute) or the
-    filesystem delete itself failed (already logged by the best-effort
-    deleter) -- callers relying on cleanup should treat False as
-    'generations may be accumulating'."""
-    if run_dir is None and result_df is not None:
-        run_dir = getattr(result_df, "checkpoint_run_dir", None)
-    if not run_dir:
-        return False
-    if spark is None:
-        spark = (result_df.sparkSession if result_df is not None
-                 else None)
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
+    the filesystem delete itself failed (already logged by the
+    best-effort deleter) -- callers relying on cleanup should treat
+    False as 'generations may be accumulating'."""
     return _delete_hadoop_path(spark, run_dir)
 
 
@@ -897,14 +909,8 @@ def connected_components(pairs_df, max_iterations=50, checkpoint_dir=None,
     result = labels.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component_id")
     )
-    run_dir = ckpt.run_dir if checkpoint_dir else None
-    if checkpoint_dir:
-        result.checkpoint_run_dir = run_dir
     if return_run_dir:
-        # the explicit handle survives transformations/persist/re-read,
-        # unlike the attribute (ADVICE r5); pass it to
-        # clear_checkpoint_run(run_dir=...) after consuming the result
-        return result, run_dir
+        return result, ckpt.run_dir if checkpoint_dir else None
     return result
 
 
@@ -1023,14 +1029,8 @@ def connected_components_star(pairs_df, max_iterations=50,
     result = labeled.unionByName(self_labeled).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component_id")
     )
-    run_dir = ckpt.run_dir if checkpoint_dir else None
-    if checkpoint_dir:
-        result.checkpoint_run_dir = run_dir
     if return_run_dir:
-        # the explicit handle survives transformations/persist/re-read,
-        # unlike the attribute (ADVICE r5); pass it to
-        # clear_checkpoint_run(run_dir=...) after consuming the result
-        return result, run_dir
+        return result, ckpt.run_dir if checkpoint_dir else None
     return result
 
 
@@ -1152,10 +1152,10 @@ def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
 
     Same 16-bit-chunk pigeonhole blocking as the in-batch
     simhash_pairs_from_hashes (lossless for max_hamming <= 3), applied
-    cross-table: both sides block narrowly, equi-join on
-    (chunk_idx, chunk_val), exact Hamming verify via native bit_count.
-    max_bucket_size caps the SEEN side's hot chunk values (the
-    corpus-sized one), observable via `observation`.
+    cross-table: both sides block narrowly, block_seen_join equi-joins
+    them on (chunk_idx, chunk_val) and caps the SEEN side's hot chunk
+    values (max_bucket_size, observable via `observation`), then an
+    exact Hamming verify via native bit_count.
 
     max_hamming > 3 is REFUSED: past the pigeonhole bound the chunk
     join silently loses matches (a 4-bit difference can spread one bit
@@ -1169,23 +1169,16 @@ def simhash_seen_matches(new_hashed, seen_hashed, max_hamming=3,
             "is lossless only for <= 3 differing bits); use the "
             "minhash seen loop for looser similarity gates"
         )
-    new_b = (
-        _simhash_blocks(new_hashed, "doc_id")
-        .withColumnRenamed("doc_id", "new_id")
-        .withColumnRenamed("simhash", "_sh_new")
-    )
-    seen_b = cap_buckets(
-        _simhash_blocks(seen_hashed, "doc_id")
-        .withColumnRenamed("doc_id", "seen_id")
-        .withColumnRenamed("simhash", "_sh_seen"),
-        ("chunk_idx", "chunk_val"), max_bucket_size, observation,
-    )
     return (
-        new_b.join(seen_b, ["chunk_idx", "chunk_val"])
+        block_seen_join(_simhash_blocks(new_hashed, "doc_id"),
+                        _simhash_blocks(seen_hashed, "doc_id"),
+                        ("chunk_idx", "chunk_val"), max_bucket_size,
+                        observation)
         .select(
-            "new_id", "seen_id",
+            F.col("new.doc_id").alias("new_id"),
+            F.col("seen.doc_id").alias("seen_id"),
             F.bit_count(
-                F.col("_sh_new").bitwiseXOR(F.col("_sh_seen"))
+                F.col("new.simhash").bitwiseXOR(F.col("seen.simhash"))
             ).alias("hamming"),
         )
         .distinct()

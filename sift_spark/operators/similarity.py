@@ -15,7 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .dedup import _drop_seen_matches, block_self_join, cap_buckets
+from .dedup import (
+    _drop_seen_matches,
+    block_seen_join,
+    block_self_join,
+    width_checked,
+)
 
 
 def dot_col(a, b):
@@ -152,69 +157,36 @@ def ivf_build(emb_df, n_clusters=16):
 def ivf_save(index, path):
     """Persist an ivf_build index for reuse across jobs: the assignment
     table as parquet (distributed write) plus the centroid list as ONE
-    real JSON file through the Hadoop FileSystem client (plans/fsio) --
-    any Hadoop-capable URI (hdfs://, s3a://, file://) works, and the
-    sidecar is a plain file instead of the round-5 one-row Spark text
-    DIRECTORY (which every reader had to special-case)."""
+    real JSON file, `centers.json`, through the Hadoop FileSystem
+    client (plans/fsio) -- any Hadoop-capable URI (hdfs://, s3a://,
+    file://) works."""
     import json
-    import logging
 
-    from ..plans.fsio import delete_path, path_exists, write_text_file
+    from ..plans.fsio import write_text_file
 
     assigned, centers = index
     assigned.write.mode("overwrite").parquet(path + "/assigned")
-    spark = assigned.sparkSession
-    write_text_file(spark, path + "/centers.json", json.dumps(centers))
-    # retire a superseded round-5 sidecar DIRECTORY: ivf_load probes
-    # centers.json first, but if that file were later lost, a stale
-    # centers/ left behind would silently pair fresh assignments with
-    # old centroids (review r6); delete it after the new sidecar is
-    # safely written. The whole cleanup is best-effort -- the index IS
-    # saved at this point, so not even a failing exists() probe may
-    # fail the save (review r6 pass 3).
-    try:
-        stale = path_exists(spark, path + "/centers")
-        if stale and not delete_path(spark, path + "/centers"):
-            logging.getLogger(__name__).warning(
-                "could not delete superseded sidecar %s/centers -- "
-                "remove it manually; centers.json takes precedence "
-                "while both exist", path,
-            )
-    except Exception as exc:
-        logging.getLogger(__name__).warning(
-            "sidecar cleanup probe failed for %s/centers: %s", path, exc,
-        )
+    write_text_file(assigned.sparkSession, path + "/centers.json",
+                    json.dumps(centers))
 
 
 def ivf_load(spark, path):
     """Load an index persisted by :func:`ivf_save`; returns the
     (assigned_df, centers) pair ivf_cosine_topk consumes via `index=`.
 
-    Sidecar resolution probes each format EXPLICITLY with fs.exists()
-    (ADVICE r5: catching AnalysisException around the read also
-    swallowed genuine analysis failures -- permissions, corrupt files
-    -- and silently paired fresh assignments with stale centers):
-    `centers.json` is both the current single-file format and,
-    byte-compatibly, the pre-round-5 driver-local format (fsio reads
-    it from any filesystem); the round-5 one-row Spark text DIRECTORY
-    `centers/` remains loadable as the middle generation. A missing
-    sidecar raises with both probed paths; read failures propagate
+    The sidecar is probed EXPLICITLY with fs.exists(): catching
+    AnalysisException around the read would also swallow genuine
+    analysis failures (permissions, corrupt files). A missing
+    `centers.json` raises FileNotFoundError; read failures propagate
     with their real cause."""
     import json
 
     from ..plans.fsio import path_exists, read_text_file
 
     assigned = spark.read.parquet(path + "/assigned")
-    if path_exists(spark, path + "/centers.json"):
-        return assigned, json.loads(
-            read_text_file(spark, path + "/centers.json"))
-    if path_exists(spark, path + "/centers"):
-        row = spark.read.text(path + "/centers").first()
-        if row is None:
-            raise ValueError(f"empty centers sidecar at {path}/centers")
-        return assigned, json.loads(row["value"])
-    raise FileNotFoundError(
-        f"no centers sidecar at {path}/centers.json or {path}/centers")
+    if not path_exists(spark, path + "/centers.json"):
+        raise FileNotFoundError(f"no centers sidecar at {path}/centers.json")
+    return assigned, json.loads(read_text_file(spark, path + "/centers.json"))
 
 
 def ivf_cosine_topk(emb_df, query_vec, k=10, n_clusters=16, nprobe=4,
@@ -348,22 +320,21 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
     snapshot carries the vectors themselves.
 
     Plan: both sides bucket narrowly on the SAME seed-deterministic
-    hyperplanes, equi-join on the bucket (the in-batch
-    embedding_near_duplicates shape -- never all-pairs), exact-cosine
-    verify. max_bucket_size caps the SEEN side's hot buckets (the
-    corpus-sized one), observable via `observation` (same metrics as
-    the minhash cap). Recall is bounded by single-bucket LSH exactly
-    as in-batch: near-identical vectors land in the same bucket with
-    high probability at high min_cosine.
+    hyperplanes, block_seen_join equi-joins them on the bucket (never
+    all-pairs) and caps the SEEN side's hot buckets (max_bucket_size,
+    observable via `observation`), then an exact-cosine verify. Recall
+    is bounded by single-bucket LSH exactly as in-batch: near-identical
+    vectors land in the same bucket with high probability at high
+    min_cosine.
 
     Pass `dim` explicitly in production -- the call then stays FULLY
     LAZY (no driver probes); omitting it triggers one ad-hoc
     first()-probe on the new batch to learn the width (the
     embedding_near_duplicates convention). Either way, EVERY row of
-    BOTH sides is width-asserted inside the plan (raise_error on the
-    executors), so a mixed-width snapshot -- e.g. weekly sinks unioned
-    across an embedding-model change -- fails the job loudly instead
-    of null-padding cosines and silently re-admitting near-duplicates.
+    BOTH sides is width-asserted inside the plan (dedup.width_checked),
+    so a mixed-width snapshot -- e.g. weekly sinks unioned across an
+    embedding-model change -- fails the job loudly instead of
+    null-padding cosines and silently re-admitting near-duplicates.
     Rows with NULL embeddings are unmatchable and pass through to
     neither side (they can never be dropped as duplicates)."""
     if dim is None:
@@ -389,45 +360,20 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
         dim = len(first["embedding"])
     planes = make_hyperplanes(dim, 10)
 
-    def bucketed(df, out_id):
-        vec = F.col("embedding").cast("array<double>")
-        # per-row width assertion INSIDE the plan: a wrong-width row
-        # raises on the executor (null vecs fall through to the
-        # otherwise branch as null -> null bucket -> unmatchable)
-        # guard the null case EXPLICITLY: under ANSI mode (the PySpark 4
-        # default) size(NULL) is NULL and the predicate is null-safe,
-        # but with spark.sql.ansi.enabled=false size(NULL) is -1 and a
-        # bare size(vec) != dim would raise for every null-embedding
-        # row instead of passing it through as documented (ADVICE r7)
-        checked = F.when(
-            vec.isNotNull() & (F.size(vec) != dim),
-            F.raise_error(F.concat(
-                F.lit(f"embedding width != dim={dim} (got "),
-                F.size(vec).cast("string"),
-                F.lit(") -- snapshot writer and reader must share "
-                      "the embedding space"),
-            )).cast("array<double>"),
-        ).otherwise(vec)
-        return df.select(
-            F.col("vec_id").alias(out_id),
-            checked.alias(f"_v_{out_id}"),
-        ).withColumn(
-            "bucket",
-            hyperplane_bucket_col(F.col(f"_v_{out_id}"), planes),
-        )
+    def bucketed(df):
+        vec = width_checked(F.col("embedding").cast("array<double>"),
+                            "embedding", "dim", dim)
+        return df.select(F.col("vec_id"), vec.alias("v")).withColumn(
+            "bucket", hyperplane_bucket_col(F.col("v"), planes))
 
-    new_b = bucketed(new_emb, "new_id")
-    seen_b = cap_buckets(
-        bucketed(seen_emb, "seen_id"), ("bucket",), max_bucket_size,
-        observation,
-    )
     return (
-        new_b.join(seen_b, "bucket")
+        block_seen_join(bucketed(new_emb), bucketed(seen_emb), ("bucket",),
+                        max_bucket_size, observation)
         .select(
-            "new_id", "seen_id",
-            F.round(
-                cosine_col(F.col("_v_new_id"), F.col("_v_seen_id")), 6
-            ).alias("cosine"),
+            F.col("new.vec_id").alias("new_id"),
+            F.col("seen.vec_id").alias("seen_id"),
+            F.round(cosine_col(F.col("new.v"), F.col("seen.v")), 6)
+            .alias("cosine"),
         )
         .filter(F.col("cosine") >= min_cosine)
     )

@@ -131,10 +131,12 @@ def test_real_vocab_token_budget_through_spark(spark, monkeypatch):
     assert len(row["text"]) < len(body)  # the budget actually truncated
 
 
-def test_real_vocab_through_unit_count_col(spark, monkeypatch):
-    """chunk-table token counting (unit_count_col) captures the env
-    DRIVER-side at plan build and matches the driver encoder exactly."""
-    from sift_spark.operators.chunking import unit_count_col
+def test_real_vocab_through_chunk_pages(spark, monkeypatch):
+    """chunk-table token counting captures the vocab path DRIVER-side
+    (SiftParams.cl100k_path, read from the env when the params are
+    built) and matches the driver encoder exactly."""
+    from sift_spark.core.pipeline import SiftParams
+    from sift_spark.operators.chunking import chunk_pages
 
     monkeypatch.setenv("SIFT_SPARK_CL100K_PATH", VOCAB)
     texts = [
@@ -142,14 +144,14 @@ def test_real_vocab_through_unit_count_col(spark, monkeypatch):
         "shuffle partitions join and broadcast the small side",
         "it's ranked, scored and budgeted in 2024",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], ["chunk_text"])
+    md = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(texts)], ["url", "text_md"])
     got = {
-        r["chunk_text"]: r["n"]
-        for r in df.select(
-            "chunk_text",
-            unit_count_col(F.col("chunk_text"), TOKENS).alias("n"),
-        ).collect()
+        r["chunk_text"]: r["n_units"]
+        for r in chunk_pages(md, SiftParams(counting_method=TOKENS))
+        .select("chunk_text", "n_units").collect()
     }
+    assert set(got) == set(texts)
     bpe = Counter(TOKENS, VOCAB)
     for t in texts:
         assert got[t] == bpe.count(t), t

@@ -184,6 +184,30 @@ def test_bucket_cap_has_one_home():
     assert found == {"operators/dedup.py:cap_buckets"}, sorted(found)
 
 
+def _calls_to(name):
+    """An `_owners` matcher for calls to `name` (bare or attribute)."""
+    import ast
+
+    return lambda node: isinstance(node, ast.Call) and name in (
+        getattr(node.func, "id", None), getattr(node.func, "attr", None))
+
+
+def test_seen_join_has_one_home():
+    """Only the two blocked joins call cap_buckets: block_self_join for
+    every in-batch path and block_seen_join for every seen loop (minhash,
+    simhash, embedding), so no matcher hand-writes its own capped join."""
+    found = _owners(_calls_to("cap_buckets"))
+    assert found == {"operators/dedup.py:block_self_join",
+                     "operators/dedup.py:block_seen_join"}, sorted(found)
+
+
+def test_width_check_has_one_home():
+    """raise_error is called in one function, the in-plan width check
+    that the minhash and embedding seen loops run on both sides."""
+    found = _owners(_calls_to("raise_error"))
+    assert found == {"operators/dedup.py:width_checked"}, sorted(found)
+
+
 def test_chunk_size_rule_has_one_home():
     """The large-text chunk-size rule (chunk_selection.go:117-143) is
     written once: LARGE_TEXT_MULTIPLIER is named in one function,

@@ -804,25 +804,7 @@ def test_ivf_save_load_roundtrip(spark, embeddings, tmp_path):
     legacy = ivf_load(spark, str(old))
     assert legacy[1] == index[1]
 
-    # round-5 format (one-row Spark text DIRECTORY) still loads...
-    r5 = str(tmp_path / "ivf_r5")
-    index[0].write.mode("overwrite").parquet(r5 + "/assigned")
-    spark.createDataFrame([(json.dumps(index[1]),)], "value string") \
-        .coalesce(1).write.mode("overwrite").text(r5 + "/centers")
-    assert ivf_load(spark, r5)[1] == index[1]
-
-    # ...and RE-SAVING over it retires the stale centers/ directory so
-    # it can never shadow a lost centers.json later (review r6)
-    other = ([list(c) for c in index[1]][::-1]
-             if len(index[1]) > 1 else index[1])
-    ivf_save((index[0], other), r5)
-    import os
-
-    assert not os.path.exists(r5 + "/centers")
-    assert ivf_load(spark, r5)[1] == other
-
-    # a missing sidecar raises with the probed paths, never a silent
-    # fallback
+    # a missing sidecar raises, never a silent fallback
     bare = str(tmp_path / "ivf_bare")
     index[0].write.mode("overwrite").parquet(bare + "/assigned")
     with pytest.raises(FileNotFoundError):
@@ -855,7 +837,8 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     # parquet still backing the first run's lazy result
     shared = str(tmp_path / "shared")
     pairs_b = spark.createDataFrame([(5, 6)], ["id_a", "id_b"])
-    r1 = connected_components(pairs, checkpoint_dir=shared)
+    r1, rd1 = connected_components(
+        pairs, checkpoint_dir=shared, return_run_dir=True)
     r2 = connected_components(pairs_b, checkpoint_dir=shared)
     assert {r["doc_id"]: r["component_id"] for r in r2.collect()} == \
         {5: 5, 6: 5}
@@ -863,29 +846,25 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert len(list((tmp_path / "shared").glob("run-*"))) == 2
 
     # explicit retention: after consuming a result, its run dir can be
-    # purged through the surfaced handle without touching the other's
+    # purged through the returned handle without touching the other's
     from sift_spark.operators.dedup import clear_checkpoint_run
 
     import os
 
-    assert os.path.isdir(r1.checkpoint_run_dir)
-    assert clear_checkpoint_run(r1) is True
-    assert not os.path.exists(r1.checkpoint_run_dir)
+    assert os.path.isdir(rd1)
+    assert clear_checkpoint_run(spark, rd1) is True
+    assert not os.path.exists(rd1)
     assert len(list((tmp_path / "shared").glob("run-*"))) == 1
     assert {r["doc_id"]: r["component_id"] for r in r2.collect()} == \
         {5: 5, 6: 5}  # the other run's result still readable
 
-    # the EXPLICIT handle (return_run_dir=True) survives
-    # transformations that strip the DataFrame attribute (ADVICE r5:
-    # attribute-only cleanup silently no-ops on any derived frame) --
-    # and the bool return makes a lost-handle no-op detectable
-    r3, rd3 = connected_components(
+    # the returned handle survives transformations of the result
+    r3, rd3 = connected_components_star(
         pairs_b, checkpoint_dir=shared, return_run_dir=True)
-    derived = r3.filter("doc_id > 0")  # new object, attribute gone
+    derived = r3.filter("doc_id > 0")
     assert derived.count() == 2
-    assert clear_checkpoint_run(derived) is False  # lost attribute
     assert os.path.isdir(rd3)
-    assert clear_checkpoint_run(run_dir=rd3, spark=spark) is True
+    assert clear_checkpoint_run(spark, rd3) is True
     assert not os.path.exists(rd3)
 
 
@@ -2147,9 +2126,9 @@ def test_minhash_against_seen(spark):
         min_est_jaccard=0.5, max_bucket_size=2).collect()}
     assert kept_capped == {10, 11}
 
-    # a snapshot signed with a different n_hashes must fail fast, not
-    # silently deflate every estimate (review r7)
-    with pytest.raises(ValueError, match="share n_hashes"):
+    # a snapshot signed with a different n_hashes must fail when the
+    # plan runs, not silently deflate every estimate
+    with pytest.raises(Exception, match="share n_hashes"):
         minhash_seen_matches(new_sigs, minhash_signatures(
             char_shingles(seen, 8, distinct=False), n_hashes=8),
             n_bands=4, n_hashes=16).collect()
@@ -2158,6 +2137,66 @@ def test_minhash_against_seen(spark):
     assert {r["doc_id"] for r in dedup_against_seen_minhash(
         new, empty_sigs, k=8, n_hashes=16, n_bands=4).collect()
     } == {10, 11}
+
+
+def test_minhash_against_seen_mixed_width_snapshot_raises(spark):
+    """A snapshot unioned from sinks signed with different n_hashes
+    raises when the plan runs, even when its FIRST row has the expected
+    width (a one-row probe passes it, and zip_with then null-pads the
+    short signatures: at most 8 of 16 components can agree)."""
+    from sift_spark.operators.dedup import minhash_seen_matches
+
+    schema = "doc_id long, sig array<long>"
+    wide = list(range(16))
+    new = spark.createDataFrame([(10, wide)], schema)
+    seen = spark.createDataFrame([(1, wide)], schema).coalesce(1).union(
+        spark.createDataFrame([(2, wide[:8])], schema).coalesce(1))
+    assert len(seen.first()["sig"]) == 16
+    with pytest.raises(Exception, match="n_hashes=16"):
+        minhash_seen_matches(new, seen, 4, 16).collect()
+
+
+def test_minhash_against_seen_builds_without_jobs(spark):
+    """Building the minhash seen matcher and drop runs zero Spark jobs:
+    n_bands and n_hashes come from the caller and the signature widths
+    are checked inside the plan, with no driver probe."""
+    from sift_spark.operators.dedup import (
+        dedup_against_seen_minhash,
+        minhash_seen_matches,
+    )
+
+    sigs = spark.createDataFrame(
+        [(1, list(range(16)))], "doc_id long, sig array<long>")
+    docs = spark.createDataFrame([(2, "some text here")], ["doc_id", "text"])
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    minhash_seen_matches(sigs, sigs, 4, 16)
+    dedup_against_seen_minhash(docs, sigs, n_hashes=16, n_bands=4)
+    after = len(tracker.getJobIdsForGroup(None) or [])
+    assert before == after  # plan-building ran zero Spark jobs
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_width_check_null_safe_under_either_ansi_mode(spark, ansi):
+    """width_checked passes NULL arrays through and raises on a wrong
+    width with ANSI mode on and off (size(NULL) is -1 with it off)."""
+    from sift_spark.operators.dedup import width_checked
+
+    df = spark.createDataFrame(
+        [(1, [1, 2]), (2, None)], "id long, sig array<long>")
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = df.select(
+            "id", width_checked(F.col("sig"), "sig", "n_hashes", 2)
+            .alias("sig")).collect()
+        assert sorted((r["id"], r["sig"]) for r in got) == [
+            (1, [1, 2]), (2, None)]
+        with pytest.raises(Exception, match=r"n_hashes=3 \(got 2\)"):
+            df.select(width_checked(
+                F.col("sig"), "sig", "n_hashes", 3)).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
 
 
 def test_curation_mix_null_stratum_metric(spark, tmp_path):

@@ -9,7 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from sift_spark.core.counters import WORDS
+from sift_spark.core.counters import CHARS, TOKENS, WORDS
 from sift_spark.core.pipeline import SiftParams
 from sift_spark.operators.extract import extract_pages
 from sift_spark.sources.fixtures import build_pages_df
@@ -58,15 +58,18 @@ def test_column_pruning_drops_unused_columns(spark, pages_parquet):
     assert "ReadSchema: struct<url:string,html:binary>" in plan
 
 
-def test_chunk_pipeline_is_shuffle_free(spark):
+@pytest.mark.parametrize("method", [WORDS, CHARS, TOKENS])
+def test_chunk_pipeline_is_shuffle_free(spark, method):
     from sift_spark.operators.chunking import chunk_pages
 
     md = spark.createDataFrame(
         [("u", "text " * 300)], ["url", "text_md"]
     )
-    plan = plan_of(chunk_pages(md, SiftParams(counting_method=WORDS)))
-    # the UDF returns each row's chunk count, so the positional threshold
-    # needs no url window: no Exchange, one Python pass per document
+    plan = plan_of(chunk_pages(md, SiftParams(counting_method=method)))
+    # the UDF returns each row's chunk count and each chunk's unit count,
+    # so the positional threshold needs no url window and no counting
+    # method adds a Python stage: no Exchange, one Python pass per
+    # document
     assert count_nodes(plan, "Exchange") == 0
     assert count_nodes(plan, "ArrowEvalPython") == 1
 

@@ -4,7 +4,7 @@ plus relational-vs-UDF equivalence and partitioning independence."""
 import pytest
 from pyspark.sql import functions as F
 
-from sift_spark.core.counters import WORDS
+from sift_spark.core.counters import CHARS, TOKENS, WORDS, Counter
 from sift_spark.core.pipeline import SiftParams
 from sift_spark.operators.chunking import chunk_pages, filter_extraneous
 from sift_spark.operators.extract import extract_markdown, extract_pages
@@ -127,7 +127,7 @@ def test_chunk_table_schema_and_classification(spark, fixture_pages):
         "url", "chunk_idx", "chunk_text", "n_chunks", "n_units",
         "field_type", "is_list", "is_extraneous", "stopword_ratio",
     }
-    # n_units native expression matches Python word count
+    # n_units is the Python word count
     for row in chunks.limit(50).collect():
         assert row["n_units"] == len(row["chunk_text"].split())
     # classifier columns agree with the core kernel
@@ -140,6 +140,23 @@ def test_chunk_table_schema_and_classification(spark, fixture_pages):
         assert row["is_extraneous"] == expected, row["chunk_text"][:50]
     kept = filter_extraneous(chunks)
     assert kept.count() <= chunks.count()
+
+
+@pytest.mark.parametrize("method", [WORDS, CHARS, TOKENS])
+def test_chunk_table_units_match_core_counter(spark, method):
+    """n_units is the core counter's count of each chunk, also across
+    the unicode spaces (U+00A0, U+2009, U+3000) that strings.Fields and
+    str.split() split on and Java's regex \\s does not."""
+    params = SiftParams(counting_method=method)
+    md = spark.createDataFrame(
+        [("doc://nbsp", "ten\xa0thousand euros"),
+         ("doc://thin", "a\u2009b\u3000c d")], ["url", "text_md"]
+    )
+    rows = chunk_pages(md, params).collect()
+    assert {r["url"] for r in rows} == {"doc://nbsp", "doc://thin"}
+    counter = Counter(method, params.cl100k_path)
+    for r in rows:
+        assert r["n_units"] == counter.count(r["chunk_text"]), r["url"]
 
 
 def test_chunk_table_duplicate_url_counts_own_chunks(spark):
