@@ -726,8 +726,7 @@ def _q_node_classifier(spark, sf_dir):
 
     data = _synthetic_node_features(spark, sf_dir)
     model = train_logreg(
-        data, ["x1", "x2", "x3"], "y", n_iter=_NODE_CLF_ITER,
-        link="rational",
+        data, ["x1", "x2", "x3"], "y", n_iter=_NODE_CLF_ITER
     )
     weights = spark.createDataFrame(
         [("weight", "intercept", model["intercept"])]
@@ -740,9 +739,7 @@ def _q_node_classifier(spark, sf_dir):
     scores = data.select(
         F.lit("score").alias("kind"),
         F.col("item"),
-        logreg_score_col(["x1", "x2", "x3"], model, "rational").alias(
-            "value"
-        ),
+        logreg_score_col(["x1", "x2", "x3"], model).alias("value"),
     )
     return weights.unionByName(scores)
 
@@ -865,8 +862,7 @@ def _q_dsir_select(spark, sf_dir):
         "label", (F.col("doc_id") % 3 == 0).cast("int")
     )
     model = train_text_classifier(
-        labelled, n_buckets=_DSIR_BUCKETS, n_iter=_CLF_ITER,
-        link="rational",
+        labelled, n_buckets=_DSIR_BUCKETS, n_iter=_CLF_ITER
     )
     clf = score_text_classifier(labelled, model).select(
         "doc_id", "clf_score"

@@ -819,7 +819,13 @@ def train_clf_main(argv=None):
     setup: positive = curated/target slice, negative = raw pool sample)
     and save it for curate/crawl-curate's --clf-model gate."""
     parser = argparse.ArgumentParser(
-        description="sift-spark quality-classifier training job"
+        description="sift-spark quality-classifier training job. Models "
+                    "use the rational sigmoid link; a model saved with "
+                    "the old logistic link is refused by --clf-model and "
+                    "must be retrained. Scores of a retrained model "
+                    "differ from the old ones, so pick --min-clf-score "
+                    "again, e.g. with textclf.classifier_threshold"
+                    "(scored_df, keep_frac) over a scored sample."
     )
     parser.add_argument("--pos", required=True,
                         help="positive-class docs parquet (the curated"

@@ -32,9 +32,6 @@ representable in float64 and every engine computes identical bits --
    entering the gradient sums, so the sums add exactly representable
    values whose running total stays inside 53 bits -- float addition
    is then EXACT, and therefore order- and partitioning-independent.
-The optional `link='logistic'` uses the true `exp()` sigmoid for
-production use; units pin that both links learn the same separator on
-fixtures.
 """
 
 from __future__ import annotations
@@ -70,16 +67,6 @@ def rational_sigmoid_col(z):
     return F.lit(0.5) + F.lit(0.5) * z / (F.lit(1.0) + F.abs(z))
 
 
-def logistic_sigmoid_col(z):
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-_LINKS = {
-    "rational": rational_sigmoid_col,
-    "logistic": logistic_sigmoid_col,
-}
-
-
 def power_of_two_lr(n_rows):
     """Learning rate '4 / 2^ceil(log2 n)': a power of two (exact
     scaling) that normalises the un-averaged gradient sum by ~n."""
@@ -88,20 +75,14 @@ def power_of_two_lr(n_rows):
     return 4.0 / float(1 << (n_rows - 1).bit_length())
 
 
-def _score_expr(feature_cols, weights, intercept, link):
+def _score_expr(feature_cols, weights, intercept):
     z = F.lit(float(intercept))
     for name, w in zip(feature_cols, weights):
         z = z + F.lit(float(w)) * F.col(name)
-    return _LINKS[link](z)
+    return rational_sigmoid_col(z)
 
 
-def train_logreg(
-    df,
-    feature_cols,
-    label_col,
-    n_iter=12,
-    link="rational",
-):
+def train_logreg(df, feature_cols, label_col, n_iter=12):
     """Fixed-iteration batch gradient descent for logistic regression.
 
     Each step evaluates the current linear score against the cached
@@ -114,8 +95,6 @@ def train_logreg(
     "n_rows": n}`.  Deterministic: same data (as a multiset) -> same
     bits, regardless of partitioning or cluster size.
     """
-    if link not in _LINKS:
-        raise ValueError(f"unknown link {link!r}")
     proj = df.select(
         *[F.col(c).cast("double").alias(c) for c in feature_cols],
         F.col(label_col).cast("double").alias("__y"),
@@ -127,7 +106,7 @@ def train_logreg(
         intercept, weights = 0.0, [0.0] * len(feature_cols)
         for _ in range(n_iter):
             p = quantize_col(
-                _score_expr(feature_cols, weights, intercept, link),
+                _score_expr(feature_cols, weights, intercept),
                 WEIGHT_BITS,
             )
             d = (p - F.col("__y")).alias("__d")
@@ -162,11 +141,9 @@ def _clamp(w):
     return max(-_WEIGHT_CLAMP, min(_WEIGHT_CLAMP, w))
 
 
-def logreg_score_col(feature_cols, model, link="rational"):
+def logreg_score_col(feature_cols, model):
     """Probability column for a fitted model over the same features."""
-    return _score_expr(
-        feature_cols, model["weights"], model["intercept"], link
-    )
+    return _score_expr(feature_cols, model["weights"], model["intercept"])
 
 
 # ---------------------------------------------------------------------------
@@ -221,13 +198,9 @@ def node_boilerplate_classifier(nodes_df, n_iter=12):
         "in_article_int", F.col("in_article").cast("int")
     )
     model = train_logreg(
-        feats,
-        list(NODE_FEATURES),
-        "in_article_int",
-        n_iter=n_iter,
-        link="logistic",
+        feats, list(NODE_FEATURES), "in_article_int", n_iter=n_iter
     )
     scored = feats.withColumn(
-        "node_score", logreg_score_col(list(NODE_FEATURES), model, "logistic")
+        "node_score", logreg_score_col(list(NODE_FEATURES), model)
     ).drop("in_article_int")
     return scored, model

@@ -274,21 +274,11 @@ def semdedup(emb_df, n_clusters=16, min_cosine=0.95):
     return emb_df.join(drops, "vec_id", "left_anti")
 
 
-def embedding_near_duplicates(emb_df, min_cosine=0.95, dim=None):
+def embedding_near_duplicates(emb_df, dim, min_cosine=0.95):
     """Embedding-cosine near-dup pairs: bucket join (same signature) then
     exact cosine verify over 10 seed-42 hyperplanes (1024 buckets; more
     planes would mean smaller buckets, a cheaper join and lower recall).
-
-    Pass `dim` explicitly (the caller knows the embedding width); the
-    `.first()` fallback is a driver-side action that runs the upstream
-    pipeline for one partition -- fine ad hoc, wrong in production."""
-    if dim is None:
-        first = emb_df.select("embedding").first()
-        if first is None:
-            return emb_df.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
-            )
-        dim = len(first["embedding"])
+    `dim` is the embedding width the hyperplanes are drawn for."""
     planes = make_hyperplanes(dim, 10)
     vec = F.col("embedding").cast("array<double>")
     bucketed = emb_df.select(
@@ -306,7 +296,7 @@ def embedding_near_duplicates(emb_df, min_cosine=0.95, dim=None):
     )
 
 
-def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
+def embedding_seen_matches(new_emb, seen_emb, dim, min_cosine=0.95,
                            max_bucket_size=None, observation=None):
     """INCREMENTAL embedding near-dup: (new_id, seen_id, cosine) pairs
     between a new batch and a PRIOR corpus represented by its persisted
@@ -327,37 +317,14 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
     vectors land in the same bucket with high probability at high
     min_cosine.
 
-    Pass `dim` explicitly in production -- the call then stays FULLY
-    LAZY (no driver probes); omitting it triggers one ad-hoc
-    first()-probe on the new batch to learn the width (the
-    embedding_near_duplicates convention). Either way, EVERY row of
-    BOTH sides is width-asserted inside the plan (dedup.width_checked),
-    so a mixed-width snapshot -- e.g. weekly sinks unioned across an
-    embedding-model change -- fails the job loudly instead of
-    null-padding cosines and silently re-admitting near-duplicates.
-    Rows with NULL embeddings are unmatchable and pass through to
-    neither side (they can never be dropped as duplicates)."""
-    if dim is None:
-        first = (
-            new_emb.filter(F.col("embedding").isNotNull())
-            .select("embedding").first()
-        )
-        if first is None:  # no usable new vectors -> no matches
-            from pyspark.sql import types as T
-
-            idt = next(
-                f.dataType for f in new_emb.schema.fields
-                if f.name.lower() == "vec_id"
-            )
-            return new_emb.sparkSession.createDataFrame(
-                [],
-                T.StructType([
-                    T.StructField("new_id", idt),
-                    T.StructField("seen_id", idt),
-                    T.StructField("cosine", T.DoubleType()),
-                ]),
-            )
-        dim = len(first["embedding"])
+    `dim` is the embedding width, so the call is FULLY LAZY (no driver
+    probes). EVERY row of BOTH sides is width-asserted inside the plan
+    (dedup.width_checked), so a mixed-width snapshot -- e.g. weekly
+    sinks unioned across an embedding-model change -- fails the job
+    loudly instead of null-padding cosines and silently re-admitting
+    near-duplicates. Rows with NULL embeddings are unmatchable and pass
+    through to neither side (they can never be dropped as duplicates),
+    so an empty or all-null new batch matches nothing."""
     planes = make_hyperplanes(dim, 10)
 
     def bucketed(df):
@@ -379,14 +346,14 @@ def embedding_seen_matches(new_emb, seen_emb, min_cosine=0.95, dim=None,
     )
 
 
-def dedup_against_seen_embedding(new_emb, seen_emb, min_cosine=0.95,
-                                 dim=None, observation=None):
+def dedup_against_seen_embedding(new_emb, seen_emb, dim, min_cosine=0.95,
+                                 observation=None):
     """Drop new-batch rows whose embedding is a near-duplicate of the
     prior corpus snapshot (see embedding_seen_matches). Composes with
     dedup.dedup_against_seen (exact) and dedup.dedup_against_seen_minhash
     (text near-dup) as the third seen-loop family."""
     matches = embedding_seen_matches(
-        new_emb, seen_emb, min_cosine, dim=dim, max_bucket_size=1000,
+        new_emb, seen_emb, dim, min_cosine, max_bucket_size=1000,
         observation=observation,
     )
     return _drop_seen_matches(new_emb, matches, "vec_id")

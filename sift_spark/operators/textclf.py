@@ -21,7 +21,7 @@ Method:
    engine-side AND in Python, so the trainer and the Python scorer
    agree on every bucket), length-normalised counts
    x_db = floor(2^10 * c_db / n_d) / 2^10 on the fixed-point grid;
- * model: one weight per bucket + an intercept, sigmoid link;
+ * model: one weight per bucket + an intercept, rational sigmoid link;
  * training: full-batch gradient descent where each step is ONE
    aggregation job over a cached feature frame: a per-doc score
    aggregation (join the broadcast weight table, groupBy doc) feeding
@@ -57,8 +57,6 @@ labelled docs sharing a bucket, far above any classifier training set
 is unbounded -- scoring is embarrassingly parallel and has no sums
 across docs). Past that, training remains deterministic for a FIXED
 partitioning but the last float bits may vary across layouts.
-`link='logistic'` (default) uses the true exp() sigmoid for production
-and makes no cross-engine bit claim.
 """
 
 from __future__ import annotations
@@ -72,10 +70,10 @@ from .dsir import _bucket_col, _gram_col
 from .nodeclf import (
     FEATURE_BITS,
     WEIGHT_BITS,
-    _LINKS,
     _clamp,
     power_of_two_lr,
     quantize_col,
+    rational_sigmoid_col,
 )
 
 DEFAULT_BUCKETS = 1 << 16
@@ -87,8 +85,8 @@ def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
     2^-FEATURE_BITS grid. ONE shuffle: the per-doc gram total is
     size(grams) computed BEFORE the explode and carried through it, so
     no second aggregation pass is needed. Docs with zero grams emit no
-    rows (their training score is link(intercept) via `_with_z`'s left
-    join)."""
+    rows (their training score is sigmoid(intercept) via `_with_z`'s
+    left join)."""
     scale = float(1 << FEATURE_BITS)
     # the gram total must be computed BELOW the explode's Generate node:
     # selecting size(grams) NEXT TO explode(grams) makes Catalyst
@@ -156,27 +154,25 @@ def _with_z(feats, base_df, id_col, weights, intercept):
     )
 
 
-def _doc_scores(feats, labels_df, id_col, weights, intercept, link):
+def _doc_scores(feats, labels_df, id_col, weights, intercept):
     """(id, y, p): current-model probability per labelled doc, floor-
     quantised onto the weight grid (training only -- production scores
     stay unquantised)."""
     zfull = _with_z(feats, labels_df, id_col, weights, intercept)
     return zfull.withColumn(
-        "p", quantize_col(_LINKS[link](F.col("_z")), WEIGHT_BITS)
+        "p", quantize_col(rational_sigmoid_col(F.col("_z")), WEIGHT_BITS)
     )
 
 
 def train_text_classifier(docs_df, label_col="label",
                           n_buckets=DEFAULT_BUCKETS, n_iter=8,
-                          lr=None, link="logistic", text_col="text"):
+                          text_col="text"):
     """Fit the classifier on a labelled corpus (label in {0, 1}).
 
     Returns `{"intercept": b, "weights": {bucket: w}, "n_buckets": B,
-    "lr": lr, "n_rows": n, "link": link}`.
+    "lr": lr, "n_rows": n}`.
     Deterministic: same labelled multiset -> same bits, regardless of
     partitioning or cluster size (see module docstring)."""
-    if link not in _LINKS:
-        raise ValueError(f"unknown link {link!r}")
     labels = docs_df.select(
         F.col("doc_id"), F.col(label_col).cast("double").alias("__y")
     ).persist()
@@ -194,13 +190,12 @@ def train_text_classifier(docs_df, label_col="label",
     ).persist()
     try:
         n_rows = labels.count()
-        if lr is None:
-            lr = power_of_two_lr(n_rows)
+        lr = power_of_two_lr(n_rows)
         wscale = float(1 << WEIGHT_BITS)
         intercept, weights = 0.0, {}
         for _ in range(n_iter):
             scored = _doc_scores(
-                feats, labels, "doc_id", weights, intercept, link
+                feats, labels, "doc_id", weights, intercept
             ).select(
                 F.col("doc_id"), (F.col("p") - F.col("__y")).alias("_d")
             )
@@ -234,11 +229,10 @@ def train_text_classifier(docs_df, label_col="label",
         "n_buckets": n_buckets,
         "lr": lr,
         "n_rows": n_rows,
-        "link": link,
     }
 
 
-def train_from_slices(pos_df, neg_df, text_col="text", **kw):
+def train_from_slices(pos_df, neg_df, n_buckets, n_iter, text_col="text"):
     """Convenience wrapper for the GPT-3-style setup: positive =
     curated/target slice, negative = raw pool sample.
 
@@ -265,7 +259,8 @@ def train_from_slices(pos_df, neg_df, text_col="text", **kw):
             "text", "label",
         )
     )
-    return train_text_classifier(both, "label", text_col="text", **kw)
+    return train_text_classifier(both, "label", n_buckets, n_iter,
+                                 text_col="text")
 
 
 def classifier_score_udf(spark, model):
@@ -275,13 +270,13 @@ def classifier_score_udf(spark, model):
     projection, so it composes into scan-side filtering and Structured
     Streaming (no stateful aggregation).
 
-    Bit parity with the trainer's scoring contract (`_with_z` + the
-    link): bucketing (int(md5hex[:8], 16) %% B == pmod(conv(substr(md5,
-    1, 8), 16, 10), B)), the floor-quantised x, and the w*x products
-    are all exactly representable, so the sums agree bit-for-bit
-    regardless of addition order; with link='rational' the final score
-    is bit-identical, with 'logistic' Python's exp() may differ from
-    the JVM's in the last ulp."""
+    Bit parity with the trainer's scoring contract (`_with_z` +
+    `rational_sigmoid_col`): bucketing (int(md5hex[:8], 16) %% B ==
+    pmod(conv(substr(md5, 1, 8), 16, 10), B)), the floor-quantised x,
+    and the w*x products are all exactly representable, so the sums
+    agree bit-for-bit regardless of addition order, and the rational
+    sigmoid is correctly-rounded IEEE ops in Python as on the JVM: the
+    score is bit-identical."""
     import hashlib
     import re
 
@@ -291,7 +286,6 @@ def classifier_score_udf(spark, model):
     bc = spark.sparkContext.broadcast(weights)
     b0 = float(model["intercept"])
     n_buckets = int(model["n_buckets"])
-    link = model.get("link", "logistic")
     split_re = re.compile(_TOKEN_SPLIT)
     scale = float(1 << FEATURE_BITS)
 
@@ -320,10 +314,7 @@ def classifier_score_udf(spark, model):
                         z += wv * (
                             math.floor(scale * c / n) / scale
                         )
-            if link == "rational":
-                out.append(0.5 + 0.5 * z / (1.0 + abs(z)))
-            else:
-                out.append(1.0 / (1.0 + math.exp(-z)))
+            out.append(0.5 + 0.5 * z / (1.0 + abs(z)))
         return pd.Series(out)
 
     # pure function; the marker stops the optimizer from pushing the
@@ -336,7 +327,7 @@ def classifier_score_udf(spark, model):
 def score_text_classifier(docs_df, model, score_col="clf_score"):
     """docs_df + a probability column (higher = more target-like),
     computed in place by classifier_score_udf -- fully narrow, no
-    shuffle, no self-join; zero-gram docs score link(intercept)."""
+    shuffle, no self-join; zero-gram docs score sigmoid(intercept)."""
     score = classifier_score_udf(docs_df.sparkSession, model)
     return docs_df.withColumn(score_col, score(F.col("text")))
 
@@ -492,15 +483,16 @@ _META_BUCKET = -1  # the intercept/meta row's bucket key
 def save_text_classifier(model, path):
     """Persist as ONE parquet: (bucket, w) weight rows plus a bucket=-1
     meta row carrying the intercept and the scoring parameters. The
-    meta's `portable_hash: true` marks md5-prefix buckets, the only
-    bucketing this module trains and scores."""
+    meta's `portable_hash: true` and `link: "rational"` mark md5-prefix
+    buckets and the rational sigmoid, the only bucketing and link this
+    module trains and scores."""
     import json
 
     spark = _active_spark()
     meta = json.dumps(
         {
             "n_buckets": model["n_buckets"],
-            "link": model.get("link", "logistic"),
+            "link": "rational",
             "portable_hash": True,
             "lr": model["lr"],
             "n_rows": model["n_rows"],
@@ -528,13 +520,16 @@ def load_text_classifier(path):
             "rows; expected exactly one bucket=-1 row"
         )
     meta = json.loads(meta_rows[0]["meta"])
-    if not meta.get("portable_hash"):
-        # xxhash64 buckets: scoring them with md5 buckets would give
-        # silently wrong scores
+    if not meta.get("portable_hash") or meta.get("link") != "rational":
+        # xxhash64 buckets or the exp() sigmoid: scoring such a model
+        # with md5 buckets and the rational sigmoid would give silently
+        # wrong scores
         raise ValueError(
-            f"classifier model at {path} was trained with xxhash64 "
-            "feature buckets, which can no longer be scored; retrain "
-            "it with `python -m sift_spark.job train-clf`"
+            f"classifier model at {path} was trained with "
+            f"portable_hash={meta.get('portable_hash')!r} and "
+            f"link={meta.get('link')!r}, which can no longer be scored "
+            "(only md5 buckets with the rational link can); retrain it "
+            "with `python -m sift_spark.job train-clf`"
         )
     return {
         "intercept": meta_rows[0]["w"],
@@ -546,7 +541,6 @@ def load_text_classifier(path):
         "n_buckets": meta["n_buckets"],
         "lr": meta["lr"],
         "n_rows": meta["n_rows"],
-        "link": meta["link"],
     }
 
 

@@ -244,6 +244,24 @@ def test_md5_prefix_hash_has_one_home():
     assert found == {"operators/dedup.py:md5_prefix_col"}, sorted(found)
 
 
+def test_sigmoid_has_one_home():
+    """The linear classifiers have one link, the rational sigmoid
+    0.5 + 0.5*z/(1+|z|) their oracles re-derive: no exp() call in
+    operators/nodeclf.py or operators/textclf.py, and |z| is taken in
+    rational_sigmoid_col (the engine side) and in its one Python copy,
+    the narrow scorer's per-batch kernel."""
+    modules = ("operators/nodeclf.py", "operators/textclf.py")
+
+    def owned(found):
+        return {owner for owner in found if owner.startswith(modules)}
+
+    assert owned(_owners(_calls_to("exp"))) == set()
+    found = owned(_owners(_calls_to("abs")))
+    assert found == {"operators/nodeclf.py:rational_sigmoid_col",
+                     "operators/textclf.py:classifier_score_udf:_score"
+                     }, sorted(found)
+
+
 def _call_site_trees(tests=False):
     """(repo-relative path, parsed AST) of every file that calls into
     sift_spark/: the package itself, the three root scripts, scripts/

@@ -155,7 +155,8 @@ def test_embedding_near_duplicates(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     pairs = {(r["id_a"], r["id_b"]): r["cosine"]
-             for r in embedding_near_duplicates(df, min_cosine=0.95).collect()}
+             for r in embedding_near_duplicates(df, dim=4, min_cosine=0.95)
+             .collect()}
     assert pairs.get((1, 4)) == pytest.approx(1.0)
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)
@@ -3301,7 +3302,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     matches = {
         (r["new_id"], r["seen_id"]): r["cosine"]
         for r in embedding_seen_matches(
-            week2, week1, min_cosine=0.95
+            week2, week1, dim=4, min_cosine=0.95
         ).collect()
     }
     assert matches.get((10, 1)) == pytest.approx(1.0)
@@ -3311,7 +3312,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     kept = sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            week2, week1, min_cosine=0.95
+            week2, week1, dim=4, min_cosine=0.95
         ).collect()
     )
     assert kept == [12]
@@ -3320,7 +3321,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     assert sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            week2, empty, min_cosine=0.95
+            week2, empty, dim=4, min_cosine=0.95
         ).collect()
     ) == [10, 11, 12]
 
@@ -3344,22 +3345,23 @@ def test_embedding_against_seen_width_asserted_in_plan(spark):
         "vec_id long, embedding array<float>",
     )
     with pytest.raises(Exception, match="embedding width"):
-        embedding_seen_matches(new, seen).collect()
+        embedding_seen_matches(new, seen, dim=2).collect()
     # clean widths: the null-vec new row survives (unmatchable)
     clean_seen = seen.filter(F.col("vec_id") == 3)
     kept = sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            new, clean_seen, min_cosine=0.95
+            new, clean_seen, dim=2, min_cosine=0.95
         ).collect()
     )
     assert kept == [2]  # 1 matched seen 3 exactly; null row kept
 
 
 def test_embedding_against_seen_lazy_with_dim_and_typed_empty(spark):
-    """Passing dim keeps the call fully lazy (no driver probe jobs), for
-    the matcher and the drop alike; the empty-new early return carries
-    the id column's REAL type."""
+    """dim keeps the call fully lazy (no driver probe jobs), for the
+    matcher and the drop alike; an empty new batch matches nothing
+    through the plan itself, which carries the id column's REAL
+    type."""
     from sift_spark.operators.similarity import (
         dedup_against_seen_embedding,
         embedding_seen_matches,
@@ -3378,7 +3380,7 @@ def test_embedding_against_seen_lazy_with_dim_and_typed_empty(spark):
     s_seen = week1.select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
     )
-    out = embedding_seen_matches(s_new, s_seen)
+    out = embedding_seen_matches(s_new, s_seen, dim=4)
     assert out.schema["new_id"].dataType.simpleString() == "string"
     assert out.count() == 0
 
@@ -3421,7 +3423,7 @@ def test_embedding_against_seen_plan_is_bucket_equijoin(spark):
         [(i, [float(i == j) for j in range(4)]) for i in range(4)],
         "vec_id long, embedding array<float>",
     )
-    pairs = embedding_seen_matches(emb, emb, min_cosine=0.95)
+    pairs = embedding_seen_matches(emb, emb, dim=4, min_cosine=0.95)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

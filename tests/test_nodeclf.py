@@ -62,23 +62,18 @@ def test_partitioning_invariant_bits(spark):
     assert m1 == m2
 
 
-def test_links_agree_on_fixtures(spark):
-    """The exp sigmoid (production) and the rational sigmoid (oracle
-    twin) learn the same separator on separable data."""
+def test_rational_link_fits_fixtures(spark):
+    """The rational sigmoid, the one link production and the oracle
+    share, learns the separator on a second separable fixture."""
     df = _toy_frame(spark, n=600, seed=5)
-    preds = {}
-    for link in ("rational", "logistic"):
-        m = train_logreg(df, ["x1", "x2"], "y", n_iter=12, link=link)
-        scored = df.withColumn(
-            "p", logreg_score_col(["x1", "x2"], m, link)
-        )
-        acc = scored.select(
-            F.avg(
-                ((F.col("p") > 0.5) == (F.col("y") == 1)).cast("int")
-            ).alias("a")
-        ).first()["a"]
-        preds[link] = acc
-    assert preds["rational"] > 0.9 and preds["logistic"] > 0.9
+    m = train_logreg(df, ["x1", "x2"], "y", n_iter=12)
+    scored = df.withColumn("p", logreg_score_col(["x1", "x2"], m))
+    acc = scored.select(
+        F.avg(
+            ((F.col("p") > 0.5) == (F.col("y") == 1)).cast("int")
+        ).alias("a")
+    ).first()["a"]
+    assert acc > 0.9
 
 
 def test_quantize_and_caps(spark):

@@ -63,7 +63,7 @@ def test_classifier_separates_planted_fixture(spark):
 
 def test_bit_exact_across_partitionings(spark):
     docs = _labelled(spark)
-    kw = dict(n_buckets=512, n_iter=6, link="rational")
+    kw = dict(n_buckets=512, n_iter=6)
     m1 = train_text_classifier(docs.repartition(1), **kw)
     m7 = train_text_classifier(docs.repartition(7), **kw)
     assert m1["intercept"] == m7["intercept"]
@@ -81,16 +81,34 @@ def test_bit_exact_across_partitionings(spark):
     assert s1 == s7  # identical bits, not just close
 
 
-def test_both_links_learn_the_separator(spark):
+def test_both_links_learn_the_separator(spark, tmp_path):
+    """The rational link learns the separator; the same trained weights
+    written under the deleted exp() link are refused at load instead of
+    being scored with the wrong sigmoid."""
+    import json
+
     docs = _labelled(spark)
-    for link in ("rational", "logistic"):
-        model = train_text_classifier(
-            docs, n_buckets=512, n_iter=10, link=link
-        )
-        scored = score_text_classifier(docs, model).collect()
-        good = [r["clf_score"] for r in scored if r["label"] == 1]
-        spam = [r["clf_score"] for r in scored if r["label"] == 0]
-        assert min(good) > max(spam), link
+    model = train_text_classifier(docs, n_buckets=512, n_iter=10)
+    scored = score_text_classifier(docs, model).collect()
+    good = [r["clf_score"] for r in scored if r["label"] == 1]
+    spam = [r["clf_score"] for r in scored if r["label"] == 0]
+    assert min(good) > max(spam), "rational"
+
+    path = str(tmp_path / "clf")
+    save_text_classifier(model, path)
+    rows = spark.read.parquet(path).collect()
+    relinked = []
+    for r in rows:
+        meta = r["meta"]
+        if meta is not None:
+            meta = json.dumps(dict(json.loads(meta), link="logistic"))
+        relinked.append((r["bucket"], r["w"], meta))
+    exp_path = str(tmp_path / "clf_exp")
+    spark.createDataFrame(
+        relinked, "bucket long, w double, meta string"
+    ).coalesce(1).write.parquet(exp_path)
+    with pytest.raises(ValueError, match="'logistic'.*train-clf"):
+        load_text_classifier(exp_path)
 
 
 def test_train_from_slices(spark):
@@ -112,12 +130,10 @@ def test_zero_gram_doc_scores_intercept(spark):
     )
     rows = score_text_classifier(empty, model).collect()
     assert len(rows) == 2
-    import math
-
     b = model["intercept"]
-    expect = 1.0 / (1.0 + math.exp(-b))
+    expect = 0.5 + 0.5 * b / (1.0 + abs(b))  # the rational sigmoid
     for r in rows:
-        assert r["clf_score"] == pytest.approx(expect, abs=1e-12)
+        assert r["clf_score"] == expect  # identical bits
 
 
 def test_save_load_round_trip(spark, tmp_path):
@@ -129,26 +145,42 @@ def test_save_load_round_trip(spark, tmp_path):
     assert loaded["intercept"] == model["intercept"]
     assert loaded["weights"] == model["weights"]
     assert loaded["n_buckets"] == model["n_buckets"]
-    assert loaded["link"] == model["link"]
     s0 = score_text_classifier(docs, model).select("clf_score").collect()
     s1 = score_text_classifier(docs, loaded).select("clf_score").collect()
     assert [r[0] for r in s0] == [r[0] for r in s1]
+
+
+def _saved_model(spark, path, portable_hash, link):
+    """A one-weight model saved with the given bucketing and link."""
+    import json
+
+    meta = json.dumps({"n_buckets": 512, "link": link,
+                       "portable_hash": portable_hash, "lr": 0.5,
+                       "n_rows": 8})
+    spark.createDataFrame(
+        [(3, 0.25, None), (-1, 0.125, meta)],
+        "bucket long, w double, meta string",
+    ).coalesce(1).write.parquet(path)
+    return path
 
 
 def test_load_rejects_xxhash64_model(spark, tmp_path):
     """A model saved with xxhash64 feature buckets (meta
     `portable_hash: false`) cannot be scored by the md5 scorer;
     loading it must fail loudly instead of scoring it wrong."""
-    import json
-
-    path = str(tmp_path / "legacy_clf")
-    meta = json.dumps({"n_buckets": 512, "link": "logistic",
-                       "portable_hash": False, "lr": 0.5, "n_rows": 8})
-    spark.createDataFrame(
-        [(3, 0.25, None), (-1, 0.125, meta)],
-        "bucket long, w double, meta string",
-    ).coalesce(1).write.parquet(path)
+    path = _saved_model(spark, str(tmp_path / "legacy_clf"), False,
+                        "rational")
     with pytest.raises(ValueError, match="train-clf"):
+        load_text_classifier(path)
+
+
+def test_load_rejects_logistic_model(spark, tmp_path):
+    """A model saved with the exp() sigmoid (meta `link: "logistic"`)
+    cannot be scored by the rational-sigmoid scorer; loading it must
+    fail loudly instead of scoring it wrong."""
+    path = _saved_model(spark, str(tmp_path / "exp_link_clf"), True,
+                        "logistic")
+    with pytest.raises(ValueError, match="'logistic'.*train-clf"):
         load_text_classifier(path)
 
 
@@ -223,50 +255,32 @@ def test_clf_model_without_threshold_fails_loudly(spark, tmp_path):
 
 def _contract_scores(docs, model):
     """The trainer's own scoring contract: `_with_z` over the md5
-    feature table, then the model's link -- the join form the narrow
-    scorer must reproduce."""
-    from sift_spark.operators.nodeclf import _LINKS
+    feature table, then the rational sigmoid -- the join form the
+    narrow scorer must reproduce."""
+    from sift_spark.operators.nodeclf import rational_sigmoid_col
     from sift_spark.operators.textclf import _with_z
 
     feats = doc_feature_table(docs, n_buckets=model["n_buckets"])
     z = _with_z(feats, docs, "doc_id", model["weights"],
                 model["intercept"])
-    link = _LINKS[model["link"]]
     return {r["doc_id"]: r["p"]
-            for r in z.select("doc_id", link(F.col("_z")).alias("p"))
+            for r in z.select(
+                "doc_id", rational_sigmoid_col(F.col("_z")).alias("p"))
             .collect()}
 
 
 def test_udf_scorer_matches_join_bit_for_bit(spark):
-    """Rational link: the narrow scorer reproduces the trainer's join
-    scoring contract (`_with_z` + link) EXACTLY -- shared grids make
-    the sums order-independent, and the rational sigmoid is
+    """The narrow scorer reproduces the trainer's join scoring contract
+    (`_with_z` + the rational sigmoid) EXACTLY -- shared grids make the
+    sums order-independent, and the rational sigmoid is
     correctly-rounded IEEE ops in both engines."""
     docs = _labelled(spark)
-    model = train_text_classifier(
-        docs, n_buckets=512, n_iter=6, link="rational",
-    )
+    model = train_text_classifier(docs, n_buckets=512, n_iter=6)
     j = _contract_scores(docs, model)
     u = {r["doc_id"]: r["clf_score"]
          for r in score_text_classifier(docs, model)
          .select("doc_id", "clf_score").collect()}
     assert j == u  # identical bits
-
-
-def test_udf_scorer_logistic_close(spark):
-    """Logistic link: Python's exp() may differ from the JVM's in the
-    last ulp, nothing more."""
-    docs = _labelled(spark)
-    model = train_text_classifier(
-        docs, n_buckets=512, n_iter=6, link="logistic",
-    )
-    j = _contract_scores(docs, model)
-    u = {r["doc_id"]: r["clf_score"]
-         for r in score_text_classifier(docs, model)
-         .select("doc_id", "clf_score").collect()}
-    assert set(u) == set(j)
-    for k in j:
-        assert u[k] == pytest.approx(j[k], rel=1e-12)
 
 
 def test_udf_path_is_narrow(spark):
@@ -285,9 +299,7 @@ def test_filter_auto_picks_udf_for_portable(spark):
     shuffle, no join) and keeps exactly the documents the trainer's
     scoring contract scores >= the threshold."""
     docs = _labelled(spark)
-    model = train_text_classifier(
-        docs, n_buckets=512, n_iter=10, link="rational",
-    )
+    model = train_text_classifier(docs, n_buckets=512, n_iter=10)
     gated = filter_by_classifier(docs, model, 0.5)
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -418,7 +430,7 @@ def test_evaluate_classifier_degenerate_cases(spark):
     docs = _labelled(spark, reps=1)
     # untrained model: all weights zero -> every doc scores the same
     zero = {"intercept": 0.0, "weights": {}, "n_buckets": 512,
-            "lr": 0.5, "n_rows": 8, "link": "rational"}
+            "lr": 0.5, "n_rows": 8}
     m = evaluate_classifier(docs, zero)
     assert m["auc"] == pytest.approx(0.5)
     assert m["precision"] == pytest.approx(0.5)  # all predicted pos
