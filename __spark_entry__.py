@@ -505,7 +505,7 @@ def _q_production_hash_paths(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     mh = checksum_row(
         minhash_near_duplicates(
-            docs, k=8, n_hashes=32, n_bands=8, min_jaccard=0.5
+            docs, n_hashes=32, n_bands=8, min_jaccard=0.5
         ),
         "minhash_lsh_xxhash", "shiftleft(id_a, 20) ^ id_b",
     )
@@ -525,7 +525,7 @@ def _q_minhash_neardup_md5(spark, sf_dir):
     # so the Spark side must not silently drop hot buckets -- the
     # default-on cap belongs to the production xxhash64 path
     return minhash_near_duplicates(
-        _docs(spark, sf_dir), k=8, n_hashes=16, n_bands=4, min_jaccard=0.5,
+        _docs(spark, sf_dir), n_hashes=16, n_bands=4, min_jaccard=0.5,
         portable_hash=True, max_bucket_size=None,
     )
 
@@ -542,7 +542,7 @@ def _q_dedup_components(spark, sf_dir):
     )
 
     pairs = minhash_near_duplicates(
-        _docs(spark, sf_dir), k=8, n_hashes=16, n_bands=4, min_jaccard=0.5,
+        _docs(spark, sf_dir), n_hashes=16, n_bands=4, min_jaccard=0.5,
         portable_hash=True, max_bucket_size=None,
     )
     return connected_components(pairs)
@@ -848,7 +848,7 @@ def _q_dsir_select(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     target = docs.filter(F.col("doc_id") % 3 == 0)
-    weights = dsir_log_weights(docs, target, n_buckets=_DSIR_BUCKETS)
+    weights = dsir_log_weights(docs, target)
     keyed = weights.select(
         "doc_id",
         F.col("log_weight"),
@@ -1194,7 +1194,7 @@ def _q_gopher_rules(spark, sf_dir):
         F.lit("?"),
     )
     c4 = c4_rules_cols(c4_text)
-    clean = c4_line_clean_col(c4_text, min_words_per_line=5)
+    clean = c4_line_clean_col(c4_text)
     return docs.select(
         "doc_id",
         *[expr.alias(name) for name, expr in rules.items()],
@@ -1349,7 +1349,7 @@ def _q_site_boilerplate(spark, sf_dir):
         .alias("chunk_text"),
     )
     chunks = real.union(header).union(promo)
-    return site_boilerplate_chunks(chunks, min_ratio=0.5, min_docs=3)
+    return site_boilerplate_chunks(chunks)
 
 
 def _q_distinct_sketch(spark, sf_dir):
@@ -1581,7 +1581,7 @@ def _q_winnowing_md5(spark, sf_dir):
     portable, and the operator's only hash), sliding-window semantics."""
     from sift_spark.operators.textstats import winnowing_fingerprints
 
-    return winnowing_fingerprints(_docs(spark, sf_dir), k=8, window=4)
+    return winnowing_fingerprints(_docs(spark, sf_dir))
 
 
 def _q_media_features(spark, sf_dir):
@@ -1600,9 +1600,7 @@ def _q_combine_sources(spark, sf_dir):
     from sift_spark.operators.selection_op import combine_sources
 
     docs = _docs(spark, sf_dir)
-    return combine_sources(
-        docs, group_col="source", order_col="doc_id", text_col="text"
-    )
+    return combine_sources(docs, group_col="source", order_col="doc_id")
 
 
 def _scaled_sum(col, scale):

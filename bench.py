@@ -85,7 +85,7 @@ def _build_queries(spark, sf_dir):
 
     def q_dedup_minhash():
         return minhash_near_duplicates(
-            docs, k=8, n_hashes=32, n_bands=8, min_jaccard=0.5
+            docs, n_hashes=32, n_bands=8, min_jaccard=0.5
         ).count()
 
     # the query vector is job INPUT (a user supplies it); fetching it is
@@ -184,7 +184,7 @@ def main(argv=None):
     ).count()
     warm_docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")
     minhash_near_duplicates(
-        warm_docs.limit(64), k=8, n_hashes=8, n_bands=2, min_jaccard=0.5
+        warm_docs.limit(64), n_hashes=8, n_bands=2, min_jaccard=0.5
     ).count()
 
     # best-of-3 per query (same policy as scripts/scaling.py): the first

@@ -22,7 +22,14 @@ import argparse
 import sys
 
 from .core.counters import CHARS, TOKENS, WORDS
-from .core.pipeline import SiftParams, run_sift, transform_text
+from .core.pipeline import (
+    DEFAULT_CONTEXT_AFTER,
+    DEFAULT_CONTEXT_BEFORE,
+    DEFAULT_MAX_UNITS,
+    SiftParams,
+    run_sift,
+    transform_text,
+)
 
 MAX_FILE_BYTES = 50 * 1024 * 1024  # fetch.go:20
 
@@ -35,7 +42,7 @@ def build_params(args):
     elif args.character_limit > 0:
         method, max_units = CHARS, args.character_limit
     elif not args.search:
-        method, max_units = TOKENS, 2500  # main.go:52-55
+        method, max_units = TOKENS, DEFAULT_MAX_UNITS
     else:
         method, max_units = TOKENS, 0  # search: no size constraint
 
@@ -46,10 +53,9 @@ def build_params(args):
     else:
         strategy = "beginning"
 
-    use_smart = args.context_tokens is not None
-    context_units = args.context_tokens if use_smart else 0
-    if use_smart and context_units == 0:
-        context_units = 200  # main.go:105-107
+    # a given --context-tokens of 0 means 200 (main.go:105-107)
+    context_units = (0 if args.context_tokens is None
+                     else args.context_tokens or 200)
 
     if method == TOKENS:
         from .core.counters import FallbackTokenizer, get_tokenizer
@@ -70,10 +76,9 @@ def build_params(args):
         counting_method=method,
         strategy=strategy,
         search_query=args.search,
-        context_before=1,
-        context_after=2,
+        context_before=DEFAULT_CONTEXT_BEFORE,
+        context_after=DEFAULT_CONTEXT_AFTER,
         context_units=context_units,
-        use_smart_context=use_smart,
     )
 
 

@@ -42,7 +42,6 @@ class SiftParams:
     context_before: int = DEFAULT_CONTEXT_BEFORE
     context_after: int = DEFAULT_CONTEXT_AFTER
     context_units: int = 0
-    use_smart_context: bool = False
     extra: dict = field(default_factory=dict)
     # captured on the DRIVER when params are constructed and shipped to
     # workers inside the UDF closure, so the real-vocab tokenizer works
@@ -160,16 +159,9 @@ def _apply_search_transformations(text, params, search_query):
     # strategy path lives in apply_content_transformations
     scored = lexical_search(chunks, search_query)
     ordered = selector.prepare_for_search(scored)
-    context_before = params.context_before
-    context_after = params.context_after
-
     return selector.select_with_context_config(
-        ordered,
-        chunks,
-        context_before,
-        context_after,
+        ordered, chunks, params.context_before, params.context_after,
         params.context_units,
-        params.use_smart_context,
     )
 
 
@@ -186,5 +178,5 @@ def apply_content_transformations(text, params):
         return _apply_search_transformations(text, params, search_query)
     ordered = selector.prepare_for_strategy(chunks)
     return selector.select_with_context_config(
-        ordered, chunks, 0, 0, params.context_units, params.use_smart_context
+        ordered, chunks, 0, 0, params.context_units
     )

@@ -169,7 +169,7 @@ class ChunkSelector:
 
     def select(self, ordered, all_chunks, context_before, context_after):
         return self.select_with_context_config(
-            ordered, all_chunks, context_before, context_after, 0, False
+            ordered, all_chunks, context_before, context_after, 0
         )
 
     def select_with_context_config(
@@ -179,11 +179,11 @@ class ChunkSelector:
         context_before,
         context_after,
         context_units,
-        use_smart_context,
     ):
         if not ordered:
             return ""
-        if use_smart_context and context_units > 0 and self.is_search_mode:
+        # a positive context budget selects smart context (search only)
+        if context_units > 0 and self.is_search_mode:
             return self._select_smart(ordered, all_chunks, context_units)
         return self._select_fixed(ordered, all_chunks, context_before, context_after)
 

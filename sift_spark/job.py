@@ -23,8 +23,11 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from .core.counters import CHARS, TOKENS, WORDS
-from .core.pipeline import SiftParams
+from .core.pipeline import (
+    DEFAULT_CONTEXT_AFTER,
+    DEFAULT_CONTEXT_BEFORE,
+    SiftParams,
+)
 from .operators.extract import extract_pages
 from .plans import lineage, partitioning
 from .plans.fsio import delete_path
@@ -85,22 +88,21 @@ def run_extraction_job(
 # words (the reference CLI's 2500 tokens size one page for a terminal)
 _EXTRACT_DEFAULTS = dict(selector="", include_all=False, max_units=0,
                          method="words", strategy="beginning", search="",
-                         context_before=1, context_after=2, context_units=0)
+                         context_before=DEFAULT_CONTEXT_BEFORE,
+                         context_after=DEFAULT_CONTEXT_AFTER, context_units=0)
 
 
 def _build_params(args):
-    method = {"tokens": TOKENS, "words": WORDS, "chars": CHARS}[args.method]
     return SiftParams(
         selector=args.selector or "",
         include_all=args.include_all,
         max_units=args.max_units,
-        counting_method=method,
+        counting_method=args.method,
         strategy=args.strategy,
         search_query=args.search or "",
         context_before=args.context_before,
         context_after=args.context_after,
         context_units=args.context_units,
-        use_smart_context=args.context_units > 0,
     )
 
 
@@ -233,6 +235,12 @@ def _check_curation_args(**curation_kwargs):
     if args["span_k"] and args["span_k"] < 2:
         raise ValueError(
             f"span_k must be 0 (off) or >= 2 words, got {args['span_k']}"
+        )
+    budget = args["pack_budget"]
+    if budget < 0 or (budget and args["n_shards"] < 1):
+        raise ValueError(
+            "pack_budget must be 0 (off) or positive, with n_shards >= 1; "
+            f"got {budget} and {args['n_shards']}"
         )
 
 

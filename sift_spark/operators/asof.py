@@ -61,8 +61,7 @@ def range_join_points(points_df, intervals_df, key_col, ts_col,
     )
 
 
-def as_of_join(left_df, right_df, key_col, ts_col, payload_cols,
-               tie_col=None):
+def as_of_join(left_df, right_df, key_col, ts_col, payload_cols, tie_col):
     """Left rows + `asof_`-prefixed columns of the latest right row with
     right.ts <= left.ts for the same key (null when no prior right row).
 
@@ -78,27 +77,22 @@ def as_of_join(left_df, right_df, key_col, ts_col, payload_cols,
             ) + ">"
         )
     )
-    right_cols = [
+    # the tie-break must be a TOP-LEVEL column to order the union (left
+    # rows get null via allowMissingColumns)
+    right_tagged = right_df.select(
         F.col(key_col),
         F.col(ts_col),
         F.struct(*[F.col(c) for c in carry]).alias("_r"),
-    ]
-    if tie_col:
-        # the tie-break must be a TOP-LEVEL column to order the union
-        # (left rows get null via allowMissingColumns)
-        right_cols.append(F.col(tie_col).alias("_tie"))
-    right_tagged = right_df.select(*right_cols).withColumn(
-        "_side", F.lit(0)
-    )
+        F.col(tie_col).alias("_tie"),
+    ).withColumn("_side", F.lit(0))
 
     # right rows (side 0) sort BEFORE left rows (side 1) at equal ts so
     # "at or before" includes same-instant right rows; the tie-break
     # orders right rows within one timestamp (largest carried last)
-    order = [F.col(ts_col).asc(), F.col("_side").asc()]
-    if tie_col:
-        order.append(F.col("_tie").asc_nulls_first())
     window = (
-        Window.partitionBy(key_col).orderBy(*order)
+        Window.partitionBy(key_col)
+        .orderBy(F.col(ts_col).asc(), F.col("_side").asc(),
+                 F.col("_tie").asc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
 

@@ -17,10 +17,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def site_boilerplate_chunks(chunks_df, min_ratio=0.5, min_docs=3):
+def site_boilerplate_chunks(chunks_df):
     """(site, chunk_hash, n_docs, site_docs, ratio) for chunks present in
-    >= min_ratio of a site's documents (sites with < min_docs pages are
-    skipped: no statistical basis)."""
+    at least half of a site's documents (sites with fewer than 3 pages
+    are skipped: no statistical basis)."""
     per_site = chunks_df.groupBy("site").agg(
         F.count_distinct(F.col("doc_id")).alias("site_docs")
     )
@@ -34,8 +34,7 @@ def site_boilerplate_chunks(chunks_df, min_ratio=0.5, min_docs=3):
             F.round(F.col("n_docs") / F.col("site_docs"), 6),
         )
         .filter(
-            (F.col("site_docs") >= min_docs)
-            & (F.col("ratio") >= min_ratio)
+            (F.col("site_docs") >= 3) & (F.col("ratio") >= 0.5)
         )
     )
 

@@ -158,7 +158,7 @@ def dedup_against_seen(docs_df, seen_df, seen_text_col=None):
     ).drop("_chash")
 
 
-def write_seen_bucketed(seen_df, table, n_buckets=None, path=None):
+def write_seen_bucketed(seen_df, table, n_buckets, path=None):
     """Persist a seen-loop snapshot as a BUCKETED catalog table so the
     weekly anti-join reads it pre-partitioned on the join key: Spark
     plans the join without an Exchange over the snapshot side (only the
@@ -174,21 +174,21 @@ def write_seen_bucketed(seen_df, table, n_buckets=None, path=None):
     loop. The sortBy(content_hash) lets sort-merge joins skip the
     snapshot-side sort too when each bucket lands in one file.
 
-    n_buckets defaults to spark.sql.shuffle.partitions; at production
-    scale set it so buckets land in the 100 MB - 1 GB range. `path`
-    makes it an EXTERNAL table (data at the given location, metadata in
-    the catalog). Returns the DataFrame re-read through the catalog
-    (the form to feed dedup_against_seen)."""
-    spark = seen_df.sparkSession
-    n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    At production scale set n_buckets so buckets land in the 100 MB -
+    1 GB range. `path` makes it an EXTERNAL table (data at the given
+    location, metadata in the catalog). Returns the DataFrame re-read
+    through the catalog (the form to feed dedup_against_seen)."""
     writer = (
         seen_df.write.mode("overwrite").format("parquet")
-        .bucketBy(n, "content_hash").sortBy("content_hash")
+        .bucketBy(n_buckets, "content_hash").sortBy("content_hash")
     )
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-    return spark.table(table)
+    return seen_df.sparkSession.table(table)
+
+
+SHINGLE_K = 8  # the MinHash near-dup shingle size in characters
 
 
 def _shingle_array(docs_df, k):
@@ -211,7 +211,7 @@ def _shingle_array(docs_df, k):
     return normalized, shingles
 
 
-def char_shingles(docs_df, k=8, distinct=True):
+def char_shingles(docs_df, k=SHINGLE_K, distinct=True):
     """(id, shingle) via native sequence+substring explode -- no UDF.
 
     Shares its shingle expression with :func:`char_shingle_arrays` (the
@@ -239,14 +239,15 @@ def char_shingles(docs_df, k=8, distinct=True):
     )
 
 
-def char_shingle_arrays(docs_df, k=8):
-    """(id, shingle_arr): each document's DISTINCT k-char shingle SET as
-    one array row -- the un-exploded twin of char_shingles(distinct=True),
-    fully narrow. The exact-Jaccard verify consumes this form: candidate
-    pairs join two array rows and intersect them natively
-    (array_intersect), so the verify never explodes, never re-aggregates
-    n_common, and computes both set sizes in-row."""
-    normalized, arr = _shingle_array(docs_df, k)
+def char_shingle_arrays(docs_df):
+    """(id, shingle_arr): each document's DISTINCT SHINGLE_K-char
+    shingle SET as one array row -- the un-exploded twin of
+    char_shingles(distinct=True), fully narrow. The exact-Jaccard
+    verify consumes this form: candidate pairs join two array rows and
+    intersect them natively (array_intersect), so the verify never
+    explodes, never re-aggregates n_common, and computes both set sizes
+    in-row."""
+    normalized, arr = _shingle_array(docs_df, SHINGLE_K)
     arr = F.array_distinct(arr)
     # null text yields substr(null) = [null]: map it to an EMPTY set so
     # a pair of errored-extraction rows cannot intersect on the null
@@ -540,11 +541,11 @@ def lsh_candidate_pairs(sig_df, n_bands=8, max_bucket_size=None,
     )
 
 
-def oversized_buckets(sig_df, n_bands=8, max_bucket_size=10000):
-    """Monitoring view: (band_idx, band_hash, n_members) for buckets the
-    cap would drop -- feed these groups to exact dedup."""
+def oversized_buckets(sig_df, max_bucket_size):
+    """Monitoring view: (band_idx, band_hash, n_members) for the 8-band
+    buckets the cap would drop -- feed these groups to exact dedup."""
     n_hashes = _resolve_n_hashes(sig_df, None)
-    bands = _band_table(sig_df, n_bands, n_hashes, "doc_id")
+    bands = _band_table(sig_df, 8, n_hashes, "doc_id")
     return (
         bands.groupBy("band_idx", "band_hash")
         .agg(F.count("*").alias("n_members"))
@@ -595,7 +596,7 @@ def jaccard_pairs(shingles_df, min_jaccard=0.0,
     return result
 
 
-def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
+def minhash_near_duplicates(docs_df, n_hashes=32, n_bands=8,
                             min_jaccard=0.7, max_bucket_size=1000,
                             portable_hash=False, observation=None):
     """Full MinHash+LSH near-dup pipeline: shingle -> minhash -> band ->
@@ -621,8 +622,8 @@ def minhash_near_duplicates(docs_df, k=8, n_hashes=32, n_bands=8,
     at sf0.1/local[32], recompute wins (the shingle stage is narrow and
     cheap). max_bucket_size defaults ON (1000): the guard that keeps hot
     boilerplate buckets from exploding quadratically at crawl scale."""
-    raw = char_shingles(docs_df, k, distinct=False)
-    arrays = char_shingle_arrays(docs_df, k)
+    raw = char_shingles(docs_df, distinct=False)
+    arrays = char_shingle_arrays(docs_df)
     sigs = minhash_signatures(raw, n_hashes, portable_hash=portable_hash)
     candidates = lsh_candidate_pairs(
         sigs, n_bands, max_bucket_size=max_bucket_size, n_hashes=n_hashes,
@@ -736,7 +737,7 @@ def minhash_seen_matches(new_sigs, seen_sigs, n_bands, n_hashes,
     )
 
 
-def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
+def dedup_against_seen_minhash(docs_df, seen_sigs, n_hashes=32,
                                n_bands=8, min_est_jaccard=0.5,
                                max_bucket_size=1000, observation=None):
     """Drop new-batch documents that are NEAR-duplicates of a prior
@@ -748,7 +749,7 @@ def dedup_against_seen_minhash(docs_df, seen_sigs, k=8, n_hashes=32,
     :func:`minhash_near_duplicates` composes with :func:`dedup_exact`
     within a batch."""
     sigs = minhash_signatures(
-        char_shingles(docs_df, k, distinct=False), n_hashes
+        char_shingles(docs_df, distinct=False), n_hashes
     )
     matches = minhash_seen_matches(
         sigs, seen_sigs, n_bands, n_hashes, min_est_jaccard,
@@ -1096,7 +1097,7 @@ def _simhash_blocks(hashed, id_col):
     )
 
 
-def simhash_oversized_blocks(docs_df, max_bucket_size=1000):
+def simhash_oversized_blocks(docs_df, max_bucket_size):
     """Monitoring view: (chunk_idx, chunk_val, n_members) for 16-bit
     blocks the cap would drop -- route these to exact dedup first."""
     hashed = docs_df.select(

@@ -48,28 +48,27 @@ def _bucket_col(gram, n_buckets):
     return F.pmod(md5_prefix_col(gram, 8), F.lit(n_buckets))
 
 
-def _gram_col(text_col):
-    toks = lm_tokens_col(F.col(text_col))
+def _gram_col():
+    toks = lm_tokens_col(F.col("text"))
     return F.concat(_order_grams(toks, 1), _order_grams(toks, 2))
 
 
 def hashed_ngram_buckets(docs_df, n_buckets=DEFAULT_BUCKETS,
-                         id_col="doc_id", text_col="text"):
+                         id_col="doc_id"):
     """(id, bucket) -- ONE ROW PER GRAM OCCURRENCE (multiset), unigrams
     + bigrams hashed into buckets. Narrow: explode only. Pass
     id_col=None for an id-less (bucket-only) frame -- distribution
     fits never need ids, so a text-only target corpus works."""
     keys = [] if id_col is None else [F.col(id_col)]
     return docs_df.select(
-        *keys, F.explode(_gram_col(text_col)).alias("_gram")
+        *keys, F.explode(_gram_col()).alias("_gram")
     ).select(
         *keys,
         _bucket_col(F.col("_gram"), n_buckets).alias("bucket"),
     )
 
 
-def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
-                         text_col="text"):
+def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS):
     """(bucket, logp) over ALL buckets: add-1-smoothed multinomial
     ln((cnt_b + 1) / (total + n_buckets)). ONE corpus pass (explode +
     map-side-combined groupBy); the <= n_buckets count rows come back
@@ -78,7 +77,7 @@ def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
     spark = docs_df.sparkSession
     counts = {
         r["bucket"]: r["cnt"]
-        for r in hashed_ngram_buckets(docs_df, n_buckets, None, text_col)
+        for r in hashed_ngram_buckets(docs_df, n_buckets, None)
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
         .collect()
@@ -94,21 +93,21 @@ def fit_bucket_log_probs(docs_df, n_buckets=DEFAULT_BUCKETS,
     )
 
 
-def dsir_log_weights(docs_df, target_df, n_buckets=DEFAULT_BUCKETS):
+def dsir_log_weights(docs_df, target_df):
     """(id, log_weight): per-doc log importance weight of `docs_df`
     toward `target_df`'s distribution. The raw distribution q is fit on
     docs_df itself (the paper's setting: the raw pool being selected
     from). The target corpus only needs `text` -- distribution fits
     never touch ids. Docs with zero grams get weight 0 (no evidence)."""
-    p = fit_bucket_log_probs(target_df, n_buckets, "text").select(
+    p = fit_bucket_log_probs(target_df).select(
         "bucket", F.col("logp").alias("_lp"))
-    q = fit_bucket_log_probs(docs_df, n_buckets, "text").select(
+    q = fit_bucket_log_probs(docs_df).select(
         "bucket", F.col("logp").alias("_lq"))
     delta = p.join(q, "bucket").select(
         "bucket", (F.col("_lp") - F.col("_lq")).alias("_delta")
     )
     sums = (
-        hashed_ngram_buckets(docs_df, n_buckets, "doc_id", "text")
+        hashed_ngram_buckets(docs_df)
         .join(F.broadcast(delta), "bucket")
         .groupBy("doc_id")
         .agg(F.sum("_delta").alias("log_weight"))

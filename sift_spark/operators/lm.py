@@ -302,7 +302,7 @@ def perplexity_bucket_col(ppl_col, head=200.0, middle=1000.0):
     )
 
 
-def perplexity_thresholds(scored_df, fractions=(1 / 3, 2 / 3)):
+def perplexity_thresholds(scored_df, fractions):
     """The head/middle cutoffs as the scored corpus's perplexity
     percentiles (CCNet buckets by thirds per language). approxQuantile
     is a driver action over a single-column scan -- run it on the

@@ -391,32 +391,32 @@ def extract_media_features(media_df, deterministic_fake=True,
     ).mapInPandas(process, FEATURES_SCHEMA)
 
 
-def make_wav_bytes(sample_rate=8000, n_channels=1, bits=16,
-                   duration_ms=250, seed=0):
-    """Minimal valid PCM RIFF/WAVE blob (deterministic content)."""
+def make_wav_bytes(sample_rate=8000, n_channels=1, duration_ms=250,
+                   seed=0):
+    """Minimal valid 16-bit PCM RIFF/WAVE blob (deterministic content)."""
     import random
 
     rng = random.Random(seed)
-    block_align = n_channels * bits // 8
+    block_align = n_channels * 2
     byte_rate = sample_rate * block_align
     data = bytes(rng.getrandbits(8)
                  for _ in range(byte_rate * duration_ms // 1000))
     fmt = struct.pack("<HHIIHH", 1, n_channels, sample_rate, byte_rate,
-                      block_align, bits)
+                      block_align, 16)
     body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(data)) + data)
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-def make_bmp_bytes(width=4, height=3, bit_count=24, seed=0):
-    """Minimal valid BITMAPINFOHEADER BMP blob (deterministic pixels;
-    rows padded to 4 bytes per the format)."""
+def make_bmp_bytes(width=4, height=3, seed=0):
+    """Minimal valid 24-bit BITMAPINFOHEADER BMP blob (deterministic
+    pixels; rows padded to 4 bytes per the format)."""
     import random
 
     rng = random.Random(seed)
-    row_bytes = (width * bit_count // 8 + 3) & ~3
+    row_bytes = (width * 3 + 3) & ~3
     pixels = bytes(rng.getrandbits(8) for _ in range(row_bytes * height))
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, bit_count,
+    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24,
                        0, len(pixels), 2835, 2835, 0, 0)
     file_size = 14 + len(info) + len(pixels)
     header = b"BM" + struct.pack("<IHHI", file_size, 0, 0, 14 + len(info))

@@ -185,7 +185,7 @@ def node_feature_cols(nodes_df):
     )
 
 
-def node_boilerplate_classifier(nodes_df, n_iter=12):
+def node_boilerplate_classifier(nodes_df, n_iter):
     """Train on the readability weak label and score every node.
 
     Returns `(scored_df, model)`: the input plus a `node_score`

@@ -125,8 +125,7 @@ def format_selected(selected_df, is_search_mode=False):
     )
 
 
-def combine_sources(df, group_col="job_id", order_col="source_idx",
-                    text_col="text"):
+def combine_sources(df, group_col, order_col):
     """Multi-source combination (sift.go:107-130): per group, join the
     non-empty texts in source order with a blank line; failed/empty
     sources are skipped (warn-and-continue promoted to data parallelism).
@@ -134,7 +133,7 @@ def combine_sources(df, group_col="job_id", order_col="source_idx",
     Native: collect_list of (order, text) structs -> array_sort ->
     transform -> concat_ws. One shuffle on the group key."""
     non_empty = df.filter(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
+        F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )
     return non_empty.groupBy(group_col).agg(
         F.concat_ws(
@@ -142,7 +141,7 @@ def combine_sources(df, group_col="job_id", order_col="source_idx",
             F.transform(
                 F.array_sort(
                     F.collect_list(F.struct(F.col(order_col).alias("o"),
-                                            F.col(text_col).alias("t")))
+                                            F.col("text").alias("t")))
                 ),
                 lambda s: s["t"],
             ),
@@ -185,8 +184,7 @@ def _select_one_group(url, chunks, scores, flags, params, has_score):
         ordered = selector.prepare_for_strategy(chunks)
         before, after = 0, 0
     text = selector.select_with_context_config(
-        ordered, chunks, before, after,
-        params.context_units, params.use_smart_context,
+        ordered, chunks, before, after, params.context_units,
     )
     return url, text, len(chunks)
 

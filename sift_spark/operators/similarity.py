@@ -264,7 +264,7 @@ def semdedup_pairs(emb_df, n_clusters=16, min_cosine=0.95):
     )
 
 
-def semdedup(emb_df, n_clusters=16, min_cosine=0.95):
+def semdedup(emb_df, n_clusters, min_cosine):
     """Semantic dedup: drop every vector that has a SMALLER-id
     near-neighbor in its cluster (the min-id keeper convention shared
     with dedup_exact) -- one representative survives per
@@ -296,13 +296,14 @@ def embedding_near_duplicates(emb_df, dim, min_cosine=0.95):
     )
 
 
-def embedding_seen_matches(new_emb, seen_emb, dim, min_cosine=0.95,
-                           max_bucket_size=None, observation=None):
+def embedding_seen_matches(new_emb, seen_emb, dim, max_bucket_size=None,
+                           observation=None):
     """INCREMENTAL embedding near-dup: (new_id, seen_id, cosine) pairs
-    between a new batch and a PRIOR corpus represented by its persisted
-    embedding table -- the embedding-family analogue of
-    dedup.minhash_seen_matches, completing the weekly-crawl seen loop
-    across all three dedup families (exact hashes / minhash / vectors).
+    with cosine >= 0.95 between a new batch and a PRIOR corpus
+    represented by its persisted embedding table -- the embedding-family
+    analogue of dedup.minhash_seen_matches, completing the weekly-crawl
+    seen loop across all three dedup families (exact hashes / minhash /
+    vectors).
     Snapshot = `emb_df.select(id, embedding)` written each run and
     unioned week over week (dim x 8 bytes per historical doc -- 512 B
     at dim 64, the same order as the 256 B minhash snapshot), and
@@ -314,8 +315,7 @@ def embedding_seen_matches(new_emb, seen_emb, dim, min_cosine=0.95,
     all-pairs) and caps the SEEN side's hot buckets (max_bucket_size,
     observable via `observation`), then an exact-cosine verify. Recall
     is bounded by single-bucket LSH exactly as in-batch: near-identical
-    vectors land in the same bucket with high probability at high
-    min_cosine.
+    vectors land in the same bucket with high probability.
 
     `dim` is the embedding width, so the call is FULLY LAZY (no driver
     probes). EVERY row of BOTH sides is width-asserted inside the plan
@@ -342,18 +342,17 @@ def embedding_seen_matches(new_emb, seen_emb, dim, min_cosine=0.95,
             F.round(cosine_col(F.col("new.v"), F.col("seen.v")), 6)
             .alias("cosine"),
         )
-        .filter(F.col("cosine") >= min_cosine)
+        .filter(F.col("cosine") >= 0.95)
     )
 
 
-def dedup_against_seen_embedding(new_emb, seen_emb, dim, min_cosine=0.95,
-                                 observation=None):
+def dedup_against_seen_embedding(new_emb, seen_emb, dim, observation=None):
     """Drop new-batch rows whose embedding is a near-duplicate of the
     prior corpus snapshot (see embedding_seen_matches). Composes with
     dedup.dedup_against_seen (exact) and dedup.dedup_against_seen_minhash
     (text near-dup) as the third seen-loop family."""
     matches = embedding_seen_matches(
-        new_emb, seen_emb, dim, min_cosine, max_bucket_size=1000,
+        new_emb, seen_emb, dim, max_bucket_size=1000,
         observation=observation,
     )
     return _drop_seen_matches(new_emb, matches, "vec_id")

@@ -79,9 +79,8 @@ from .nodeclf import (
 DEFAULT_BUCKETS = 1 << 16
 
 
-def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
-                      id_col="doc_id", text_col="text"):
-    """(id, bucket, x): length-normalised hashed-ngram features on the
+def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS):
+    """(doc_id, bucket, x): length-normalised hashed-ngram features on the
     2^-FEATURE_BITS grid. ONE shuffle: the per-doc gram total is
     size(grams) computed BEFORE the explode and carried through it, so
     no second aggregation pass is needed. Docs with zero grams emit no
@@ -95,27 +94,27 @@ def doc_feature_table(docs_df, n_buckets=DEFAULT_BUCKETS,
     # stacked selects pin size() to the per-doc projection, and the
     # Generate passes `_n` through as a plain attribute
     staged = docs_df.select(
-        F.col(id_col), _gram_col(text_col).alias("_grams")
+        F.col("doc_id"), _gram_col().alias("_grams")
     ).select(
-        F.col(id_col), F.size("_grams").alias("_n"), F.col("_grams")
+        F.col("doc_id"), F.size("_grams").alias("_n"), F.col("_grams")
     )
     return (
         staged.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_n"),
             F.explode("_grams").alias("_gram"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             # md5-prefix buckets: classifier_score_udf re-derives them
             # in Python
             _bucket_col(F.col("_gram"), n_buckets).alias("bucket"),
             F.col("_n"),
         )
-        .groupBy(id_col, "bucket")
+        .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("_cnt"), F.max("_n").alias("_n"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "bucket",
             (F.floor(F.lit(scale) * F.col("_cnt") / F.col("_n"))
              / F.lit(scale)).alias("x"),
@@ -164,24 +163,21 @@ def _doc_scores(feats, labels_df, id_col, weights, intercept):
     )
 
 
-def train_text_classifier(docs_df, label_col="label",
-                          n_buckets=DEFAULT_BUCKETS, n_iter=8,
-                          text_col="text"):
-    """Fit the classifier on a labelled corpus (label in {0, 1}).
+def train_text_classifier(docs_df, n_buckets=DEFAULT_BUCKETS, n_iter=8):
+    """Fit the classifier on a labelled corpus (`doc_id`, `text` and
+    `label` in {0, 1}).
 
     Returns `{"intercept": b, "weights": {bucket: w}, "n_buckets": B,
     "lr": lr, "n_rows": n}`.
     Deterministic: same labelled multiset -> same bits, regardless of
     partitioning or cluster size (see module docstring)."""
     labels = docs_df.select(
-        F.col("doc_id"), F.col(label_col).cast("double").alias("__y")
+        F.col("doc_id"), F.col("label").cast("double").alias("__y")
     ).persist()
     # one synthetic bucket=-1 row per doc with x=1 folds the intercept
     # gradient (sum of residuals) into the SAME per-bucket aggregation
     # as the weight gradients -- ONE job per step instead of two
-    feats = doc_feature_table(
-        docs_df, n_buckets, "doc_id", text_col
-    ).unionByName(
+    feats = doc_feature_table(docs_df, n_buckets).unionByName(
         labels.select(
             F.col("doc_id"),
             F.lit(_INTERCEPT_BUCKET).cast("long").alias("bucket"),
@@ -259,8 +255,7 @@ def train_from_slices(pos_df, neg_df, n_buckets, n_iter, text_col="text"):
             "text", "label",
         )
     )
-    return train_text_classifier(both, "label", n_buckets, n_iter,
-                                 text_col="text")
+    return train_text_classifier(both, n_buckets, n_iter)
 
 
 def classifier_score_udf(spark, model):

@@ -113,6 +113,7 @@ GOPHER_MAX_ELLIPSIS_RATIO = 0.3
 GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
 GOPHER_MIN_STOPWORD_HITS = 2
 C4_MIN_SENTENCES = 3  # C4 page rule (Raffel et al. 2020, §2.2)
+C4_MIN_LINE_WORDS = 5  # C4 line rule (same section)
 
 
 def _all_rules_pass(rules):
@@ -208,11 +209,11 @@ def c4_rules_cols(col):
     return rules
 
 
-def c4_line_clean_col(col, min_words_per_line=5):
+def c4_line_clean_col(col):
     """C4's LINE filter (Raffel et al. 2020 §2.2) as a native column
     transform: keep only lines that end in terminal punctuation
     (./!/?/closing quote, trailing whitespace tolerated) and carry at
-    least `min_words_per_line` words; survivors rejoin with '\\n' in
+    least C4_MIN_LINE_WORDS words; survivors rejoin with '\\n' in
     document order. Entirely narrow -- array ops inside whole-stage
     codegen, no shuffle, no UDF -- so it composes into any scan-side
     projection for free. Returns struct(text_clean, n_lines, n_kept).
@@ -231,7 +232,7 @@ def c4_line_clean_col(col, min_words_per_line=5):
         words = F.filter(
             F.split(ln, r"[ \t\r\f]+"), lambda w: w != ""
         )
-        return (F.size(words) >= min_words_per_line) & ln.rlike(
+        return (F.size(words) >= C4_MIN_LINE_WORDS) & ln.rlike(
             r'[.!?"][ \t\r\f]*$'
         )
 
@@ -329,16 +330,18 @@ def fingerprint_col(col):
     return F.md5(normalized_text_col(col))
 
 
-def winnowing_fingerprints(docs_df, k=8, window=4):
-    """Winnowing (Schleimer et al., SIGMOD'03): k-gram hashes, keep the
-    min of each SLIDING window of `window` consecutive grams, dedupe ->
-    (id, fingerprint) set. Sliding (not tumbling) windows are what give
-    winnowing its guarantee: any shared substring of length >= window +
-    k - 1 yields at least one shared fingerprint regardless of
-    alignment. Documents with fewer than `window` grams degrade to their
-    single overall min (still fingerprinted). Gram hashes are the
-    md5-derived 60-bit md5_hash60, so the DuckDB oracle reproduces
-    every fingerprint (driver-gate row `winnowing_md5`)."""
+def winnowing_fingerprints(docs_df):
+    """Winnowing (Schleimer et al., SIGMOD'03): k-gram hashes (k = 8
+    chars), keep the min of each SLIDING window of `window` = 4
+    consecutive grams, dedupe -> (id, fingerprint) set. Sliding (not
+    tumbling) windows are what give winnowing its guarantee: any shared
+    substring of length >= window + k - 1 yields at least one shared
+    fingerprint regardless of alignment. Documents with fewer than
+    `window` grams degrade to their single overall min (still
+    fingerprinted). Gram hashes are the md5-derived 60-bit md5_hash60,
+    so the DuckDB oracle reproduces every fingerprint (oracle row
+    `winnowing_md5`)."""
+    k, window = 8, 4
     # materialize the normalized text ONCE per row before the per-position
     # transform: referencing the regexp_replace expression inside the
     # lambda re-evaluates it for every gram position (O(doc_len^2) regex

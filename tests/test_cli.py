@@ -317,34 +317,65 @@ def test_public_surface_has_callers_or_reasons():
 
 
 def test_every_option_has_a_caller():
-    """Every optional parameter of a top-level def in sift_spark/ is set,
-    positionally or by keyword, by at least one call site in the package,
-    the root scripts, scripts/, perfbench/ or tests/. A `**kwargs` call
-    sets only the names some file spells as a string key of a dict
-    literal or as a keyword of a `dict(...)` call, so a splat that only
-    forwards its caller's `**kw` sets nothing. A call through a local
-    name counts for every package function its enclosing def lists in a
-    tuple, list or dict literal:
-    that is a dispatch table (`for fn in (f, g): fn(x, k=1)`). An option
-    nobody sets is a constant: its default belongs in the code, not in
-    the signature."""
+    """Every optional parameter of a top-level def in sift_spark/ has at
+    least two values in use across the call sites in the package, the
+    root scripts, scripts/, perfbench/ and tests/. A call that omits the
+    option puts its default in use. An argument that is a literal, or a
+    name bound to a literal at module level in the caller's file, puts
+    that value in use; any other expression, a `*args` call, or a
+    `**kwargs` call whose splat may carry the option puts a varying
+    value in use. A `**kwargs` call may carry only the names some file
+    spells as a string key of a dict literal or as a keyword of a
+    `dict(...)` call, so a splat that only forwards its caller's `**kw`
+    carries nothing. A call through a local name counts for every
+    package function its enclosing def lists in a tuple, list or dict
+    literal: that is a dispatch table (`for fn in (f, g): fn(x, k=1)`).
+    An option with one value in use is a constant: if that value is the
+    default it belongs in the code, otherwise the parameter should be
+    required."""
     import ast
+
+    def literal(node, names):
+        """A hashable token for the value `node` spells, or None when it
+        varies."""
+        if isinstance(node, ast.Name) and node.id in names:
+            return names[node.id]
+        try:
+            return repr(ast.literal_eval(node))
+        except (ValueError, TypeError):
+            return None
+
+    def module_literals(tree):
+        """Module-level names bound once, to a literal."""
+        bound = {}
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                for target in node.targets:
+                    if isinstance(target, ast.Name):
+                        bound.setdefault(target.id, []).append(node.value)
+        return {name: token for name, values in bound.items()
+                if len(values) == 1
+                and (token := literal(values[0], {})) is not None}
 
     options = {}
     for module, tree in _call_site_trees():
         if not module.startswith("sift_spark/"):
             continue
+        names = module_literals(tree)
         for node in tree.body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             args = node.args
             positional = [a.arg for a in (*args.posonlyargs, *args.args)]
-            optional = positional[len(positional) - len(args.defaults):]
-            optional += [a.arg for a, default in zip(args.kwonlyargs,
-                                                     args.kw_defaults)
-                         if default is not None]
-            for name in optional:
-                options[(module, node.name, name)] = positional
+            defaults = list(zip(
+                positional[len(positional) - len(args.defaults):],
+                args.defaults))
+            defaults += [(a.arg, default) for a, default in zip(
+                args.kwonlyargs, args.kw_defaults) if default is not None]
+            for name, default in defaults:
+                # a default that is no literal is still one value
+                token = literal(default, names) or ast.dump(default)
+                options[(module, node.name, name)] = positional, token
 
     by_function = {}
     for key in options:
@@ -364,26 +395,33 @@ def test_every_option_has_a_caller():
             elif isinstance(node, ast.Call) and name_of(node.func) == "dict":
                 splat_keys.update(k.arg for k in node.keywords if k.arg)
 
-    set_ = set()
+    in_use = {key: set() for key in options}  # None: a value that varies
 
-    def mark(call, functions):
-        keywords = {k.arg for k in call.keywords}
-        if None in keywords:
-            keywords |= splat_keys
-        n_positional = (float("inf") if any(
-            isinstance(a, ast.Starred) for a in call.args)
-            else len(call.args))
+    def mark(call, functions, names):
+        keywords = {k.arg: k.value for k in call.keywords}
+        n_plain = next((i for i, a in enumerate(call.args)
+                        if isinstance(a, ast.Starred)), len(call.args))
+        starred = n_plain < len(call.args)
         for key in (k for f in functions for k in by_function.get(f, ())):
-            positional = options[key]
-            if (key[2] in keywords
-                    or (key[2] in positional
-                        and positional.index(key[2]) < n_positional)):
-                set_.add(key)
+            positional, default = options[key]
+            name = key[2]
+            index = positional.index(name) if name in positional else None
+            if name in keywords:
+                value = literal(keywords[name], names)
+            elif index is not None and index < n_plain:
+                value = literal(call.args[index], names)
+            elif ((index is not None and starred)
+                  or (None in keywords and name in splat_keys)):
+                value = None
+            else:
+                value = default
+            in_use[key].add(value)
 
     for _, tree in trees:
+        names = module_literals(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call):
-                mark(node, [name_of(node.func)])
+                mark(node, [name_of(node.func)], names)
             elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 table = {
                     name_of(e) for lit in ast.walk(node)
@@ -395,8 +433,16 @@ def test_every_option_has_a_caller():
                     if (table and isinstance(call, ast.Call)
                             and isinstance(call.func, ast.Name)
                             and call.func.id not in by_function):
-                        mark(call, table)
-    unset = sorted(set(options) - set_)
-    assert not unset, (
-        f"{len(unset)} of {len(options)} options no call site sets:\n"
-        + "\n".join(f"{m}:{f}({o}=)" for m, f, o in unset))
+                        mark(call, table, names)
+
+    def fix(key):
+        if in_use[key] <= {options[key][1]}:
+            return "only its default: make it code"
+        return "one value, not the default: make it required"
+
+    single = sorted(key for key, values in in_use.items()
+                    if None not in values and len(values) < 2)
+    assert not single, (
+        f"{len(single)} of {len(options)} options have one value in use:\n"
+        + "\n".join(f"{m}:{f}({o}=) {fix((m, f, o))}"
+                     for m, f, o in single))

@@ -334,14 +334,14 @@ def test_wav_bmp_stdlib_decoders():
     )
 
     wav = parse_wav(make_wav_bytes(sample_rate=44100, n_channels=2,
-                                   bits=16, duration_ms=500))
+                                   duration_ms=500))
     assert wav["sample_rate"] == 44100
     assert wav["n_channels"] == 2
     assert wav["bits_per_sample"] == 16
     assert wav["duration_ms"] == 500
     assert wav["n_frames"] == 22050  # 44100 * 0.5s
 
-    bmp = parse_bmp(make_bmp_bytes(width=17, height=9, bit_count=24))
+    bmp = parse_bmp(make_bmp_bytes(width=17, height=9))
     assert (bmp["width"], bmp["height"], bmp["bit_count"]) == (17, 9, 24)
     assert bmp["top_down"] is False
 
@@ -448,7 +448,7 @@ def test_lsh_bucket_cap_drops_hot_buckets(spark):
     capped = lsh_candidate_pairs(sigs, 8, max_bucket_size=10).count()
     assert capped == 0  # hot bucket dropped entirely
 
-    hot = oversized_buckets(sigs, 8, max_bucket_size=10)
+    hot = oversized_buckets(sigs, max_bucket_size=10)
     assert hot.count() > 0
     assert hot.agg({"n_members": "max"}).first()[0] == 20
 
@@ -1125,7 +1125,7 @@ def test_site_boilerplate_detection_and_removal(spark):
     rows += [("tiny.org", 0, "repeated"), ("tiny.org", 1, "repeated")]
     chunks = spark.createDataFrame(rows, ["site", "doc_id", "chunk_text"])
 
-    boiler = site_boilerplate_chunks(chunks, min_ratio=0.5, min_docs=3)
+    boiler = site_boilerplate_chunks(chunks)
     got = {(r["site"], r["n_docs"], r["ratio"]) for r in boiler.collect()}
     assert ("a.com", 10, 1.0) in got            # footer: every doc
     assert ("a.com", 5, 0.5) in got             # promo: exactly threshold
@@ -1423,13 +1423,13 @@ def test_winnowing_guarantee_survives_alignment_shift(spark):
     a = ("the quick brown fox jumps over the lazy dog near the riverbank "
          "while the miller sifts flour into the evening air")
     df = spark.createDataFrame([(1, a), (2, "x" + a)], ["doc_id", "text"])
-    fps = winnowing_fingerprints(df, k=8, window=4).collect()
+    fps = winnowing_fingerprints(df).collect()
     s1 = {r["fingerprint"] for r in fps if r["doc_id"] == 1}
     s2 = {r["fingerprint"] for r in fps if r["doc_id"] == 2}
     assert len(s1 & s2) >= 0.8 * len(s1)
     # short doc (< window grams) still gets its single min fingerprint
     short = spark.createDataFrame([(9, "tiny text")], ["doc_id", "text"])
-    assert winnowing_fingerprints(short, k=8, window=4).count() == 1
+    assert winnowing_fingerprints(short).count() == 1
 
 
 def test_lsh_multiprobe_hamming2_expands_probes(spark, embeddings):
@@ -2104,7 +2104,7 @@ def test_minhash_against_seen(spark):
               "and the measured acidity of highland lakes in spring")],
         ["doc_id", "text"])
     kept = {r["doc_id"] for r in dedup_against_seen_minhash(
-        new, seen_sigs, k=8, n_hashes=16, n_bands=4,
+        new, seen_sigs, n_hashes=16, n_bands=4,
         min_est_jaccard=0.5).collect()}
     assert kept == {11}
 
@@ -2123,7 +2123,7 @@ def test_minhash_against_seen(spark):
     hot_sigs = minhash_signatures(
         char_shingles(hot_seen, 8, distinct=False), n_hashes=16)
     kept_capped = {r["doc_id"] for r in dedup_against_seen_minhash(
-        new, hot_sigs, k=8, n_hashes=16, n_bands=4,
+        new, hot_sigs, n_hashes=16, n_bands=4,
         min_est_jaccard=0.5, max_bucket_size=2).collect()}
     assert kept_capped == {10, 11}
 
@@ -2136,7 +2136,7 @@ def test_minhash_against_seen(spark):
     # an EMPTY snapshot is a no-op, not a crash
     empty_sigs = seen_sigs.filter("doc_id < 0")
     assert {r["doc_id"] for r in dedup_against_seen_minhash(
-        new, empty_sigs, k=8, n_hashes=16, n_bands=4).collect()
+        new, empty_sigs, n_hashes=16, n_bands=4).collect()
     } == {10, 11}
 
 
@@ -3027,9 +3027,10 @@ def test_crawl_curate_keeps_long_pages_whole(spark, tmp_path):
 def test_crawl_curate_checks_curation_args_before_extraction(spark,
                                                             tmp_path):
     """A bad curation argument raises before any Spark work: no
-    `<output>_extracted` directory appears and no job runs. span_k=1
-    is refused too (it used to fail only after the staging write), and
-    a removed option is a TypeError."""
+    `<output>_extracted` directory appears and no job runs. span_k=1,
+    a negative pack_budget and packing into 0 shards are refused too
+    (each used to fail only after a sink was written), and a removed
+    option is a TypeError."""
     import os
 
     from sift_spark.job import run_crawl_curate_job, run_curation_job
@@ -3050,6 +3051,8 @@ def test_crawl_curate_checks_curation_args_before_extraction(spark,
         (ValueError, dict(clf_model="/nonexistent/clf")),
         (ValueError, dict(dsir_target_df=docs)),
         (ValueError, dict(seen_simhash_df=snap, simhash_max_hamming=4)),
+        (ValueError, dict(pack_budget=64, n_shards=0)),
+        (ValueError, dict(pack_budget=-1)),
         (TypeError, dict(span_hash_mode="md5")),
     ]
     tracker = spark.sparkContext.statusTracker()
@@ -3301,9 +3304,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     )
     matches = {
         (r["new_id"], r["seen_id"]): r["cosine"]
-        for r in embedding_seen_matches(
-            week2, week1, dim=4, min_cosine=0.95
-        ).collect()
+        for r in embedding_seen_matches(week2, week1, dim=4).collect()
     }
     assert matches.get((10, 1)) == pytest.approx(1.0)
     assert (11, 2) in matches
@@ -3312,7 +3313,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     kept = sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            week2, week1, dim=4, min_cosine=0.95
+            week2, week1, dim=4
         ).collect()
     )
     assert kept == [12]
@@ -3321,7 +3322,7 @@ def test_embedding_against_seen_two_week_loop(spark):
     assert sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            week2, empty, dim=4, min_cosine=0.95
+            week2, empty, dim=4
         ).collect()
     ) == [10, 11, 12]
 
@@ -3351,7 +3352,7 @@ def test_embedding_against_seen_width_asserted_in_plan(spark):
     kept = sorted(
         r["vec_id"]
         for r in dedup_against_seen_embedding(
-            new, clean_seen, dim=2, min_cosine=0.95
+            new, clean_seen, dim=2
         ).collect()
     )
     assert kept == [2]  # 1 matched seen 3 exactly; null row kept
@@ -3423,7 +3424,7 @@ def test_embedding_against_seen_plan_is_bucket_equijoin(spark):
         [(i, [float(i == j) for j in range(4)]) for i in range(4)],
         "vec_id long, embedding array<float>",
     )
-    pairs = embedding_seen_matches(emb, emb, dim=4, min_cosine=0.95)
+    pairs = embedding_seen_matches(emb, emb, dim=4)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

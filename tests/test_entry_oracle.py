@@ -97,7 +97,7 @@ def test_dedup_components_star_matches_oracle(spark, ddb):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     pairs = minhash_near_duplicates(
-        docs, k=8, n_hashes=16, n_bands=4, min_jaccard=0.5,
+        docs, n_hashes=16, n_bands=4, min_jaccard=0.5,
         portable_hash=True, max_bucket_size=None,
     )
     spark_cols, spark_rows = _spark_multiset(connected_components_star(pairs))

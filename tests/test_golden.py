@@ -34,7 +34,7 @@ PARAM_GRID = {
                                 search_query="sifting flour"),
     "smart_context": SiftParams(counting_method=WORDS, max_units=0,
                                 search_query="sifting flour",
-                                context_units=30, use_smart_context=True),
+                                context_units=30),
     "selector_p": SiftParams(selector="p", counting_method=WORDS,
                              max_units=0),
     "tokens120": SiftParams(counting_method=TOKENS, max_units=120),
